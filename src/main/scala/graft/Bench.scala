@@ -241,11 +241,12 @@ object Bench {
       // RDDs (the iterative operators' lineage cuts) are persisted
       // OUTSIDE the catalog and otherwise pile up across ~350 queries
       // until driver GC triggers the ContextCleaner — unpersist them
-      // explicitly (r14 measurement fix, guide §5: cached data competes
-      // with execution memory; unpersist when done).
+      // explicitly (cached data competes with execution memory;
+      // unpersist when done). Blocking, so block removal finishes here
+      // instead of bleeding into the next query's timed region.
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+        .foreach(_.unpersist(blocking = true))
       (name, sec, r)
     }
     runCanary() // closing sample
@@ -290,7 +291,7 @@ object Bench {
       val sec = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false)) // see the in-run note
+        .foreach(_.unpersist(blocking = true)) // see the in-run note
       if (ok) Some(sec) else None
     }
     val smallDir = sfDir.replaceAll("sf0\\.1/?$", "sf0.01")

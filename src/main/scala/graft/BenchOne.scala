@@ -29,7 +29,7 @@ object BenchOne {
         println(f"$name run $i: build=${(t1-t0)/1e9}%.2f plan=${(t2-t1)/1e9}%.2f exec=${(t3-t2)/1e9}%.2f")
         spark.catalog.clearCache() // the Bench discipline between queries
         spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+          .foreach(_.unpersist(blocking = true)) // outside the timed phases
       }
     }
     spark.stop()

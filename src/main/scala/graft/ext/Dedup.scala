@@ -1,8 +1,11 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 import graft.Tables
 import graft.functions.SimHash64.simhash64
 
@@ -907,20 +910,31 @@ object Dedup {
     * clustering step real dedup pipelines run after pair generation
     * (one-hop removal under-merges: a~b, b~c leaves a and c apart).
     *
-    * Default algorithm: alternating large-star/small-star contraction
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14). Each round is two passes over the edge set, each pass a
-    * per-node min + one equi-join — and the round count is O(log n)
-    * REGARDLESS of component diameter, because every round at least
-    * halves the height of the partial star forest. That is the property
-    * that matters at web scale: a crawl dup graph with chain-shaped
-    * clusters (mirror-of-a-mirror-of-a-mirror) has diameter in the
-    * thousands, which would make any diameter-bound propagation
-    * ([[connectedComponentsMinLabel]]) unbounded, while this converges
-    * in a few dozen rounds no matter the shape. Per round the edge set
-    * only shrinks toward the star forest (≤ |E| edges alive), every
-    * join is an equi-join, and lineage is truncated by one eager
-    * checkpoint per round (also what the convergence check consumes).
+    * The plan is chosen from the input's observed size. The pair set is
+    * materialised once; when it fits under the session's broadcast
+    * budget (`spark.sql.autoBroadcastJoinThreshold`, at Spark's
+    * per-row size estimate — the session's own measure of "small
+    * enough to ship whole") and its ids are integral, it is collected
+    * and finished on the driver by a min-rooted union-find
+    * ([[unionFindLabels]]): one job instead of a few dozen tiny-data
+    * rounds, and a local (id, comp) relation with the same columns,
+    * types and labels as the distributed result. A threshold ≤ 0
+    * disables the local finish.
+    *
+    * Larger edge sets run alternating large-star/small-star
+    * contraction (Kiveris et al., "Connected Components in MapReduce
+    * and Beyond", SoCC'14). Each round is two passes over the edge set,
+    * each pass a per-node min + one equi-join — and the round count is
+    * O(log n) REGARDLESS of component diameter, because every round at
+    * least halves the height of the partial star forest. That is the
+    * property that matters at web scale: a crawl dup graph with
+    * chain-shaped clusters (mirror-of-a-mirror-of-a-mirror) has
+    * diameter in the thousands, which would make diameter-bound label
+    * propagation unbounded, while this converges in a few dozen rounds
+    * no matter the shape. Per round the edge set only shrinks toward
+    * the star forest (≤ |E| edges alive), every join is an equi-join,
+    * and lineage is truncated by one checkpoint per round (also what
+    * the convergence check consumes).
     *
     * large-star(u): hook every strictly LARGER neighbor of u onto
     * m = min(Γ(u) ∪ {u}). small-star(u): hook every smaller-or-equal
@@ -928,24 +942,38 @@ object Dedup {
     * point is a forest of stars centered on each component's minimum
     * id; convergence is detected exactly (symmetric set difference
     * empty), never by a lossy checksum. Loud failure, never a silent
-    * partial merge, if `maxIter` is hit. Returns (id, component) for
-    * every node that appears in a pair. */
+    * partial merge, if `maxIter` rounds are hit. Returns (id, component)
+    * for every node that appears in a pair. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
     // The pair generator upstream (an LSH/similarity join) is usually
     // the most expensive subtree in the whole query — run it ONCE:
-    // both `nodes` and `edges` read this checkpoint, not the subtree.
+    // the size probe, `nodes` and `edges` all read this checkpoint.
     val p = pairs.select(col("a"), col("b")).localCheckpoint(eager = false)
     val nodes = p.select(col("a").as("id"))
       .union(p.select(col("b").as("id"))).distinct()
-      .localCheckpoint(eager = false)
     // Canonical undirected edge set: (big > small), no self-loops.
-    // Lazy: round 1's single convergence action materializes it.
-    var edges = p
+    val canonical = p
       .filter(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("big"),
         least(col("a"), col("b")).as("small"))
       .distinct()
-      .localCheckpoint(eager = false)
+    collectIfSmall(p) match {
+      case Some(rows) =>
+        // The distributed result's schema, read off its analysed plan.
+        val schema = starLabels(nodes, canonical).schema
+        p.sparkSession.createDataFrame(
+          unionFindLabels(rows, schema("id").dataType).asJava, schema)
+      case None =>
+        starContraction(nodes.localCheckpoint(eager = false),
+          canonical.localCheckpoint(eager = false), maxIter)
+    }
+  }
+
+  /** Large-star/small-star rounds from the canonical edge set to its
+    * star forest, then each node's label. */
+  private def starContraction(nodes: DataFrame, canonical: DataFrame,
+      maxIter: Int): DataFrame = {
+    var edges = canonical
     var iter = 0
     var converged = false
     while (!converged) {
@@ -965,10 +993,81 @@ object Dedup {
       converged = next.except(edges).union(edges.except(next)).isEmpty
       edges = next
     }
-    // Fixed point is a star forest rooted at component minima: every
-    // non-root appears exactly once as `big`, pointing at its root.
-    nodes.join(edges, col("id") === col("big"), "left")
+    starLabels(nodes, edges)
+  }
+
+  /** Labels from a star forest rooted at component minima: every
+    * non-root appears exactly once as `big`, pointing at its root. */
+  private def starLabels(nodes: DataFrame, stars: DataFrame): DataFrame =
+    nodes.join(stars, col("id") === col("big"), "left")
       .select(col("id"), coalesce(col("small"), col("id")).as("comp"))
+
+  /** `p`'s (a, b) rows when both ids are integral and the set fits the
+    * session's broadcast budget, else None. One job in the common
+    * case, which also materialises `p`'s checkpoint for the rounds:
+    * every task returns its partition's row count, and its rows only
+    * while the partition holds at most its share of the budget, so the
+    * driver never receives much more than the budget. A set that fits
+    * but is skewed across partitions costs one more collect. */
+  private def collectIfSmall(p: DataFrame): Option[Array[Row]] = {
+    val budget = p.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val integral = p.schema.fields.forall(_.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    })
+    if (budget <= 0 || !integral) return None
+    // Spark's size estimate for a row: 8 bytes of header plus each
+    // column's default size (EstimationUtils.getSizePerRow).
+    val maxRows = budget / (8L + p.schema.fields.map(_.dataType.defaultSize).sum)
+    val rdd = p.rdd
+    val share = maxRows / math.max(1, rdd.getNumPartitions) + 1
+    val parts = rdd.mapPartitions { it =>
+      val kept = mutable.ArrayBuffer.empty[Row]
+      var n = 0L
+      it.foreach { r => n += 1; if (n <= share) kept += r }
+      Iterator.single((n, if (n <= share) kept.toArray else Array.empty[Row]))
+    }.collect()
+    if (parts.map(_._1).sum > maxRows) None
+    else if (parts.forall(_._1 <= share)) Some(parts.flatMap(_._2))
+    else Some(p.collect())
+  }
+
+  /** Min-rooted union-find over collected (a, b) pairs — the driver's
+    * twin of [[starContraction]]: one (id, comp) row per distinct
+    * endpoint, comp the minimum id of its component. As in the star
+    * forest, a self-loop only adds its node, and a null endpoint adds
+    * the pair's other endpoint plus one (null, null) row. Ids are
+    * integral and returned as `idType`. */
+  private def unionFindLabels(pairs: Array[Row], idType: DataType): Seq[Row] = {
+    val parent = mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = { // path halving
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    def node(v: Any): Option[Long] = Option(v).map { x =>
+      val id = x.asInstanceOf[Number].longValue
+      parent.getOrElseUpdate(id, id)
+      id
+    }
+    var sawNull = false
+    pairs.foreach { r =>
+      (node(r.get(0)), node(r.get(1))) match {
+        case (Some(a), Some(b)) =>
+          // Hook the larger root under the smaller: roots stay minima.
+          val (ra, rb) = (find(a), find(b))
+          if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+        case _ => sawNull = true
+      }
+    }
+    val out: Long => Any = idType match {
+      case ByteType => _.toByte
+      case ShortType => _.toShort
+      case IntegerType => _.toInt
+      case _ => identity
+    }
+    parent.keys.toSeq.map(id => Row(out(id), out(find(id)))) ++
+      (if (sawNull) Seq(Row(null, null)) else Nil)
   }
 
   /** INCREMENTAL connected-components maintenance — update persisted
@@ -1049,47 +1148,6 @@ object Dedup {
       .select(col("small").as("big"), col("m").as("small"))
     val hookSelf = mins.select(col("big"), col("m").as("small"))
     hookNbrs.union(hookSelf).distinct()
-  }
-
-  /** Diameter-bound min-label propagation — the SMALL-DIAMETER fast
-    * path (near-dup clusters are quasi-cliques, 2-3 rounds): each
-    * round every node adopts the minimum component id among itself and
-    * its neighbors — two equi-join shuffles per round. Rounds = graph
-    * diameter, so on general graphs (chains!) prefer the default
-    * [[connectedComponents]]. Loud failure, never a silent partial
-    * merge, if `maxIter` is hit. Returns (id, component) for every
-    * node that appears in a pair. */
-  def connectedComponentsMinLabel(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint(eager = false)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id"))
-    var iter = 0
-    while (true) {
-      val viaNeighbors = edges
-        .join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
-        .groupBy(col("src")).agg(min(col("comp")).as("ncomp"))
-        .withColumnRenamed("src", "id")
-      // The adopted label and a per-row CHANGED flag come out of the
-      // same select, so the round's single count action both
-      // materializes the lazy checkpoint AND answers convergence —
-      // one driver sync per round, same as the default CC path (the
-      // old shape re-joined next against labels for a second action).
-      val newComp = least(col("comp"), coalesce(col("ncomp"), col("comp")))
-      val next = labels.join(viaNeighbors, Seq("id"), "left")
-        .select(col("id"), newComp.as("comp"),
-          (newComp =!= col("comp")).as("changed"))
-        .localCheckpoint(eager = false)
-      val changed = next.filter(col("changed")).count()
-      labels = next.select(col("id"), col("comp"))
-      if (changed == 0) return labels
-      iter += 1
-      if (iter >= maxIter)
-        throw new IllegalStateException(
-          s"connectedComponentsMinLabel: no convergence after $maxIter rounds")
-    }
-    labels // unreachable (while(true) exits via return/throw only)
   }
 
   private val e2NgramJaccard: Q = (s, dir) =>

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
@@ -89,14 +89,22 @@ object Centroids {
     out
   }
 
+  /** Spark's struct(d, cell) ordering: d first under Catalyst's double
+    * order (NaN greatest and equal to itself, -0.0 == 0.0 — a total,
+    * transitive order, unlike `>`/`==` under NaN), then cell. */
+  private def compareCells(d: Array[Double], cellIds: Array[Int],
+      a: Int, b: Int): Int = {
+    val c = SQLOrderingUtil.compareDoubles(d(a), d(b))
+    if (c != 0) c else Integer.compare(cellIds(a), cellIds(b))
+  }
+
   def best(v: ArrayData, cents: Array[Array[Double]],
       cellIds: Array[Int]): InternalRow = {
     val d = dots(v, cents)
     var bi = 0
     var i = 1
     while (i < d.length) {
-      // struct(d, cell) max: larger d wins; equal d → larger cell id
-      if (d(i) > d(bi) || (d(i) == d(bi) && cellIds(i) > cellIds(bi))) bi = i
+      if (compareCells(d, cellIds, i, bi) > 0) bi = i
       i += 1
     }
     new GenericInternalRow(Array[Any](d(bi), cellIds(bi)))
@@ -105,9 +113,8 @@ object Centroids {
   def topCells(v: ArrayData, cents: Array[Array[Double]],
       cellIds: Array[Int], k: Int): ArrayData = {
     val d = dots(v, cents)
-    val order = Array.range(0, d.length).sortWith { (a, b) =>
-      d(a) > d(b) || (d(a) == d(b) && cellIds(a) > cellIds(b))
-    }
+    val order = Array.range(0, d.length)
+      .sortWith((a, b) => compareCells(d, cellIds, a, b) > 0)
     val m = math.min(k, order.length)
     val out = new Array[Int](m)
     var i = 0

@@ -229,9 +229,7 @@ object EventWindows {
     import scala.jdk.CollectionConverters._
     val root = Files.createTempDirectory("replay_").toString
     val staged = s"$root/staged"
-    val tS0 = System.nanoTime()
     df.repartition(col("b")).write.partitionBy("b").parquet(staged)
-    System.err.println(f"[evdiag] stage write ${(System.nanoTime()-tS0)/1e9}%.2f")
     val ls = Files.list(Paths.get(staged))
     val bdirs =
       try ls.iterator().asScala
@@ -579,9 +577,7 @@ object EventWindows {
       .filter(col("event_type").isin("view", "click"))
       .withColumn("b", expr(s"unix_millis(ts) div $bucketMs"))
     val allB = ev.select(col("b")).distinct()
-    val tM0 = System.nanoTime()
     val maxB = allB.agg(max(col("b"))).head.getLong(0) // 1 row
-    System.err.println(f"[evdiag] maxB agg ${(System.nanoTime()-tM0)/1e9}%.2f")
     def side(tpe: String, kaAd: Long): DataFrame = {
       val ka = allB.select(col("b"), lit(kaAd).as("ad"),
         timestamp_millis((col("b") + 1) * bucketMs - 1).as("ts"))
@@ -603,15 +599,13 @@ object EventWindows {
     val schema = s.read.parquet(impFiles.head.toString).schema
     val sink = "evjoin_out_" +
       java.util.UUID.randomUUID.toString.replace("-", "")
-    // Unlike the session gates (task-launch bound → 4 partitions), the
-    // join replay is COMPUTE-bound: each micro-batch probes every
-    // buffered row of the matching ad, so per-batch work ~ |views|·
-    // |clicks|/|ads| and 4 state partitions serialize it onto 4 cores.
-    // 16 partitions parallelize the probe scans; state partitioning
-    // never affects the emitted set (r15, guide §2.6).
+    // The join replay runs on 4 shuffle (state-store) partitions: set
+    // for this query only and pinned at its first start. Each micro-
+    // batch probes every buffered row of the matching ad (work ~
+    // |views|·|clicks|/|ads|), so the probe scans use at most 4 cores;
+    // state partitioning never affects the emitted set.
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", "4")
-    val tQ0 = System.nanoTime()
     val q =
       try join(
           s.readStream.schema(schema).parquet(impLanding)
@@ -621,25 +615,15 @@ object EventWindows {
         .writeStream.format("memory").queryName(sink)
         .outputMode(OutputMode.Append()).start()
       finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    System.err.println(f"[evdiag] start ${(System.nanoTime()-tQ0)/1e9}%.2f")
     try {
       for (((fi, fc), i) <- impFiles.zip(clkFiles).zipWithIndex) {
-        val tB0 = System.nanoTime()
         java.nio.file.Files.move(fi,
           java.nio.file.Paths.get(impLanding, f"b$i%05d.parquet"))
         java.nio.file.Files.move(fc,
           java.nio.file.Paths.get(clkLanding, f"b$i%05d.parquet"))
         q.processAllAvailable()
-        System.err.println(f"[evdiag] batch $i ${(System.nanoTime()-tB0)/1e9}%.2f")
       }
-    } finally {
-      q.recentProgress.foreach { p =>
-        System.err.println(s"[evdiag] bprog ${p.batchId} dur=${p.durationMs} rows=${p.numInputRows}")
-      }
-      val tX0 = System.nanoTime()
-      q.stop()
-      System.err.println(f"[evdiag] stop ${(System.nanoTime()-tX0)/1e9}%.2f")
-    }
+    } finally q.stop()
     s.table(sink)
   }
 

@@ -1,6 +1,13 @@
 package graft.ext
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import graft.{SparkSpec, Tables}
 import graft.functions.SimHash64.simhash64
 
@@ -186,66 +193,151 @@ class DedupSpec extends SparkSpec {
       6L -> 6L, 7L -> 6L, 8L -> 6L, 9L -> 6L), s"got $got")
   }
 
+  /** A session whose broadcast budget is off, so connectedComponents
+    * skips its local finish and runs the distributed rounds. */
+  private lazy val distributed: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s
+  }
+
+  /** `df`'s rows as a local relation of the forced-distributed session. */
+  private def onDistributed(df: DataFrame): DataFrame =
+    distributed.createDataFrame(df.collect().toSeq.asJava, df.schema)
+
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[LocalRelation]
+
+  private def toMap(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** The local finish and the distributed rounds over the same pairs. */
+  private def bothWays(pairs: DataFrame): (DataFrame, DataFrame) = {
+    val local = Dedup.connectedComponents(pairs)
+    val rounds = Dedup.connectedComponents(onDistributed(pairs))
+    assert(isLocal(local) && !isLocal(rounds),
+      "expected a local finish and a distributed run")
+    (local, rounds)
+  }
+
   test("connectedComponents fails loudly when maxIter is too small") {
-    val chain = (1L until 6L).map(i => (i, i + 1)).toDF("a", "b")
+    val chain = onDistributed((1L until 6L).map(i => (i, i + 1)).toDF("a", "b"))
     intercept[IllegalStateException] {
       Dedup.connectedComponents(chain, maxIter = 1)
-    }
-    intercept[IllegalStateException] {
-      Dedup.connectedComponentsMinLabel(chain, maxIter = 1)
     }
   }
 
   test("star contraction converges on a planted path far under its diameter") {
-    // Path 0-1-2-...-63: diameter 63. Min-label propagation needs 63
-    // rounds (each round moves the min one hop), so maxIter=12 must
-    // fail loudly. Large-star/small-star halves star-forest height
-    // every round — the same 12-round budget is plenty, and the result
-    // is exact: every node lands in component 0.
-    val path = (0L until 63L).map(i => (i, i + 1)).toDF("a", "b")
-    intercept[IllegalStateException] {
-      Dedup.connectedComponentsMinLabel(path, maxIter = 12)
-    }
-    val got = Dedup.connectedComponents(path, maxIter = 12)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // Path 0-1-2-...-63: diameter 63, so a label propagation that moves
+    // the min one hop a round would need 63 rounds. Large-star/small-
+    // star halves star-forest height every round — a 12-round budget is
+    // plenty, and the result is exact: every node lands in component 0.
+    val path = onDistributed((0L until 63L).map(i => (i, i + 1)).toDF("a", "b"))
+    val got = toMap(Dedup.connectedComponents(path, maxIter = 12))
     assert(got.size == 64 && got.values.forall(_ == 0L), s"got $got")
   }
 
-  test("min-label fast path matches star contraction on a mixed graph") {
+  test("local finish matches star contraction on a mixed graph") {
     val pairs = Seq((2L, 1L), (2L, 3L), (10L, 11L), (7L, 8L), (8L, 9L),
       (9L, 6L), (5L, 5L)).toDF("a", "b") // includes a self-loop
-    def toMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val star = toMap(Dedup.connectedComponents(pairs))
-    val ml = toMap(Dedup.connectedComponentsMinLabel(pairs))
-    assert(star == ml, s"star $star vs minlabel $ml")
+    val (local, rounds) = bothWays(pairs)
+    val (uf, star) = (toMap(local), toMap(rounds))
+    assert(star == uf, s"star $star vs union-find $uf")
     assert(star(5L) == 5L) // self-loop node keeps its own component
   }
 
-  test("min-label fast path matches star contraction on a chain and " +
-      "a clique (single-action convergence)") {
-    // A 7-node chain (worst case for label propagation: the min walks
-    // one hop per round) plus an 8-clique (the quasi-clique shape the
-    // fast path exists for) in one edge set — both paths must agree
-    // node-for-node, and the chain exercises the changed-flag
-    // convergence over multiple rounds.
+  test("local finish matches star contraction on a chain and a clique") {
+    // A 7-node chain (one hop per round for label propagation) plus an
+    // 8-clique (the quasi-clique shape of near-dup clusters) in one
+    // edge set — both paths must agree node-for-node.
     val chain = (0L until 6L).map(i => (i, i + 1))
     val clique = for { i <- 0L until 8L; j <- (i + 1) until 8L }
       yield (i + 100L, j + 100L)
-    val pairs = (chain ++ clique).toDF("a", "b")
-    def toMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val star = toMap(Dedup.connectedComponents(pairs))
-    val ml = toMap(Dedup.connectedComponentsMinLabel(pairs))
-    assert(star == ml, s"star $star vs minlabel $ml")
-    assert((0L to 6L).forall(ml(_) == 0L), s"chain labels: $ml")
-    assert((100L to 107L).forall(ml(_) == 100L), s"clique labels: $ml")
+    val (local, rounds) = bothWays((chain ++ clique).toDF("a", "b"))
+    val (uf, star) = (toMap(local), toMap(rounds))
+    assert(star == uf, s"star $star vs union-find $uf")
+    assert((0L to 6L).forall(uf(_) == 0L), s"chain labels: $uf")
+    assert((100L to 107L).forall(uf(_) == 100L), s"clique labels: $uf")
+  }
+
+  /** Random edge lists: randomly relabelled chains (the deep case for
+    * the rounds) and cliques, random extra edges, self-loops, duplicate
+    * and reversed pairs, and, in some lists, pairs with a null endpoint. */
+  private val edgeLists: Gen[Seq[(Option[Long], Option[Long])]] = for {
+    chains <- Gen.listOfN(3, Gen.chooseNum(1, 40))
+    cliques <- Gen.listOfN(3, Gen.chooseNum(2, 8))
+    extra <- Gen.chooseNum(0, 20)
+    nulls <- Gen.oneOf(true, false)
+    seed <- Gen.long
+  } yield {
+    val rnd = new scala.util.Random(seed)
+    var n = 0
+    def fresh(k: Int): Seq[Int] = { val ids = n until n + k; n += k; ids }
+    val shaped = chains.flatMap { k => val ids = fresh(k + 1); ids.zip(ids.tail) } ++
+      cliques.flatMap { k =>
+        val ids = fresh(k)
+        for { i <- ids; j <- ids if i < j } yield (i, j)
+      }
+    val span = n + 5 // extra edges may reach ids no shape uses
+    val edges = shaped ++ Seq.fill(extra)((rnd.nextInt(span), rnd.nextInt(span)))
+    val label = rnd.shuffle((0 until span).toVector).map(i => i * 3L - 50L)
+    val pairs = edges.map { case (a, b) => (label(a), label(b)) }
+    val loops = Seq.fill(3)(label(rnd.nextInt(span))).map(x => (x, x))
+    val dups = rnd.shuffle(pairs).take(5)
+    val reversed = rnd.shuffle(pairs).take(5).map(_.swap)
+    val withNull =
+      if (nulls) Seq((Some(label(0)), None), (None, Some(label(1))), (None, None))
+      else Nil
+    rnd.shuffle((pairs ++ loops ++ dups ++ reversed)
+      .map { case (a, b) => (Option(a), Option(b)) } ++ withNull)
+  }
+
+  test("property: local finish equals the distributed rounds on random " +
+      "edge lists") {
+    (1L to 5L).foreach { i =>
+      val sample = edgeLists.pureApply(Gen.Parameters.default, Seed(i))
+      // Odd samples carry an int-typed `a`: the result's id type is
+      // the widened type on both paths.
+      val df = sample.toDF("a", "b")
+      val pairs = if (i % 2 == 1) df.withColumn("a", $"a".cast("int")) else df
+      val (local, rounds) = bothWays(pairs)
+      assert(local.schema == rounds.schema,
+        s"seed $i: schema ${local.schema} vs ${rounds.schema}")
+      val (uf, star) = (local.collect().toSeq.map(_.toString).sorted,
+        rounds.collect().toSeq.map(_.toString).sorted)
+      assert(uf == star, s"seed $i: union-find $uf vs star $star")
+    }
+  }
+
+  test("connectedComponents on a small graph runs at most 2 jobs once " +
+      "its pairs exist") {
+    val chain = (0L until 30L).map(i => (i, i + 1))
+    val clique = for { i <- 0L until 8L; j <- (i + 1) until 8L }
+      yield (i + 100L, j + 100L)
+    val pairs = (chain ++ clique).toDF("a", "b").localCheckpoint(eager = true)
+    val forced = onDistributed(pairs)
+    val sc = spark.sparkContext
+    def jobsOf(body: => Unit): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val counter = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      TestListenerBus.drain(sc)
+      sc.addSparkListener(counter)
+      try { body; TestListenerBus.drain(sc) }
+      finally sc.removeSparkListener(counter)
+      n.get
+    }
+    val local = jobsOf(Dedup.connectedComponents(pairs).collect())
+    val rounds = jobsOf(Dedup.connectedComponents(forced).collect())
+    assert(local <= 2, s"local finish ran $local jobs")
+    // The counter sees the distributed rounds it replaces.
+    assert(rounds > 10, s"distributed rounds ran only $rounds jobs")
   }
 
   test("connectedComponentsIncremental: a delta merges two existing " +
       "clusters, joins one, creates one — and equals a full recompute") {
-    def toMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // Old graph: cluster {1,2,3}, cluster {10,11}, cluster {20,21},
     // cluster {30,31}; node 40 exists but has never been in a pair
     // (so it carries no label yet).
