@@ -133,6 +133,47 @@ object Bench {
       inRun: Option[Double]): Boolean =
     inRun.exists(ref => iso > 2.0 * ref)
 
+  /** Cores of the timing tools' session: `SPARK_GRAFT_CPUS`, default 32. */
+  private[graft] def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  /** The one session Bench, BenchOne and PlanDump run in, so a phase
+    * re-time or a dumped plan is the one the bench executes:
+    * `local[cpus]` with as many shuffle partitions, UTC, and the graft
+    * extensions.
+    *
+    * Replay coarsening for the streaming replay gates (round-12
+    * verdict item 7; widened r14/r15): the session/join/window builds
+    * are sequential micro-batch cycles of replay latency that scale
+    * with VM weather — at bench time the buckets widen 40× (same
+    * rows, same output; StreamingSpec pins the equality at exactly
+    * this default, which collapses every 30-day replay to ~1 bucket +
+    * flush), cutting the streaming share of the run. Verify never
+    * sets this, so the correctness gate still drives the full
+    * per-day replay. The env override is CLAMPED to the spec-pinned
+    * values (r14 ADVICE: an arbitrary override would run a coarsening
+    * no test pins): 1 = full replay (≡ Verify), 40 = the pinned bench
+    * default; anything else falls back to 40 with a warning. */
+  private[graft] def session(): SparkSession = {
+    System.setProperty("graft.replay.coarsen",
+      clampCoarsen(sys.env.get("SPARK_GRAFT_REPLAY_COARSEN")))
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      // Explicit 100 TB-posture: AQE re-plans joins at runtime and
+      // splits skewed partitions (defaults in Spark 4; pinned here so a
+      // config drift can't silently change the bench).
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
   /** Spec-pinned replay-coarsening values: 1 (full per-day replay —
     * what Verify runs) and 40 (the bench default; StreamingSpec pins
     * output equality at exactly this factor). Any other override would
@@ -160,37 +201,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val all = sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1")
-    // Replay coarsening for the streaming replay gates (round-12
-    // verdict item 7; widened r14/r15): the session/join/window builds
-    // are sequential micro-batch cycles of replay latency that scale
-    // with VM weather — at bench time the buckets widen 40× (same
-    // rows, same output; StreamingSpec pins the equality at exactly
-    // this default, which collapses every 30-day replay to ~1 bucket +
-    // flush), cutting the streaming share of the run. Verify never
-    // sets this, so the correctness gate still drives the full
-    // per-day replay. The env override is CLAMPED to the spec-pinned
-    // values (r14 ADVICE: an arbitrary override would run a coarsening
-    // no test pins): 1 = full replay (≡ Verify), 40 = the pinned bench
-    // default; anything else falls back to 40 with a warning.
-    System.setProperty("graft.replay.coarsen",
-      Bench.clampCoarsen(sys.env.get("SPARK_GRAFT_REPLAY_COARSEN")))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // Explicit 100 TB-posture: AQE re-plans joins at runtime and
-      // splits skewed partitions (defaults in Spark 4; pinned here so a
-      // config drift can't silently change the bench).
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
 
     def materialize(name: String): Either[String, Unit] =
       try {

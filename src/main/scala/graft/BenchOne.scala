@@ -1,22 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
-/** Scratch diagnostic: time one query (or a comma list) N times with
-  * phase breakdown. */
+/** Scratch diagnostic: time one query (or a comma list) 3 times with
+  * phase breakdown, in Bench's session. */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(',').toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // mirror Bench's replay coarsening so phase re-times are comparable
-    System.setProperty("graft.replay.coarsen",
-      Bench.clampCoarsen(sys.env.get("SPARK_GRAFT_REPLAY_COARSEN")))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session()
     names.foreach { name =>
       (1 to 3).foreach { i =>
         val t0 = System.nanoTime()

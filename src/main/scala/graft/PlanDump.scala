@@ -1,12 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Scratch diagnostic (optimization-round tooling, like BenchOne):
   * writes `explain("formatted")` for the named queries to
   * `<outDir>/<name>_<tag>.txt` — the before/after plan evidence the
-  * optimization deliverables require. Uses the Bench session config so
-  * the captured plan is the one the bench actually executes (AQE on;
+  * optimization deliverables require. Uses the Bench session so the
+  * captured plan is the one the bench actually executes (AQE on;
   * the initial plan is what explain shows pre-execution — noted in the
   * file header).
   *
@@ -18,20 +17,7 @@ object PlanDump {
     val tag = args(1)
     val names = args(2).split(',').toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    System.setProperty("graft.replay.coarsen",
-      Bench.clampCoarsen(sys.env.get("SPARK_GRAFT_REPLAY_COARSEN")))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       try {
@@ -39,7 +25,7 @@ object PlanDump {
         val formatted = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         val header = s"# $name ($tag) — explain(formatted), sf=$sfDir, " +
-          s"cpus=$cpus, AQE on (initial plan; isFinalPlan=false)\n"
+          s"cpus=${Bench.cpus}, AQE on (initial plan; isFinalPlan=false)\n"
         Files.writeString(Paths.get(outDir, s"${name}_$tag.txt"),
           header + formatted)
         println(s"dumped $name")

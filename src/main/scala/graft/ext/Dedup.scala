@@ -73,33 +73,6 @@ object Dedup {
         xxhash64(slice(sig, b * rowsPerBand + 1, rowsPerBand)).as("bh"))
     }: _*)
 
-  /** E2 over a precomputed `(id, sh)` shingle-set frame. The caller
-    * should hand in a MATERIALIZED frame (checkpoint / persisted
-    * signature table): the frame is consumed four times (both sides of
-    * the band self-join, both sides of the refinement join), so an
-    * unmaterialized input would recompute text→shingles 4×. */
-  def minhashNearDupPairsFromSets(
-      sets: DataFrame, k: Int, bands: Int, threshold: Double): DataFrame = {
-    val rowsPerBand = k / bands
-    // Narrow band table: (id, bandKey) only — the shingle sets are
-    // re-joined after candidate dedup so the explode carries no payload.
-    val bandsDf = sets.select(col("id"),
-      explode(bandKeys(minhashSignature(col("sh"), k), bands, rowsPerBand))
-        .as("bk"))
-    val candidates = bandsDf.as("a")
-      .join(bandsDf.as("b"),
-        col("a.bk") === col("b.bk") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("a"), col("b.id").as("b"))
-      .distinct()
-    candidates
-      .join(sets.as("sa"), col("a") === col("sa.id"))
-      .join(sets.as("sb"), col("b") === col("sb.id"))
-      .withColumn("jaccard",
-        graft.functions.JaccardSim.jaccardSim(col("sa.sh"), col("sb.sh")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), round(col("jaccard"), 4).as("jaccard"))
-  }
-
   /** E2: MinHash-LSH near-duplicate pairs with exact-Jaccard refinement.
     * Candidates come from an equi-join on band keys (shuffle by band
     * hash — never all-pairs); only candidates pay the exact set
@@ -115,7 +88,7 @@ object Dedup {
         col(idCol).as("id"),
         shingles(col(textCol), shingleN).as("sh"))
       .localCheckpoint(eager = false)
-    minhashNearDupPairsFromSets(sets, k, bands, threshold)
+    minhashNearDupPairsAgainst(sets, sets, k, bands, threshold)
   }
 
   /** Asymmetric banded MinHash join: candidates pair `base` × `probe`
@@ -125,26 +98,55 @@ object Dedup {
     * batch computes signatures fresh, so each ingest pays O(|batch|)
     * signature work plus a banding-bounded candidate join, not a
     * recluster of the corpus. `base`/`probe` are (id, sh) set frames;
-    * returns (a, b, jaccard) with b ∈ probe, jaccard ≥ threshold. */
+    * returns (a, b, jaccard) with b ∈ probe, jaccard ≥ threshold.
+    * Passing the SAME frame as `base` and `probe` is the symmetric
+    * self-join: its band table is built once and feeds both sides of
+    * the band join. A materialized
+    * frame (checkpoint / persisted signature table) keeps the set
+    * build from running once per consumer. */
   def minhashNearDupPairsAgainst(base: DataFrame, probe: DataFrame,
       k: Int, bands: Int, threshold: Double): DataFrame = {
-    val rowsPerBand = k / bands
-    def bandTable(sets: DataFrame) = sets.select(col("id"),
-      explode(bandKeys(minhashSignature(col("sh"), k), bands, rowsPerBand))
-        .as("bk"))
-    val candidates = bandTable(base).as("a")
-      .join(bandTable(probe).as("b"),
+    def bandsOf(sets: DataFrame) =
+      bandTable(sets, minhashSignature(col("sh"), k), k, bands)
+    val baseBands = bandsOf(base)
+    val probeBands = if (probe eq base) baseBands else bandsOf(probe)
+    bandJoin(baseBands, base, probeBands, probe, threshold)
+  }
+
+  /** (id, bk) band table: one row per set and band of signature `sig`
+    * — narrow, so the band join's explode carries no payload. */
+  private def bandTable(sets: DataFrame, sig: Column, k: Int,
+      bands: Int): DataFrame =
+    sets.select(col("id"),
+      explode(bandKeys(sig, bands, k / bands)).as("bk"))
+
+  /** The MinHash-LSH band join every MinHash pair generator runs:
+    * (id, bk) band tables equi-joined on band key with `a.id < b.id`,
+    * deduplicated, then refined against the matching (id, sh) sets. */
+  private def bandJoin(baseBands: DataFrame, baseSets: DataFrame,
+      probeBands: DataFrame, probeSets: DataFrame,
+      threshold: Double): DataFrame = {
+    val candidates = baseBands.as("a")
+      .join(probeBands.as("b"),
         col("a.bk") === col("b.bk") && col("a.id") < col("b.id"))
       .select(col("a.id").as("a"), col("b.id").as("b"))
       .distinct()
+    jaccardRefine(candidates, baseSets, probeSets, threshold)
+  }
+
+  /** Exact-Jaccard refinement shared by the MinHash and n-gram pair
+    * generators: candidate (a, b) pairs joined to their shingle sets
+    * (`a` from `baseSets`, `b` from `probeSets`), kept at
+    * J ≥ threshold. Returns (a, b, jaccard). */
+  private def jaccardRefine(candidates: DataFrame, baseSets: DataFrame,
+      probeSets: DataFrame, threshold: Double): DataFrame =
     candidates
-      .join(base.as("sa"), col("a") === col("sa.id"))
-      .join(probe.as("sb"), col("b") === col("sb.id"))
+      .join(baseSets.as("sa"), col("a") === col("sa.id"))
+      .join(probeSets.as("sb"), col("b") === col("sb.id"))
       .withColumn("jaccard",
         graft.functions.JaccardSim.jaccardSim(col("sa.sh"), col("sb.sh")))
       .filter(col("jaccard") >= threshold)
       .select(col("a"), col("b"), round(col("jaccard"), 4).as("jaccard"))
-  }
 
   /** E2e: incremental dedup — admit a fresh batch against an immutable
     * existing corpus. A fresh row is dropped iff it exactly duplicates
@@ -154,8 +156,10 @@ object Dedup {
     * never self-compared — old↔old pairs are excluded structurally by
     * the asymmetric band join. REQUIRES every fresh id > every old id
     * (ingest batches get monotone id ranges), which is what makes
-    * "drop the fresh side" expressible as `drop b`. Returns the
-    * surviving fresh rows with all their columns. */
+    * "drop the fresh side" expressible as `drop b`. Admission is
+    * [[lshAdmitAgainstSignatures]] over an in-memory
+    * [[lshSignatureTable]] of `old`. Returns the surviving fresh rows
+    * with all their columns. */
   def incrementalDedup(old: DataFrame, fresh: DataFrame,
       idCol: String, textCol: String, shingleN: Int = 3,
       k: Int = 64, bands: Int = 16, threshold: Double = 0.8,
@@ -180,26 +184,9 @@ object Dedup {
             "checkIdContract=false")
       }
     }
-    val oldDigests = old
-      .select(sha2(col(textCol), 256).as("_digest")).distinct()
-    // Materialized once: three consumers (set build, band join's
-    // refinement side, final anti-join) must not re-run the digest
-    // window over full text.
-    val exactKept = exactDedup(fresh, textCol, idCol)
-      .withColumn("_digest", sha2(col(textCol), 256))
-      .join(oldDigests, Seq("_digest"), "left_anti")
-      .drop("_digest")
-      .localCheckpoint(eager = false)
-    val freshSets = exactKept.select(col(idCol).as("id"),
-      shingles(col(textCol), shingleN).as("sh"))
-      .localCheckpoint(eager = false)
-    val baseSets = old.select(col(idCol).as("id"),
-      shingles(col(textCol), shingleN).as("sh"))
-      .unionByName(freshSets)
-    val dropIds =
-      minhashNearDupPairsAgainst(baseSets, freshSets, k, bands, threshold)
-        .select(col("b").as(idCol)).distinct()
-    exactKept.join(dropIds, Seq(idCol), "left_anti")
+    lshAdmitAgainstSignatures(
+      lshSignatureTable(old, idCol, textCol, shingleN, k),
+      fresh, idCol, textCol, shingleN, k, bands, threshold)
   }
 
   /** Bloom-prefiltered exact-digest admission — the ingest-side
@@ -264,20 +251,22 @@ object Dedup {
     lshSignatureTable(docs, idCol, textCol, shingleN, k, nCells)
       .write.mode("overwrite").partitionBy("cell").parquet(path)
 
-  /** [[incrementalDedup]] admission against a signature TABLE instead
-    * of raw corpus text: the base side's band keys come from the
-    * stored `sig` (no corpus re-minhash), refinement reads the stored
-    * shingle sets, and the exact stage anti-joins the stored digests.
-    * Semantics are row-for-row [[incrementalDedup]]'s (one spec pins
-    * the equality); same REQUIRES — fresh ids all exceed table ids.
-    * `table` is whatever scan the caller wants: the plain parquet
-    * read, the merge-on-read view with tombstones applied, or an
-    * in-memory [[lshSignatureTable]]. */
+  /** [[incrementalDedup]]'s admission against a signature TABLE
+    * instead of raw corpus text: the base side's band keys come from
+    * the stored `sig` (no corpus re-minhash), refinement reads the
+    * stored shingle sets, and the exact stage anti-joins the stored
+    * digests. Same REQUIRES — fresh ids all exceed table ids. `table`
+    * is whatever scan the caller wants: the plain parquet read, the
+    * merge-on-read view with tombstones applied, or an in-memory
+    * [[lshSignatureTable]] (what [[incrementalDedup]] passes; one spec
+    * pins persisted and in-memory admission equal row for row). */
   def lshAdmitAgainstSignatures(table: DataFrame, fresh: DataFrame,
       idCol: String, textCol: String, shingleN: Int, k: Int, bands: Int,
       threshold: Double): DataFrame = {
-    val rowsPerBand = k / bands
     val oldDigests = table.select(col("digest").as("_digest")).distinct()
+    // Materialized once: three consumers (set build, band join's
+    // refinement side, final anti-join) must not re-run the digest
+    // window over full text.
     val exactKept = exactDedup(fresh, textCol, idCol)
       .withColumn("_digest", sha2(col(textCol), 256))
       .join(oldDigests, Seq("_digest"), "left_anti")
@@ -286,23 +275,14 @@ object Dedup {
     val freshSets = exactKept.select(col(idCol).as("id"),
         shingles(col(textCol), shingleN).as("sh"))
       .localCheckpoint(eager = false)
-    val freshBands = freshSets.select(col("id"),
-      explode(bandKeys(minhashSignature(col("sh"), k), bands,
-        rowsPerBand)).as("bk"))
-    val baseBands = table.select(col("id"),
-        explode(bandKeys(col("sig"), bands, rowsPerBand)).as("bk"))
+    val freshBands =
+      bandTable(freshSets, minhashSignature(col("sh"), k), k, bands)
+    val baseBands = bandTable(table, col("sig"), k, bands)
       .unionByName(freshBands)
     val baseSets = table.select(col("id"), col("sh"))
       .unionByName(freshSets)
-    val candidates = baseBands.as("a").join(freshBands.as("b"),
-        col("a.bk") === col("b.bk") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("a"), col("b.id").as("b")).distinct()
-    val dropIds = candidates
-      .join(baseSets.as("sa"), col("a") === col("sa.id"))
-      .join(freshSets.as("sb"), col("b") === col("sb.id"))
-      .withColumn("jaccard",
-        graft.functions.JaccardSim.jaccardSim(col("sa.sh"), col("sb.sh")))
-      .filter(col("jaccard") >= threshold)
+    val dropIds = bandJoin(baseBands, baseSets, freshBands, freshSets,
+        threshold)
       .select(col("b").as(idCol)).distinct()
     exactKept.join(dropIds, Seq(idCol), "left_anti")
   }
@@ -387,48 +367,8 @@ object Dedup {
     * Returns (a, b, jaccard) with a < b, J ≥ threshold. */
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, threshold: Double = 0.75): DataFrame = {
-    val sets = Tables.spread(df.select(col(idCol), col(textCol)))
-      .select(col(idCol).as("id"),
-        shingles(col(textCol), shingleN).as("sh"))
-      .filter(size(col("sh")) > 0).localCheckpoint(eager = false)
-    val tokens = sets.select(col("id"), explode(col("sh")).as("tok"))
-    val freq = tokens.groupBy(col("tok")).agg(count(lit(1)).as("f"))
-    // ε guards the PRUNING arithmetic only (never the exact verification):
-    // t·|s| in doubles can land a hair above an exact integer (0.8·5 =
-    // 4.0000000000000004), which would shorten the prefix / tighten the
-    // length filter and silently drop true pairs. ε admits at most a few
-    // extra candidates, which exact verification discards.
-    val eps = 1e-9
-    // per doc: tokens sorted by global (f, tok) order, keep the prefix
-    val prefixes = tokens.join(freq, Seq("tok"))
-      .groupBy(col("id"))
-      .agg(collect_list(struct(col("f"), col("tok"))).as("ts"))
-      .select(col("id"),
-        slice(array_sort(col("ts")),
-          lit(1),
-          size(col("ts")) -
-            ceil(lit(threshold) * size(col("ts")) - eps).cast("int") + 1)
-          .as("pref"),
-        size(col("ts")).as("n_sh"))
-      .select(col("id"), col("n_sh"),
-        explode(transform(col("pref"), s => s.getField("tok"))).as("tok"))
-    val candidates = prefixes.as("a")
-      .join(prefixes.as("b"),
-        col("a.tok") === col("b.tok") && col("a.id") < col("b.id") &&
-          // length filter: J ≥ t ⇒ t·max(|a|,|b|) ≤ min(|a|,|b|)
-          least(col("a.n_sh"), col("b.n_sh")).cast("double") >=
-            lit(threshold) * greatest(col("a.n_sh"), col("b.n_sh")) - eps)
-      .select(col("a.id").as("a"), col("b.id").as("b"))
-      .distinct()
-    candidates
-      .join(sets.as("sa"), col("a") === col("sa.id"))
-      .join(sets.as("sb"), col("b") === col("sb.id"))
-      .withColumn("jaccard",
-        graft.functions.JaccardSim.jaccardSim(col("sa.sh"), col("sb.sh")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), round(col("jaccard"), 4).as("jaccard"))
-  }
+      shingleN: Int = 3, threshold: Double = 0.75): DataFrame =
+    ngramJaccardPairsAgainst(df, df, idCol, textCol, shingleN, threshold)
 
   /** ASYMMETRIC [[ngramJaccardPairs]]: exact J ≥ threshold pairs that
     * TOUCH the probe batch — (base∪probe)×probe plus probe×probe, never
@@ -442,7 +382,9 @@ object Dedup {
     * prune under one order. REQUIRES (like [[incrementalDedup]]): every
     * probe id exceeds every base id — that is what keeps a.id < b.id
     * canonical with the b-side restricted to probe. Returns
-    * (a, b, jaccard), b always a probe id. */
+    * (a, b, jaccard), b always a probe id. Passing the SAME frame as
+    * `base` and `probe` is the symmetric self-join: one set build, one
+    * prefix table feeding both sides of the join. */
   def ngramJaccardPairsAgainst(
       base: DataFrame, probe: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, threshold: Double = 0.75): DataFrame = {
@@ -451,13 +393,18 @@ object Dedup {
         .select(col(idCol).as("id"),
           shingles(col(textCol), shingleN).as("sh"))
         .filter(size(col("sh")) > 0).localCheckpoint(eager = false)
-    val baseSets = setsOf(base)
     val probeSets = setsOf(probe)
-    val allSets = baseSets.unionByName(probeSets)
-      .localCheckpoint(eager = false)
+    val allSets = if (probe eq base) probeSets
+      else setsOf(base).unionByName(probeSets).localCheckpoint(eager = false)
     val tokens = allSets.select(col("id"), explode(col("sh")).as("tok"))
     val freq = tokens.groupBy(col("tok")).agg(count(lit(1)).as("f"))
-    val eps = 1e-9 // pruning-only guard, as in ngramJaccardPairs
+    // ε guards the PRUNING arithmetic only (never the exact verification):
+    // t·|s| in doubles can land a hair above an exact integer (0.8·5 =
+    // 4.0000000000000004), which would shorten the prefix / tighten the
+    // length filter and silently drop true pairs. ε admits at most a few
+    // extra candidates, which exact verification discards.
+    val eps = 1e-9
+    // per doc: tokens sorted by global (f, tok) order, keep the prefix
     def prefixesOf(s: DataFrame) = s
       .select(col("id"), explode(col("sh")).as("tok"))
       .join(freq, Seq("tok"))
@@ -472,20 +419,18 @@ object Dedup {
         size(col("ts")).as("n_sh"))
       .select(col("id"), col("n_sh"),
         explode(transform(col("pref"), s => s.getField("tok"))).as("tok"))
-    val candidates = prefixesOf(allSets).as("a")
-      .join(prefixesOf(probeSets).as("b"),
+    val allPrefixes = prefixesOf(allSets)
+    val probePrefixes =
+      if (probe eq base) allPrefixes else prefixesOf(probeSets)
+    val candidates = allPrefixes.as("a")
+      .join(probePrefixes.as("b"),
         col("a.tok") === col("b.tok") && col("a.id") < col("b.id") &&
+          // length filter: J ≥ t ⇒ t·max(|a|,|b|) ≤ min(|a|,|b|)
           least(col("a.n_sh"), col("b.n_sh")).cast("double") >=
             lit(threshold) * greatest(col("a.n_sh"), col("b.n_sh")) - eps)
       .select(col("a.id").as("a"), col("b.id").as("b"))
       .distinct()
-    candidates
-      .join(allSets.as("sa"), col("a") === col("sa.id"))
-      .join(probeSets.as("sb"), col("b") === col("sb.id"))
-      .withColumn("jaccard",
-        graft.functions.JaccardSim.jaccardSim(col("sa.sh"), col("sb.sh")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), round(col("jaccard"), 4).as("jaccard"))
+    jaccardRefine(candidates, allSets, probeSets, threshold)
   }
 
   /** Containment (asymmetric resemblance, Broder 1997) self-join — the
@@ -1241,7 +1186,7 @@ object Dedup {
       .join(sets.as("sb"), col("b") === col("sb.id"))
       .withColumn("jaccard",
         graft.functions.JaccardSim.jaccardSim(col("sa.sh"), col("sb.sh")))
-    val highJ = minhashNearDupPairsFromSets(sets, k = 64, bands = 16,
+    val highJ = minhashNearDupPairsAgainst(sets, sets, k = 64, bands = 16,
       threshold = 0.9)
       .join(fps.as("fa"), col("a") === col("fa.id"))
       .join(fps.as("fb"), col("b") === col("fb.id"))

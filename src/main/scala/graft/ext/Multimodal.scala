@@ -318,18 +318,6 @@ object Multimodal {
     h
   }
 
-  /** STUB media resize: binary → binary (a real one re-encodes pixels;
-    * the fake truncates deterministically, preserving the shape of the
-    * transform: binary in, smaller binary out, map-only). */
-  def resizeStub(bin: Column, maxBytes: Int): Column =
-    substring(bin, 1, maxBytes)
-
-  /** STUB frame sampling: binary "video" → array<binary> of frames
-    * (fixed-stride chunks; a real one keyframe-samples). */
-  def frameSampleStub(bin: Column, frameBytes: Int, nFrames: Int): Column =
-    transform(sequence(lit(0), lit(nFrames - 1)),
-      i => bin.substr(i * frameBytes + 1, lit(frameBytes)))
-
   /** Typed record for one sampled video frame. */
   final case class FrameStats(doc_id: Long, frame_idx: Int,
       mean_b: Double, max_b: Int)

@@ -257,9 +257,18 @@ object Similarity {
       cents: Seq[(Int, Seq[Double])], k: Int, nprobe: Int): DataFrame = {
     val c = ivfAssign(corpus, cents)
       .select(col("vec_id").as("c_id"), col("cell"), col("uv").as("cv"))
+    ivfRank(c, queries, cents, k, nprobe)
+  }
+
+  /** The IVF search tail shared by the in-memory and on-disk paths: a
+    * `(c_id, cell, cv)` cell-assigned corpus joined to the broadcast
+    * probe list on cell, exact cosine on the probed cells, top `k` per
+    * query (ties to the lower c_id). Returns (q_id, rnk, c_id, sim). */
+  private def ivfRank(cells: DataFrame, queries: DataFrame,
+      cents: Seq[(Int, Seq[Double])], k: Int, nprobe: Int): DataFrame = {
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("c_id"))
-    c.join(broadcast(ivfProbes(queries, cents, nprobe)), Seq("cell"))
+    cells.join(broadcast(ivfProbes(queries, cents, nprobe)), Seq("cell"))
       .filter(col("q_id") =!= col("c_id"))
       .withColumn("cos", dot(col("qv"), col("cv")))
       .withColumn("rnk", row_number().over(w))
@@ -286,16 +295,8 @@ object Similarity {
   def ivfSearchIndex(spark: SparkSession, path: String, queries: DataFrame,
       cents: Seq[(Int, Seq[Double])], k: Int, nprobe: Int): DataFrame = {
     val idx = spark.read.parquet(path)
-      .select(col("vec_id").as("c_id"), col("uv").as("cv"), col("cell"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("c_id"))
-    idx.join(broadcast(ivfProbes(queries, cents, nprobe)), Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos", dot(col("qv"), col("cv")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("c_id"),
-        round(col("cos"), 6).as("sim"))
+      .select(col("vec_id").as("c_id"), col("cell"), col("uv").as("cv"))
+    ivfRank(idx, queries, cents, k, nprobe)
   }
 
   // ------------------------------------- IVF index deletes (e3o)
@@ -486,16 +487,8 @@ object Similarity {
       queries: DataFrame, cents: Seq[(Int, Seq[Double])], k: Int,
       nprobe: Int): DataFrame = {
     val idx = ivfReadIndex(spark, path)
-      .select(col("vec_id").as("c_id"), col("uv").as("cv"), col("cell"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("c_id"))
-    idx.join(broadcast(ivfProbes(queries, cents, nprobe)), Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos", dot(col("qv"), col("cv")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("c_id"),
-        round(col("cos"), 6).as("sim"))
+      .select(col("vec_id").as("c_id"), col("cell"), col("uv").as("cv"))
+    ivfRank(idx, queries, cents, k, nprobe)
   }
 
   // ------------------------------------------------------------ PQ

@@ -474,13 +474,16 @@ object Relational {
     * exact `COUNT(DISTINCT)` below is rewritten by CATALYST to
     * HyperLogLog++ before planning; the exact side goes through a
     * distinct-then-count shape the rule leaves alone. Executed eagerly
-    * (scratch-parquet write) while the flag is on so the flag can't
-    * leak into later queries' plans. Gate: every group's estimate
-    * within the 3σ HLL bound of exact. */
+    * (scratch-parquet write) while the flag is on; the caller's value
+    * (or its absence) is restored afterwards, so the flag can't leak
+    * into later queries' plans. Gate: every group's estimate within
+    * the 3σ HLL bound of exact. */
   private val x6ApproxRewrite: Q = (s, dir) => {
     val li = t(s, dir, "lineitem")
     val out = graft.lake.Lake.scratchDir("x6")
-    s.conf.set("spark.graft.approxDistinct", "true")
+    val key = "spark.graft.approxDistinct"
+    val saved = s.conf.getOption(key)
+    s.conf.set(key, "true")
     try {
       val approx = li.groupBy(col("l_returnflag"))
         .agg(countDistinct(col("l_partkey")).as("ad")) // rule rewrites this
@@ -488,7 +491,10 @@ object Relational {
         .groupBy(col("l_returnflag")).agg(count(lit(1)).as("ed"))
       approx.join(exact, Seq("l_returnflag"))
         .write.mode("overwrite").parquet(out)
-    } finally s.conf.set("spark.graft.approxDistinct", "false")
+    } finally saved match {
+      case Some(v) => s.conf.set(key, v)
+      case None    => s.conf.unset(key)
+    }
     s.read.parquet(out).agg(
       expr("bool_and(abs(ad - ed) <= 0.15 * ed)").as("approx_within_bound"),
       (count(lit(1)) === 3).as("all_groups"))

@@ -425,15 +425,22 @@ class DedupSpec extends SparkSpec {
         else old.collect()(rnd.nextInt(40)).getString(1)
         (i, if (i % 5 == 0) base + " omega" else base)
       }.toDF("doc_id", "text")
+      // incrementalDedup admits over an in-memory lshSignatureTable;
+      // this side round-trips the table through the cell-partitioned
+      // parquet write and the merge-on-read scan.
+      val path = graft.lake.Lake.scratchDir("lshadmit_spec") + "/sigs"
+      Dedup.lshWriteSignatures(old, "doc_id", "text", 3, 64, path)
       val viaTable = Dedup.lshAdmitAgainstSignatures(
-        Dedup.lshSignatureTable(old, "doc_id", "text", 3, 64),
+        graft.ext.Similarity.ivfReadIndex(spark, path, idCol = "id"),
         fresh, "doc_id", "text", 3, 64, 16, 0.5)
         .select("doc_id").as[Long].collect().sorted.toSeq
       val direct = Dedup.incrementalDedup(old, fresh, "doc_id", "text",
         shingleN = 3, k = 64, bands = 16, threshold = 0.5)
         .select("doc_id").as[Long].collect().sorted.toSeq
-      assert(viaTable == direct, s"seed $seed: table-based admission " +
-        s"diverged: $viaTable vs $direct")
+      assert(viaTable == direct, s"seed $seed: persisted-table admission " +
+        s"diverged from the in-memory table: $viaTable vs $direct")
+      assert(direct.nonEmpty && direct.size < 40,
+        s"seed $seed: admission must both admit and reject: $direct")
     }
     // deletes end-to-end on a tiny corpus: doc 1's exact dup is
     // rejected until doc 1 is tombstoned, then admitted

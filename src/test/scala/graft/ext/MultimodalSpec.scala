@@ -67,18 +67,6 @@ class MultimodalSpec extends SparkSpec {
     assert(rows.map(_.features.toSeq).toSeq == again.map(_.features.toSeq).toSeq)
   }
 
-  test("resize and frame-sample stubs preserve the media transform shapes") {
-    val df = Seq("0123456789abcdef").toDF("t")
-      .withColumn("bin", col("t").cast("binary"))
-    val resized = df.select(Multimodal.resizeStub(col("bin"), 4).as("r"))
-      .head().getAs[Array[Byte]]("r")
-    assert(new String(resized) == "0123")
-    val frames = df.select(
-      Multimodal.frameSampleStub(col("bin"), frameBytes = 4, nFrames = 3).as("f"))
-      .head().getSeq[Array[Byte]](0)
-    assert(frames.map(b => new String(b)) == Seq("0123", "4567", "89ab"))
-  }
-
   test("frameSample slices stride-th frames and zero-pads the tail") {
     // 6 bytes of payload over a 4-frame × 4-byte layout, stride 2:
     // frame 0 = bytes 0-3 (values 10,20,30,40), frame 2 = all padding.

@@ -52,4 +52,18 @@ class ApproxDistinctRewriteSpec extends SparkSpec {
       assert(row.getLong(1) == 10L, s"filtered distinct must stay exact: $row")
     } finally spark.conf.set(Flag, "false")
   }
+
+  test("x6_approx_rewrite restores the caller's flag, or its absence") {
+    val x6 = graft.SparkEntry.queries("x6_approx_rewrite")
+    spark.conf.set(Flag, "true")
+    try {
+      assert(x6(spark, sf).collect().head.getBoolean(1), "all_groups")
+      assert(spark.conf.getOption(Flag).contains("true"),
+        "a caller's flag=true must survive the query")
+      spark.conf.unset(Flag)
+      x6(spark, sf).collect()
+      assert(spark.conf.getOption(Flag).isEmpty,
+        "an absent flag must stay absent")
+    } finally spark.conf.unset(Flag)
+  }
 }
