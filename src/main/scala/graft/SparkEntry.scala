@@ -16,7 +16,7 @@ object SparkEntry {
     operators.Relational.q1Agg(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  def queries: Map[String, Q] =
     operators.Relational.queries ++
       operators.Advanced.queries ++
       operators.Graph.queries ++

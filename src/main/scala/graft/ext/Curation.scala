@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Q, Tables}
 
 /** E7: end-to-end training-data curation — the composition the other
   * EXT operators exist for (EXT, SURVEY §2.12; no reference analog —
@@ -22,8 +22,6 @@ import graft.Tables
   * the composition, not just per-operator.
   */
 object Curation {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Documents plus planted duplicates (lang carried through so the
     * final per-language rollup sees them): an exact copy of every 10th

@@ -6,7 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
-import graft.Tables
+import graft.{Q, Tables}
+import graft.Tables.{load => t}
 import graft.functions.SimHash64.simhash64
 
 /** Deduplication for training-data pipelines — exact, MinHash-LSH, and
@@ -20,11 +21,6 @@ import graft.functions.SimHash64.simhash64
   *  - fingerprints (minhash/simhash) are map-only single passes.
   */
 object Dedup {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  type Q = (SparkSession, String) => DataFrame
 
   // ------------------------------------------------------------ operators
 
@@ -114,11 +110,14 @@ object Dedup {
   }
 
   /** (id, bk) band table: one row per set and band of signature `sig`
-    * — narrow, so the band join's explode carries no payload. */
+    * — narrow, so the band join's explode carries no payload. `sig` is
+    * projected into a column first: every band slices it, and an
+    * inline signature expression would run once per band. */
   private def bandTable(sets: DataFrame, sig: Column, k: Int,
       bands: Int): DataFrame =
-    sets.select(col("id"),
-      explode(bandKeys(sig, bands, k / bands)).as("bk"))
+    sets.select(col("id"), sig.as("_sig"))
+      .select(col("id"),
+        explode(bandKeys(col("_sig"), bands, k / bands)).as("bk"))
 
   /** The MinHash-LSH band join every MinHash pair generator runs:
     * (id, bk) band tables equi-joined on band key with `a.id < b.id`,

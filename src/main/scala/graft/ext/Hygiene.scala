@@ -2,7 +2,8 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Q, Tables}
+import graft.Tables.{load => t}
 
 /** Corpus-hygiene operators for training-data pipelines (EXT, SURVEY
   * §2.12; no reference analog — the reference stops at relational ETL):
@@ -20,11 +21,6 @@ import graft.Tables
   * \d — no backreferences or lookaround.
   */
 object Hygiene {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  type Q = (SparkSession, String) => DataFrame
 
   // ----------------------------------------------------- PII redaction
 

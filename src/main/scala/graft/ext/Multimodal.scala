@@ -2,7 +2,8 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Q, Tables}
+import graft.Tables.{load => t}
 
 /** Multimodal columns (EXT, SURVEY §2.12 E5): media as opaque binary
   * with typed metadata, and `array<float>` embeddings flowing through
@@ -15,11 +16,6 @@ import graft.Tables
   * features) is real and oracle-tested.
   */
 object Multimodal {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Byte length / digest / head bytes of a binary column — the typed
     * metadata every media column carries. */

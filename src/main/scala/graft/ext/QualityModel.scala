@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Q, Tables}
 
 /** Trainable quality classifier (EXT, SURVEY §2.12; no reference
   * analog) — the fastText-style linear filter every web-corpus pipeline
@@ -22,8 +22,6 @@ import graft.Tables
   * sample of it); the driver never holds data, only the weight vector.
   */
 object QualityModel {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Feature vector: [bias, banned-term count, stopword ratio,
     * ln(1+len)/10]. Shares [[Hygiene.BannedTermRe]] so the planted-spam

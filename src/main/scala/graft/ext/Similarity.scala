@@ -3,7 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.Q
+import graft.Tables.{load => t}
 import scala.jdk.CollectionConverters._
 
 /** Similarity search over an embedding column (EXT, SURVEY §2.12 E3).
@@ -17,11 +18,6 @@ import scala.jdk.CollectionConverters._
   * per-query candidate budget, exact refinement on candidates only.
   */
 object Similarity {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Float embedding → double array (pin the arithmetic to double so
     * results are engine-stable). */

@@ -3,7 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Q, Tables}
+import graft.Tables.{load => t}
 import graft.functions.SimHash64.simhash64
 
 /** Text analysis for training-data pipelines (EXT, SURVEY §2.12 E4):
@@ -12,11 +13,6 @@ import graft.functions.SimHash64.simhash64
   * linear-scaling shape.
   */
 object TextStats {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  type Q = (SparkSession, String) => DataFrame
 
   private val StopWords = Seq("the", "a", "of", "and", "to")
 

@@ -3,7 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Q, Tables}
+import graft.Tables.{load => t}
 
 /** Training-dataset preparation operators (EXT, SURVEY §2.12; no
   * reference analog — the reference stops at relational ETL). The three
@@ -19,11 +20,6 @@ import graft.Tables
   * All three are map/equi-join/window shapes — no all-pairs anywhere.
   */
 object TrainPrep {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  type Q = (SparkSession, String) => DataFrame
 
   // ------------------------------------------------------ hash split
 

@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Q, Tables}
+import graft.Tables.{load => t}
 
 /** Scalar function surface — SURVEY.md §2.9 (F1-F8).
   *
@@ -16,11 +17,6 @@ import graft.Tables
   * codegen'd, inside WholeStageCodegen, no UDFs in any hot path.
   */
 object Scalars {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** F1: string functions over part names. */
   private val f1String: Q = (s, dir) =>

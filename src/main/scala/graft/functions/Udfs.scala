@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Q, Tables}
+import graft.Tables.{load => t}
 
 /** UDF / UDAF / UDTF surface (SURVEY §2.11 X2-X4) — the reference's
   * extensibility point (custom packages into jobs, README.md:92-109;
@@ -15,11 +16,6 @@ import graft.Tables
   * codegen); these exist to cover the extensibility contract.
   */
 object Udfs {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** X3: geometric mean as a typed Aggregator (exp of mean of logs —
     * partial aggregation: (sum logs, count) buffers merge associatively,

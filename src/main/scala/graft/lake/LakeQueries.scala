@@ -2,7 +2,8 @@ package graft.lake
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Q, Tables}
+import graft.Tables.{load => t}
 import Lake.Mapping
 
 /** Oracle-checkable round-trip pipelines over the lake layer.
@@ -14,11 +15,6 @@ import Lake.Mapping
   * null sentinels, header/trim/inference semantics, partition layout.
   */
 object LakeQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** S1: TSV scan (sep/header/quote/`\N` nulls) — customer TSV with a
     * nullable column round-trips; inference types then ApplyMapping

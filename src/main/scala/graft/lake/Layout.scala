@@ -2,7 +2,7 @@ package graft.lake
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Q, Tables}
 
 /** Z-order (Morton-curve) data layout — the multi-dimensional clustering
   * every lake engine grew (Delta OPTIMIZE ZORDER BY, Iceberg sort
@@ -25,8 +25,6 @@ import graft.Tables
   * O(box area / bucket area) of the table for any 2-D box.
   */
 object Layout {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** How a 2-D z-layout maps raw columns onto the 16-bit × 16-bit grid:
     * fixed expected domains (like any table sort/cluster spec, chosen

@@ -3,7 +3,7 @@ package graft.lake
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import graft.Tables
+import graft.{Q, Tables}
 
 /** Versioned table snapshots with time-travel reads — the Delta/Iceberg
   * capability a plain-parquet lake lacks (the reference's tables are
@@ -20,8 +20,6 @@ import graft.Tables
   * vs manifest-of-files designs, noted here; the READ API is identical.
   */
 object Snapshots {
-
-  type Q = (SparkSession, String) => DataFrame
 
   private def manifest(root: String) = Paths.get(root, "_latest")
 

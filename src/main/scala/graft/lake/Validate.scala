@@ -2,7 +2,7 @@ package graft.lake
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Q, Tables}
 
 /** Declarative data-quality validation — the Deequ/Great-Expectations
   * stage every lake pipeline runs before publishing a table (the
@@ -20,8 +20,6 @@ import graft.Tables
   * table.
   */
 object Validate {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** One constraint = a named metric expression (an AGGREGATE Column
     * producing a double in [0,1] or any scalar) plus a pass predicate

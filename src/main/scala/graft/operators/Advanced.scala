@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Q, Tables}
+import graft.Tables.{load => t}
 
 /** Deeper SQL surface + scale-layout operators.
   *
@@ -14,11 +15,6 @@ import graft.Tables
   * side) and salted joins for skewed keys.
   */
 object Advanced {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  type Q = (SparkSession, String) => DataFrame
 
   // ------------------------------------------------------- SQL surface
 
@@ -552,15 +548,9 @@ object Advanced {
     * compiles (and the filter injects) while the in-scope confs are
     * set; the session confs are restored before returning. */
   private val j11BloomJoin: Q = (s, dir) => {
-    val saved = bloomConfs.map { case (k, _) => k -> s.conf.getOption(k) }
-    bloomConfs.foreach { case (k, v) => s.conf.set(k, v) }
-    val agg =
-      try bloomJoinAgg(s, dir).localCheckpoint(true)
-      finally saved.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
-      }
-    agg.orderBy(col("o_orderstatus"))
+    graft.withConf(s, bloomConfs: _*)(
+      bloomJoinAgg(s, dir).localCheckpoint(true))
+      .orderBy(col("o_orderstatus"))
   }
 
   /** J12: DYNAMIC PARTITION PRUNING — the star-schema scan killer at

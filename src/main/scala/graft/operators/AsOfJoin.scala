@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Q, Tables}
 
 /** As-of (temporal) join — J7, the canonical "operator Spark lacks".
   *
@@ -77,8 +77,6 @@ object AsOfJoin {
           col("_m").getField(payload)))
       .drop("_ts", "_side", "_p", "_m")
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** J7: each view event matched to the user's latest click at or
     * before it — DuckDB recomputes with its native ASOF LEFT JOIN. */

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Q, Tables}
+import graft.Tables.{load => t}
 
 /** Iterative graph analytics expressed as relational passes — the
   * PageRank family (the other graph op, connected components, lives
@@ -20,11 +21,6 @@ import graft.Tables
   * unrolled-CTE SQL.
   */
 object Graph {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Weighted PageRank over `edges` (src, dst, w) with `w` normalized
     * per src; `nodes` (node) fixes the universe so sinks and isolated

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Q, Tables}
+import graft.Tables.{load => t}
 
 /** Relational operator suite — SURVEY.md §2.3-2.8 (projection/filter,
   * joins, aggregations, windows, sorts/limits, set ops).
@@ -19,11 +20,6 @@ import graft.Tables
   * nothing collects to the driver.
   */
 object Relational {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  type Q = (SparkSession, String) => DataFrame
 
   // ---------------------------------------------------------------- P: projection / filter
 
@@ -481,19 +477,13 @@ object Relational {
   private val x6ApproxRewrite: Q = (s, dir) => {
     val li = t(s, dir, "lineitem")
     val out = graft.lake.Lake.scratchDir("x6")
-    val key = "spark.graft.approxDistinct"
-    val saved = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try {
+    graft.withConf(s, "spark.graft.approxDistinct" -> "true") {
       val approx = li.groupBy(col("l_returnflag"))
         .agg(countDistinct(col("l_partkey")).as("ad")) // rule rewrites this
       val exact = li.select(col("l_returnflag"), col("l_partkey")).distinct()
         .groupBy(col("l_returnflag")).agg(count(lit(1)).as("ed"))
       approx.join(exact, Seq("l_returnflag"))
         .write.mode("overwrite").parquet(out)
-    } finally saved match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
     }
     s.read.parquet(out).agg(
       expr("bool_and(abs(ad - ed) <= 0.15 * ed)").as("approx_within_bound"),

@@ -2,7 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.Q
+import graft.Tables.{load => t}
 
 /** Federated sources (SURVEY §2.1 S8/S9, §2.4 J2) — the reference's
   * second half: one SQL engine reading a key-value store (DynamoDB via a
@@ -19,11 +20,6 @@ import graft.Tables
   * would use.
   */
 object Federated {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** S8: key-value source — items addressed by key, scanned as a
     * DataFrame through the DSv2 `TableProvider` connector

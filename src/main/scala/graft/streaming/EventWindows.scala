@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Q, withConf}
+import graft.Tables.{load => t}
 
 /** Event-time windowing over the events table (SURVEY §2.10): the
   * reference is batch-only, so tumbling and session windows are
@@ -13,11 +14,6 @@ import graft.Tables
   * `readStream` source unchanged (see graft.streaming.StreamDemo).
   */
 object EventWindows {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Tumbling 1-day windows × event type — counts and value sums. */
   private val ev1Tumbling: Q = (s, dir) =>
@@ -251,15 +247,61 @@ object EventWindows {
     (files, landing)
   }
 
-  /** Drive a started stream through the staged batches: move one file
-    * into the landing dir, drain, repeat — one micro-batch per file. */
-  private def replay(files: Seq[java.nio.file.Path], landing: String,
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    for ((f, i) <- files.zipWithIndex) {
-      java.nio.file.Files.move(f,
-        java.nio.file.Paths.get(landing, f"b$i%05d.parquet"))
-      q.processAllAvailable()
+  /** The state-partition pin the staged replays and the ev19/ev20
+    * drains start under (see [[replayStaged]]). */
+  private val statePin = "spark.sql.shuffle.partitions" -> "4"
+
+  /** The staged-replay harness every replay gate runs through. Each
+    * frame in `staged` (one per stream side, each carrying its long
+    * batch column `b`) is staged by [[stageReplay]] and tailed as a
+    * parquet file stream with its staged schema; `start` builds and
+    * starts the query over those streams (in `staged` order). The
+    * harness then moves the i-th file of EVERY side into its landing
+    * dir and drains, batch by batch — the sides replay in lockstep, so
+    * they must stage the same number of batches — and stops the query
+    * however the replay ends. Returns the number of replayed batches.
+    *
+    * The query starts on 4 shuffle (state-store) partitions, set for
+    * its start only and restored right after ([[graft.withConf]]): a
+    * streaming query pins its state-store partition count from
+    * `spark.sql.shuffle.partitions` at first start. These replays run
+    * tens of sequential micro-batches whose wall clock is task-launch
+    * bound (batches × state partitions), and a join micro-batch probes
+    * every buffered row of its key (work ~ |views|·|clicks|/|ads|), so
+    * more partitions buy nothing here. State partitioning never affects
+    * the emitted set; a real deployment sizes it to key cardinality. */
+  private def replayStaged(s: SparkSession, staged: DataFrame*)(
+      start: Seq[DataFrame] => org.apache.spark.sql.streaming.StreamingQuery)
+      : Int = {
+    import java.nio.file.{Files, Paths}
+    val sides = staged.map(stageReplay(s, _))
+    val n = sides.head._1.size
+    require(sides.forall(_._1.size == n),
+      s"replay misaligned: ${sides.map(_._1.size).mkString(" vs ")} batches")
+    val streams = sides.map { case (files, landing) =>
+      s.readStream.schema(s.read.parquet(files.head.toString).schema)
+        .parquet(landing)
     }
+    val q = withConf(s, statePin)(start(streams))
+    try for (i <- 0 until n) {
+      for ((files, landing) <- sides)
+        Files.move(files(i), Paths.get(landing, f"b$i%05d.parquet"))
+      q.processAllAvailable()
+    } finally q.stop()
+    n
+  }
+
+  /** Bench-time replay coarsening: the bucket-width multiplier
+    * graft.Bench sets through `graft.replay.coarsen` (Verify never sets
+    * it, so the correctness gate drives the full replay). Only gates
+    * whose output is slicing-invariant widen their buckets by it;
+    * StreamingSpec pins each of them. Read per call. */
+  private def coarsen: Int =
+    math.max(1, sys.props.getOrElse("graft.replay.coarsen", "1").toInt)
+
+  /** A fresh, session-unique memory-sink name for gate `q`. */
+  private def memorySink(q: String): String =
+    q + "_out_" + java.util.UUID.randomUUID.toString.replace("-", "")
 
   /** EV11: incremental dedup EXECUTED AS A STREAM, oracle-gated — the
     * round-6 verdict's missing streaming proof. The documents table is
@@ -320,24 +362,16 @@ object EventWindows {
     val dups = docs.filter(col("doc_id") % 3 === 0).select(col("text"),
       timestamp_millis(col("doc_id") * 100L + 50L).as("ts"),
       ((col("doc_id") / step).cast("long") + 1L).as("b"))
-    val (files, landing) = stageReplay(s, base.unionByName(dups))
-    require(files.size.toLong == nBatches + 1L,
-      s"replays must spill into a 6th batch, staged ${files.size}")
-    val schema = s.read.parquet(files.head.toString).schema
-    val sink = "ev26_out_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val q =
-      try s.readStream.schema(schema).parquet(landing)
-          .withColumn("digest", sha2(col("text"), 256))
-          .withWatermark("ts", "1 hour")
-          .dropDuplicatesWithinWatermark("digest")
-          .select(col("digest"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try replay(files, landing, q) finally q.stop()
+    val sink = memorySink("ev26")
+    val n = replayStaged(s, base.unionByName(dups))(_.head
+      .withColumn("digest", sha2(col("text"), 256))
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("digest")
+      .select(col("digest"))
+      .writeStream.format("memory").queryName(sink)
+      .outputMode("append").start())
+    require(n.toLong == nBatches + 1L,
+      s"replays must spill into a 6th batch, staged $n")
     s.table(sink).select(col("digest")).orderBy(col("digest"))
   }
 
@@ -358,24 +392,16 @@ object EventWindows {
     val ev = t(s, dir, "events")
       .select(col("event_type"), col("user_id"),
         (dayofmonth(col("ts")) % 5).cast("long").as("b"))
-    val (files, landing) = stageReplay(s, ev)
-    require(files.size == 5, s"expected 5 day buckets, got ${files.size}")
-    val schema = s.read.parquet(files.head.toString).schema
-    val sink = "ev30_out_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val q =
-      try s.readStream.schema(schema).parquet(landing)
-          .groupBy(col("event_type"))
-          .agg(expr("hll_sketch_agg(user_id, 12)").as("sk"),
-            count(lit(1)).as("n_events"))
-          .select(col("event_type"),
-            expr("hll_sketch_estimate(sk)").as("est"), col("n_events"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("complete").start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try replay(files, landing, q) finally q.stop()
+    val sink = memorySink("ev30")
+    val n = replayStaged(s, ev)(_.head
+      .groupBy(col("event_type"))
+      .agg(expr("hll_sketch_agg(user_id, 12)").as("sk"),
+        count(lit(1)).as("n_events"))
+      .select(col("event_type"),
+        expr("hll_sketch_estimate(sk)").as("est"), col("n_events"))
+      .writeStream.format("memory").queryName(sink)
+      .outputMode("complete").start())
+    require(n == 5, s"expected 5 day buckets, got $n")
     val exact = t(s, dir, "events").groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("n_exact"),
         count(lit(1)).as("n_events_batch"))
@@ -423,24 +449,16 @@ object EventWindows {
       .select(col("url"),
         timestamp_millis((col("doc_id") - 455L) * 100L + 50L).as("ts"),
         (((col("doc_id") - 455L) / step).cast("long") + 1L).as("b"))
-    val (files, landing) = stageReplay(s, base.unionByName(revisits))
-    require(files.size.toLong == nBatches + 1L,
-      s"revisits must spill into a 6th batch, staged ${files.size}")
-    val schema = s.read.parquet(files.head.toString).schema
-    val sink = "ev29_out_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val q =
-      try s.readStream.schema(schema).parquet(landing)
-          .withColumn("canon", Hygiene.urlCanon(col("url")))
-          .withWatermark("ts", "1 hour")
-          .dropDuplicatesWithinWatermark("canon")
-          .select(col("canon"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try replay(files, landing, q) finally q.stop()
+    val sink = memorySink("ev29")
+    val n = replayStaged(s, base.unionByName(revisits))(_.head
+      .withColumn("canon", Hygiene.urlCanon(col("url")))
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("canon")
+      .select(col("canon"))
+      .writeStream.format("memory").queryName(sink)
+      .outputMode("append").start())
+    require(n.toLong == nBatches + 1L,
+      s"revisits must spill into a 6th batch, staged $n")
     s.table(sink).select(col("canon")).orderBy(col("canon"))
   }
 
@@ -473,18 +491,10 @@ object EventWindows {
     import org.apache.spark.sql.streaming.OutputMode
     import s.implicits._
     val gapMs = 86400000L // 1 day
-    // Bench-time replay coarsening (round-12 verdict item 7): the four
-    // session gates' bench cost is ~30 sequential micro-batch cycles
-    // of pure replay latency (exec ≤ 0.4 s) that scales with VM
-    // weather, not engine throughput. graft.Bench sets
-    // `graft.replay.coarsen` (Verify never does, so the CORRECTNESS
-    // gate still drives the full per-day replay): buckets widen by the
-    // factor — same rows, same event-time order, per-bucket keep-
-    // alives still pin each bucket's watermark, final flush unchanged
-    // — so the append-mode session output is identical and only the
-    // number of watermark advances drops.
-    val coarsen = math.max(1,
-      sys.props.getOrElse("graft.replay.coarsen", "1").toInt)
+    // Coarsened buckets keep the rows, their event-time order, each
+    // bucket's keep-alive watermark pin and the final flush, so the
+    // append-mode session output is identical; only the number of
+    // watermark advances drops.
     val bucketMs = gapMs * coarsen
     val ev = t(s, dir, "events")
       .select(col("user_id"), col("ts").cast("timestamp").as("ts"))
@@ -496,27 +506,12 @@ object EventWindows {
     val finalKa = s.range(1).select(
       lit(lastMs / bucketMs + 1).as("b"), lit(-1L).as("user_id"),
       timestamp_millis(lit(lastMs + 3 * gapMs)).as("ts"))
-    val (files, landing) = stageReplay(s,
-      ev.select(col("b"), col("user_id"), col("ts"))
-        .unionByName(keepAlive).unionByName(finalKa))
-    val schema = s.read.parquet(files.head.toString).schema
-    val sink = "ev12_out_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    // A streaming query pins its STATE STORE partition count from
-    // shuffle.partitions at first start; at 30 sequential micro-batches
-    // the replay's wall clock is task-launch bound (batches × state
-    // partitions), so scope the count down for this query only and
-    // restore it (try/finally; Verify/Bench run queries sequentially).
-    // A real deployment sizes it to key cardinality instead.
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val q =
-      try mk(s.readStream.schema(schema).parquet(landing)
-          .as[(Long, java.sql.Timestamp)])
+    val sink = memorySink("ev12")
+    replayStaged(s, ev.select(col("b"), col("user_id"), col("ts"))
+        .unionByName(keepAlive).unionByName(finalKa))(in =>
+      mk(in.head.as[(Long, java.sql.Timestamp)])
         .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append()).start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try replay(files, landing, q) finally q.stop()
+        .outputMode(OutputMode.Append()).start())
     s.table(sink).filter(col("userId") >= 0)
       .select(col("userId").as("user_id"),
         col("nEvents").cast("long").as("n_events"),
@@ -556,20 +551,11 @@ object EventWindows {
       join: (DataFrame, DataFrame) => DataFrame,
       finalFlushMs: Option[Long]): DataFrame = {
     import org.apache.spark.sql.streaming.OutputMode
-    // Bench-time replay coarsening (round-13 verdict item 6 — the
-    // ev12 treatment, applied to the two-sided lockstep replay): the
-    // three join gates' bench cost is ~30 sequential micro-batch
-    // cycles each of pure replay latency. Wider buckets keep the
-    // exactness argument verbatim (it holds for ANY ordered width ≥
-    // the 1h join bound), keep-alives still pin each bucket's
-    // watermark on BOTH sides, and the outer tails still flush on the
-    // same final keep-alive pair — so the emitted set is identical
-    // and only the number of lockstep advances drops. Verify never
-    // sets the knob, so the CORRECTNESS gate drives the full replay;
-    // a StreamingSpec test pins slicing-invariance for all three
-    // join shapes.
-    val coarsen = math.max(1,
-      sys.props.getOrElse("graft.replay.coarsen", "1").toInt)
+    // Coarsened buckets keep the exactness argument verbatim (it holds
+    // for ANY ordered width ≥ the 1h join bound), keep-alives still pin
+    // each bucket's watermark on BOTH sides, and the outer tails still
+    // flush on the same final keep-alive pair: the emitted set is
+    // identical and only the number of lockstep advances drops.
     val bucketMs = coarsen * 5L * 86400000L // ≥ 5 days ≥ the 1h bound
     val ev = t(s, dir, "events")
       .select((col("user_id") % 50).as("ad"), col("event_type"),
@@ -590,40 +576,14 @@ object EventWindows {
           .select(col("b"), col("ad"), col("ts"))
           .unionByName(ka))(_ unionByName _)
     }
-    val (impFiles, impLanding) = stageReplay(s, side("view", -1L))
-    val (clkFiles, clkLanding) = stageReplay(s, side("click", -2L))
     // Per-bucket keep-alives on BOTH sides make the two staged
     // sequences bucket-aligned by construction.
-    require(impFiles.size == clkFiles.size,
-      s"replay misaligned: ${impFiles.size} vs ${clkFiles.size} buckets")
-    val schema = s.read.parquet(impFiles.head.toString).schema
-    val sink = "evjoin_out_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    // The join replay runs on 4 shuffle (state-store) partitions: set
-    // for this query only and pinned at its first start. Each micro-
-    // batch probes every buffered row of the matching ad (work ~
-    // |views|·|clicks|/|ads|), so the probe scans use at most 4 cores;
-    // state partitioning never affects the emitted set.
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val q =
-      try join(
-          s.readStream.schema(schema).parquet(impLanding)
-            .toDF("impAd", "impTs"),
-          s.readStream.schema(schema).parquet(clkLanding)
-            .toDF("clickAd", "clickTs"))
+    val sink = memorySink("evjoin")
+    replayStaged(s, side("view", -1L), side("click", -2L)) { in =>
+      join(in(0).toDF("impAd", "impTs"), in(1).toDF("clickAd", "clickTs"))
         .writeStream.format("memory").queryName(sink)
         .outputMode(OutputMode.Append()).start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try {
-      for (((fi, fc), i) <- impFiles.zip(clkFiles).zipWithIndex) {
-        java.nio.file.Files.move(fi,
-          java.nio.file.Paths.get(impLanding, f"b$i%05d.parquet"))
-        java.nio.file.Files.move(fc,
-          java.nio.file.Paths.get(clkLanding, f"b$i%05d.parquet"))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    }
     s.table(sink)
   }
 
@@ -684,12 +644,8 @@ object EventWindows {
   private val ev14StreamWindows: Q = (s, dir) => {
     import org.apache.spark.sql.streaming.OutputMode
     val dayMs = 86400000L
-    // Bench-time replay coarsening (the scaladoc's "harness knob":
-    // coarser buckets just finalize windows in groups — the emitted
-    // set is identical; StreamingSpec pins it). Verify never sets the
-    // knob, so the correctness gate drives the 5-day replay.
-    val bucketMs = math.max(1,
-      sys.props.getOrElse("graft.replay.coarsen", "1").toInt) * 5 * dayMs
+    // Coarser buckets just finalize windows in groups: same emitted set.
+    val bucketMs = coarsen * 5 * dayMs
     val ev = t(s, dir, "events")
       .select(col("ts").cast("timestamp").as("ts"),
         col("event_type").as("eventType"), col("value"))
@@ -699,21 +655,12 @@ object EventWindows {
       lit(lastMs / bucketMs + 1).as("b"),
       timestamp_millis(lit(lastMs + 3 * dayMs)).as("ts"),
       lit("_ka").as("eventType"), lit(0.0).as("value"))
-    val (files, landing) = stageReplay(s,
-      ev.select(col("b"), col("ts"), col("eventType"), col("value"))
-        .unionByName(finalKa))
-    val schema = s.read.parquet(files.head.toString).schema
-    val sink = "ev14_out_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val q =
-      try StreamDemo.windowedCounts(
-          s.readStream.schema(schema).parquet(landing))
+    val sink = memorySink("ev14")
+    replayStaged(s, ev.select(col("b"), col("ts"), col("eventType"),
+        col("value")).unionByName(finalKa))(in =>
+      StreamDemo.windowedCounts(in.head)
         .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append()).start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try replay(files, landing, q) finally q.stop()
+        .outputMode(OutputMode.Append()).start())
     s.table(sink).filter(col("eventType") =!= "_ka")
       .select(col("ws"), col("eventType").as("event_type"), col("n"),
         col("sum_value"))
@@ -741,24 +688,15 @@ object EventWindows {
     val emb = t(s, dir, "embeddings")
     val corpus = prep(emb.filter(col("vec_id") % 5 === 0), "cv", "cnrm")
       .select(col("cv"), col("cnrm"))
-    val (files, landing) = stageReplay(s,
-      emb.filter(col("vec_id") % 5 =!= 0)
+    val sink = memorySink("ev15")
+    replayStaged(s, emb.filter(col("vec_id") % 5 =!= 0)
         .select((col("vec_id") % 3).as("b"), col("vec_id"),
-          col("embedding")))
-    val schema = s.read.parquet(files.head.toString).schema
-    val sink = "ev15_out_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val q =
-      try StreamDemo.semanticDedupStream(
-          prep(s.readStream.schema(schema).parquet(landing), "v", "nrm"),
-          corpus, tau = 0.45)
+          col("embedding")))(in =>
+      StreamDemo.semanticDedupStream(prep(in.head, "v", "nrm"), corpus,
+          tau = 0.45)
         .select(col("vec_id"))
         .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append()).start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try replay(files, landing, q) finally q.stop()
+        .outputMode(OutputMode.Append()).start())
     s.table(sink).select(col("vec_id")).orderBy(col("vec_id"))
   }
 
@@ -778,35 +716,24 @@ object EventWindows {
   private val ev18StreamUpsert: Q = (s, dir) => {
     import org.apache.spark.sql.streaming.OutputMode
     val dayMs = 86400000L
-    // Bench-time coarsening: update mode emits the COMPLETE new
-    // aggregate for every touched key each batch, so the upserted
-    // final table is slicing-invariant by construction (StreamingSpec
-    // pins it); Verify never sets the knob.
-    val bucketMs = math.max(1,
-      sys.props.getOrElse("graft.replay.coarsen", "1").toInt) * 5 * dayMs
-    val (files, landing) = stageReplay(s,
-      t(s, dir, "events")
-        .select(col("ts").cast("timestamp").as("ts"), col("event_type"),
-          col("value"))
-        .withColumn("b", expr(s"unix_millis(ts) div $bucketMs")))
-    val schema = s.read.parquet(files.head.toString).schema
+    // Update mode emits the COMPLETE new aggregate for every touched
+    // key each batch, so the upserted final table is slicing-invariant.
+    val bucketMs = coarsen * 5 * dayMs
     val stateDir = java.nio.file.Files
       .createTempDirectory("ev18_upsert_").toString + "/state"
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val q =
-      try s.readStream.schema(schema).parquet(landing)
-        .withColumn("day", to_date(col("ts")))
-        .groupBy(col("event_type"), col("day"))
-        .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_raw"))
-        .writeStream.outputMode(OutputMode.Update())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          StreamDemo.upsertState(s, stateDir, batch,
-            Seq("event_type", "day"), nBuckets = 8)
-        }
-        .start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try replay(files, landing, q) finally q.stop()
+    replayStaged(s, t(s, dir, "events")
+        .select(col("ts").cast("timestamp").as("ts"), col("event_type"),
+          col("value"))
+        .withColumn("b", expr(s"unix_millis(ts) div $bucketMs")))(_.head
+      .withColumn("day", to_date(col("ts")))
+      .groupBy(col("event_type"), col("day"))
+      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_raw"))
+      .writeStream.outputMode(OutputMode.Update())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        StreamDemo.upsertState(s, stateDir, batch,
+          Seq("event_type", "day"), nBuckets = 8)
+      }
+      .start())
     s.read.parquet(stateDir)
       .select(col("event_type"), col("day"), col("n"),
         round(col("sum_raw"), 4).as("sum_value"))
@@ -837,20 +764,16 @@ object EventWindows {
     val cents = Similarity.ivfTrain(resident, c = 32, iters = 2) // frozen
     val path = graft.lake.Lake.scratchDir("ev31_ivf") + "/index"
     Similarity.ivfWriteIndex(resident, cents, path)
-    val (files, landing) = stageReplay(s,
-      arriving.select(col("vec_id"), col("embedding"))
-        .withColumn("b", expr("(vec_id div 4) % 4")))
-    val schema = s.read.parquet(files.head.toString).schema
     var batches = 0
-    val q = s.readStream.schema(schema).parquet(landing)
+    replayStaged(s, arriving.select(col("vec_id"), col("embedding"))
+        .withColumn("b", expr("(vec_id div 4) % 4")))(_.head
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batches += 1
         Similarity.ivfAssign(batch, cents)
           .write.mode("append").partitionBy("cell").parquet(path)
       }
-      .start()
-    try replay(files, landing, q) finally q.stop()
+      .start())
     require(batches >= 3,
       s"ingest drained in $batches micro-batches — replay not exercised")
     val viaIndex = Similarity.ivfSearchIndex(s, path, queries, cents,
@@ -914,10 +837,8 @@ object EventWindows {
       .cast("long")
     val path = graft.lake.Lake.scratchDir("ev32_lsh") + "/sigs"
     Dedup.lshWriteSignatures(resident, "doc_id", "text", sn, kk, path)
-    val (files, landing) = stageReplay(s, arriving.withColumn("b", bExpr))
-    val schema = s.read.parquet(files.head.toString).schema
     var batches = 0
-    val q = s.readStream.schema(schema).parquet(landing)
+    replayStaged(s, arriving.withColumn("b", bExpr))(_.head
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batches += 1
@@ -926,8 +847,7 @@ object EventWindows {
         Dedup.lshSignatureTable(admitted, "doc_id", "text", sn, kk)
           .write.mode("append").partitionBy("cell").parquet(path)
       }
-      .start()
-    try replay(files, landing, q) finally q.stop()
+      .start())
     require(batches >= 3,
       s"ingest drained in $batches micro-batches — replay not exercised")
     // Sequential in-memory reference over the same buckets, in order.
@@ -1040,10 +960,8 @@ object EventWindows {
         shingleN = 3, threshold = theta))
       .localCheckpoint(eager = true) // read per batch + by the gate
     oldLabels.write.parquet(s"$root/labels_0")
-    val (files, landing) = stageReplay(s, arriving.withColumn("b", bExpr))
-    val schema = s.read.parquet(files.head.toString).schema
     var batches = 0
-    val q = s.readStream.schema(schema).parquet(landing)
+    replayStaged(s, arriving.withColumn("b", bExpr))(_.head
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val base = s.read.parquet(docsPath)
@@ -1057,8 +975,7 @@ object EventWindows {
         batch.select(col("doc_id"), col("text"))
           .write.mode("append").parquet(docsPath)
       }
-      .start()
-    try replay(files, landing, q) finally q.stop()
+      .start())
     require(batches >= 3,
       s"ingest drained in $batches micro-batches — replay not exercised")
     val streamed = s.read.parquet(s"$root/labels_$batches")
@@ -1105,10 +1022,8 @@ object EventWindows {
       .select(col("doc_id"), col("lang"), col("n_chars"))
     val bExpr = pmod(col("doc_id"), lit(6L))
     val root = graft.lake.Lake.scratchDir("ev34_psample")
-    val (files, landing) = stageReplay(s, docs.withColumn("b", bExpr))
-    val schema = s.read.parquet(files.head.toString).schema
     var batches = 0
-    val q = s.readStream.schema(schema).parquet(landing)
+    replayStaged(s, docs.withColumn("b", bExpr))(_.head
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val keyedBatch = TrainPrep.priorityKeyed(
@@ -1122,8 +1037,7 @@ object EventWindows {
           .select(col("lang"), col("doc_id"), col("w"), col("u"))
           .write.parquet(s"$root/state_$batches")
       }
-      .start()
-    try replay(files, landing, q) finally q.stop()
+      .start())
     require(batches >= 3,
       s"ingest drained in $batches micro-batches — replay not exercised")
     TrainPrep.priorityFinish(
@@ -1152,24 +1066,20 @@ object EventWindows {
       .select(col("doc_id"), col("lang"), col("n_chars"))
     docs.repartition(16).write.parquet(landing)
     var batches = 0
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val q =
-      try s.readStream
-        .schema(s.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(landing)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-        .writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batches += 1
-          StreamDemo.upsertState(s, stateDir, batch, Seq("lang"), 4)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    val stream = s.readStream
+      .schema(s.read.parquet(landing).schema)
+      .option("maxFilesPerTrigger", "4")
+      .parquet(landing)
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+      .writeStream
+      .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batches += 1
+        StreamDemo.upsertState(s, stateDir, batch, Seq("lang"), 4)
+      }
+      .trigger(Trigger.AvailableNow())
+    val q = withConf(s, statePin)(stream.start())
     try q.awaitTermination() finally q.stop()
     require(batches >= 3,
       s"backfill drained in $batches batches — rate limit not applied")
@@ -1201,15 +1111,11 @@ object EventWindows {
       .repartition(4).write.mode("append").parquet(landing)
     val schema = s.read.parquet(landing).schema
     def run(): Unit = {
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q =
-        try s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "2").parquet(landing)
-          .writeStream.format("parquet")
-          .option("path", sink).option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      val q = withConf(s, statePin)(s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "2").parquet(landing)
+        .writeStream.format("parquet")
+        .option("path", sink).option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start())
       try q.awaitTermination() finally q.stop()
     }
     run() // first life: drains batch 1, checkpoints, stops
@@ -1236,24 +1142,16 @@ object EventWindows {
   private val ev16StreamRoute: Q = (s, dir) => {
     // Three micro-batches keyed by doc_id mod 3 — the routing is
     // map-only/stateless, so the fan-out is batching-independent.
-    val (files, landing) = stageReplay(s,
-      t(s, dir, "documents")
-        .select((col("doc_id") % 3).as("b"), col("doc_id"), col("text")))
-    val schema = s.read.parquet(files.head.toString).schema
     val lake = java.nio.file.Files
       .createTempDirectory("ev16_route_").toString
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val q =
-      try StreamDemo.routeByLang(
-          s.readStream.schema(schema).parquet(landing))
+    replayStaged(s, t(s, dir, "documents")
+        .select((col("doc_id") % 3).as("b"), col("doc_id"), col("text")))(in =>
+      StreamDemo.routeByLang(in.head)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.write.mode("append").partitionBy("pred").parquet(lake)
         }
-        .start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try replay(files, landing, q) finally q.stop()
+        .start())
     s.read.parquet(lake)
       .groupBy(col("pred"))
       .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("sum_ids"))
@@ -1271,7 +1169,7 @@ object EventWindows {
     * one — any divergence (lost state across micro-batches, timeout
     * misfire) fails the same batch gaps-and-islands oracle. */
   private val ev21RocksdbSessions: Q = (s, dir) =>
-    withRocksDb(s)(ev12StreamSessions(s, dir))
+    withConf(s, rocksDb)(ev12StreamSessions(s, dir))
 
   /** EV27: the ev26 cross-batch declarative dedup on the ROCKSDB state
     * store — the backend×operator matrix cell that pairs with ev21
@@ -1283,35 +1181,26 @@ object EventWindows {
     * semantics — the off-heap backend a 100 TB dedup state actually
     * needs. */
   private val ev27RocksdbDropdup: Q = (s, dir) =>
-    withRocksDb(s)(ev26StreamDropdup(s, dir))
+    withConf(s, rocksDb)(ev26StreamDropdup(s, dir))
 
-  /** Scope the RocksDB state store provider to `body` and restore the
-    * previous provider after (a streaming query pins its provider at
-    * first start, so the toggle only affects queries started inside). */
-  private def withRocksDb(s: SparkSession)(body: => DataFrame): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+  /** The RocksDB state store provider, for [[withConf]]: a streaming
+    * query pins its provider at first start, so only queries started
+    * inside the scope use RocksDB. */
+  private val rocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** EV22: the same sessionization gate on Spark 4's
     * `transformWithState` API ([[StreamDemo.sessionizeTws]] — typed
     * ValueState + explicit event-time timers, the
     * flatMapGroupsWithState successor built for the RocksDB backend's
     * virtual column families; the provider is required, so the gate
-    * runs under [[withRocksDb]]). Must hash-match the SAME batch
+    * runs under `withConf(s, rocksDb)`). Must hash-match the SAME batch
     * gaps-and-islands oracle as ev12/ev21: three state APIs, one
     * semantics — a timer/state divergence in the new API (stale-timer
     * close, lost delete) fails the oracle, and the ev12↔ev22 pairing
     * pins the old and new API against each other every round. */
   private val ev22TwsSessions: Q = (s, dir) =>
-    withRocksDb(s)(sessionGate(s, dir,
+    withConf(s, rocksDb)(sessionGate(s, dir,
       StreamDemo.sessionizeTws(_, 86400000L)))
 
   /** EV23: the same sessionization gate on the DECLARATIVE built-in
@@ -1346,42 +1235,32 @@ object EventWindows {
     * stale overwrite, or a lost tombstone all hash-fail. */
   private val ev24StreamCdc: Q = (s, dir) => {
     val dayMs = 86400000L
-    // Bench-time coarsening: keep-latest-per-key CDC state depends on
-    // event-time order, not batch slicing (StreamingSpec pins it);
-    // Verify never sets the knob.
-    val bucketMs = math.max(1,
-      sys.props.getOrElse("graft.replay.coarsen", "1").toInt) * 5 * dayMs
-    val (files, landing) = stageReplay(s,
-      t(s, dir, "events")
-        .select(col("event_id"), col("user_id"),
-          col("ts").cast("timestamp").as("ts"), col("value"))
-        .withColumn("b", expr(s"unix_millis(ts) div $bucketMs")))
-    val schema = s.read.parquet(files.head.toString).schema
+    // Keep-latest-per-key CDC state depends on event-time order, not
+    // on batch slicing.
+    val bucketMs = coarsen * 5 * dayMs
     val stateDir = java.nio.file.Files
       .createTempDirectory("ev24_cdc_").toString + "/state"
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val q =
-      try s.readStream.schema(schema).parquet(landing)
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val day = datediff(col("ts").cast("date"),
-            to_date(lit("1970-01-01")))
-          val w = Window.partitionBy(col("user_id"))
-            .orderBy(col("ts").desc, col("event_id").desc)
-          val latest = batch
-            .withColumn("op",
-              when(pmod(col("user_id") + day, lit(11)) === 0, lit("d"))
-                .otherwise(lit("u")))
-            .withColumn("rn", row_number().over(w))
-            .filter(col("rn") === 1)
-            .select(col("user_id"), col("ts"), col("value"), col("op"))
-          StreamDemo.applyCdcState(s, stateDir, latest, "op",
-            Seq("user_id"), nBuckets = 8)
-        }
-        .start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try replay(files, landing, q) finally q.stop()
+    replayStaged(s, t(s, dir, "events")
+        .select(col("event_id"), col("user_id"),
+          col("ts").cast("timestamp").as("ts"), col("value"))
+        .withColumn("b", expr(s"unix_millis(ts) div $bucketMs")))(_.head
+      .writeStream.outputMode("append")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val day = datediff(col("ts").cast("date"),
+          to_date(lit("1970-01-01")))
+        val w = Window.partitionBy(col("user_id"))
+          .orderBy(col("ts").desc, col("event_id").desc)
+        val latest = batch
+          .withColumn("op",
+            when(pmod(col("user_id") + day, lit(11)) === 0, lit("d"))
+              .otherwise(lit("u")))
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") === 1)
+          .select(col("user_id"), col("ts"), col("value"), col("op"))
+        StreamDemo.applyCdcState(s, stateDir, latest, "op",
+          Seq("user_id"), nBuckets = 8)
+      }
+      .start())
     s.read.parquet(stateDir)
       .select(col("user_id"), unix_millis(col("ts")).as("last_ms"),
         round(col("value"), 4).as("last_value"))
@@ -1408,39 +1287,31 @@ object EventWindows {
     * the marker files. */
   private val ev28StreamTxnSink: Q = (s, dir) => {
     val dayMs = 86400000L
-    val (files, landing) = stageReplay(s,
-      t(s, dir, "events")
-        .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-          col("value"))
-        .withColumn("b", expr(s"unix_millis(ts) div ${5 * dayMs}")))
-    val schema = s.read.parquet(files.head.toString).schema
     val root = graft.lake.Lake.scratchDir("ev28") + "/table"
     var committed = 0
     var duplicates = 0
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val q =
-      try s.readStream.schema(schema).parquet(landing)
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          def attempt(): Boolean =
-            graft.lake.Snapshots.commitStreamBatch(root, batchId)(p =>
-              batch.write.mode("overwrite").parquet(p))
-          if (attempt()) committed += 1
-          // at-least-once redelivery, immediately: must be a no-op
-          require(!attempt(),
-            s"duplicate delivery of batch $batchId committed twice")
-          duplicates += 1
-          ()
-        }
-        .start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try replay(files, landing, q) finally q.stop()
-    require(committed == files.size && duplicates == files.size,
-      s"committed $committed, duplicates $duplicates of ${files.size}")
-    require(graft.lake.Snapshots.latestVersion(root) == files.size,
+    val n = replayStaged(s, t(s, dir, "events")
+        .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
+          col("value"))
+        .withColumn("b", expr(s"unix_millis(ts) div ${5 * dayMs}")))(_.head
+      .writeStream.outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        def attempt(): Boolean =
+          graft.lake.Snapshots.commitStreamBatch(root, batchId)(p =>
+            batch.write.mode("overwrite").parquet(p))
+        if (attempt()) committed += 1
+        // at-least-once redelivery, immediately: must be a no-op
+        require(!attempt(),
+          s"duplicate delivery of batch $batchId committed twice")
+        duplicates += 1
+        ()
+      }
+      .start())
+    require(committed == n && duplicates == n,
+      s"committed $committed, duplicates $duplicates of $n")
+    require(graft.lake.Snapshots.latestVersion(root) == n,
       "version count diverged from batch count")
-    (1 to files.size).map { v =>
+    (1 to n).map { v =>
       graft.lake.Snapshots.readVersion(s, root, Some(v))
         .agg(count(lit(1)).as("n_events"),
           sum(col("event_id")).as("sum_ids"),

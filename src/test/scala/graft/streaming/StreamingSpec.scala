@@ -189,11 +189,8 @@ class StreamingSpec extends SparkSpec {
     // RocksDB provider pinned before query start (a streaming query
     // fixes its provider at first start).
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
+    graft.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val imps = MemoryStream[(Timestamp, String)]
       val clks = MemoryStream[(Timestamp, String)]
       val q = StreamDemo.intervalJoin(
@@ -216,9 +213,6 @@ class StreamingSpec extends SparkSpec {
           s"RocksDB streaming $streaming vs batch $batch")
         assert(batch.size == 2)
       } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
