@@ -1,6 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Access to the driver-generated testdata tables (TESTDATA.md).
   *
@@ -26,10 +32,10 @@ object Tables {
     // actually read so both encodings normalize to one TIMESTAMP column:
     // a long is nanos → rebuild (lossless, generator emits whole micros);
     // a timestamp passes through (NTZ cast to TIMESTAMP is exact in UTC).
+    val df = read(spark, path(dir, name))
     if (name == "events") {
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-      val df = spark.read.parquet(path(dir, name))
       df.schema("ts").dataType match {
         case LongType =>
           df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -37,7 +43,59 @@ object Tables {
           df.withColumn("ts", col("ts").cast("timestamp"))
         case _ => df // already TIMESTAMP
       }
-    } else spark.read.parquet(path(dir, name))
+    } else df
+  }
+
+  /** A parquet schema inferred once, with the identity of the files it
+    * was inferred from: each leaf file's path, length and modification
+    * time. */
+  private final case class Inferred(files: Seq[(String, Long, Long)],
+      schema: StructType)
+
+  /** One entry per (qualified path, schema-conversion confs): a
+    * rewritten table replaces its entry instead of adding one. */
+  private val inferred =
+    new ConcurrentHashMap[(String, Seq[Boolean]), Inferred]
+
+  /** `spark.read.parquet(p)`, minus the schema-inference job when the
+    * files under `p` are the ones a previous read inferred from, under
+    * the same schema-conversion confs: the reference's crawler writes the
+    * schema into the catalog once and every query reads it from there.
+    * Only the StructType is kept — never a DataFrame, relation or data —
+    * so each read gets a fresh relation (fresh expression ids, so
+    * self-joins resolve; a fresh file index) and regenerated files are
+    * always seen. The files are listed BEFORE inferring, so a rewrite
+    * racing the inference can only cost a later miss, never a stale hit.
+    * A path that cannot be listed (missing, a glob) reads uncached, and
+    * Spark reports it as it would without the cache. */
+  private def read(spark: SparkSession, p: String): DataFrame = {
+    val conf = spark.sessionState.conf
+    val confs = Seq(conf.isParquetBinaryAsString,
+      conf.isParquetINT96AsTimestamp, conf.legacyParquetNanosAsLong,
+      conf.parquetInferTimestampNTZEnabled, conf.isParquetSchemaMergingEnabled)
+    val listed = Try {
+      val hp = new Path(p)
+      val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
+      val qualified = fs.makeQualified(hp)
+      val it = fs.listFiles(qualified, true)
+      val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .toVector.sortBy(_._1)
+      ((qualified.toString, confs), files)
+    }.toOption
+    listed match {
+      case Some((key, files)) =>
+        val hit = inferred.get(key)
+        if (hit != null && hit.files == files)
+          spark.read.schema(hit.schema).parquet(p)
+        else {
+          // a Spark job: run it outside any map lock
+          val df = spark.read.parquet(p)
+          inferred.put(key, Inferred(files, df.schema))
+          df
+        }
+      case None => spark.read.parquet(p)
+    }
   }
 
   /** Scale-adaptive first-stage parallelism guard (optimization guide

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
 import graft.{Q, withConf}
 import graft.Tables.{load => t}
 
@@ -318,11 +319,14 @@ object EventWindows {
   private val ev11StreamDedup: Q = (s, dir) => {
     val docs = t(s, dir, "documents")
     val landing = graft.lake.Lake.scratchDir("ev11_landing")
-    docs.withColumn("ts", timestamp_micros(col("doc_id") * 1000000L))
-      .write.mode("overwrite").parquet(landing)
+    val staged =
+      docs.withColumn("ts", timestamp_micros(col("doc_id") * 1000000L))
+    staged.write.mode("overwrite").parquet(landing)
     val corpus = docs.filter(col("doc_id") % 5 === 0)
       .select(sha2(col("text"), 256).as("digest")).distinct()
-    val schema = s.read.parquet(landing).schema
+    // the schema of the frame just written, as a file read gives it back
+    // (every field nullable), without a read-back inference job
+    val schema = StructType(staged.schema.map(_.copy(nullable = true)))
     val sink = "ev11_out_" +
       java.util.UUID.randomUUID.toString.replace("-", "")
     val q = StreamDemo.incrementalDedupStream(
