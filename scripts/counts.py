@@ -6,8 +6,8 @@ row via hand-copied bench numbers):
 
     python3 scripts/counts.py <verify_outdir> <sbt_test_log> [bench_json] [--check]
 
-- query count  = len(<verify_outdir>/oracle_sql.json)  (every query in
-  SparkEntry.queries has an oracleSql entry; Verify dumps the map)
+- query count  = len(<verify_outdir>/oracle_sql.json)  (Verify dumps one
+  entry per registered query; each `Query` carries its oracle SQL)
 - test count   = the "Total number of tests run" line of the sbt test log
 - bench line   = total/n_queries/failed read from bench_json (pass the
   DRIVER'S BENCH_r{N}.json — per the standing convention the driver's

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Query, Tables}
 
 /** E7: end-to-end training-data curation — the composition the other
   * EXT operators exist for (EXT, SURVEY §2.12; no reference analog —
@@ -131,12 +131,6 @@ object Curation {
       .orderBy(col("metric"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "e7_curation" -> e7Curation,
-    "e7_curation_exact" -> e7CurationExact,
-    "e11_dataset_card" -> e11DatasetCard,
-  )
-
   /** The oracle recomputes the pipeline with EXACT all-pairs Jaccard
     * for stage 2 — shingles mirror Dedup.shingles (3-word, distinct,
     * <3-word docs give the empty set). Both modes share it: the LSH
@@ -190,10 +184,10 @@ object Curation {
         |  FROM kept GROUP BY lang) k USING (lang)
         |ORDER BY lang""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "e7_curation" -> curationOracle,
-    "e7_curation_exact" -> curationOracle,
-    "e11_dataset_card" ->
+  val queries: Seq[Query] = Seq(
+    Query("e7_curation", e7Curation, curationOracle),
+    Query("e7_curation_exact", e7CurationExact, curationOracle),
+    Query("e11_dataset_card", e11DatasetCard,
       """SELECT * FROM (
         |  SELECT 'docs.n' AS metric, count(*)::DOUBLE AS value FROM documents
         |  UNION ALL SELECT 'docs.n_langs', count(DISTINCT lang)::DOUBLE
@@ -225,6 +219,6 @@ object Curation {
         |    FROM events
         |  UNION ALL SELECT 'events.n_types', count(DISTINCT event_type)::DOUBLE
         |    FROM events
-        |) ORDER BY metric""".stripMargin,
+        |) ORDER BY metric""".stripMargin),
   )
 }

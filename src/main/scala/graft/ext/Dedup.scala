@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
-import graft.{Q, Tables}
+import graft.{Q, Query, Tables}
 import graft.Tables.{load => t}
 import graft.functions.SimHash64.simhash64
 
@@ -1935,37 +1935,12 @@ object Dedup {
     lineDedupStats(withPlantedLines(t(s, dir, "documents")),
       "doc_id", "lang", "text")
 
-  val queries: Map[String, Q] = Map(
-    "e13b_blocking_metrics" -> e13bBlockingMetrics,
-    "e2_line_dedup" -> e2LineDedup,
-    "e2_cdc_chunks" -> e2CdcChunks,
-    "e13_linkage" -> e13Linkage,
-    "e13c_golden_record" -> e13cGoldenRecord,
-    "e2_substring_trim" -> e2SubstringTrim,
-    "e2_substring_cov" -> e2SubstringCov,
-    "e2_substring_exact" -> e2SubstringExact,
-    "e2_lsh_plan" -> e2LshPlan,
-    "e2_repeated_ngrams" -> e2RepeatedNgrams,
-    "e1b_normalized_dedup" -> e1bNormalizedDedup,
-    "e1_dedup_exact" -> e1DedupExact,
-    "e2_minhash_neardup" -> e2MinhashNearDup,
-    "e2_ngram_jaccard" -> e2NgramJaccard,
-    "e2_containment" -> e2Containment,
-    "e2_edit_join" -> e2EditJoin,
-    "e12_jaro_er" -> e12JaroEr,
-    "e2_cluster_cc" -> e2ClusterCc,
-    "e2_cluster_incremental" -> e2ClusterIncremental,
-    "e2_simhash_neardup" -> e2SimhashNearDup,
-    "e2_incremental" -> e2Incremental,
-    "e2_lsh_delete" -> e2LshDelete,
-    "e2_bloom_ingest" -> e2BloomIngest,
-  )
-
-  /** The planted-pair ground truth, written directly in SQL. */
-  val oracles: Map[String, String] = Map(
+  /** Each query with its oracle: the planted-pair ground truth, written
+    * directly in SQL. */
+  val queries: Seq[Query] = Seq(
     // Both schemes' candidate joins re-derived, RR/PC restated from
     // the same integer counts with identical double arithmetic.
-    "e13b_blocking_metrics" ->
+    Query("e13b_blocking_metrics", e13bBlockingMetrics,
       """WITH a AS (
         |  SELECT c_custkey AS ak, substring(c_name, 16, 3) AS ablk,
         |    c_nationkey AS anat
@@ -1998,12 +1973,12 @@ object Dedup {
         |    round(1.0 - cand_pairs::DOUBLE / (n_records * n_records), 6),
         |    round(true_in_cand::DOUBLE / n_records, 6)
         |  FROM n, natb
-        |) ORDER BY scheme""".stripMargin,
+        |) ORDER BY scheme""".stripMargin),
     // Full restatement: DuckDB replants the same newline corpus
     // (concat_ws skips the NULL third line identically), re-derives
     // every (doc, line_no, line) instance, and applies the same
     // global keep-first rule.
-    "e2_line_dedup" ->
+    Query("e2_line_dedup", e2LineDedup,
       s"""WITH base AS (
          |  SELECT doc_id, lang,
          |    concat_ws(chr(10), text, '$BoilerSubscribe',
@@ -2034,8 +2009,8 @@ object Dedup {
          |      ELSE 0 END)::BIGINT AS removed_checksum,
          |  sum(CASE WHEN rn = 1 THEN length(line) ELSE 0 END)::BIGINT
          |    AS kept_chars
-         |FROM r GROUP BY lang ORDER BY lang""".stripMargin,
-    "e2_cdc_chunks" ->
+         |FROM r GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("e2_cdc_chunks", e2CdcChunks,
       """WITH w AS (
         |  SELECT doc_id, i AS pos, ws[i] AS w
         |  FROM (SELECT doc_id, string_split(text, ' ') AS ws
@@ -2061,8 +2036,8 @@ object Dedup {
         |  FROM ch GROUP BY digest, chunk_text)
         |SELECT digest, n_docs::BIGINT AS n_docs, n_occ::BIGINT AS n_occ,
         |  chunk_text
-        |FROM d WHERE n_docs >= 2 ORDER BY digest""".stripMargin,
-    "e13_linkage" -> {
+        |FROM d WHERE n_docs >= 2 ORDER BY digest""".stripMargin),
+    Query("e13_linkage", e13Linkage, {
       val Seq((nA, nD), (tA, tD), (sA, sD), (bA, bD)) = fsWeights
       def L(d: Double) = java.lang.Double.toString(d)
       s"""WITH a AS (
@@ -2101,8 +2076,8 @@ object Dedup {
          |  sum(ak + bk)::BIGINT AS sum_keys,
          |  round(sum(round(score, 6)), 4) AS sum_score
          |FROM d GROUP BY decision ORDER BY decision""".stripMargin
-    },
-    "e2_substring_trim" ->
+    }),
+    Query("e2_substring_trim", e2SubstringTrim,
       """WITH b AS (
         |  SELECT doc_id, len(string_split(text, ' '))::BIGINT AS n_tokens,
         |    string_split(text, ' ') AS ws
@@ -2136,8 +2111,8 @@ object Dedup {
         |  (b.n_tokens - coalesce(k.n_kept, 0))::BIGINT AS n_removed,
         |  coalesce(k.trimmed, '') AS trimmed
         |FROM b LEFT JOIN kept k USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
-    "e2_substring_cov" ->
+        |ORDER BY b.doc_id""".stripMargin),
+    Query("e2_substring_cov", e2SubstringCov,
       """WITH b AS (
         |  SELECT doc_id, len(string_split(text, ' '))::BIGINT AS n_tokens,
         |    string_split(text, ' ') AS ws
@@ -2168,10 +2143,10 @@ object Dedup {
         |  coalesce(c.dup_tokens, 0)::BIGINT AS dup_tokens,
         |  round(coalesce(c.dup_tokens, 0) / b.n_tokens, 4) AS dup_frac
         |FROM b LEFT JOIN c USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
+        |ORDER BY b.doc_id""".stripMargin),
     // The S-curve planner restated: identical pow expressions over the
     // same 7-row factorization table, recommendation re-derived.
-    "e2_lsh_plan" ->
+    Query("e2_lsh_plan", e2LshPlan,
       """WITH plans(b, r) AS (
         |  VALUES (1, 64), (2, 32), (4, 16), (8, 8), (16, 4), (32, 2),
         |    (64, 1)),
@@ -2184,12 +2159,12 @@ object Dedup {
         |  FROM plans)
         |SELECT b, r, threshold, p_below, p_above,
         |  (dist = (SELECT min(dist) FROM t)) AS recommended
-        |FROM t ORDER BY b""".stripMargin,
+        |FROM t ORDER BY b""".stripMargin),
     // Exact maximal duplicated spans: DuckDB re-derives the sliding
     // 6-gram anchors, the ≥2-distinct-doc filter, the occurrence
     // pairing, the diagonal gaps-and-islands runs, and every span's
     // doc-a exemplar text — plant included via the shared constant.
-    "e2_substring_exact" -> {
+    Query("e2_substring_exact", e2SubstringExact, {
       val plantedSql = plantedSpanDocs.map { case (id, txt) =>
         s"SELECT $id AS doc_id, '$txt' AS text"
       }.mkString(" UNION ALL ")
@@ -2233,8 +2208,8 @@ object Dedup {
          |FROM runs JOIN b bb ON bb.doc_id = runs.a
          |ORDER BY len DESC, doc_a, doc_b, a_start, b_start
          |LIMIT 40""".stripMargin
-    },
-    "e2_repeated_ngrams" ->
+    }),
+    Query("e2_repeated_ngrams", e2RepeatedNgrams,
       """WITH w AS (
         |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents
         |  WHERE len(string_split(text, ' ')) >= 8),
@@ -2249,8 +2224,8 @@ object Dedup {
         |  FROM g GROUP BY sha256(gram))
         |SELECT gram_sha, n_docs, n_occ, gram FROM c
         |WHERE n_docs >= 2
-        |ORDER BY n_docs DESC, n_occ DESC, gram_sha LIMIT 40""".stripMargin,
-    "e1b_normalized_dedup" ->
+        |ORDER BY n_docs DESC, n_occ DESC, gram_sha LIMIT 40""".stripMargin),
+    Query("e1b_normalized_dedup", e1bNormalizedDedup,
       s"""WITH planted AS (
          |  SELECT doc_id, lang, text FROM documents
          |  UNION ALL
@@ -2278,8 +2253,8 @@ object Dedup {
          |JOIN (SELECT lang, count(*)::BIGINT AS n_norm_kept,
          |        sum(doc_id)::BIGINT AS sum_kept_ids
          |      FROM kept GROUP BY lang) k USING (lang)
-         |ORDER BY lang""".stripMargin,
-    "e1_dedup_exact" ->
+         |ORDER BY lang""".stripMargin),
+    Query("e1_dedup_exact", e1DedupExact,
       """SELECT min(doc_id) AS doc_id, count(*) AS n_copies FROM (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
@@ -2287,11 +2262,11 @@ object Dedup {
         |  UNION ALL
         |  SELECT doc_id + 200000, text || ' zzduplicate' FROM documents
         |  WHERE doc_id % 20 = 0
-        |) GROUP BY text ORDER BY doc_id""".stripMargin,
+        |) GROUP BY text ORDER BY doc_id""".stripMargin),
     // Exact all-pairs 3-word-shingle Jaccard, mirroring Dedup.shingles
     // exactly (i in 1..len-2, space-joined, distinct set; docs shorter
     // than 3 words yield NO shingles on either engine).
-    "e2_minhash_neardup" ->
+    Query("e2_minhash_neardup", e2MinhashNearDup,
       """WITH sh AS (
         |  SELECT doc_id,
         |    list_distinct(list_transform(
@@ -2307,13 +2282,13 @@ object Dedup {
         |WHERE a.doc_id < b.doc_id
         |  AND len(list_intersect(a.s, b.s))::DOUBLE
         |    / len(list_distinct(list_concat(a.s, b.s))) >= 0.8
-        |ORDER BY a, b""".stripMargin,
+        |ORDER BY a, b""".stripMargin),
     // Exact all-pairs 3-word-shingle Jaccard — the prefix-filter path
     // must reproduce it bit for bit.
     // Same variants, same rules: latest = row_number over (ts DESC,
     // src DESC, name DESC) = 1 (the struct-max order), mode = votes
     // DESC then value ASC, balance = max of the same rounded values.
-    "e13c_golden_record" ->
+    Query("e13c_golden_record", e13cGoldenRecord,
       """WITH c AS (SELECT * FROM customer WHERE c_custkey % 5 = 0),
         |vals AS (
         |  SELECT c_custkey AS key, 'a' AS src, c_name AS name,
@@ -2356,7 +2331,7 @@ object Dedup {
         |SELECT l.key, l.golden_name, l.latest_src, m.golden_seg,
         |  a.golden_bal, a.n_seg_sources
         |FROM latest l JOIN aggs a USING (key) JOIN mode m USING (key)
-        |ORDER BY l.key""".stripMargin,
+        |ORDER BY l.key""".stripMargin),
     // Token-join restatement over corpus + the same plants (pairs via
     // shared-shingle GROUP BY — Σ df² rows, ~3M at sf0.1, where the
     // all-pairs list-intersect form ran past 10 min); the integer
@@ -2364,7 +2339,7 @@ object Dedup {
     // disagree. A pair sharing zero shingles can't reach any positive
     // threshold, so the token join loses nothing; shingle-less docs
     // drop from the explode in both engines.
-    "e2_containment" ->
+    Query("e2_containment", e2Containment,
       """WITH base AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
@@ -2391,8 +2366,8 @@ object Dedup {
         |  round(sh::DOUBLE / na, 4) AS containment
         |FROM shared JOIN sizes ON sizes.doc_id = ca
         |WHERE 5 * sh >= 4 * na
-        |ORDER BY contained_id, container_id""".stripMargin,
-    "e2_ngram_jaccard" ->
+        |ORDER BY contained_id, container_id""".stripMargin),
+    Query("e2_ngram_jaccard", e2NgramJaccard,
       """WITH sh AS (
         |  SELECT doc_id,
         |    list_distinct(list_transform(
@@ -2408,49 +2383,49 @@ object Dedup {
         |WHERE a.doc_id < b.doc_id
         |  AND len(list_intersect(a.s, b.s))::DOUBLE
         |    / len(list_distinct(list_concat(a.s, b.s))) >= 0.75
-        |ORDER BY a, b""".stripMargin,
-    "e2_simhash_neardup" ->
-      "SELECT true AS recall_ok, true AS precision_ok, true AS cand_budget_ok",
+        |ORDER BY a, b""".stripMargin),
+    Query("e2_simhash_neardup", e2SimhashNearDup,
+      "SELECT true AS recall_ok, true AS precision_ok, true AS cand_budget_ok"),
     // The native expression must agree with DuckDB's implementation
     // bit-for-bit (both score raw UTF-8 bytes, same boost rule).
-    "e12_jaro_er" ->
+    Query("e12_jaro_er", e12JaroEr,
       """SELECT a.p_partkey AS key_a, b.p_partkey AS key_b,
         |  round(jaro_winkler_similarity(a.p_name, b.p_name), 6) AS jw
         |FROM part a JOIN part b
         |  ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
         |WHERE jaro_winkler_similarity(a.p_name, b.p_name) >= 0.88
-        |ORDER BY key_a, key_b""".stripMargin,
+        |ORDER BY key_a, key_b""".stripMargin),
     // Naive all-pairs-within-block Levenshtein — the deletion-
     // neighborhood join must reproduce it exactly (any lost pair is a
     // hash mismatch). DuckDB levenshtein returns BIGINT; Spark's is INT.
-    "e2_edit_join" ->
+    Query("e2_edit_join", e2EditJoin,
       """SELECT a.p_partkey AS key_a, b.p_partkey AS key_b,
         |  levenshtein(a.p_name, b.p_name)::INTEGER AS dist
         |FROM part a JOIN part b
         |  ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
         |WHERE levenshtein(a.p_name, b.p_name) <= 2
-        |ORDER BY key_a, key_b""".stripMargin,
+        |ORDER BY key_a, key_b""".stripMargin),
     // Self-check ✱: the three lifecycle equalities are asserted
     // in-plan (merge-on-read vs fresh-build over survivors, post-
     // compaction invariance, non-vacuous widening).
-    "e2_lsh_delete" ->
+    Query("e2_lsh_delete", e2LshDelete,
       """SELECT true AS mor_equals_fresh_build,
         |  true AS compaction_preserves,
-        |  true AS delete_widens_admission""".stripMargin,
+        |  true AS delete_widens_admission""".stripMargin),
     // Plain anti-join restatement of the bloom-prefiltered admission
     // (the prefilter is exact end-to-end: no false negatives, false
     // positives removed by the exact join).
-    "e2_bloom_ingest" ->
+    Query("e2_bloom_ingest", e2BloomIngest,
       """SELECT doc_id, lang FROM documents
         |WHERE doc_id % 5 <> 0
         |  AND sha256(text) NOT IN (
         |    SELECT sha256(text) FROM documents WHERE doc_id % 5 = 0)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // Whole admission recomputed with exact all-pairs Jaccard over
     // old ∪ exact-kept fresh, restricted to fresh b-sides (ids ≥
     // 100000) — exactly the pair population the asymmetric band join
     // may draw from.
-    "e2_incremental" ->
+    Query("e2_incremental", e2Incremental,
       """WITH old AS (SELECT doc_id, text, lang FROM documents),
         |fresh AS (
         |  SELECT doc_id + 100000 AS doc_id, text, lang FROM documents
@@ -2493,10 +2468,10 @@ object Dedup {
         |LEFT JOIN (SELECT lang, count(*)::BIGINT AS n_kept,
         |             sum(doc_id)::BIGINT AS sum_kept_ids
         |           FROM kept GROUP BY lang) k USING (lang)
-        |ORDER BY lang""".stripMargin,
+        |ORDER BY lang""".stripMargin),
     // The closure recomputed declaratively: reach(src,dst) saturates
     // via UNION-distinct; component = min reachable id.
-    "e2_cluster_cc" ->
+    Query("e2_cluster_cc", e2ClusterCc,
       """WITH RECURSIVE sh AS (
         |  SELECT doc_id,
         |    list_distinct(list_transform(
@@ -2519,13 +2494,13 @@ object Dedup {
         |  UNION
         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
         |SELECT src AS doc_id, min(dst) AS component
-        |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin,
+        |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin),
     // The incremental-maintenance gate: the oracle is the FULL
     // recompute over corpus ∪ freshBatch — the same closure as
     // e2_cluster_cc with the batch unioned in. `pairs` feeds `edges`
     // twice (both orientations), so it must be MATERIALIZED or DuckDB
     // inlines the all-pairs join at each reference (the e16 lesson).
-    "e2_cluster_incremental" ->
+    Query("e2_cluster_incremental", e2ClusterIncremental,
       """WITH RECURSIVE docs AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
@@ -2559,6 +2534,6 @@ object Dedup {
         |  UNION
         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
         |SELECT src AS doc_id, min(dst) AS component
-        |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin,
+        |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin),
   )
 }

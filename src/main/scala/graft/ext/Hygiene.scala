@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Query, Tables}
 import graft.Tables.{load => t}
 
 /** Corpus-hygiene operators for training-data pipelines (EXT, SURVEY
@@ -777,28 +777,11 @@ object Hygiene {
     perTerm.unionByName(decoyAudit).orderBy(col("term"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "e9_dict_scan" -> e9DictScan,
-    "e9_html_strip" -> e9HtmlStrip,
-    "e9_url_canon" -> e9UrlCanon,
-    "e9_nfc_clean" -> e9NfcClean,
-    "e9_compress_ratio" -> e9CompressRatio,
-    "e9_dp_release" -> e9DpRelease,
-    "e9_kanon" -> e9Kanon,
-    "e9_gopher" -> e9Gopher,
-    "e9_pii_redact" -> e9PiiRedact,
-    "e9_secrets" -> e9Secrets,
-    "e9_repetition" -> e9Repetition,
-    "e9_topngram" -> e9TopNgram,
-    "e9_boilerplate" -> e9Boilerplate,
-    "e9_blocklist" -> e9Blocklist,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // Same plant, same tag regex ('g' — DuckDB replaces first-only by
     // default), same entity decode chain with &amp; last. Entity
     // replacements use plain `replace` (the patterns are literal).
-    "e9_html_strip" ->
+    Query("e9_html_strip", e9HtmlStrip,
       s"""WITH planted AS (
          |  SELECT doc_id,
          |    '<p id="d' || doc_id || '"><b>Title</b> ' || text ||
@@ -820,10 +803,10 @@ object Hygiene {
          |  len(regexp_extract_all(html, '$HtmlEntityRe'))::BIGINT
          |    AS n_entities,
          |  clean, length(clean)::BIGINT AS clean_chars
-         |FROM c ORDER BY doc_id""".stripMargin,
+         |FROM c ORDER BY doc_id""".stripMargin),
     // Same plants, same regex chain in the same order ('g' — Spark's
     // regexp_replace is replace-all by default, DuckDB's is not).
-    "e9_url_canon" ->
+    Query("e9_url_canon", e9UrlCanon,
       s"""WITH planted AS (
          |  SELECT lang,
          |    (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://WWW.EXAMPLE'
@@ -853,12 +836,12 @@ object Hygiene {
          |  count(DISTINCT url)::BIGINT AS n_raw_distinct,
          |  count(DISTINCT canon)::BIGINT AS n_canon_distinct,
          |  sum(length(canon))::BIGINT AS canon_chars
-         |FROM c GROUP BY lang ORDER BY lang""".stripMargin,
+         |FROM c GROUP BY lang ORDER BY lang""".stripMargin),
     // Full restatement: DuckDB replants the same mojibake (chr() for
     // the combining marks / control / zero-width so no raw control
     // bytes ride in the SQL), runs its utf8proc nfc_normalize against
     // the JDK Normalizer, and the shared strip/collapse regexes.
-    "e9_nfc_clean" ->
+    Query("e9_nfc_clean", e9NfcClean,
       s"""WITH planted AS (
          |  SELECT lang, text ||
          |    (CASE WHEN doc_id % 7 = 0
@@ -886,17 +869,17 @@ object Hygiene {
          |    AS n_composed,
          |  sum(len(regexp_extract_all(cleaned, '$PlantedMarkRe')))::BIGINT
          |    AS residual_marks
-         |FROM c GROUP BY lang ORDER BY lang""".stripMargin,
+         |FROM c GROUP BY lang ORDER BY lang""".stripMargin),
     // Self-check (✱): deflate bytes are engine-specific; bounds and the
     // self-similarity law asserted in-plan, constant-true oracle.
-    "e9_compress_ratio" ->
+    Query("e9_compress_ratio", e9CompressRatio,
       """SELECT true AS ratios_sane, true AS self_similarity_holds,
-        |  true AS nonempty""".stripMargin,
+        |  true AS nonempty""".stripMargin),
     // Full restatement of the deterministic Laplace release: same
     // rank seed, same bin-center uniform, same inverse CDF, same
     // per-row rounding (rk is small and positive, so the plain `%`
     // spelling equals splitBucket's pmod form).
-    "e9_dp_release" ->
+    Query("e9_dp_release", e9DpRelease,
       """WITH cells AS (
         |  SELECT lang, source, count(*)::BIGINT AS n
         |  FROM documents GROUP BY lang, source),
@@ -912,8 +895,8 @@ object Hygiene {
         |SELECT lang, source,
         |  round(n + round(-2.0 * sign(u - 0.5) *
         |    ln(1 - 2 * abs(u - 0.5)), 6), 4) AS n_noisy
-        |FROM z ORDER BY lang, source""".stripMargin,
-    "e9_kanon" ->
+        |FROM z ORDER BY lang, source""".stripMargin),
+    Query("e9_kanon", e9Kanon,
       """WITH g AS (
         |  SELECT lang, source, n_chars // 100 AS len_bucket,
         |    count(*)::BIGINT AS n
@@ -923,8 +906,8 @@ object Hygiene {
         |  round(n::DOUBLE / n_total, 6) AS corpus_share
         |FROM g CROSS JOIN t
         |WHERE n < 5
-        |ORDER BY lang, source, len_bucket""".stripMargin,
-    "e9_gopher" ->
+        |ORDER BY lang, source, len_bucket""".stripMargin),
+    Query("e9_gopher", e9Gopher,
       """WITH r AS (
         |  SELECT doc_id, lang,
         |    len(string_split(text, ' '))::DOUBLE AS nw,
@@ -950,8 +933,8 @@ object Hygiene {
         |      THEN 1 ELSE 0 END)::BIGINT AS n_kept,
         |  sum(CASE WHEN ok_words AND ok_mwl AND ok_stop
         |      THEN doc_id ELSE 0 END)::BIGINT AS sum_kept_ids
-        |FROM v GROUP BY lang ORDER BY lang""".stripMargin,
-    "e9_secrets" ->
+        |FROM v GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("e9_secrets", e9Secrets,
       s"""WITH planted AS (
          |  SELECT lang, text ||
          |    (CASE WHEN doc_id % 9 = 0
@@ -984,8 +967,8 @@ object Hygiene {
          |    + len(regexp_extract_all(redacted, '$JwtRe')))::BIGINT
          |    AS residual_secrets,
          |  sum(len(text) - len(redacted))::BIGINT AS chars_delta
-         |FROM red GROUP BY lang ORDER BY lang""".stripMargin,
-    "e9_pii_redact" ->
+         |FROM red GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("e9_pii_redact", e9PiiRedact,
       s"""WITH planted AS (
          |  SELECT lang, text ||
          |    (CASE WHEN doc_id % 7 = 0
@@ -1013,8 +996,8 @@ object Hygiene {
          |    + len(regexp_extract_all(redacted, '$Ipv4Re')))::BIGINT
          |    AS residual_pii,
          |  sum(len(text) - len(redacted))::BIGINT AS chars_delta
-         |FROM red GROUP BY lang ORDER BY lang""".stripMargin,
-    "e9_boilerplate" ->
+         |FROM red GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("e9_boilerplate", e9Boilerplate,
       """WITH sh AS (
         |  SELECT doc_id, unnest(list_distinct(list_transform(
         |    range(1, greatest(len(string_split(text,' ')) - 2, 0) + 1),
@@ -1028,10 +1011,10 @@ object Hygiene {
         |  sum(CASE WHEN df > 2 THEN 1 ELSE 0 END)::BIGINT AS n_boiler,
         |  round(sum(CASE WHEN df > 2 THEN 1 ELSE 0 END)::DOUBLE
         |    / count(*), 4) AS boiler_frac
-        |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // Substring semantics restated per term (position > 0); the decoy
     // audit row re-derives '#'-absence from the corpus.
-    "e9_dict_scan" ->
+    Query("e9_dict_scan", e9DictScan,
       s"""WITH terms(term) AS (
          |  VALUES ${DictTerms.map("('" + _ + "')").mkString(",")}),
          |m AS (SELECT t.term, d.doc_id FROM terms t JOIN documents d
@@ -1046,8 +1029,8 @@ object Hygiene {
          |        END)::BIGINT AS n_docs,
          |    0::BIGINT AS sum_doc_ids
          |  FROM documents)
-         |ORDER BY term""".stripMargin,
-    "e9_blocklist" ->
+         |ORDER BY term""".stripMargin),
+    Query("e9_blocklist", e9Blocklist,
       s"""WITH planted AS (
          |  SELECT doc_id, source, text ||
          |    (CASE WHEN doc_id % 9 = 0 THEN ' get freecoins today'
@@ -1071,10 +1054,10 @@ object Hygiene {
          |  sum(CASE WHEN verdict = 'kept' THEN 1 ELSE 0 END)::BIGINT AS n_kept,
          |  sum(CASE WHEN verdict = 'kept' THEN doc_id ELSE 0 END)::BIGINT
          |    AS sum_kept_ids
-         |FROM v GROUP BY source ORDER BY source""".stripMargin,
+         |FROM v GROUP BY source ORDER BY source""".stripMargin),
     // Gopher top-n-gram fractions: every gram regenerated, per-doc
     // maxima and the integer basis-point arithmetic restated.
-    "e9_topngram" ->
+    Query("e9_topngram", e9TopNgram,
       """WITH b AS (
         |  SELECT doc_id, string_split(text, ' ') AS ws,
         |    len(string_split(text, ' '))::BIGINT AS nt
@@ -1114,8 +1097,8 @@ object Hygiene {
         |LEFT JOIN g2 USING (doc_id)
         |LEFT JOIN g3 USING (doc_id)
         |LEFT JOIN g4 USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
-    "e9_repetition" ->
+        |ORDER BY b.doc_id""".stripMargin),
+    Query("e9_repetition", e9Repetition,
       """WITH w AS (
         |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |base AS (
@@ -1136,6 +1119,6 @@ object Hygiene {
         |  GROUP BY doc_id)
         |SELECT b.doc_id, b.n_words, b.uniq_ratio, b.dup_bigram_ratio,
         |  round(t.top_n::DOUBLE / b.n_words, 4) AS top_word_ratio
-        |FROM base b JOIN tw t USING (doc_id) ORDER BY doc_id""".stripMargin,
+        |FROM base b JOIN tw t USING (doc_id) ORDER BY doc_id""".stripMargin),
   )
 }

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Query, Tables}
 import graft.Tables.{load => t}
 
 /** Multimodal columns (EXT, SURVEY §2.12 E5): media as opaque binary
@@ -330,7 +330,7 @@ object Multimodal {
     *
     * The downstream scene-cut signal (|Δ mean| between consecutive
     * sampled frames) is left to the caller's window — see
-    * [[Multimodal.queries e5_frame_sample]]. */
+    * the `e5_frame_sample` query (`e5FrameSample`). */
   def frameSample(df: DataFrame, idCol: String, binCol: String,
       frameBytes: Int, nFrames: Int, stride: Int): Dataset[FrameStats] = {
     import df.sparkSession.implicits._
@@ -2973,32 +2973,7 @@ object Multimodal {
       .orderBy(col("fp"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "e5_audio_phash" -> e5AudioPhash,
-    "e5_audio_resample" -> e5AudioResample,
-    "e5_frame_sample" -> e5FrameSample,
-    "e5_avi_frames" -> e5AviFrames,
-    "e5_mp4_frames" -> e5Mp4Frames,
-    "e5_phash_neardup" -> e5PhashNearDup,
-    "e5_spectral" -> e5Spectral,
-    "e5_wav_decode" -> e5WavDecode,
-    "e5_wav_spectral" -> e5WavSpectral,
-    "e5_png_decode" -> e5PngDecode,
-    "e5_gif_decode" -> e5GifDecode,
-    "e5_jpeg_decode" -> e5JpegDecode,
-    "e5_jpeg_phash" -> e5JpegPhash,
-    "e5_jpeg_encode" -> e5JpegEncode,
-    "e5_dct_phash" -> e5DctPhash,
-    "e5_meta_strip" -> e5MetaStrip,
-    "e5_resize_box" -> e5ResizeBox,
-    "e5_binary_meta" -> e5BinaryMeta,
-    "e5_vector_join" -> e5VectorJoin,
-    "e5_decode_batch" -> e5DecodeBatch,
-    "e5_ppm_decode" -> e5PpmDecode,
-    "e5_pipeline" -> e5Pipeline,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // Sampled-frame byte stats from the same fixed layout: frame f's
     // byte i is the document's (f·32 + i)-th byte or 0 padding; frames
     // 0,3,6,9 are the stride-3 sample. NULL text ⇒ strlen NULL ⇒ every
@@ -3007,7 +2982,7 @@ object Multimodal {
     // so the oracle restates the per-frame byte stats straight from the
     // 144-byte zero-padded frame construction — same NULL-text rule as
     // e5_frame_sample (strlen NULL => every CASE falls to 0).
-    "e5_avi_frames" ->
+    Query("e5_avi_frames", e5AviFrames,
       """WITH a AS (
         |  SELECT doc_id, regexp_replace(text, '[^\x00-\x7F]', '', 'g') AS t
         |  FROM documents),
@@ -3023,10 +2998,10 @@ object Multimodal {
         |           ELSE 0 END))::INT AS max_b
         |  FROM a, unnest(range(0, 6)) AS s(fr))
         |SELECT doc_id, frame_idx, sum_b, max_b
-        |FROM f ORDER BY doc_id, frame_idx""".stripMargin,
+        |FROM f ORDER BY doc_id, frame_idx""".stripMargin),
     // Closed-form layout: frame f is bytes [start_f, start_f+96+3f)
     // of the ascii-stripped text, zero-padded; start_f = 96f+3f(f-1)/2.
-    "e5_mp4_frames" ->
+    Query("e5_mp4_frames", e5Mp4Frames,
       """WITH a AS (
         |  SELECT doc_id, regexp_replace(text, '[^\x00-\x7F]', '', 'g') AS t
         |  FROM documents),
@@ -3043,8 +3018,8 @@ object Multimodal {
         |           ELSE 0 END))::INT AS max_b
         |  FROM a, unnest(range(0, 6)) AS s(fr))
         |SELECT doc_id, frame_idx, pts, n_bytes, sum_b, max_b
-        |FROM f ORDER BY doc_id, frame_idx""".stripMargin,
-    "e5_frame_sample" ->
+        |FROM f ORDER BY doc_id, frame_idx""".stripMargin),
+    Query("e5_frame_sample", e5FrameSample,
       """WITH a AS (
         |  SELECT doc_id, regexp_replace(text, '[^\x00-\x7F]', '', 'g') AS t
         |  FROM documents),
@@ -3067,20 +3042,20 @@ object Multimodal {
         |  FROM f)
         |SELECT doc_id, frame_idx, round(mean_raw, 4) AS mean_b, max_b,
         |  cut_delta
-        |FROM d ORDER BY doc_id, frame_idx""".stripMargin,
-    "e5_phash_neardup" ->
+        |FROM d ORDER BY doc_id, frame_idx""".stripMargin),
+    Query("e5_phash_neardup", e5PhashNearDup,
       """SELECT true AS recall_ok, true AS pair_budget_ok,
-        |  true AS pairs_cover_planted""".stripMargin,
-    "e5_spectral" ->
+        |  true AS pairs_cover_planted""".stripMargin),
+    Query("e5_spectral", e5Spectral,
       """SELECT true AS tones_located, true AS parseval_holds,
-        |  true AS full_clips, true AS nonempty""".stripMargin,
+        |  true AS full_clips, true AS nonempty""".stripMargin),
     // VALUE-LEVEL restatement of the decoded samples: the integer
     // sawtooth formula recomputed per (id, t) — a decode byte slip
     // breaks the checksums.
     // Frame energies recomputed from the synth formula (exact BIGINT
     // sums of squares), bits rebuilt with the same strict-> rule via
     // lead(), prints summed as bit<<i — integer end to end.
-    "e5_audio_phash" ->
+    Query("e5_audio_phash", e5AudioPhash,
       """WITH s AS (
         |  SELECT vec_id AS id, g.t // 8 AS frame,
         |    ((((g.t * (vec_id % 7 + 1)) % 200) - 100) * 50)::BIGINT
@@ -3099,10 +3074,10 @@ object Multimodal {
         |    sum(bit * (1::BIGINT << frame::INT))::BIGINT AS fp
         |  FROM b WHERE frame < 31 GROUP BY id)
         |SELECT fp, count(*)::BIGINT AS n_clips, min(id) AS min_id
-        |FROM fp GROUP BY fp ORDER BY fp""".stripMargin,
+        |FROM fp GROUP BY fp ORDER BY fp""".stripMargin),
     // Pair means of the synth formula; every pair sum is even (samples
     // are ×50), so `// 2` is exact — truncation vs floor can't differ.
-    "e5_audio_resample" ->
+    Query("e5_audio_resample", e5AudioResample,
       """WITH s AS (
         |  SELECT vec_id AS id, g.t,
         |    (((((2 * g.t) * (vec_id % 7 + 1)) % 200) - 100) * 50
@@ -3112,8 +3087,8 @@ object Multimodal {
         |SELECT id, 128::INT AS n_out, 4000::INT AS out_rate,
         |  sum(smp)::BIGINT AS sum_out, min(smp)::INT AS min_out,
         |  max(smp)::INT AS max_out
-        |FROM s GROUP BY id ORDER BY id""".stripMargin,
-    "e5_wav_decode" ->
+        |FROM s GROUP BY id ORDER BY id""".stripMargin),
+    Query("e5_wav_decode", e5WavDecode,
       """WITH s AS (
         |  SELECT vec_id AS id, g.t,
         |    ((((g.t * (vec_id % 7 + 1)) % 200) - 100) * 50)::INT AS smp
@@ -3121,12 +3096,12 @@ object Multimodal {
         |SELECT id, 256::INT AS n_samples, 8000::INT AS sample_rate,
         |  sum(smp)::BIGINT AS sum_s, min(smp)::INT AS min_s,
         |  max(smp)::INT AS max_s
-        |FROM s GROUP BY id ORDER BY id""".stripMargin,
+        |FROM s GROUP BY id ORDER BY id""".stripMargin),
     // Physics self-check (✱): bounds asserted in-plan, constant-true
     // oracle — same convention as e5_spectral.
-    "e5_wav_spectral" ->
+    Query("e5_wav_spectral", e5WavSpectral,
       """SELECT true AS tones_located, true AS parseval_holds,
-        |  true AS full_clips, true AS nonempty""".stripMargin,
+        |  true AS full_clips, true AS nonempty""".stripMargin),
     // VALUE-LEVEL restatement of the decoded pixels: the integer pixel
     // formula recomputed per (doc, x, y) — a filter-byte skip, channel
     // swap, or stride slip breaks the channel sums.
@@ -3134,7 +3109,7 @@ object Multimodal {
     // chunks of 12-byte framing + 11+digits/16/7 payloads = 70 +
     // digit count); pixel sums restate the synth formula — scrubbing
     // must not touch a pixel.
-    "e5_meta_strip" ->
+    Query("e5_meta_strip", e5MetaStrip,
       """WITH px AS (
         |  SELECT doc_id, gx.x, gy.y,
         |    ((gx.x * 7 + gy.y * 3) + doc_id) % 256 AS r,
@@ -3148,8 +3123,8 @@ object Multimodal {
         |  0::BIGINT AS residual_meta,
         |  sum(r)::BIGINT AS sum_r, sum(g)::BIGINT AS sum_g,
         |  sum(b)::BIGINT AS sum_b
-        |FROM px GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "e5_png_decode" ->
+        |FROM px GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("e5_png_decode", e5PngDecode,
       """WITH px AS (
         |  SELECT doc_id, gx.x, gy.y,
         |    ((gx.x * 7 + gy.y * 3) + doc_id) % 256 AS r,
@@ -3161,12 +3136,12 @@ object Multimodal {
         |SELECT doc_id, 16::INT AS width, 12::INT AS height,
         |  sum(r)::BIGINT AS sum_r, sum(g)::BIGINT AS sum_g,
         |  sum(b)::BIGINT AS sum_b, 192::INT AS n_px
-        |FROM px GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM px GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // Self-check (✱): DCT doubles are engine-internal; the LSH
     // radius-recall/budget bounds are asserted in-plan.
-    "e5_dct_phash" ->
+    Query("e5_dct_phash", e5DctPhash,
       """SELECT true AS radius_recall_exact, true AS radius_covers_plants,
-        |  true AS pair_budget_ok, true AS nonempty""".stripMargin,
+        |  true AS pair_budget_ok, true AS nonempty""".stripMargin),
     // VALUE-LEVEL restatement of palette∘index over the pixel grid:
     // the GIF round-trip's channel sums recomputed from the integer
     // index and palette formulas.
@@ -3179,19 +3154,19 @@ object Multimodal {
     // Self-check ✱: both-ways interop (the JDK decoder accepts and
     // agrees on our encoder's bytes; our decoder matches it) plus
     // source fidelity asserted in-plan.
-    "e5_jpeg_encode" ->
+    Query("e5_jpeg_encode", e5JpegEncode,
       """SELECT true AS dims_ok, true AS decoder_agreement_max_ok,
         |  true AS decoder_agreement_mean_ok, true AS source_fidelity_ok,
-        |  true AS nonempty""".stripMargin,
-    "e5_jpeg_phash" ->
+        |  true AS nonempty""".stripMargin),
+    Query("e5_jpeg_phash", e5JpegPhash,
       """SELECT true AS radius_recall_exact, true AS reencode_robust,
         |  true AS patterns_discriminated, true AS pair_budget_ok,
-        |  true AS nonempty""".stripMargin,
-    "e5_jpeg_decode" ->
+        |  true AS nonempty""".stripMargin),
+    Query("e5_jpeg_decode", e5JpegDecode,
       """SELECT true AS dims_ok, true AS interop_max_ok,
         |  true AS interop_mean_ok, true AS source_fidelity_ok,
-        |  true AS nonempty""".stripMargin,
-    "e5_gif_decode" ->
+        |  true AS nonempty""".stripMargin),
+    Query("e5_gif_decode", e5GifDecode,
       """WITH px AS (
         |  SELECT doc_id,
         |    ((gx.x * 7 + gy.y * 11) + doc_id) % 256 AS i
@@ -3202,10 +3177,10 @@ object Multimodal {
         |  sum(i)::BIGINT AS sum_r,
         |  sum((i * 5 + 7) % 256)::BIGINT AS sum_g,
         |  sum(255 - i)::BIGINT AS sum_b, 192::BIGINT AS n_px
-        |FROM px GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM px GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // VALUE-LEVEL restatement of the 2x2 box downsample: floor-mean of
     // each output pixel's 2x2 block recomputed from the synth formula.
-    "e5_resize_box" ->
+    Query("e5_resize_box", e5ResizeBox,
       """WITH px AS (
         |  SELECT doc_id, gx.x, gy.y,
         |    ((gx.x * 7 + gy.y * 3) + doc_id) % 256 AS r,
@@ -3221,27 +3196,27 @@ object Multimodal {
         |SELECT doc_id, 8::INT AS out_w, 6::INT AS out_h,
         |  sum(dr)::BIGINT AS ds_sum_r, sum(dg)::BIGINT AS ds_sum_g,
         |  sum(db)::BIGINT AS ds_sum_b
-        |FROM ds GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM ds GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // Every oracle below computes over the same ASCII-stripped
     // projection as the Spark side (see asciiOnly) — char ops equal
     // byte ops only once non-ASCII is gone.
-    "e5_binary_meta" ->
+    Query("e5_binary_meta", e5BinaryMeta,
       """WITH a AS (
         |  SELECT doc_id, regexp_replace(text, '[^\x00-\x7F]', '', 'g') AS t
         |  FROM documents)
         |SELECT doc_id, strlen(t) AS n_bytes, md5(t) AS digest,
         | upper(hex(substr(t, 1, 8))) AS head8
-        |FROM a ORDER BY doc_id""".stripMargin,
-    "e5_vector_join" ->
+        |FROM a ORDER BY doc_id""".stripMargin),
+    Query("e5_vector_join", e5VectorJoin,
       """SELECT label, lang, count(*) AS n,
         | round(avg(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])), 4)
         |   AS avg_norm_sq
         |FROM embeddings JOIN documents ON vec_id = doc_id
-        |GROUP BY label, lang ORDER BY label, lang""".stripMargin,
-    "e5_decode_batch" ->
+        |GROUP BY label, lang ORDER BY label, lang""".stripMargin),
+    Query("e5_decode_batch", e5DecodeBatch,
       """SELECT doc_id,
         | strlen(regexp_replace(text, '[^\x00-\x7F]', '', 'g')) AS n_bytes
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // Channel means recomputed from the same construction: pixel byte
     // i is the document's i-th byte (ASCII corpus: ord = byte) or 0
     // padding; R/G/B interleave as 3j/3j+1/3j+2. sum/64 is exact in
@@ -3250,7 +3225,7 @@ object Multimodal {
     // r = mean of bytes r·24 … r·24+23. The byte sums are small
     // integers (exact in doubles), so the cosine arithmetic is
     // bit-identical across engines.
-    "e5_pipeline" ->
+    Query("e5_pipeline", e5Pipeline,
       """WITH a AS (
         |  SELECT doc_id, regexp_replace(text, '[^\x00-\x7F]', '', 'g') AS t
         |  FROM documents),
@@ -3274,8 +3249,8 @@ object Multimodal {
         |                       ORDER BY cos DESC, c_id) AS rnk
         |  FROM p)
         |SELECT q_id, rnk, c_id, round(cos, 6) AS sim
-        |FROM rk WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin,
-    "e5_ppm_decode" ->
+        |FROM rk WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin),
+    Query("e5_ppm_decode", e5PpmDecode,
       """WITH a AS (
         |  SELECT doc_id, regexp_replace(text, '[^\x00-\x7F]', '', 'g') AS t
         |  FROM documents),
@@ -3292,6 +3267,6 @@ object Multimodal {
         |    / 64.0, 4) AS mean_g,
         |  round(list_sum(list_transform(range(0, 64), j -> b[(3*j + 3)::INT]))
         |    / 64.0, 4) AS mean_b
-        |FROM px ORDER BY doc_id""".stripMargin,
+        |FROM px ORDER BY doc_id""".stripMargin),
   )
 }

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Query, Tables}
 
 /** Trainable quality classifier (EXT, SURVEY §2.12; no reference
   * analog) — the fastText-style linear filter every web-corpus pipeline
@@ -530,25 +530,19 @@ object QualityModel {
         (col("raw_ece") >= 0.0 && col("cal_ece") >= 0.0).as("nonempty"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "e10_quality_lr" -> e10QualityLr,
-    "e10b_quality_hashed" -> e10bQualityHashed,
-    "e10c_calibration" -> e10cCalibration,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "e10_quality_lr" ->
+  val queries: Seq[Query] = Seq(
+    Query("e10_quality_lr", e10QualityLr,
       """SELECT true AS accurate, true AS loss_dropped,
-        |  true AS proper_probs, true AS nonempty""".stripMargin,
-    "e10b_quality_hashed" ->
+        |  true AS proper_probs, true AS nonempty""".stripMargin),
+    Query("e10b_quality_hashed", e10bQualityHashed,
       """SELECT true AS train_accurate, true AS heldout_accurate,
         |  true AS loss_dropped, true AS proper_probs,
-        |  true AS heldout_nonempty""".stripMargin,
+        |  true AS heldout_nonempty""".stripMargin),
     // Self-check (✱): trained floats are engine-specific; the
     // calibration-quality bounds are asserted in-plan.
-    "e10c_calibration" ->
+    Query("e10c_calibration", e10cCalibration,
       """SELECT true AS ece_improved, true AS ece_bounded,
         |  true AS monotone_map, true AS platt_converged,
-        |  true AS nonempty""".stripMargin,
+        |  true AS nonempty""".stripMargin),
   )
 }

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Q
+import graft.{Q, Query}
 import graft.Tables.{load => t}
 import scala.jdk.CollectionConverters._
 
@@ -2415,49 +2415,11 @@ object Similarity {
       .orderBy(col("q_id"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "e3_eval_rank" -> e3EvalRank,
-    "e3_hybrid_rrf" -> e3HybridRrf,
-    "e3_matryoshka" -> e3Matryoshka,
-    "e3_semdedup" -> e3SemDedup,
-    "e3_pq_recall" -> e3PqRecall,
-    "e3_pq_search" -> e3PqSearch,
-    "e3_ivfpq_recall" -> e3IvfPqRecall,
-    "e3_ivfpq_search" -> e3IvfPqSearch,
-    "e3_pq_indexed" -> e3PqIndexed,
-    "e3_ann_search" -> e3AnnSearch,
-    "e3_hnsw_recall" -> e3HnswRecall,
-    "e3_hnsw_search" -> e3HnswSearch,
-    "e3_hnsw_indexed" -> e3HnswIndexed,
-    "e3_hnsw_incremental" -> e3HnswIncremental,
-    "e3_hnsw_delete" -> e3HnswDelete,
-    "e3_ivf_search" -> e3IvfSearch,
-    "e3_semdedup_run" -> e3SemDedupRun,
-    "e3_label_coherence" -> e3LabelCoherence,
-    "e3_pca" -> e3Pca,
-    "e3_cosine_topk" -> e3CosineTopk,
-    "e3_mips_topk" -> e3MipsTopk,
-    "e3_mips_ann" -> e3MipsAnn,
-    "e3_knn_classify" -> e3KnnClassify,
-    "e3_ann_recall" -> e3AnnRecall,
-    "e3_ivf_recall" -> e3IvfRecall,
-    "e3_ivf_indexed" -> e3IvfIndexed,
-    "e3_ivf_incremental" -> e3IvfIncremental,
-    "e3_ivf_rebalance" -> e3IvfRebalance,
-    "e3_ivf_delete" -> e3IvfDelete,
-    "e3_ivfpq_delete" -> e3IvfPqDelete,
-    "e3_ivfpq_incremental" -> e3IvfPqIncremental,
-    "e3_ann_neardup" -> e3AnnNearDup,
-    "e3_cosine_neardup" -> e3CosineNearDup,
-    "e3_quantized_cosine" -> e3QuantizedCosine,
-    "e3_hard_negatives" -> e3HardNegatives,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // Exact cosine ranking restated (the e3_cosine_topk recipe), then
     // the same rational metrics: double-literal divisions only, AP as
     // micro-int sums — addition order can't move the hash.
-    "e3_eval_rank" ->
+    Query("e3_eval_rank", e3EvalRank,
       """WITH n AS (
         |  SELECT vec_id, label, embedding::DOUBLE[] AS v,
         |    sqrt(list_dot_product(embedding::DOUBLE[],
@@ -2487,10 +2449,10 @@ object Similarity {
         |  sum(CASE WHEN rel = 1
         |      THEN round(hits_k * 1e6 / rnk, 0)::BIGINT
         |      ELSE 0 END)::BIGINT AS ap_micro
-        |FROM t GROUP BY q_id ORDER BY q_id""".stripMargin,
+        |FROM t GROUP BY q_id ORDER BY q_id""".stripMargin),
     // Both rankings recomputed on the sliced list; bruteForceTopK's
     // exact double arithmetic mirrored per the e3_cosine_topk shape.
-    "e3_matryoshka" ->
+    Query("e3_matryoshka", e3Matryoshka,
       """WITH n16 AS (
         |  SELECT vec_id, (embedding::DOUBLE[])[1:16] AS v
         |  FROM embeddings),
@@ -2532,12 +2494,12 @@ object Similarity {
         |SELECT s.q_id, s.rnk, s.c_id, round(s.cos, 6) AS sim,
         |  coalesce(o.overlap5, 0)::BIGINT AS overlap5
         |FROM short s LEFT JOIN ov o ON s.q_id = o.q_id
-        |ORDER BY s.q_id, s.rnk""".stripMargin,
+        |ORDER BY s.q_id, s.rnk""".stripMargin),
     // Full restatement of both retrievers and the fusion: the lexical
     // Jaccard uses the same inter/(na+nb-inter) spelling as the native
     // JaccardSim kernel, the dense side the e3_cosine_topk shape, and
     // the RRF arithmetic is the identical double expression.
-    "e3_hybrid_rrf" ->
+    Query("e3_hybrid_rrf", e3HybridRrf,
       """WITH sh AS (
         |  SELECT doc_id,
         |    list_distinct(list_transform(
@@ -2588,8 +2550,8 @@ object Similarity {
         |  coalesce(dense_rank, 0)::BIGINT AS dense_rank
         |FROM (SELECT *, row_number() OVER (PARTITION BY q_id
         |        ORDER BY rrf DESC, c_id) AS rnk FROM f)
-        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
-    "e3_hard_negatives" ->
+        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin),
+    Query("e3_hard_negatives", e3HardNegatives,
       """WITH n AS (
         |  SELECT vec_id, label, embedding::DOUBLE[] AS v,
         |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
@@ -2607,46 +2569,46 @@ object Similarity {
         |      ORDER BY cos DESC, c_id) AS rnk
         |  FROM p)
         |SELECT q_id, q_label, rnk, c_id, c_label, round(cos, 6) AS sim
-        |FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
-    "e3_pq_recall" ->
+        |FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin),
+    Query("e3_pq_recall", e3PqRecall,
       """SELECT true AS recall_ok, true AS codes_in_range_ok,
-        |  true AS k_bounded""".stripMargin,
-    "e3_ivfpq_recall" ->
-      """SELECT true AS recall_ok, true AS scan_budget_ok""".stripMargin,
-    "e3_pq_indexed" ->
-      """SELECT true AS index_equals_memory, true AS nonempty""".stripMargin,
-    "e3_ivfpq_search" ->
+        |  true AS k_bounded""".stripMargin),
+    Query("e3_ivfpq_recall", e3IvfPqRecall,
+      """SELECT true AS recall_ok, true AS scan_budget_ok""".stripMargin),
+    Query("e3_pq_indexed", e3PqIndexed,
+      """SELECT true AS index_equals_memory, true AS nonempty""".stripMargin),
+    Query("e3_ivfpq_search", e3IvfPqSearch,
       """SELECT true AS all_queries_answered, true AS k_bounded,
-        |  true AS rank_bounded""".stripMargin,
-    "e3_pq_search" ->
+        |  true AS rank_bounded""".stripMargin),
+    Query("e3_pq_search", e3PqSearch,
       """SELECT true AS all_queries_answered, true AS k_bounded,
-        |  true AS rank_bounded, true AS sims_in_range_ok""".stripMargin,
-    "e3_ann_search" ->
+        |  true AS rank_bounded, true AS sims_in_range_ok""".stripMargin),
+    Query("e3_ann_search", e3AnnSearch,
       """SELECT true AS pair_budget_ok, true AS orientation_ok,
-        |  true AS sims_in_range_ok""".stripMargin,
-    "e3_hnsw_recall" ->
+        |  true AS sims_in_range_ok""".stripMargin),
+    Query("e3_hnsw_recall", e3HnswRecall,
       """SELECT true AS recall_ok, true AS degree_bounds_ok,
-        |  true AS self_routing_ok""".stripMargin,
-    "e3_hnsw_indexed" ->
-      """SELECT true AS index_equals_memory, true AS nonempty""".stripMargin,
-    "e3_hnsw_incremental" ->
+        |  true AS self_routing_ok""".stripMargin),
+    Query("e3_hnsw_indexed", e3HnswIndexed,
+      """SELECT true AS index_equals_memory, true AS nonempty""".stripMargin),
+    Query("e3_hnsw_incremental", e3HnswIncremental,
       """SELECT true AS recall_ok, true AS all_vectors_present,
-        |  true AS degree_bounds_ok""".stripMargin,
-    "e3_hnsw_delete" ->
+        |  true AS degree_bounds_ok""".stripMargin),
+    Query("e3_hnsw_delete", e3HnswDelete,
       """SELECT true AS no_deleted_results, true AS k_results_ok,
-        |  true AS recall_ok""".stripMargin,
-    "e3_hnsw_search" ->
+        |  true AS recall_ok""".stripMargin),
+    Query("e3_hnsw_search", e3HnswSearch,
       """SELECT true AS all_queries_answered, true AS k_bounded,
-        |  true AS sims_in_range_ok""".stripMargin,
-    "e3_ivf_search" ->
+        |  true AS sims_in_range_ok""".stripMargin),
+    Query("e3_ivf_search", e3IvfSearch,
       """SELECT true AS all_queries_answered, true AS k_bounded,
-        |  true AS rank_bounded""".stripMargin,
-    "e3_semdedup_run" ->
-      """SELECT true AS pair_budget_ok, true AS kept_nonempty""".stripMargin,
-    "e3_semdedup" ->
+        |  true AS rank_bounded""".stripMargin),
+    Query("e3_semdedup_run", e3SemDedupRun,
+      """SELECT true AS pair_budget_ok, true AS kept_nonempty""".stripMargin),
+    Query("e3_semdedup", e3SemDedup,
       """SELECT true AS recall_ok, true AS precision_ok,
-        |  true AS pair_budget_ok, true AS representatives_kept_ok""".stripMargin,
-    "e3_label_coherence" ->
+        |  true AS pair_budget_ok, true AS representatives_kept_ok""".stripMargin),
+    Query("e3_label_coherence", e3LabelCoherence,
       """WITH e AS (
         |  SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
         |c AS (
@@ -2670,12 +2632,12 @@ object Similarity {
         |    AS n_correct,
         |  round(sum(CASE WHEN clabel = label THEN 1 ELSE 0 END)::DOUBLE
         |    / count(*), 4) AS acc
-        |FROM r WHERE rn = 1 GROUP BY label ORDER BY label""".stripMargin,
-    "e3_pca" ->
+        |FROM r WHERE rn = 1 GROUP BY label ORDER BY label""".stripMargin),
+    Query("e3_pca", e3Pca,
       """SELECT true AS var1_matches_l1, true AS var2_matches_l2,
         |  true AS uncorrelated, true AS centered,
-        |  true AS spectrum_ordered, true AS nonempty""".stripMargin,
-    "e3_cosine_topk" ->
+        |  true AS spectrum_ordered, true AS nonempty""".stripMargin),
+    Query("e3_cosine_topk", e3CosineTopk,
       """WITH n AS (
         |  SELECT vec_id, embedding::DOUBLE[] AS v,
         |         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
@@ -2689,8 +2651,8 @@ object Similarity {
         |         row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS rnk
         |  FROM p)
         |SELECT q_id, rnk, c_id, round(cos, 6) AS sim FROM r
-        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
-    "e3_knn_classify" ->
+        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin),
+    Query("e3_knn_classify", e3KnnClassify,
       """WITH n AS (
         |  SELECT vec_id, label, embedding::DOUBLE[] AS v,
         |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
@@ -2716,14 +2678,14 @@ object Similarity {
         |SELECT e.vec_id AS q_id, e.label AS true_label, p.pred_label,
         |  e.label = p.pred_label AS correct
         |FROM n e JOIN pred p ON p.q_id = e.vec_id AND p.pr = 1
-        |ORDER BY q_id""".stripMargin,
-    "e3_ann_recall" ->
-      "SELECT true AS recall_ok, true AS cand_budget_ok",
-    "e3_mips_ann" ->
-      "SELECT true AS recall_ok, true AS cand_budget_ok",
+        |ORDER BY q_id""".stripMargin),
+    Query("e3_ann_recall", e3AnnRecall,
+      "SELECT true AS recall_ok, true AS cand_budget_ok"),
+    Query("e3_mips_ann", e3MipsAnn,
+      "SELECT true AS recall_ok, true AS cand_budget_ok"),
     // Direct inner-product ranking — the reduction's augmented-dot
     // rank must reproduce it exactly (the tail term is an exact 0).
-    "e3_mips_topk" ->
+    Query("e3_mips_topk", e3MipsTopk,
       """WITH q AS (
         |  SELECT vec_id AS q_id, embedding::DOUBLE[] AS qv
         |  FROM embeddings WHERE vec_id < 5),
@@ -2739,33 +2701,33 @@ object Similarity {
         |      AS rnk
         |  FROM p)
         |SELECT q_id, rnk, c_id, round(ip, 6) AS ip FROM r
-        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
-    "e3_ann_neardup" ->
-      "SELECT true AS recall_ok, true AS precision_ok, true AS pair_budget_ok",
-    "e3_ivf_recall" ->
-      "SELECT true AS recall_ok, true AS scan_budget_ok",
-    "e3_ivf_indexed" ->
-      "SELECT true AS index_equals_memory, true AS nonempty",
-    "e3_ivf_incremental" ->
+        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin),
+    Query("e3_ann_neardup", e3AnnNearDup,
+      "SELECT true AS recall_ok, true AS precision_ok, true AS pair_budget_ok"),
+    Query("e3_ivf_recall", e3IvfRecall,
+      "SELECT true AS recall_ok, true AS scan_budget_ok"),
+    Query("e3_ivf_indexed", e3IvfIndexed,
+      "SELECT true AS index_equals_memory, true AS nonempty"),
+    Query("e3_ivf_incremental", e3IvfIncremental,
       """SELECT true AS ingest_equals_memory, true AS recall_ok,
-        |  true AS scan_budget_ok""".stripMargin,
-    "e3_ivf_rebalance" ->
+        |  true AS scan_budget_ok""".stripMargin),
+    Query("e3_ivf_rebalance", e3IvfRebalance,
       """SELECT true AS untouched_intact, true AS table_ok,
         |  true AS no_loss_no_dup, true AS split_shrunk,
-        |  true AS recall_ok, true AS scan_budget_ok""".stripMargin,
-    "e3_ivf_delete" ->
+        |  true AS recall_ok, true AS scan_budget_ok""".stripMargin),
+    Query("e3_ivf_delete", e3IvfDelete,
       """SELECT true AS mor_equals_fresh, true AS deleted_never_surface,
         |  true AS compact_preserves_search, true AS compact_rows_ok,
         |  true AS untouched_cells_preserved,
-        |  true AS sidecar_folded""".stripMargin,
-    "e3_ivfpq_delete" ->
+        |  true AS sidecar_folded""".stripMargin),
+    Query("e3_ivfpq_delete", e3IvfPqDelete,
       """SELECT true AS mor_equals_fresh, true AS deleted_never_surface,
         |  true AS compact_preserves_search, true AS codes_compact_ok,
-        |  true AS sidecar_folded""".stripMargin,
-    "e3_ivfpq_incremental" ->
+        |  true AS sidecar_folded""".stripMargin),
+    Query("e3_ivfpq_incremental", e3IvfPqIncremental,
       """SELECT true AS codes_frozen_ok, true AS ingest_equals_memory,
-        |  true AS recall_ok, true AS scan_budget_ok""".stripMargin,
-    "e3_quantized_cosine" ->
+        |  true AS recall_ok, true AS scan_budget_ok""".stripMargin),
+    Query("e3_quantized_cosine", e3QuantizedCosine,
       """WITH v AS (
         |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |sc AS (
@@ -2794,8 +2756,8 @@ object Similarity {
         |  FROM p)
         |SELECT q_id, rnk, c_id, round(qsim, 6) AS qsim,
         |  round(abs(qsim - esim), 4) AS err
-        |FROM rk WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin,
-    "e3_cosine_neardup" ->
+        |FROM rk WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin),
+    Query("e3_cosine_neardup", e3CosineNearDup,
       """WITH n AS (
         |  SELECT vec_id, embedding::DOUBLE[] AS v,
         |         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
@@ -2805,6 +2767,6 @@ object Similarity {
         |FROM n a, n b
         |WHERE a.vec_id < b.vec_id
         |  AND list_dot_product(a.v, b.v) / (a.nrm * b.nrm) >= 0.45
-        |ORDER BY a, b""".stripMargin,
+        |ORDER BY a, b""".stripMargin),
   )
 }

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Q, Tables}
+import graft.{Q, Query, Tables}
 import graft.Tables.{load => t}
 import graft.functions.SimHash64.simhash64
 
@@ -1183,34 +1183,6 @@ object TextStats {
 
   private val e4Jsd: Q = (s, dir) => jsdPairs(Tables.spread(t(s, dir, "documents")))
 
-  val queries: Map[String, Q] = Map(
-    "e4_script_id" -> e4ScriptId,
-    "e4_readability" -> e4Readability,
-    "e4_rake_keywords" -> e4RakeKeywords,
-    "e4_rouge" -> e4Rouge,
-    "e4_jsd" -> e4Jsd,
-    "e4_langid" -> e4Langid,
-    "e4_langid_trained" -> e4LangidTrained,
-    "e4_bigram_lm" -> e4BigramLm,
-    "e4_backoff_lm" -> e4BackoffLm,
-    "e4_winnow" -> e4Winnow,
-    "e4_bpe" -> e4Bpe,
-    "e4_bpe_apply" -> e4BpeApply,
-    "e4_unigram_lm" -> e4UnigramLm,
-    "e4_unigram_apply" -> e4UnigramApply,
-    "e4_wordpiece_apply" -> e4WordpieceApply,
-    "e4_entropy" -> e4Entropy,
-    "e4_pmi" -> e4Pmi,
-    "e4_chi2" -> e4Chi2,
-    "e4_zipf" -> e4Zipf,
-    "e4_text_stats" -> e4TextStats,
-    "e4_tfidf" -> e4Tfidf,
-    "e4_logprob" -> e4Logprob,
-    "e4_vocab_oov" -> e4VocabOov,
-    "e4_bm25" -> e4Bm25,
-    "e6_cms_heavyhitters" -> e6CmsHeavyHitters,
-  )
-
   /** One unrolled BPE round: arg-max pair of round k, then the merged
     * symbol table s_k — same delimiter-owned double-space
     * representation as [[bpeMerges]] (replace shares
@@ -1319,21 +1291,21 @@ object TextStats {
        |${uniRound(1)},
        |${uniRound(2)}""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // The full unigram-LM derivation restated: seed, both EM rounds
     // (recursive-CTE path enumeration, identical argmax order), the
     // pruning, and the integer-ppm probabilities.
-    "e4_unigram_lm" ->
+    Query("e4_unigram_lm", e4UnigramLm,
       s"""WITH RECURSIVE
          |$uniChainSql
          |SELECT piece, cnt,
          |  (cnt * 1000000) //
          |    (SELECT sum(cnt)::BIGINT FROM ukept2) AS prob_ppm
-         |FROM ukept2 ORDER BY piece""".stripMargin,
+         |FROM ukept2 ORDER BY piece""".stripMargin),
     // The apply rollup: one more segmentation pass (round 3 under the
     // final up2 probabilities) sized per distinct word, joined back to
     // the per-language word stream.
-    "e4_unigram_apply" ->
+    Query("e4_unigram_apply", e4UnigramApply,
       s"""WITH RECURSIVE
          |$uniChainSql,
          |${uniRound(3)},
@@ -1349,7 +1321,7 @@ object TextStats {
          |  sum(CASE WHEN len(w) <= $UniMaxWord THEN s.nseg
          |           ELSE strlen(w) END)::BIGINT AS sum_tokens
          |FROM uwords u LEFT JOIN unseg s USING (w)
-         |GROUP BY lang ORDER BY lang""".stripMargin,
+         |GROUP BY lang ORDER BY lang""".stripMargin),
     // WordPiece: vocab re-derived from the SAME unigram train chain
     // (one ukept2 reference — the ×2 continuation forms come from a
     // 2-row unnest cross join, NOT a self-UNION, or DuckDB would
@@ -1359,7 +1331,7 @@ object TextStats {
     // semantics identical to the native expression's (word-initial
     // lookups are RAW substrings; continuations match under '##').
     // A word whose walk never reaches len(w) is one [UNK] token.
-    "e4_wordpiece_apply" ->
+    Query("e4_wordpiece_apply", e4WordpieceApply,
       s"""WITH RECURSIVE
          |$uniChainSql,
          |vocab AS (
@@ -1408,11 +1380,11 @@ object TextStats {
          |  sum(t.ntok)::BIGINT AS sum_tokens,
          |  sum(CASE WHEN t.unk THEN 1 ELSE 0 END)::BIGINT AS n_unk
          |FROM uwords u JOIN wtok t USING (w)
-         |GROUP BY lang ORDER BY lang""".stripMargin,
+         |GROUP BY lang ORDER BY lang""".stripMargin),
     // Same integer sentence surrogate, same IEEE double expression —
     // the DECIMAL literals are cast to DOUBLE so DuckDB's exact-decimal
     // arithmetic can't diverge from Spark's double math.
-    "e4_readability" ->
+    Query("e4_readability", e4Readability,
       s"""SELECT doc_id,
          |  len(string_split(text, ' '))::BIGINT AS n_words,
          |  len(regexp_extract_all(text, '$VowelRe'))::BIGINT
@@ -1423,11 +1395,11 @@ object TextStats {
          |    - 1.015::DOUBLE * n_words / greatest(n_sentences, 1)
          |    - 84.6::DOUBLE * n_syllables / greatest(n_words, 1), 4)
          |    AS flesch
-         |FROM documents ORDER BY doc_id""".stripMargin,
+         |FROM documents ORDER BY doc_id""".stripMargin),
     // Same nats-JSD with per-word nano-int rounding before the sum —
     // ln-ulp differences and addition order can't move the hash; the
     // jsd display column derives from the summed ints, not raw floats.
-    "e4_jsd" ->
+    Query("e4_jsd", e4Jsd,
       """WITH w AS (
         |  SELECT source AS src, g.word
         |  FROM documents, unnest(string_split(text, ' ')) AS g(word)
@@ -1465,11 +1437,11 @@ object TextStats {
         |  sum(term_nano)::BIGINT AS jsd_nano,
         |  round(sum(term_nano)::DOUBLE / 1e9, 6) AS jsd
         |FROM terms GROUP BY src_a, src_b
-        |ORDER BY src_a, src_b""".stripMargin,
+        |ORDER BY src_a, src_b""".stripMargin),
     // Full restatement: same stopword-stripped hypothesis, same
     // multiset clipping (Σ least of per-gram counts), same inner-join
     // drop of gram-less docs, F1 computed from the ROUNDED p2/rec2.
-    "e4_rouge" ->
+    Query("e4_rouge", e4Rouge,
       s"""WITH d AS (
          |  SELECT doc_id, string_split(text, ' ') AS ref_w,
          |    list_filter(string_split(text, ' '),
@@ -1530,11 +1502,11 @@ object TextStats {
          |  round(CASE WHEN s2.p2 + s2.rec2 > 0
          |    THEN 2.0 * s2.p2 * s2.rec2 / (s2.p2 + s2.rec2)
          |    ELSE 0.0 END, 4) AS f2
-         |FROM s1 JOIN s2 USING (doc_id) ORDER BY s1.doc_id""".stripMargin,
+         |FROM s1 JOIN s2 USING (doc_id) ORDER BY s1.doc_id""".stripMargin),
     // Full RAKE restatement: same stopword boundaries (running-count
     // phrase ids over unique positions — identical default window
     // frames), same micro-int word scores, same tie order.
-    "e4_rake_keywords" ->
+    Query("e4_rake_keywords", e4RakeKeywords,
       s"""WITH w AS (
          |  SELECT d.doc_id, i - 1 AS pos, d.l[i::INT] AS word,
          |    (d.l[i::INT] IN ($stopSql) OR d.l[i::INT] = '') AS is_stop
@@ -1572,10 +1544,10 @@ object TextStats {
          |      ORDER BY s.score_micro DESC, p.phrase, s.phrase_id) AS rnk
          |  FROM sc s JOIN phrases p USING (doc_id, phrase_id))
          |SELECT doc_id, rnk, phrase, plen, score_micro
-         |FROM rk WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin,
+         |FROM rk WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin),
     // Same plants (interpolated verbatim), same class constants, same
     // threshold + tie-break — argmax restated as the ordered CASE.
-    "e4_script_id" ->
+    Query("e4_script_id", e4ScriptId,
       s"""WITH planted AS (
          |  SELECT lang, text ||
          |    (CASE WHEN doc_id % 5 = 0 THEN ' $CyrSnippet'
@@ -1600,8 +1572,8 @@ object TextStats {
          |  count(*)::BIGINT AS n_docs, sum(c_cyr)::BIGINT AS cyr_chars,
          |  sum(c_cjk)::BIGINT AS cjk_chars,
          |  sum(c_greek)::BIGINT AS greek_chars
-         |FROM c GROUP BY lang, script ORDER BY lang, script""".stripMargin,
-    "e4_langid" ->
+         |FROM c GROUP BY lang, script ORDER BY lang, script""".stripMargin),
+    Query("e4_langid", e4Langid,
       s"""WITH p AS (
          |  SELECT lang, $langidBestSql AS best
          |  FROM documents),
@@ -1612,11 +1584,11 @@ object TextStats {
          |  FROM p GROUP BY 1, 2)
          |SELECT lang, pred, n,
          |  round(n / sum(n) OVER (PARTITION BY lang), 4) AS share
-         |FROM cm ORDER BY lang, pred""".stripMargin,
+         |FROM cm ORDER BY lang, pred""".stripMargin),
     // Plant and heuristic-argmax restated from the same constants;
     // n_test / n_heur_correct are exact integers. The trained side's
     // floats are engine-specific → in-plan ✱ booleans.
-    "e4_langid_trained" ->
+    Query("e4_langid_trained", e4LangidTrained,
       s"""WITH d AS (
          |  SELECT doc_id, lang, $plantedTextSql AS text
          |  FROM documents WHERE doc_id % 5 = 0),
@@ -1628,8 +1600,8 @@ object TextStats {
          |  true AS trained_beats_heuristic,
          |  true AS trained_acc_ok,
          |  true AS loss_dropped
-         |FROM p""".stripMargin,
-    "e4_backoff_lm" ->
+         |FROM p""".stripMargin),
+    Query("e4_backoff_lm", e4BackoffLm,
       """WITH tr AS (
         |  SELECT string_split(text, ' ') AS l FROM documents
         |  WHERE doc_id % 3 <> 0),
@@ -1681,8 +1653,8 @@ object TextStats {
         |  sum(CASE WHEN tri_hit THEN 0 ELSE 1 END)::BIGINT AS n_backoffs,
         |  sum(round(nll * 1e6)::BIGINT)::BIGINT AS sum_nll_micro
         |FROM p3 JOIN sc USING (w1, w2, w3)
-        |GROUP BY p3.doc_id ORDER BY p3.doc_id""".stripMargin,
-    "e4_bigram_lm" ->
+        |GROUP BY p3.doc_id ORDER BY p3.doc_id""".stripMargin),
+    Query("e4_bigram_lm", e4BigramLm,
       """WITH ws AS (
         |  SELECT doc_id, string_split(text, ' ') AS l FROM documents),
         |bg AS (
@@ -1700,11 +1672,11 @@ object TextStats {
         |SELECT b.doc_id, count(*)::BIGINT AS n_bigrams,
         |  round(avg(l.nll), 4) AS avg_nll
         |FROM bg b JOIN lm l USING (w1, w2)
-        |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin,
+        |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin),
     // Winnowing recomputed verbatim: k=8, w=6, 64-bit (16-hex-char)
     // sha-256-prefix gram hashes, window min over a 6-row frame, full
     // windows only.
-    "e4_winnow" ->
+    Query("e4_winnow", e4Winnow,
       """WITH g AS (
         |  SELECT doc_id, i - 1 AS pos, length(text) AS len,
         |    substr(sha256(substr(text, i::INT, 8)), 1, 16) AS h
@@ -1718,11 +1690,11 @@ object TextStats {
         |  FROM g)
         |SELECT DISTINCT doc_id, fp FROM m
         |WHERE pos <= len - 13
-        |ORDER BY doc_id, fp""".stripMargin,
+        |ORDER BY doc_id, fp""".stripMargin),
     // Re-learn the merge table (same chain as e4_bpe, carrying w),
     // re-apply it per distinct word, roll token counts up per doc and
     // language — value-checks the native encoder end to end.
-    "e4_bpe_apply" ->
+    Query("e4_bpe_apply", e4BpeApply,
       s"""WITH wc AS (
          |  SELECT w, count(*)::BIGINT AS n FROM (
          |    SELECT unnest(string_split(text, ' ')) AS w FROM documents)
@@ -1749,8 +1721,8 @@ object TextStats {
          |SELECT lang, count(*)::BIGINT AS n_docs,
          |  sum(t)::BIGINT AS sum_tokens,
          |  round(avg(t), 4) AS avg_tokens
-         |FROM perdoc GROUP BY lang ORDER BY lang""".stripMargin,
-    "e4_bpe" ->
+         |FROM perdoc GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("e4_bpe", e4Bpe,
       s"""WITH wc AS (
          |  SELECT w, count(*)::BIGINT AS n FROM (
          |    SELECT unnest(string_split(text, ' ')) AS w FROM documents)
@@ -1763,8 +1735,8 @@ object TextStats {
          |${(1 to 5).map(k =>
             s"SELECT $k AS round, pair, replace(pair, ' ', '') AS merged, cnt FROM p$k")
             .mkString("\nUNION ALL\n")}
-         |ORDER BY round""".stripMargin,
-    "e4_entropy" ->
+         |ORDER BY round""".stripMargin),
+    Query("e4_entropy", e4Entropy,
       """WITH w AS (
         |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
         |  FROM documents),
@@ -1779,8 +1751,8 @@ object TextStats {
         |  round(avg(h), 4) AS avg_entropy,
         |  round(min(h), 4) AS min_entropy,
         |  round(max(h), 4) AS max_entropy
-        |FROM e GROUP BY lang ORDER BY lang""".stripMargin,
-    "e4_pmi" ->
+        |FROM e GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("e4_pmi", e4Pmi,
       """WITH ws AS (SELECT string_split(text, ' ') AS l FROM documents),
         |uni AS (SELECT unnest(l) AS w FROM ws),
         |uc AS (SELECT w, count(*)::DOUBLE AS c FROM uni GROUP BY w),
@@ -1800,8 +1772,8 @@ object TextStats {
         |FROM bc CROSS JOIN n1 CROSS JOIN n2
         |JOIN uc u1 ON bc.w1 = u1.w
         |JOIN uc u2 ON bc.w2 = u2.w
-        |ORDER BY pmi DESC, w1, w2 LIMIT 40""".stripMargin,
-    "e4_text_stats" ->
+        |ORDER BY pmi DESC, w1, w2 LIMIT 40""".stripMargin),
+    Query("e4_text_stats", e4TextStats,
       """SELECT lang, count(*) AS n_docs,
         | round(avg(n_chars), 4) AS avg_chars,
         | round(avg(len(string_split(text, ' '))), 4) AS avg_words,
@@ -1811,8 +1783,8 @@ object TextStats {
         | round(avg(len(list_filter(string_split(text, ' '),
         |   w -> w IN ('the','a','of','and','to')))::DOUBLE
         |   / greatest(len(string_split(text, ' ')), 1)), 4) AS avg_stop_ratio
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "e4_tfidf" ->
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("e4_tfidf", e4Tfidf,
       """WITH wds AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS word
         |  FROM documents),
@@ -1834,8 +1806,8 @@ object TextStats {
         |                       ORDER BY tfidf DESC, word) AS rnk
         |  FROM sc)
         |SELECT doc_id, rnk, word, round(tfidf, 6) AS tfidf
-        |FROM rk WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin,
-    "e4_logprob" ->
+        |FROM rk WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin),
+    Query("e4_logprob", e4Logprob,
       """WITH wds AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS word
         |  FROM documents),
@@ -1846,8 +1818,8 @@ object TextStats {
         |SELECT w.doc_id, count(*)::BIGINT AS n_words,
         |  round(avg(l.nll), 6) AS avg_nll
         |FROM wds w JOIN lm l USING (word)
-        |GROUP BY w.doc_id ORDER BY w.doc_id""".stripMargin,
-    "e4_vocab_oov" ->
+        |GROUP BY w.doc_id ORDER BY w.doc_id""".stripMargin),
+    Query("e4_vocab_oov", e4VocabOov,
       s"""WITH toks AS (
          |  SELECT source, unnest(regexp_extract_all(text, '$TokenRe')) AS tok
          |  FROM documents),
@@ -1862,8 +1834,8 @@ object TextStats {
          |  GROUP BY t.source)
          |SELECT source, n_tokens::BIGINT AS n_tokens, n_oov::BIGINT AS n_oov,
          |  round(n_oov::DOUBLE / n_tokens, 6) AS oov_rate
-         |FROM j ORDER BY source""".stripMargin,
-    "e4_chi2" ->
+         |FROM j ORDER BY source""".stripMargin),
+    Query("e4_chi2", e4Chi2,
       """WITH cells AS (
         |  SELECT lang, source, count(*)::DOUBLE AS o
         |  FROM documents GROUP BY lang, source),
@@ -1875,8 +1847,8 @@ object TextStats {
         |  FROM cells)
         |SELECT round(sum(pow(o - ra * cb / n, 2) / (ra * cb / n)), 6)
         |  AS chi2, count(*)::BIGINT AS n_cells
-        |FROM m""".stripMargin,
-    "e4_zipf" ->
+        |FROM m""".stripMargin),
+    Query("e4_zipf", e4Zipf,
       """WITH freq AS (
         |  SELECT w, count(*)::DOUBLE AS f FROM (
         |    SELECT unnest(string_split(text, ' ')) AS w FROM documents)
@@ -1891,10 +1863,10 @@ object TextStats {
         |  FROM ranked)
         |SELECT n::BIGINT AS n_types,
         |  round((n * sxy - sx * sy) / (n * sxx - sx * sx), 4) AS slope
-        |FROM s""".stripMargin,
+        |FROM s""".stripMargin),
     // formula spelled textually parallel to the Scala (same constant
     // spellings, same association) so both engines round identically
-    "e4_bm25" ->
+    Query("e4_bm25", e4Bm25,
       """WITH base AS (
         |  SELECT doc_id, len(string_split(text,' '))::DOUBLE AS dl,
         |    string_split(text,' ') AS ws
@@ -1917,8 +1889,8 @@ object TextStats {
         |  FROM tf t JOIN dft d USING (term) GROUP BY t.doc_id)
         |SELECT b.doc_id, round(coalesce(s.score, 0.0), 6) AS score
         |FROM base b LEFT JOIN sc s USING (doc_id)
-        |ORDER BY score DESC, doc_id LIMIT 10""".stripMargin,
-    "e6_cms_heavyhitters" ->
-      "SELECT true AS no_undercount, true AS overcount_bounded",
+        |ORDER BY score DESC, doc_id LIMIT 10""".stripMargin),
+    Query("e6_cms_heavyhitters", e6CmsHeavyHitters,
+      "SELECT true AS no_undercount, true AS overcount_bounded"),
   )
 }

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Q, Tables}
+import graft.{Q, Query, Tables}
 import graft.Tables.{load => t}
 
 /** Training-dataset preparation operators (EXT, SURVEY §2.12; no
@@ -814,32 +814,10 @@ object TrainPrep {
   private val e8SpanMask: Q = (s, dir) =>
     spanMaskStats(Tables.spread(t(s, dir, "documents")))
 
-  val queries: Map[String, Q] = Map(
-    "e8_curriculum" -> e8Curriculum,
-    "e8_length_batching" -> e8LengthBatching,
-    "e8_span_mask" -> e8SpanMask,
-    "e17_mixture_plan" -> e17MixturePlan,
-    "e16_leak_split" -> e16LeakSplit,
-    "e15_ccnet_buckets" -> e15CcnetBuckets,
-    "e14_dsir" -> e14Dsir,
-    "e14b_dsir_hashed" -> e14bDsirHashed,
-    "e8_domain_cap" -> e8DomainCap,
-    "e8_shuffle" -> e8Shuffle,
-    "e8_weighted" -> e8Weighted,
-    "e8_upsample" -> e8Upsample,
-    "e8_hash_split" -> e8HashSplit,
-    "e8_pack" -> e8Pack,
-    "e8_contamination" -> e8Contamination,
-    "e8_stratified" -> e8Stratified,
-    "e8_priority_sample" -> e8PrioritySample,
-    "e8_mixture" -> e8Mixture,
-    "e8_chunk" -> e8Chunk,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // Same multiplicative hash (the e14b in-SQL spelling), same
     // 3-token cover window, same gaps-and-islands span count.
-    "e8_span_mask" ->
+    Query("e8_span_mask", e8SpanMask,
       """WITH tok AS (
         |  SELECT doc_id, i - 1 AS pos
         |  FROM (SELECT doc_id, string_split(text, ' ') AS l
@@ -867,9 +845,9 @@ object TrainPrep {
         |  sum(start0)::BIGINT AS n_starts, sum(m)::BIGINT AS n_masked,
         |  sum(island)::BIGINT AS n_spans,
         |  round(sum(m)::DOUBLE / count(*), 4) AS mask_ratio
-        |FROM sp GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM sp GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // Same batch cut ((rn−1)//32), same per-batch waste formula.
-    "e8_length_batching" ->
+    Query("e8_length_batching", e8LengthBatching,
       """WITH d AS (
         |  SELECT doc_id, len(string_split(text, ' '))::BIGINT AS n_tok
         |  FROM documents),
@@ -901,9 +879,9 @@ object TrainPrep {
         |    sum(n_docs * mx - tok)::BIGINT AS total_padding
         |  FROM ab)
         |SELECT * FROM ar UNION ALL SELECT * FROM sr
-        |ORDER BY strategy""".stripMargin,
+        |ORDER BY strategy""".stripMargin),
     // Same difficulty rounding, same ntile/row_number tie order.
-    "e8_curriculum" ->
+    Query("e8_curriculum", e8Curriculum,
       """WITH d AS (
         |  SELECT doc_id,
         |    round(n_chars::DOUBLE
@@ -924,11 +902,11 @@ object TrainPrep {
         |    doc_id, bucket, rn, difficulty
         |  FROM r)
         |SELECT pos, doc_id, bucket, rn, difficulty
-        |FROM sched WHERE pos <= 40 ORDER BY pos""".stripMargin,
+        |FROM sched WHERE pos <= 40 ORDER BY pos""".stripMargin),
     // Token counts, the α-temperature shares, targets, epochs, the
     // 4-epoch flag, and the R*-decay effective tokens all re-derived;
     // shares round per row before targets (rounding-parity).
-    "e17_mixture_plan" -> s"""WITH avail AS (
+    Query("e17_mixture_plan", e17MixturePlan, s"""WITH avail AS (
         |  SELECT source,
         |    sum(len(regexp_extract_all(text,
         |      '${TextStats.TokenRe}')))::BIGINT AS avail_tokens
@@ -955,12 +933,12 @@ object TrainPrep {
         |  epochs > 4.0 AS beyond_free_repetition,
         |  round(avail_tokens * 15.4 * (1.0 - exp(-epochs / 15.4)), 2)
         |    AS effective_tokens
-        |FROM ep ORDER BY source""".stripMargin,
+        |FROM ep ORDER BY source""".stripMargin),
     // Pairs (exact all-pairs trigram Jaccard), the transitive closure,
     // the representative, the bucket arithmetic, and the leak count are
     // ALL re-derived — a lost pair, a split cluster, or a doc assigned
     // off its cluster's hash shifts a checksum and hash-fails.
-    "e16_leak_split" ->
+    Query("e16_leak_split", e16LeakSplit,
       """WITH RECURSIVE sh AS MATERIALIZED (
         |  SELECT doc_id,
         |    list_distinct(list_transform(
@@ -1006,11 +984,11 @@ object TrainPrep {
         |  count(DISTINCT rep)::BIGINT AS n_clusters,
         |  sum(doc_id)::BIGINT AS id_checksum,
         |  (SELECT leaked FROM leaks)::BIGINT AS leaked_pairs
-        |FROM lab GROUP BY split ORDER BY split""".stripMargin,
+        |FROM lab GROUP BY split ORDER BY split""".stripMargin),
     // LM + per-doc score + lang-partitioned terciles re-derived in
     // full; a wrong LM denominator, an unstable tercile boundary, or
     // cross-language score mixing all hash-fail.
-    "e15_ccnet_buckets" ->
+    Query("e15_ccnet_buckets", e15CcnetBuckets,
       """WITH wds AS (
         |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
         |  FROM documents),
@@ -1028,9 +1006,9 @@ object TrainPrep {
         |  round(avg(score), 4) AS avg_score,
         |  min(score) AS min_score, max(score) AS max_score
         |FROM bk GROUP BY lang, bucket
-        |ORDER BY lang, bucket""".stripMargin,
+        |ORDER BY lang, bucket""".stripMargin),
     // Same LM restatement as e14 over the md5-hex bucket key.
-    "e14b_dsir_hashed" ->
+    Query("e14b_dsir_hashed", e14bDsirHashed,
       """WITH wds AS (
         |  SELECT doc_id, tgt,
         |    (('0x' || substr(md5(w0), 1, 6))::BIGINT % 10000) AS w
@@ -1055,8 +1033,8 @@ object TrainPrep {
         |  sum(l.lw_e6)::BIGINT AS score_e6
         |FROM wds w JOIN lm l USING (w)
         |GROUP BY w.doc_id
-        |ORDER BY score_e6 DESC, doc_id LIMIT 200""".stripMargin,
-    "e14_dsir" ->
+        |ORDER BY score_e6 DESC, doc_id LIMIT 200""".stripMargin),
+    Query("e14_dsir", e14Dsir,
       """WITH wds AS (
         |  SELECT doc_id, (lang = 'en') AS tgt,
         |    unnest(string_split(text, ' ')) AS w
@@ -1078,8 +1056,8 @@ object TrainPrep {
         |  sum(l.lw_e6)::BIGINT AS score_e6
         |FROM wds w JOIN lm l USING (w)
         |GROUP BY w.doc_id
-        |ORDER BY score_e6 DESC, doc_id LIMIT 200""".stripMargin,
-    "e8_domain_cap" ->
+        |ORDER BY score_e6 DESC, doc_id LIMIT 200""".stripMargin),
+    Query("e8_domain_cap", e8DomainCap,
       """WITH rk AS (
         |  SELECT source, doc_id,
         |    row_number() OVER (PARTITION BY source ORDER BY doc_id) AS r
@@ -1094,8 +1072,8 @@ object TrainPrep {
         |SELECT t.source, t.n_total, k.n_kept,
         |  (t.n_total - k.n_kept)::BIGINT AS n_dropped, k.sum_kept_ids
         |FROM tot t JOIN kept k USING (source)
-        |ORDER BY source""".stripMargin,
-    "e8_shuffle" ->
+        |ORDER BY source""".stripMargin),
+    Query("e8_shuffle", e8Shuffle,
       """WITH h AS (
         |  SELECT doc_id,
         |    ((doc_id % 2147483648) * 2654435761) % 4294967296 AS hv
@@ -1109,8 +1087,8 @@ object TrainPrep {
         |  sum(pos * doc_id)::BIGINT AS order_digest,
         |  min(CASE WHEN pos = 1 THEN doc_id END)::BIGINT AS first_doc,
         |  max(doc_id)::BIGINT AS max_doc
-        |FROM s GROUP BY shard ORDER BY shard""".stripMargin,
-    "e8_weighted" ->
+        |FROM s GROUP BY shard ORDER BY shard""".stripMargin),
+    Query("e8_weighted", e8Weighted,
       """WITH b AS (
         |  SELECT doc_id, source,
         |    ((((doc_id % 2147483648) * 2654435761) % 4294967296) + 0.5)
@@ -1122,8 +1100,8 @@ object TrainPrep {
         |  ORDER BY round(pow(u, 1.0 / w), 12) DESC, doc_id LIMIT 200)
         |SELECT source, count(*)::BIGINT AS n_sampled,
         |  sum(doc_id)::BIGINT AS sum_ids
-        |FROM k GROUP BY source ORDER BY source""".stripMargin,
-    "e8_upsample" ->
+        |FROM k GROUP BY source ORDER BY source""".stripMargin),
+    Query("e8_upsample", e8Upsample,
       """WITH c AS (
         |  SELECT source, count(*) AS n_s,
         |    CASE WHEN substr(source, 4)::INT < 5 THEN 4.0 ELSE 1.0 END AS w
@@ -1141,8 +1119,8 @@ object TrainPrep {
         |SELECT source, sum(copies)::BIGINT AS n_out,
         |  sum(CASE WHEN copies > 0 THEN 1 ELSE 0 END)::BIGINT AS n_docs_kept,
         |  sum(doc_id * copies)::BIGINT AS sum_weighted_ids
-        |FROM x GROUP BY source ORDER BY source""".stripMargin,
-    "e8_hash_split" ->
+        |FROM x GROUP BY source ORDER BY source""".stripMargin),
+    Query("e8_hash_split", e8HashSplit,
       """WITH b AS (
         |  SELECT doc_id,
         |    (((doc_id % 2147483648) * 2654435761) % 4294967296) / 4294967296.0 AS u
@@ -1150,8 +1128,8 @@ object TrainPrep {
         |SELECT CASE WHEN u < 0.8 THEN 'train'
         |            WHEN u < 0.9 THEN 'val' ELSE 'test' END AS split,
         |  count(*)::BIGINT AS n_docs, sum(doc_id)::BIGINT AS sum_ids
-        |FROM b GROUP BY 1 ORDER BY split""".stripMargin,
-    "e8_pack" ->
+        |FROM b GROUP BY 1 ORDER BY split""".stripMargin),
+    Query("e8_pack", e8Pack,
       """WITH s AS (
         |  SELECT lang, doc_id,
         |    len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))
@@ -1164,8 +1142,8 @@ object TrainPrep {
         |  FROM s)
         |SELECT lang, ((cum - toks) // 2048)::BIGINT AS bin,
         |  count(*)::BIGINT AS n_docs, sum(toks)::BIGINT AS bin_tokens
-        |FROM c GROUP BY lang, bin ORDER BY lang, bin""".stripMargin,
-    "e8_priority_sample" ->
+        |FROM c GROUP BY lang, bin ORDER BY lang, bin""".stripMargin),
+    Query("e8_priority_sample", e8PrioritySample,
       """WITH w AS (
         |  SELECT lang, doc_id,
         |    least(n_chars, 1048576)::BIGINT AS w,
@@ -1185,8 +1163,8 @@ object TrainPrep {
         |  greatest(r.w * 1000000, coalesce(t.tau_micro, 0))::BIGINT AS est_micro
         |FROM r LEFT JOIN tau t ON r.lang = t.lang
         |WHERE r.rn <= 32
-        |ORDER BY r.lang, r.rn""".stripMargin,
-    "e8_stratified" ->
+        |ORDER BY r.lang, r.rn""".stripMargin),
+    Query("e8_stratified", e8Stratified,
       """WITH b AS (
         |  SELECT lang, doc_id,
         |    (((doc_id % 2147483648) * 2654435761) % 4294967296) / 4294967296.0 AS u
@@ -1199,8 +1177,8 @@ object TrainPrep {
         |SELECT lang, count(*)::BIGINT AS n_kept,
         |  sum(doc_id)::BIGINT AS sum_ids
         |FROM r WHERE rk <= ceil(n * 0.2)
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-    "e8_mixture" ->
+        |GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("e8_mixture", e8Mixture,
       """WITH c AS (
         |  SELECT source, count(*) AS n_s,
         |    CASE WHEN substr(source, 4)::INT < 5 THEN 2.0 ELSE 1.0 END AS w
@@ -1222,8 +1200,8 @@ object TrainPrep {
         |  SELECT source, count(*)::BIGINT AS n_kept,
         |    sum(doc_id)::BIGINT AS sum_kept_ids
         |  FROM k GROUP BY source) k2 USING (source)
-        |ORDER BY source""".stripMargin,
-    "e8_chunk" ->
+        |ORDER BY source""".stripMargin),
+    Query("e8_chunk", e8Chunk,
       """WITH w AS (
         |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |c AS (
@@ -1241,8 +1219,8 @@ object TrainPrep {
         |  FROM e)
         |SELECT doc_id, chunk_id, len(cw)::BIGINT AS n_words,
         |  cw[1] AS first_word, cw[len(cw)] AS last_word
-        |FROM s ORDER BY doc_id, chunk_id""".stripMargin,
-    "e8_contamination" ->
+        |FROM s ORDER BY doc_id, chunk_id""".stripMargin),
+    Query("e8_contamination", e8Contamination,
       """WITH sh0 AS (
         |  SELECT doc_id, unnest(list_distinct(list_transform(
         |    range(1, greatest(len(string_split(text,' ')) - 2, 0) + 1),
@@ -1273,6 +1251,6 @@ object TrainPrep {
         |  coalesce(a.max_containment, 0.0) AS max_containment,
         |  coalesce(a.n_contaminating, 0) AS n_contaminating
         |FROM documents d LEFT JOIN agg a ON d.doc_id = a.test_id
-        |WHERE d.doc_id % 50 = 0 ORDER BY test_id""".stripMargin,
+        |WHERE d.doc_id % 50 = 0 ORDER BY test_id""".stripMargin),
   )
 }

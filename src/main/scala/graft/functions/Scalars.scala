@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Query, Tables}
 import graft.Tables.{load => t}
 
 /** Scalar function surface — SURVEY.md §2.9 (F1-F8).
@@ -233,38 +233,21 @@ object Scalars {
         |FROM g ORDER BY event_type""".stripMargin)
   }
 
-  val queries: Map[String, Q] = Map(
-    "f16_parse_url" -> f16ParseUrl,
-    "f17_variant" -> f17Variant,
-    "f15_histogram" -> f15Histogram,
-    "f13_from_json" -> f13FromJson,
-    "f11_string_extra" -> f11StringExtra,
-    "f12_datetime_extra" -> f12DatetimeExtra,
-    "f1_string" -> f1String,
-    "f2_split_explode" -> f2SplitExplode,
-    "f3_conditional" -> f3Conditional,
-    "f4_try_cast" -> f4TryCast,
-    "f5_math" -> f5Math,
-    "f6_datetime" -> f6DateTime,
-    "f7_array" -> f7Array,
-    "f8_json" -> f8Json,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // Every variant extraction restated from the raw typed columns the
     // document was built from; the variant schema of the constant
     // document is pinned as a literal so inference drift fails loudly.
-    "f17_variant" ->
+    Query("f17_variant", f17Variant,
       """SELECT event_type, count(*)::BIGINT AS n,
         |  sum(user_id % 4)::BIGINT AS sum_seg,
         |  round(sum(value * 2), 4) AS sum_v2,
         |  'OBJECT<id: BIGINT, tag: STRING, vals: ARRAY<DECIMAL(3,2)>>'
         |    AS vschema
         |FROM events GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin),
     // Each URL component restated from the SOURCE columns the URL was
     // built from — the oracle never parses, so parse must invert build.
-    "f16_parse_url" ->
+    Query("f16_parse_url", f16ParseUrl,
       """WITH u AS (
         |  SELECT source || '.example.com' AS host,
         |    '/' || lang || '/doc/' || doc_id AS path,
@@ -275,28 +258,28 @@ object Scalars {
         |  count(DISTINCT path)::BIGINT AS n_paths,
         |  count(DISTINCT ref)::BIGINT AS n_refs,
         |  count(DISTINCT frag)::BIGINT AS n_frags
-        |FROM u GROUP BY host ORDER BY host""".stripMargin,
-    "f15_histogram" ->
+        |FROM u GROUP BY host ORDER BY host""".stripMargin),
+    Query("f15_histogram", f15Histogram,
       """SELECT least(floor(l_extendedprice / 5000.0), 20)::BIGINT AS bucket,
         |  count(*)::BIGINT AS n,
         |  round(min(l_extendedprice), 2) AS lo,
         |  round(max(l_extendedprice), 2) AS hi,
         |  round(avg(l_extendedprice), 4) AS mean
-        |FROM lineitem GROUP BY bucket ORDER BY bucket""".stripMargin,
+        |FROM lineitem GROUP BY bucket ORDER BY bucket""".stripMargin),
     // rt mirrors Spark's to_json null-dropping: no parseable integer k
     // ⇒ '{}' (a bare string concat would emit NULL/quoted values and
     // diverge whenever a row lacks k). Remaining pinned assumption:
     // quoted integers ("k":"5") would still diverge (typed from_json
     // yields null; extract-then-cast yields 5) — absent from testdata.
-    "f13_from_json" ->
+    Query("f13_from_json", f13FromJson,
       """SELECT event_id,
         | try_cast(json_extract_string(props, '$.k') AS INTEGER) AS k,
         | CASE WHEN try_cast(json_extract_string(props, '$.k') AS INTEGER) IS NULL
         |      THEN '{}'
         |      ELSE '{"k":' || try_cast(json_extract_string(props, '$.k') AS INTEGER) || '}'
         | END AS rt
-        |FROM events ORDER BY event_id""".stripMargin,
-    "f11_string_extra" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    Query("f11_string_extra", f11StringExtra,
       """SELECT p_partkey,
         | lpad(p_brand, 12, '*') AS brand_lpad,
         | rpad(p_brand, 12, '-') AS brand_rpad,
@@ -305,28 +288,28 @@ object Scalars {
         | reverse(p_name) AS name_rev,
         | levenshtein(p_brand, 'Brand#13') AS brand_dist,
         | strpos(p_name, 'a') AS a_pos
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "f12_datetime_extra" ->
+        |FROM part ORDER BY p_partkey""".stripMargin),
+    Query("f12_datetime_extra", f12DatetimeExtra,
       """SELECT event_id,
         | quarter(ts) AS q,
         | weekofyear(ts) AS woy,
         | dayofyear(ts) AS doy,
         | last_day(CAST(ts AS DATE)) AS month_end,
         | CAST(CAST(ts AS DATE) + INTERVAL 3 MONTH AS DATE) AS plus3m
-        |FROM events ORDER BY event_id""".stripMargin,
-    "f1_string" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    Query("f1_string", f1String,
       """SELECT p_partkey, lower(p_name) AS lname, upper(p_brand) AS ubrand,
         | length(p_name) AS name_len, substr(p_name,1,5) AS name5,
         | p_brand || '#' || p_type AS brand_type,
         | replace(p_type,' ','_') AS type_us, trim(p_name) AS tname,
         | p_name LIKE '%a%' AS has_a,
         | regexp_extract(p_name, '([a-z]+)', 1) AS first_word
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "f2_split_explode" ->
+        |FROM part ORDER BY p_partkey""".stripMargin),
+    Query("f2_split_explode", f2SplitExplode,
       """SELECT word, count(*) AS n FROM (
         | SELECT unnest(string_split(text,' ')) AS word FROM documents
-        |) WHERE word <> '' GROUP BY word ORDER BY n DESC, word LIMIT 20""".stripMargin,
-    "f3_conditional" ->
+        |) WHERE word <> '' GROUP BY word ORDER BY n DESC, word LIMIT 20""".stripMargin),
+    Query("f3_conditional", f3Conditional,
       """SELECT o_orderkey,
         | CASE WHEN o_totalprice > 300000 THEN 'big'
         |      WHEN o_totalprice > 100000 THEN 'mid'
@@ -334,14 +317,14 @@ object Scalars {
         | coalesce(nullif(o_orderstatus,'O'),'open') AS status,
         | CASE WHEN o_orderpriority IS NULL THEN 'none'
         |      ELSE o_orderpriority END AS prio
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "f4_try_cast" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Query("f4_try_cast", f4TryCast,
       """SELECT event_id,
         | try_cast(json_extract_string(props,'$.k') AS INTEGER) AS k_int,
         | try_cast(event_type AS INTEGER) AS not_a_number,
         | CAST(ts AS DATE) AS day
-        |FROM events ORDER BY event_id""".stripMargin,
-    "f5_math" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    Query("f5_math", f5Math,
       """SELECT p_partkey, abs(p_size - 25) AS size_dist,
         | round(p_retailprice,1) AS price_r1,
         | floor(p_retailprice) AS price_floor,
@@ -350,23 +333,23 @@ object Scalars {
         | round(ln(p_retailprice),6) AS price_ln,
         | round(sqrt(p_retailprice),6) AS price_sqrt,
         | p_partkey % 7 AS key_mod
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "f6_datetime" ->
+        |FROM part ORDER BY p_partkey""".stripMargin),
+    Query("f6_datetime", f6DateTime,
       """SELECT event_id, year(ts) AS y, month(ts) AS m, day(ts) AS d,
         | hour(ts) AS h, CAST(date_trunc('day', ts) AS DATE) AS day,
         | datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS days_in,
         | epoch_ms(ts) AS epoch_ms
-        |FROM events ORDER BY event_id""".stripMargin,
-    "f7_array" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    Query("f7_array", f7Array,
       """SELECT doc_id, len(string_split(text,' ')) AS n_words,
         | string_split(text,' ')[1] AS first_word,
         | list_contains(string_split(text,' '), 'data') AS has_data,
         | array_to_string(list_sort(string_split(text,' ')[1:5]), '|') AS first5_sorted
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "f8_json" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("f8_json", f8Json,
       """SELECT event_type,
         | round(avg(try_cast(json_extract_string(props,'$.k') AS INTEGER)),4) AS avg_k,
         | count(try_cast(json_extract_string(props,'$.k') AS INTEGER)) AS n_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
   )
 }

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Query, Tables}
 import graft.Tables.{load => t}
 
 /** UDF / UDAF / UDTF surface (SURVEY §2.11 X2-X4) — the reference's
@@ -202,57 +202,48 @@ object Udfs {
       .toDF("n_rows", "sum_qty", "n_discounted", "n_null_keys")
   }
 
-  val queries: Map[String, Q] = Map(
-    "x8_observe" -> x8Observe,
-    "x7_sql_udf" -> x7SqlUdf,
-    "x2_udf_scalar" -> x2UdfScalar,
-    "x3_udaf_geomean" -> x3UdafGeomean,
-    "x4_udtf_bigrams" -> x4UdtfBigrams,
-    "x5_udaf_centroid" -> x5UdafCentroid,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // Every observed metric recomputed from the raw table.
-    "x8_observe" ->
+    Query("x8_observe", x8Observe,
       """SELECT count(*)::BIGINT AS n_rows,
         |  sum(l_quantity::BIGINT)::BIGINT AS sum_qty,
         |  count(CASE WHEN l_discount >= 0.05 THEN 1 END)::BIGINT
         |    AS n_discounted,
         |  count(CASE WHEN l_orderkey IS NULL THEN 1 END)::BIGINT
         |    AS n_null_keys
-        |FROM lineitem""".stripMargin,
+        |FROM lineitem""".stripMargin),
     // The SQL function body inlined — definition must be transparent.
-    "x7_sql_udf" ->
+    Query("x7_sql_udf", x7SqlUdf,
       """SELECT l_returnflag,
         |  round(sum(round(l_extendedprice * (1.0 - l_discount), 4)), 2)
         |    AS revenue,
         |  count(*) AS n
         |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "x2_udf_scalar" ->
+        |ORDER BY l_returnflag""".stripMargin),
+    Query("x2_udf_scalar", x2UdfScalar,
       """SELECT l_orderkey, l_linenumber,
         | round(l_extendedprice * (1.0 - l_discount), 4) AS net_price
         |FROM lineitem WHERE l_orderkey <= 100
-        |ORDER BY l_orderkey, l_linenumber, net_price""".stripMargin,
-    "x3_udaf_geomean" ->
+        |ORDER BY l_orderkey, l_linenumber, net_price""".stripMargin),
+    Query("x3_udaf_geomean", x3UdafGeomean,
       """SELECT p_brand, round(exp(avg(ln(p_retailprice))), 4) AS geo_price,
         | count(*) AS n
-        |FROM part GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    "x4_udtf_bigrams" ->
+        |FROM part GROUP BY p_brand ORDER BY p_brand""".stripMargin),
+    Query("x4_udtf_bigrams", x4UdtfBigrams,
       """SELECT bigram, count(*) AS n FROM (
         |  SELECT unnest(list_transform(
         |    range(1, greatest(len(string_split(text,' ')), 1)),
         |    i -> string_split(text,' ')[i] || ' ' ||
         |         string_split(text,' ')[i+1])) AS bigram
         |  FROM documents)
-        |GROUP BY bigram ORDER BY n DESC, bigram LIMIT 20""".stripMargin,
-    "x5_udaf_centroid" ->
+        |GROUP BY bigram ORDER BY n DESC, bigram LIMIT 20""".stripMargin),
+    Query("x5_udaf_centroid", x5UdafCentroid,
       """SELECT grp, dim - 1 AS dim, round(avg(v), 6) AS v
         |FROM (
         |  SELECT vec_id % 5 AS grp,
         |         unnest(embedding) AS v,
         |         generate_subscripts(embedding, 1) AS dim
         |  FROM embeddings)
-        |GROUP BY grp, dim ORDER BY grp, dim""".stripMargin,
+        |GROUP BY grp, dim ORDER BY grp, dim""".stripMargin),
   )
 }

@@ -2,7 +2,7 @@ package graft.lake
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Query, Tables}
 import graft.Tables.{load => t}
 import Lake.Mapping
 
@@ -1261,55 +1261,8 @@ object LakeQueries {
       .orderBy(col("custkey"), col("version"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "k17_scd2" -> k17Scd2,
-    "s19_analyze_stats" -> s19AnalyzeStats,
-    "k14_merge" -> k14Merge,
-    "k18_mv_incremental" -> k18MvIncremental,
-    "k19_minmax_skip" -> k19MinmaxSkip,
-    "k22_bloom_skip" -> k22BloomSkip,
-    "s20_binaryfile" -> s20BinaryFile,
-    "s26_avro_rt" -> s26AvroRt,
-    "s27_avro_evolution" -> s27AvroEvolution,
-    "s28_warc_scan" -> s28WarcScan,
-    "s17_corrupt_records" -> s17CorruptRecords,
-    "k12_bookmark" -> k12Bookmark,
-    "s1_tsv_scan" -> s1TsvScan,
-    "s2_gzip_scan" -> s2GzipScan,
-    "s3_crawler_allstring" -> s3CrawlerAllstring,
-    "s4_classifier_infer" -> s4ClassifierInfer,
-    "p1_apply_mapping" -> p1ApplyMapping,
-    "p2_choice_struct" -> p2ChoiceStruct,
-    "k1_partition_prune" -> k1PartitionPrune,
-    "k2_parquet_rt" -> k2ParquetRt,
-    "k3_results_csv" -> k3ResultsCsv,
-    "k4_bulk_load" -> k4BulkLoad,
-    "s5_catalog_sql" -> s5CatalogSql,
-    "s5b_catalog_db" -> s5bCatalogDb,
-    "s10_jsonl_rt" -> s10JsonlRt,
-    "s23_multiline_json" -> s23MultilineJson,
-    "s24_csv_tsformat" -> s24CsvTsFormat,
-    "s11_orc_rt" -> s11OrcRt,
-    "s21_xml_rt" -> s21XmlRt,
-    "s22_grok_log" -> s22GrokLog,
-    "s25_fixed_width" -> s25FixedWidth,
-    "k7_compact" -> k7Compact,
-    "k8_ctas_insert" -> k8CtasInsert,
-    "k8b_ctas_partitioned" -> k8bCtasPartitioned,
-    "k9_dynamic_overwrite" -> k9DynamicOverwrite,
-    "k31_file_sizing" -> k31FileSizing,
-    "s12_sql_view" -> s12SqlView,
-    "s13_msck_repair" -> s13MsckRepair,
-    "s14_schema_merge" -> s14SchemaMerge,
-    "s15_recrawl_update" -> s15RecrawlUpdate,
-    "s16_profile" -> s16Profile,
-    "k11_snapshot_diff" -> k11SnapshotDiff,
-    "etl_imdb_join" -> etlImdbJoin,
-    "k5_register_prefix" -> k5RegisterPrefix,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "k17_scd2" ->
+  val queries: Seq[Query] = Seq(
+    Query("k17_scd2", k17Scd2,
       """WITH f AS (
         |  SELECT o_custkey AS k, o_orderpriority AS a,
         |    o_orderdate AS ts, o_orderkey AS tb,
@@ -1337,56 +1290,56 @@ object LakeQueries {
         |  effective_from, effective_to,
         |  (CASE WHEN effective_to IS NULL THEN 1 ELSE 0 END)::BIGINT
         |    AS is_current
-        |FROM fin ORDER BY custkey, version""".stripMargin,
-    "s19_analyze_stats" ->
+        |FROM fin ORDER BY custkey, version""".stripMargin),
+    Query("s19_analyze_stats", s19AnalyzeStats,
       """SELECT count(*)::BIGINT AS n_rows, true AS size_positive,
         |  count(DISTINCT n_nationkey)::BIGINT AS ndv_nationkey,
         |  count(DISTINCT n_regionkey)::BIGINT AS ndv_regionkey
-        |FROM nation""".stripMargin,
-    "s20_binaryfile" ->
+        |FROM nation""".stripMargin),
+    Query("s20_binaryfile", s20BinaryFile,
       """SELECT doc_id, octet_length(encode(text))::BIGINT AS n_bytes,
         |  sha256(text) AS digest
         |FROM documents WHERE doc_id < 64
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // Full-row restatement: the avro containers must reproduce the
     // source table exactly after the deflate round-trip.
-    "s26_avro_rt" ->
-      "SELECT doc_id, lang, text FROM documents ORDER BY doc_id",
-    "s27_avro_evolution" ->
+    Query("s26_avro_rt", s26AvroRt,
+      "SELECT doc_id, lang, text FROM documents ORDER BY doc_id"),
+    Query("s27_avro_evolution", s27AvroEvolution,
       """SELECT lang, 'avro' AS src, count(*)::BIGINT AS n_docs,
         |  sum(doc_id)::BIGINT AS sum_ids
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
     // Every parsed WARC field re-derived from the source table;
     // Content-Length = 44 (HTTP status line + header + separator)
     // + 12 + 14 (html wrapper) + strlen(text) UTF-8 bytes.
-    "s28_warc_scan" ->
+    Query("s28_warc_scan", s28WarcScan,
       """SELECT doc_id,
         |  'https://example.org/doc/' || doc_id AS uri,
         |  (doc_id % 8) >= 4 AS compressed,
         |  (70 + strlen(text))::BIGINT AS content_length,
         |  200::INT AS http_status, text
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "k19_minmax_skip" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("k19_minmax_skip", k19MinmaxSkip,
       """SELECT o_orderpriority, count(*)::BIGINT AS n_orders,
         |  round(sum(o_totalprice), 2) AS sum_price
         |FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND o_orderdate <= TIMESTAMP '1996-12-31 23:59:59'
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin),
     // Plain filtered restatement: bloom skipping must lose no order
     // (no false negatives) and the residual must kill FP-file rows.
-    "k22_bloom_skip" ->
+    Query("k22_bloom_skip", k22BloomSkip,
       """SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS price
         |FROM orders WHERE o_custkey = 101
-        |ORDER BY o_orderkey""".stripMargin,
-    "k18_mv_incremental" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("k18_mv_incremental", k18MvIncremental,
       """SELECT o_orderpriority, count(*)::BIGINT AS n_orders,
         |  round(sum(o_totalprice), 2) AS sum_price
         |FROM orders
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "k14_merge" ->
+        |ORDER BY o_orderpriority""".stripMargin),
+    Query("k14_merge", k14Merge,
       """WITH upd AS (
         |  SELECT p_partkey, p_name, p_brand, NULL AS p_type, p_size,
         |    round(p_retailprice + 100, 2) AS p_retailprice
@@ -1404,8 +1357,8 @@ object LakeQueries {
         |  sum(p_size)::BIGINT AS sum_size,
         |  round(sum(p_retailprice), 2) AS sum_price,
         |  sum(p_partkey)::BIGINT AS sum_keys
-        |FROM merged GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    "s17_corrupt_records" ->
+        |FROM merged GROUP BY p_brand ORDER BY p_brand""".stripMargin),
+    Query("s17_corrupt_records", s17CorruptRecords,
       """SELECT 'dropmalformed' AS mode,
         |  sum(CASE WHEN doc_id % 10 <> 0 THEN 1 ELSE 0 END)::BIGINT AS n_good,
         |  0::BIGINT AS n_corrupt,
@@ -1417,12 +1370,12 @@ object LakeQueries {
         |  sum(CASE WHEN doc_id % 10 = 0 THEN 1 ELSE 0 END)::BIGINT,
         |  sum(CASE WHEN doc_id % 10 <> 0 THEN n_chars END)::BIGINT
         |FROM documents
-        |ORDER BY mode""".stripMargin,
-    "k12_bookmark" ->
+        |ORDER BY mode""".stripMargin),
+    Query("k12_bookmark", k12Bookmark,
       """SELECT lang, count(*)::BIGINT AS n_docs,
         |  sum(n_chars)::BIGINT AS sum_chars
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "s16_profile" ->
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("s16_profile", s16Profile,
       """SELECT 'c_acctbal' AS column_name,
         |  sum(CASE WHEN c_acctbal IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_nulls,
         |  count(DISTINCT c_acctbal)::BIGINT AS n_distinct,
@@ -1450,8 +1403,8 @@ object LakeQueries {
         |  NULL::DOUBLE, NULL::DOUBLE,
         |  min(c_name), max(c_name)
         |FROM customer
-        |ORDER BY column_name""".stripMargin,
-    "k11_snapshot_diff" ->
+        |ORDER BY column_name""".stripMargin),
+    Query("k11_snapshot_diff", k11SnapshotDiff,
       """WITH new_snap AS (
         |  SELECT doc_id,
         |    CASE WHEN doc_id % 15 = 0 THEN text || ' v2' ELSE text END AS text
@@ -1470,78 +1423,78 @@ object LakeQueries {
         |  FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id)
         |SELECT status, count(*)::BIGINT AS n_docs,
         |  sum(doc_id)::BIGINT AS sum_ids
-        |FROM j GROUP BY status ORDER BY status""".stripMargin,
-    "s1_tsv_scan" ->
+        |FROM j GROUP BY status ORDER BY status""".stripMargin),
+    Query("s1_tsv_scan", s1TsvScan,
       """SELECT c_custkey, c_name, nullif(c_mktsegment,'BUILDING') AS seg,
         | round(c_acctbal,2) AS bal
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "s2_gzip_scan" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin),
+    Query("s2_gzip_scan", s2GzipScan,
       """SELECT s_suppkey, s_name, s_nationkey, round(s_acctbal,2) AS bal
-        |FROM supplier ORDER BY s_suppkey""".stripMargin,
-    "s3_crawler_allstring" ->
+        |FROM supplier ORDER BY s_suppkey""".stripMargin),
+    Query("s3_crawler_allstring", s3CrawlerAllstring,
       """SELECT CAST(r_regionkey AS VARCHAR) AS rkey, r_name AS rname
-        |FROM region ORDER BY rkey""".stripMargin,
-    "s4_classifier_infer" ->
+        |FROM region ORDER BY rkey""".stripMargin),
+    Query("s4_classifier_infer", s4ClassifierInfer,
       """SELECT n_nationkey, n_name, n_regionkey
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-    "p1_apply_mapping" ->
+        |FROM nation ORDER BY n_nationkey""".stripMargin),
+    Query("p1_apply_mapping", p1ApplyMapping,
       """SELECT p_partkey AS part_id, p_name AS name,
         | CASE WHEN p_size < 10 THEN NULL ELSE p_size END AS size_int
-        |FROM part ORDER BY part_id""".stripMargin,
-    "p2_choice_struct" ->
+        |FROM part ORDER BY part_id""".stripMargin),
+    Query("p2_choice_struct", p2ChoiceStruct,
       """SELECT p_partkey AS part_id,
         | CASE WHEN p_size >= 10 THEN p_size END AS size_int,
         | CASE WHEN p_size < 10 THEN 'N/A' END AS size_str
-        |FROM part ORDER BY part_id""".stripMargin,
-    "k1_partition_prune" ->
+        |FROM part ORDER BY part_id""".stripMargin),
+    Query("k1_partition_prune", k1PartitionPrune,
       """SELECT c_custkey, c_name, round(c_acctbal,2) AS bal, c_nationkey
-        |FROM customer WHERE c_nationkey = 7 ORDER BY c_custkey""".stripMargin,
-    "k2_parquet_rt" ->
+        |FROM customer WHERE c_nationkey = 7 ORDER BY c_custkey""".stripMargin),
+    Query("k2_parquet_rt", k2ParquetRt,
       """SELECT o_orderkey, o_orderstatus, round(o_totalprice,2) AS price,
         | o_orderdate
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "k3_results_csv" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Query("k3_results_csv", k3ResultsCsv,
       """SELECT o_orderstatus AS status, count(*) AS n,
         | round(sum(o_totalprice),2) AS total
-        |FROM orders GROUP BY status ORDER BY status""".stripMargin,
-    "k4_bulk_load" ->
-      "SELECT * FROM nation ORDER BY n_nationkey",
-    "s5_catalog_sql" ->
+        |FROM orders GROUP BY status ORDER BY status""".stripMargin),
+    Query("k4_bulk_load", k4BulkLoad,
+      "SELECT * FROM nation ORDER BY n_nationkey"),
+    Query("s5_catalog_sql", s5CatalogSql,
       """SELECT n_name, r_name FROM nation JOIN region
         |ON n_regionkey = r_regionkey
-        |ORDER BY n_name, r_name""".stripMargin,
-    "k5_register_prefix" ->
+        |ORDER BY n_name, r_name""".stripMargin),
+    Query("k5_register_prefix", k5RegisterPrefix,
       """SELECT n_regionkey, count(*) AS n FROM nation
-        |GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin,
-    "s5b_catalog_db" ->
+        |GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin),
+    Query("s5b_catalog_db", s5bCatalogDb,
       """SELECT n.n_name, p.n_suppliers, p.total_bal
         |FROM (SELECT s_nationkey, count(*) AS n_suppliers,
         |        round(sum(s_acctbal), 2) AS total_bal
         |      FROM supplier GROUP BY s_nationkey) p
         |JOIN nation n ON p.s_nationkey = n.n_nationkey
-        |ORDER BY n.n_name""".stripMargin,
-    "s10_jsonl_rt" ->
-      """SELECT doc_id, lang, text FROM documents ORDER BY doc_id""",
-    "s23_multiline_json" ->
-      """SELECT doc_id, lang, text FROM documents ORDER BY doc_id""",
-    "s24_csv_tsformat" ->
+        |ORDER BY n.n_name""".stripMargin),
+    Query("s10_jsonl_rt", s10JsonlRt,
+      """SELECT doc_id, lang, text FROM documents ORDER BY doc_id"""),
+    Query("s23_multiline_json", s23MultilineJson,
+      """SELECT doc_id, lang, text FROM documents ORDER BY doc_id"""),
+    Query("s24_csv_tsformat", s24CsvTsFormat,
       """SELECT o_orderkey, o_orderdate,
         |  round(o_totalprice, 2) AS price
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "s11_orc_rt" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Query("s11_orc_rt", s11OrcRt,
       """SELECT s_suppkey, s_name, s_nationkey, round(s_acctbal,2) AS bal
-        |FROM supplier ORDER BY s_suppkey""".stripMargin,
-    "s21_xml_rt" ->
+        |FROM supplier ORDER BY s_suppkey""".stripMargin),
+    Query("s21_xml_rt", s21XmlRt,
       """SELECT s_suppkey, s_name, s_nationkey, round(s_acctbal,2) AS bal,
         |  '<deal & co> ' || s_name AS note
-        |FROM supplier ORDER BY s_suppkey""".stripMargin,
+        |FROM supplier ORDER BY s_suppkey""".stripMargin),
     // DuckDB synthesizes the SAME log lines from the same table and
     // re-parses them with the SAME regex constant — a drifting field,
     // a regex that over/under-matches, or a lost line all hash-fail.
     // Fixed-width ingest: the oracle rebuilds every 55-byte record
     // (lpad/rpad + sign byte + integer cents) and re-slices it by the
     // same substring positions.
-    "s25_fixed_width" ->
+    Query("s25_fixed_width", s25FixedWidth,
       """WITH c AS (
         |  SELECT *, CAST(round(c_acctbal * 100) AS BIGINT) AS cents
         |  FROM customer),
@@ -1568,8 +1521,8 @@ object LakeQueries {
         |  count(DISTINCT nation)::BIGINT AS n_nations,
         |  sum(length(name))::BIGINT AS sum_name_len,
         |  sum(CASE WHEN ok THEN 0 ELSE 1 END)::BIGINT AS n_badlen
-        |FROM p GROUP BY segment ORDER BY segment""".stripMargin,
-    "s22_grok_log" ->
+        |FROM p GROUP BY segment ORDER BY segment""".stripMargin),
+    Query("s22_grok_log", s22GrokLog,
       s"""WITH lines AS (
          |  SELECT '10.0.' || (o_custkey % 256) || '.' ||
          |    (o_orderkey % 256) || ' - u' || o_custkey || ' [' ||
@@ -1592,57 +1545,57 @@ object LakeQueries {
          |  sum(bytes)::BIGINT AS sum_bytes,
          |  min(ts)::BIGINT AS min_ts, max(ts)::BIGINT AS max_ts,
          |  sum(CASE WHEN ok THEN 0 ELSE 1 END)::BIGINT AS n_unparsed
-         |FROM p GROUP BY status ORDER BY status""".stripMargin,
-    "k7_compact" ->
+         |FROM p GROUP BY status ORDER BY status""".stripMargin),
+    Query("k7_compact", k7Compact,
       """SELECT o_orderkey, o_orderstatus, round(o_totalprice,2) AS price
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "k8b_ctas_partitioned" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Query("k8b_ctas_partitioned", k8bCtasPartitioned,
       """SELECT c_custkey AS id, c_name AS name,
         |  round(c_acctbal, 2) AS bal, c_nationkey AS nk
         |FROM customer WHERE c_nationkey IN (3, 7)
-        |ORDER BY id""".stripMargin,
-    "k8_ctas_insert" ->
+        |ORDER BY id""".stripMargin),
+    Query("k8_ctas_insert", k8CtasInsert,
       """SELECT * FROM (
         |  SELECT n_nationkey AS id, n_name AS name, 'nation' AS src FROM nation
         |  UNION ALL
         |  SELECT r_regionkey AS id, r_name AS name, 'region' AS src FROM region)
-        |ORDER BY src, id""".stripMargin,
-    "s12_sql_view" ->
+        |ORDER BY src, id""".stripMargin),
+    Query("s12_sql_view", s12SqlView,
       """SELECT c_nationkey, count(*) AS n_cust,
         | CAST(sum(CAST(c_acctbal AS DECIMAL(12,2))) AS VARCHAR) AS total_bal
-        |FROM customer GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-    "s13_msck_repair" ->
+        |FROM customer GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin),
+    Query("s13_msck_repair", s13MsckRepair,
       """SELECT c_custkey, c_name, round(c_acctbal, 2) AS bal, c_nationkey
         |FROM customer WHERE c_nationkey IN (3, 7)
-        |ORDER BY c_custkey""".stripMargin,
-    "s15_recrawl_update" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Query("s15_recrawl_update", s15RecrawlUpdate,
       """SELECT n_nationkey, n_name, n_regionkey, 2 AS cols_before
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-    "s14_schema_merge" ->
+        |FROM nation ORDER BY n_nationkey""".stripMargin),
+    Query("s14_schema_merge", s14SchemaMerge,
       """SELECT n_nationkey, n_name,
         | CASE WHEN n_nationkey >= 12 THEN n_regionkey END AS n_regionkey,
         | CASE WHEN n_nationkey < 12 THEN 1 ELSE 2 END AS batch
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
+        |FROM nation ORDER BY n_nationkey""".stripMargin),
     // Content restated from the raw table; the file-cap invariants are
     // required in-plan (file layout is engine-specific).
-    "k31_file_sizing" ->
+    Query("k31_file_sizing", k31FileSizing,
       """SELECT count(*)::BIGINT AS n_rows,
         |  sum(o_orderkey)::BIGINT AS sum_keys,
         |  round(sum(round(o_totalprice, 2)), 2) AS sum_price
-        |FROM orders""".stripMargin,
-    "k9_dynamic_overwrite" ->
+        |FROM orders""".stripMargin),
+    Query("k9_dynamic_overwrite", k9DynamicOverwrite,
       """SELECT c_custkey, c_name,
         | CASE WHEN c_nationkey = 7
         |   THEN round(round(c_acctbal, 2) + 1000.0, 2)
         |   ELSE round(c_acctbal, 2) END AS bal,
         | c_nationkey
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "etl_imdb_join" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin),
+    Query("etl_imdb_join", etlImdbJoin,
       """SELECT c_name AS primaryName, c_nationkey + 1900 AS birthYear,
         |  count(*) AS n_titles, round(avg(o_totalprice / 1024), 4) AS avg_rating
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |WHERE c_nationkey >= 5
         |GROUP BY c_name, c_nationkey
-        |ORDER BY primaryName""".stripMargin,
+        |ORDER BY primaryName""".stripMargin),
   )
 }

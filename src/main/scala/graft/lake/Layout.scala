@@ -2,7 +2,7 @@ package graft.lake
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Query, Tables}
 
 /** Z-order (Morton-curve) data layout — the multi-dimensional clustering
   * every lake engine grew (Delta OPTIMIZE ZORDER BY, Iceberg sort
@@ -260,24 +260,19 @@ object Layout {
     ev.crossJoin(evDirs).crossJoin(ord).crossJoin(ordDirs)
   }
 
-  val queries: Map[String, Q] = Map(
-    "k13_zorder_prune" -> k13ZorderPrune,
-    "k34_hidden_partition" -> k34HiddenPartition,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "k13_zorder_prune" ->
+  val queries: Seq[Query] = Seq(
+    Query("k13_zorder_prune", k13ZorderPrune,
       """SELECT count(*)::BIGINT AS n_events,
         |  round(sum(value), 4) AS sum_value,
         |  min(event_id) AS min_id, max(event_id) AS max_id
         |FROM events
         |WHERE ts >= TIMESTAMP '2024-01-08 00:00:00'
         |  AND ts < TIMESTAMP '2024-01-16 00:00:00'
-        |  AND user_id BETWEEN 5 AND 60""".stripMargin,
+        |  AND user_id BETWEEN 5 AND 60""".stripMargin),
     // The range/key answers restated over the raw tables; the partition
     // counts restated set-algebraically (days-with-rows in the range =
     // directories the derivation may touch; the key's bucket = 1 dir).
-    "k34_hidden_partition" ->
+    Query("k34_hidden_partition", k34HiddenPartition,
       """WITH r AS (
         |  SELECT count(*)::BIGINT AS n_events,
         |    round(sum(value), 4) AS sum_value
@@ -296,6 +291,6 @@ object Layout {
         |b AS (SELECT 1::BIGINT AS n_bucket_partitions)
         |SELECT n_events, sum_value, n_day_partitions, n_key_orders,
         |  n_bucket_partitions
-        |FROM r, d, k, b""".stripMargin,
+        |FROM r, d, k, b""".stripMargin),
   )
 }

@@ -3,7 +3,7 @@ package graft.lake
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import graft.{Q, Tables}
+import graft.{Q, Query, Tables}
 
 /** Versioned table snapshots with time-travel reads — the Delta/Iceberg
   * capability a plain-parquet lake lacks (the reference's tables are
@@ -1496,26 +1496,7 @@ object Snapshots {
       .orderBy(col("snap"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "k33_shallow_clone" -> k33ShallowClone,
-    "k36_branch_merge" -> k36BranchMerge,
-    "k29_schema_evolution" -> k29SchemaEvolution,
-    "k30_compact" -> k30Compact,
-    "k32_multi_table_txn" -> k32MultiTableTxn,
-    "k24_snapshot_diff" -> k24SnapshotDiff,
-    "k25_restore" -> k25Restore,
-    "k26_deletion_vectors" -> k26DeletionVectors,
-    "k27_wap" -> k27Wap,
-    "k28_snapshot_tags" -> k28SnapshotTags,
-    "k15_timetravel" -> k15Timetravel,
-    "k35_timetravel_ts" -> k35TimetravelTs,
-    "k16_forget" -> k16Forget,
-    "k20_scd2" -> k20Scd2,
-    "k21_partition_evolution" -> k21PartitionEvolution,
-    "k23_vacuum" -> k23Vacuum,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // Each txn's pair restated from the raw tables; consistency ⇒
     // orphans 0 within a txn; the torn pair's orphans = lineitem keys
     // in txn1's orders predicate but not txn2's (RI holds in testdata).
@@ -1524,7 +1505,7 @@ object Snapshots {
     // Branch rollups restated from the order slices each snapshot
     // committed; the merge-refusal and ancestry gates are structural
     // requires in-plan (constant-true columns here).
-    "k36_branch_merge" ->
+    Query("k36_branch_merge", k36BranchMerge,
       """WITH o AS (
         |  SELECT o_orderkey, round(o_totalprice, 2) AS price
         |  FROM orders),
@@ -1539,8 +1520,8 @@ object Snapshots {
         |  FROM o WHERE o_orderkey % 4 IN (0, 1, 3))
         |SELECT ref, n_rows, sum_keys, sum_price,
         |  true AS divergence_refused, true AS ancestry_ok
-        |FROM m ORDER BY ref""".stripMargin,
-    "k33_shallow_clone" ->
+        |FROM m ORDER BY ref""".stripMargin),
+    Query("k33_shallow_clone", k33ShallowClone,
       """SELECT * FROM (
         |  SELECT '1_clone_pin_v2' AS snap, count(*)::BIGINT AS n,
         |    sum(p_partkey)::BIGINT AS sum_keys,
@@ -1561,8 +1542,8 @@ object Snapshots {
         |  FROM part WHERE p_partkey % 2 <> 0
         |  UNION ALL
         |  SELECT '4_zero_copy', 1::BIGINT, 3::BIGINT, 2.0::DOUBLE
-        |) ORDER BY snap""".stripMargin,
-    "k32_multi_table_txn" ->
+        |) ORDER BY snap""".stripMargin),
+    Query("k32_multi_table_txn", k32MultiTableTxn,
       """SELECT * FROM (
         |  SELECT '1_txn1' AS snap,
         |    (SELECT count(*) FROM orders
@@ -1583,9 +1564,9 @@ object Snapshots {
         |    count(*)::BIGINT, sum(l_orderkey)::BIGINT,
         |    (count(*) FILTER (WHERE l_orderkey % 3 <> 0))::BIGINT
         |  FROM lineitem WHERE l_orderkey % 2 = 0
-        |) ORDER BY snap""".stripMargin,
+        |) ORDER BY snap""".stripMargin),
     // v2 and v1-logical = the delete's complement; v1-raw = everything.
-    "k30_compact" ->
+    Query("k30_compact", k30Compact,
       """SELECT * FROM (
         |  SELECT '1_v2_compacted' AS snap, count(*)::BIGINT AS n_rows,
         |    sum(l_orderkey)::BIGINT AS sum_keys,
@@ -1599,11 +1580,11 @@ object Snapshots {
         |  SELECT '3_v1_raw', count(*)::BIGINT, sum(l_orderkey)::BIGINT,
         |    round(sum(l_extendedprice), 2)
         |  FROM lineitem
-        |) ORDER BY snap""".stripMargin,
+        |) ORDER BY snap""".stripMargin),
     // All five rows restated set-algebraically from the raw table:
     // unified v1 (bal ← c_acctbal, segment NULL ⇒ n_seg 0), unified
     // latest, and the three change-feed classes across the boundary.
-    "k29_schema_evolution" ->
+    Query("k29_schema_evolution", k29SchemaEvolution,
       """WITH c AS (
         |  SELECT c_custkey, round(c_acctbal, 2) AS bal0, c_mktsegment
         |  FROM customer),
@@ -1640,10 +1621,10 @@ object Snapshots {
         |    sum(c_custkey + 1000000)::BIGINT, round(sum(bal0), 2),
         |    0::BIGINT
         |  FROM c WHERE c_custkey % 100 = 0
-        |) ORDER BY snap""".stripMargin,
+        |) ORDER BY snap""".stripMargin),
     // Set-algebraic restatement of the three change classes; the
     // unchanged (%4 == 2) slice must be absent.
-    "k24_snapshot_diff" ->
+    Query("k24_snapshot_diff", k24SnapshotDiff,
       """WITH c AS (
         |  SELECT c_custkey, round(c_acctbal, 2) AS bal FROM customer)
         |SELECT c_custkey, 'insert' AS change,
@@ -1655,10 +1636,10 @@ object Snapshots {
         |UNION ALL
         |SELECT c_custkey, 'update', round(bal + 100.0, 2), bal
         |FROM c WHERE c_custkey % 4 = 1
-        |ORDER BY c_custkey""".stripMargin,
+        |ORDER BY c_custkey""".stripMargin),
     // v3 must equal the ORIGINAL table (the restore target), v2 the
     // corrupted deploy — both restated from the raw table.
-    "k25_restore" ->
+    Query("k25_restore", k25Restore,
       """SELECT * FROM (
         |  SELECT 'v2_bad' AS snap, count(*)::BIGINT AS n_orders,
         |    sum(o_orderkey)::BIGINT AS sum_keys,
@@ -1670,10 +1651,10 @@ object Snapshots {
         |  SELECT 'v3_restored', count(*)::BIGINT, sum(o_orderkey)::BIGINT,
         |    round(sum(o_totalprice), 2)
         |  FROM orders
-        |) ORDER BY snap""".stripMargin,
+        |) ORDER BY snap""".stripMargin),
     // tag = the untouched v1 dim, latest = the repriced v3 — both
     // restated from the raw table (per-row rounding, parity rule).
-    "k28_snapshot_tags" ->
+    Query("k28_snapshot_tags", k28SnapshotTags,
       """SELECT * FROM (
         |  SELECT 'tagged_v1' AS snap, count(*)::BIGINT AS n_rows,
         |    sum(c_custkey)::BIGINT AS sum_keys,
@@ -1683,10 +1664,10 @@ object Snapshots {
         |  SELECT 'v3_latest', count(*)::BIGINT, sum(c_custkey)::BIGINT,
         |    round(sum(round(c_acctbal * 1.05, 4)), 2)
         |  FROM customer
-        |) ORDER BY snap""".stripMargin,
+        |) ORDER BY snap""".stripMargin),
     // v1 = the initial slice, latest = the full clean table — the
     // poisoned batch must be invisible to both reads.
-    "k27_wap" ->
+    Query("k27_wap", k27Wap,
       """SELECT * FROM (
         |  SELECT 'v1_initial' AS snap, count(*)::BIGINT AS n_orders,
         |    sum(o_orderkey)::BIGINT AS sum_keys,
@@ -1696,20 +1677,20 @@ object Snapshots {
         |  SELECT 'v3_published', count(*)::BIGINT, sum(o_orderkey)::BIGINT,
         |    round(sum(o_totalprice), 2)
         |  FROM orders
-        |) ORDER BY snap""".stripMargin,
+        |) ORDER BY snap""".stripMargin),
     // The merge-on-read scan restated as the predicate complement over
     // the raw table (positions are physical; semantics are row-level).
-    "k26_deletion_vectors" ->
+    Query("k26_deletion_vectors", k26DeletionVectors,
       """SELECT count(*)::BIGINT AS n_rows,
         |  sum(l_orderkey)::BIGINT AS sum_keys,
         |  round(sum(round(l_extendedprice * (1.0 - l_discount), 4)), 2)
         |    AS sum_revenue
         |FROM lineitem
         |WHERE NOT (l_returnflag = 'R' AND l_quantity >= 45)
-        |  AND NOT (l_discount >= 0.09)""".stripMargin,
+        |  AND NOT (l_discount >= 0.09)""".stripMargin),
     // The two SURVIVING slices restated from the raw table — vacuum
     // must be invisible to every retained version's read.
-    "k23_vacuum" ->
+    Query("k23_vacuum", k23Vacuum,
       """SELECT 'v2_1995_96' AS slice, count(*)::BIGINT AS n_orders,
         |  sum(o_orderkey)::BIGINT AS sum_keys,
         |  round(sum(o_totalprice), 2) AS sum_price
@@ -1719,10 +1700,10 @@ object Snapshots {
         |SELECT 'v3_1997up', count(*)::BIGINT,
         |  sum(o_orderkey)::BIGINT, round(sum(o_totalprice), 2)
         |FROM orders WHERE date_part('year', o_orderdate) >= 1997
-        |ORDER BY slice""".stripMargin,
+        |ORDER BY slice""".stripMargin),
     // Both evolution slices restated from the raw table: the layout
     // change must be invisible to the logical read.
-    "k21_partition_evolution" ->
+    Query("k21_partition_evolution", k21PartitionEvolution,
       """SELECT 'v1_y1996' AS slice, count(*)::BIGINT AS n_orders,
         |  sum(o_orderkey)::BIGINT AS sum_keys,
         |  round(sum(o_totalprice), 2) AS sum_price
@@ -1732,12 +1713,12 @@ object Snapshots {
         |  sum(o_orderkey)::BIGINT, round(sum(o_totalprice), 2)
         |FROM orders WHERE date_part('year', o_orderdate) = 1999
         |  AND date_part('month', o_orderdate) = 3
-        |ORDER BY slice""".stripMargin,
+        |ORDER BY slice""".stripMargin),
     // Set-algebraic SCD2 restatement: dim0 splits into untouched /
     // closed-out rows, plus new current rows for changed and brand-new
     // keys — a lost close-out, a duplicated current row, or a no-op
     // update spawning a version all hash-fail.
-    "k20_scd2" ->
+    Query("k20_scd2", k20Scd2,
       """WITH dim0 AS (
         |  SELECT c_custkey AS key, c_name AS name, c_acctbal AS bal,
         |    DATE '2024-01-01' AS valid_from, DATE '2199-12-31' AS valid_to,
@@ -1767,8 +1748,8 @@ object Snapshots {
         |     OR u.key NOT IN (SELECT key FROM dim0))
         |SELECT key, name, round(bal, 2) AS bal, valid_from, valid_to,
         |  is_current
-        |FROM merged ORDER BY key, valid_from""".stripMargin,
-    "k16_forget" ->
+        |FROM merged ORDER BY key, valid_from""".stripMargin),
+    Query("k16_forget", k16Forget,
       """WITH subj AS (
         |  SELECT c_custkey FROM customer WHERE c_custkey % 97 = 0),
         |ro AS (
@@ -1801,9 +1782,9 @@ object Snapshots {
         |     WHERE l_orderkey NOT IN (SELECT o_orderkey FROM ro))::BIGINT,
         |    (SELECT sum(l_orderkey) FROM lineitem
         |     WHERE l_orderkey NOT IN (SELECT o_orderkey FROM ro))::BIGINT
-        |) ORDER BY tbl""".stripMargin,
+        |) ORDER BY tbl""".stripMargin),
     // Each AS OF slice restated set-algebraically from the raw table.
-    "k35_timetravel_ts" ->
+    Query("k35_timetravel_ts", k35TimetravelTs,
       """SELECT 't2000_v2' AS slice, count(*)::BIGINT AS n,
         |  sum(p_partkey)::BIGINT AS sum_keys
         |FROM part WHERE p_partkey % 3 <= 1
@@ -1813,8 +1794,8 @@ object Snapshots {
         |UNION ALL
         |SELECT 't9999_v3', count(*)::BIGINT, sum(p_partkey)::BIGINT
         |FROM part
-        |ORDER BY slice""".stripMargin,
-    "k15_timetravel" ->
+        |ORDER BY slice""".stripMargin),
+    Query("k15_timetravel", k15Timetravel,
       """SELECT * FROM (
         |  SELECT 'v1_travel' AS snap, count(*)::BIGINT AS n,
         |    sum(p_partkey)::BIGINT AS sum_keys,
@@ -1826,6 +1807,6 @@ object Snapshots {
         |                   THEN round(p_retailprice + 10, 2)
         |                   ELSE p_retailprice END), 2)
         |  FROM part
-        |) ORDER BY snap""".stripMargin,
+        |) ORDER BY snap""".stripMargin),
   )
 }

@@ -2,7 +2,7 @@ package graft.lake
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Query, Tables}
 
 /** Declarative data-quality validation — the Deequ/Great-Expectations
   * stage every lake pipeline runs before publishing a table (the
@@ -88,12 +88,8 @@ object Validate {
       .orderBy(col("check_name"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "s18_validate" -> s18Validate,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "s18_validate" ->
+  val queries: Seq[Query] = Seq(
+    Query("s18_validate", s18Validate,
       """SELECT * FROM (
         |  SELECT 'complete_orderkey' AS check_name,
         |    round(avg(CASE WHEN l_orderkey IS NOT NULL THEN 1.0 ELSE 0.0 END), 6)
@@ -130,6 +126,6 @@ object Validate {
         |    (SELECT count(*) FROM lineitem l
         |     WHERE NOT EXISTS (SELECT 1 FROM orders o
         |                       WHERE o.o_orderkey = l.l_orderkey)) = 0
-        |) ORDER BY check_name""".stripMargin,
+        |) ORDER BY check_name""".stripMargin),
   )
 }

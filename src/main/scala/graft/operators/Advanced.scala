@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Q, Tables}
+import graft.{Q, Query, Tables}
 import graft.Tables.{load => t}
 
 /** Deeper SQL surface + scale-layout operators.
@@ -1163,65 +1163,8 @@ object Advanced {
         |ORDER BY s_suppkey""".stripMargin)
   }
 
-  val queries: Map[String, Q] = Map(
-    "q3_shipping" -> q3Shipping,
-    "q6_forecast" -> q6Forecast,
-    "a20_filter_clause" -> a20FilterClause,
-    "a22_bool_bit_aggs" -> a22BoolBitAggs,
-    "l6_topk_ties" -> l6TopkTies,
-    "u5_union_missing" -> u5UnionMissing,
-    "w8_window_clause" -> w8WindowClause,
-    "q8_mkt_share" -> q8MktShare,
-    "q15_top_supplier" -> q15TopSupplier,
-    "q10_returned" -> q10Returned,
-    "q17_small_qty" -> q17SmallQty,
-    "q19_disjunctive" -> q19Disjunctive,
-    "q21_waiting" -> q21Waiting,
-    "q2_min_cost" -> q2MinCost,
-    "q9_profit" -> q9Profit,
-    "q11_important_stock" -> q11ImportantStock,
-    "q16_part_supplier" -> q16PartSupplier,
-    "q20_potential_promo" -> q20PotentialPromo,
-    "q4_priority" -> q4Priority,
-    "q13_custdist" -> q13Custdist,
-    "q22_opportunity" -> q22Opportunity,
-    "q7_volume" -> q7Volume,
-    "q12_priority_lines" -> q12PriorityLines,
-    "q14_promo" -> q14Promo,
-    "q18_large_orders" -> q18LargeOrders,
-    "q5_local_supplier" -> q5LocalSupplier,
-    "p6_scalar_subquery" -> p6ScalarSubquery,
-    "p7_in_subquery" -> p7InSubquery,
-    "p8_cte_nullsafe" -> p8CteNullsafe,
-    "p10_lateral" -> p10Lateral,
-    "p11_recursive_cte" -> p11RecursiveCte,
-    "p9_exists" -> p9Exists,
-    "w5_ntile" -> w5Ntile,
-    "w6_range_frame" -> w6RangeFrame,
-    "w7_ffill" -> w7Ffill,
-    "a16_median" -> a16Median,
-    "a21_approx_quantile" -> a21ApproxQuantile,
-    "a17_listagg" -> a17Listagg,
-    "a18_mode" -> a18Mode,
-    "a19_approx_topk" -> a19ApproxTopk,
-    "a9_grouping_sets" -> a9GroupingSets,
-    "a10_pivot" -> a10Pivot,
-    "a10_unpivot" -> a10Unpivot,
-    "l4_offset" -> l4Offset,
-    "l5_null_ordering" -> l5NullOrdering,
-    "f14_decimal" -> f14Decimal,
-    "w4_distribution" -> w4Distribution,
-    "f9_nested_rt" -> f9NestedRt,
-    "f10_map_rt" -> f10MapRt,
-    "k6_bucketed_join" -> k6BucketedJoin,
-    "j8_salted_skew" -> j8SaltedSkew,
-    "j11_bloom_join" -> j11BloomJoin,
-    "j12_dpp" -> j12Dpp,
-    "a15_assoc_rules" -> a15AssocRules,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "a20_filter_clause" ->
+  val queries: Seq[Query] = Seq(
+    Query("a20_filter_clause", a20FilterClause,
       """SELECT l_returnflag,
         |  count(*) AS n_all,
         |  count(*) FILTER (WHERE l_quantity >= 25) AS n_bulk,
@@ -1230,8 +1173,8 @@ object Advanced {
         |  round(avg(l_quantity) FILTER (WHERE l_tax > 0.03), 4)
         |    AS avg_taxed_qty
         |FROM lineitem
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "w8_window_clause" ->
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("w8_window_clause", w8WindowClause,
       """SELECT o_orderkey, o_custkey,
         |  rank() OVER w AS rk,
         |  lead(o_orderkey, 1) OVER w AS next_key,
@@ -1243,8 +1186,8 @@ object Advanced {
         |WINDOW w AS (PARTITION BY o_custkey
         |             ORDER BY o_totalprice DESC, o_orderkey),
         |       w2 AS (PARTITION BY o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q6_forecast" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q6_forecast", q6Forecast,
       """SELECT round(sum(round(l_extendedprice * l_discount, 4)), 2)
         |    AS revenue,
         |  count(*)::BIGINT AS n_lines
@@ -1252,8 +1195,8 @@ object Advanced {
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
         |  AND l_discount BETWEEN 0.05 AND 0.07
-        |  AND l_quantity < 24""".stripMargin,
-    "q8_mkt_share" ->
+        |  AND l_quantity < 24""".stripMargin),
+    Query("q8_mkt_share", q8MktShare,
       """SELECT o_year,
         |  round(sum(CASE WHEN nation = 'NATION_3' THEN volume
         |                 ELSE 0.0 END) / sum(volume), 4) AS mkt_share
@@ -1271,8 +1214,8 @@ object Advanced {
         |  JOIN nation n2 ON s_nationkey = n2.n_nationkey
         |  WHERE r_name = 'ASIA' AND p_type = 'PROMO') all_nations
         |GROUP BY o_year
-        |ORDER BY o_year""".stripMargin,
-    "q15_top_supplier" ->
+        |ORDER BY o_year""".stripMargin),
+    Query("q15_top_supplier", q15TopSupplier,
       """WITH revenue AS (
         |  SELECT l_suppkey AS supplier_no,
         |    round(sum(round(l_extendedprice * (1 - l_discount), 4)), 2)
@@ -1284,8 +1227,8 @@ object Advanced {
         |SELECT s_suppkey, s_name, total_revenue
         |FROM supplier JOIN revenue ON s_suppkey = supplier_no
         |WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q10_returned" ->
+        |ORDER BY s_suppkey""".stripMargin),
+    Query("q10_returned", q10Returned,
       """SELECT c_custkey, c_name, n_name,
         |  round(sum(round(l_extendedprice * (1 - l_discount), 4)), 2)
         |    AS revenue,
@@ -1299,15 +1242,15 @@ object Advanced {
         |  AND l_returnflag = 'R'
         |GROUP BY c_custkey, c_name, n_name
         |ORDER BY revenue DESC, c_custkey
-        |LIMIT 20""".stripMargin,
-    "q17_small_qty" ->
+        |LIMIT 20""".stripMargin),
+    Query("q17_small_qty", q17SmallQty,
       """SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
         |FROM lineitem JOIN part ON p_partkey = l_partkey
         |WHERE p_brand = 'Brand#23'
         |  AND l_quantity < (SELECT 0.2 * avg(l_quantity)
         |                    FROM lineitem l2
-        |                    WHERE l2.l_partkey = p_partkey)""".stripMargin,
-    "q19_disjunctive" ->
+        |                    WHERE l2.l_partkey = p_partkey)""".stripMargin),
+    Query("q19_disjunctive", q19Disjunctive,
       """SELECT
         |  round(sum(round(l_extendedprice * (1 - l_discount), 4)), 2)
         |    AS revenue,
@@ -1318,8 +1261,8 @@ object Advanced {
         |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 20
         |       AND l_quantity BETWEEN 10 AND 30)
         |   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 25
-        |       AND l_quantity BETWEEN 20 AND 40)""".stripMargin,
-    "q21_waiting" ->
+        |       AND l_quantity BETWEEN 20 AND 40)""".stripMargin),
+    Query("q21_waiting", q21Waiting,
       """SELECT s_name, count(*)::BIGINT AS numwait
         |FROM supplier
         |JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
@@ -1336,11 +1279,11 @@ object Advanced {
         |                        o_orderdate + INTERVAL 60 DAY)
         |GROUP BY s_name
         |ORDER BY numwait DESC, s_name
-        |LIMIT 25""".stripMargin,
+        |LIMIT 25""".stripMargin),
     // supply is referenced twice (outer join input + the decorrelated
     // min) — MATERIALIZED or DuckDB inlines and re-groups lineitem
     // at every reference site (the e16 lesson).
-    "q2_min_cost" ->
+    Query("q2_min_cost", q2MinCost,
       """WITH supply AS MATERIALIZED (
         |  SELECT l_partkey AS su_partkey, l_suppkey AS su_suppkey,
         |    min(round(l_extendedprice / l_quantity, 4)) AS cost
@@ -1362,8 +1305,8 @@ object Advanced {
         |              WHERE sp.su_partkey = p_partkey
         |                AND r2.r_name = 'EUROPE')
         |ORDER BY acctbal DESC, n_name, s_name, p_partkey
-        |LIMIT 100""".stripMargin,
-    "q9_profit" ->
+        |LIMIT 100""".stripMargin),
+    Query("q9_profit", q9Profit,
       """SELECT nation, o_year, round(sum(amount), 2) AS sum_profit
         |FROM (
         |  SELECT n_name AS nation,
@@ -1377,8 +1320,8 @@ object Advanced {
         |  JOIN nation ON s_nationkey = n_nationkey
         |  WHERE p_name LIKE '%bolt%') profit
         |GROUP BY nation, o_year
-        |ORDER BY nation, o_year DESC""".stripMargin,
-    "q11_important_stock" ->
+        |ORDER BY nation, o_year DESC""".stripMargin),
+    Query("q11_important_stock", q11ImportantStock,
       """WITH supply_value AS MATERIALIZED (
         |  SELECT l_partkey AS partkey,
         |    sum(cast(round(l_extendedprice * 100, 0) AS BIGINT))::BIGINT
@@ -1391,8 +1334,8 @@ object Advanced {
         |SELECT partkey, value_cents FROM supply_value
         |WHERE value_cents > (SELECT 1.5 * avg(value_cents)
         |                     FROM supply_value)
-        |ORDER BY value_cents DESC, partkey""".stripMargin,
-    "q16_part_supplier" ->
+        |ORDER BY value_cents DESC, partkey""".stripMargin),
+    Query("q16_part_supplier", q16PartSupplier,
       """SELECT p_brand, p_type, p_size,
         |  count(DISTINCT l_suppkey)::BIGINT AS supplier_cnt
         |FROM lineitem JOIN part ON p_partkey = l_partkey
@@ -1401,8 +1344,8 @@ object Advanced {
         |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier
         |                        WHERE s_name LIKE '%7')
         |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "q20_potential_promo" ->
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin),
+    Query("q20_potential_promo", q20PotentialPromo,
       """SELECT s_suppkey, s_name, n_name
         |FROM supplier JOIN nation ON s_nationkey = n_nationkey
         |WHERE s_suppkey IN (
@@ -1421,8 +1364,8 @@ object Advanced {
         |                        TIMESTAMP '1996-01-01 00:00:00'
         |                    AND l2.l_shipdate <
         |                        TIMESTAMP '1997-01-01 00:00:00'))
-        |ORDER BY s_suppkey""".stripMargin,
-    "a15_assoc_rules" ->
+        |ORDER BY s_suppkey""".stripMargin),
+    Query("a15_assoc_rules", a15AssocRules,
       """WITH ob AS (
         |  SELECT DISTINCT l_orderkey AS o, p_brand AS b
         |  FROM lineitem JOIN part ON l_partkey = p_partkey),
@@ -1442,8 +1385,8 @@ object Advanced {
         |FROM pairs CROSS JOIN tot
         |JOIN sup s1 ON pairs.b1 = s1.b
         |JOIN sup s2 ON pairs.b2 = s2.b
-        |ORDER BY lift DESC, b1, b2 LIMIT 50""".stripMargin,
-    "q3_shipping" ->
+        |ORDER BY lift DESC, b1, b2 LIMIT 50""".stripMargin),
+    Query("q3_shipping", q3Shipping,
       """SELECT l_orderkey,
         |  round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS revenue,
         |  o_orderdate, o_orderpriority
@@ -1455,8 +1398,8 @@ object Advanced {
         |  AND l_shipdate > TIMESTAMP '1995-03-15'
         |GROUP BY l_orderkey, o_orderdate, o_orderpriority
         |ORDER BY revenue DESC, o_orderdate, l_orderkey
-        |LIMIT 10""".stripMargin,
-    "q4_priority" ->
+        |LIMIT 10""".stripMargin),
+    Query("q4_priority", q4Priority,
       """SELECT o_orderpriority, count(*) AS order_count
         |FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -1464,16 +1407,16 @@ object Advanced {
         |  AND EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey
         |                AND l_shipdate > o_orderdate)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q13_custdist" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Query("q13_custdist", q13Custdist,
       """SELECT c_count, count(*) AS custdist
         |FROM (SELECT c_custkey, count(o_orderkey) AS c_count
         |      FROM customer LEFT OUTER JOIN orders
         |        ON c_custkey = o_custkey
         |        AND o_orderpriority <> '1-URGENT'
         |      GROUP BY c_custkey) c_orders
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q22_opportunity" ->
+        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin),
+    Query("q22_opportunity", q22Opportunity,
       """SELECT n_name, count(*) AS numcust,
         |  round(sum(c_acctbal), 2) AS totacctbal
         |FROM customer JOIN nation ON c_nationkey = n_nationkey
@@ -1482,8 +1425,8 @@ object Advanced {
         |  AND NOT EXISTS (SELECT 1 FROM orders
         |                  WHERE o_custkey = c_custkey
         |                    AND o_orderpriority = '1-URGENT')
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "q12_priority_lines" ->
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    Query("q12_priority_lines", q12PriorityLines,
       """SELECT l_returnflag, count(*) AS n_items,
         |  count(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
         |             THEN 1 END) AS high_line_count,
@@ -1492,8 +1435,8 @@ object Advanced {
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q14_promo" ->
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("q14_promo", q14Promo,
       """SELECT round(100.0 * sum(CASE WHEN p_type = 'PROMO'
         |    THEN round(l_extendedprice * (1.0 - l_discount), 4)
         |    ELSE 0.0 END) /
@@ -1501,8 +1444,8 @@ object Advanced {
         |  AS promo_revenue
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'""".stripMargin,
-    "q7_volume" ->
+        |  AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'""".stripMargin),
+    Query("q7_volume", q7Volume,
       """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
         |  round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS revenue
@@ -1515,8 +1458,8 @@ object Advanced {
         |WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
         |   OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
         |GROUP BY supp_nation, cust_nation, l_year
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-    "q18_large_orders" ->
+        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin),
+    Query("q18_large_orders", q18LargeOrders,
       """SELECT c_custkey, c_name, o_orderkey,
         |  round(o_totalprice, 2) AS price,
         |  round(t.sum_qty, 2) AS sum_qty
@@ -1526,8 +1469,8 @@ object Advanced {
         |      FROM lineitem GROUP BY l_orderkey
         |      HAVING sum(l_quantity) > 250) t
         |  ON o_orderkey = t.l_orderkey
-        |ORDER BY price DESC, o_orderkey""".stripMargin,
-    "q5_local_supplier" ->
+        |ORDER BY price DESC, o_orderkey""".stripMargin),
+    Query("q5_local_supplier", q5LocalSupplier,
       """SELECT n_name,
         |  round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS revenue
         |FROM customer
@@ -1538,19 +1481,19 @@ object Advanced {
         |JOIN region ON n_regionkey = r_regionkey
         |WHERE r_name = 'ASIA' AND c_nationkey = s_nationkey
         |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin,
-    "p6_scalar_subquery" ->
+        |ORDER BY revenue DESC, n_name""".stripMargin),
+    Query("p6_scalar_subquery", p6ScalarSubquery,
       """SELECT o_orderkey,
         | round(o_totalprice - (SELECT avg(o_totalprice) FROM orders), 4) AS dev
-        |FROM orders WHERE o_orderkey <= 200 ORDER BY o_orderkey""".stripMargin,
-    "p10_lateral" ->
+        |FROM orders WHERE o_orderkey <= 200 ORDER BY o_orderkey""".stripMargin),
+    Query("p10_lateral", p10Lateral,
       """SELECT n_name, c.c_name, round(c.c_acctbal, 2) AS acctbal
         |FROM nation, LATERAL (
         |  SELECT c_name, c_acctbal FROM customer
         |  WHERE c_nationkey = n_nationkey
         |  ORDER BY c_acctbal DESC, c_name LIMIT 2) c
-        |ORDER BY n_name, c_name""".stripMargin,
-    "p11_recursive_cte" ->
+        |ORDER BY n_name, c_name""".stripMargin),
+    Query("p11_recursive_cte", p11RecursiveCte,
       """WITH RECURSIVE n(i) AS (
         |  SELECT 0 UNION ALL SELECT i + 1 FROM n WHERE i < 39)
         |SELECT DATE '2024-01-01' + i AS day,
@@ -1558,13 +1501,13 @@ object Advanced {
         |  round(coalesce(sum(e.value), 0), 4) AS sum_value
         |FROM n LEFT JOIN events e
         |  ON e.ts::DATE = DATE '2024-01-01' + i
-        |GROUP BY i ORDER BY day""".stripMargin,
-    "p7_in_subquery" ->
+        |GROUP BY i ORDER BY day""".stripMargin),
+    Query("p7_in_subquery", p7InSubquery,
       """SELECT c_custkey, c_name FROM customer
         |WHERE c_custkey IN
         |  (SELECT o_custkey FROM orders WHERE o_totalprice > 250000)
-        |ORDER BY c_custkey""".stripMargin,
-    "p8_cte_nullsafe" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Query("p8_cte_nullsafe", p8CteNullsafe,
       """WITH flagged AS (
         |  SELECT c_custkey, nullif(c_mktsegment, 'BUILDING') AS seg
         |  FROM customer)
@@ -1573,16 +1516,16 @@ object Advanced {
         |  ON a.seg IS NOT DISTINCT FROM b.seg
         | AND a.c_custkey < b.c_custkey
         |WHERE a.c_custkey <= 20 AND b.c_custkey <= 20
-        |ORDER BY a_key, b_key""".stripMargin,
-    "p9_exists" ->
+        |ORDER BY a_key, b_key""".stripMargin),
+    Query("p9_exists", p9Exists,
       """SELECT s_suppkey, s_name,
         |  EXISTS (SELECT 1 FROM lineitem
         |          WHERE l_suppkey = s_suppkey AND l_quantity > 49) AS has_bulk
         |FROM supplier
         |WHERE NOT EXISTS (SELECT 1 FROM lineitem
         |                  WHERE l_suppkey = s_suppkey AND l_discount > 0.09)
-        |ORDER BY s_suppkey""".stripMargin,
-    "w6_range_frame" ->
+        |ORDER BY s_suppkey""".stripMargin),
+    Query("w6_range_frame", w6RangeFrame,
       """WITH o AS (
         |  SELECT o_orderkey, o_custkey,
         |    (o_orderdate::DATE - DATE '1970-01-01') AS d, o_totalprice
@@ -1597,8 +1540,8 @@ object Advanced {
         |SELECT o_orderkey, o_custkey, d::BIGINT AS day_no,
         |  n_90d::BIGINT AS n_90d, spend_90d
         |FROM w WHERE o_orderkey <= 5000
-        |ORDER BY o_orderkey""".stripMargin,
-    "w7_ffill" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("w7_ffill", w7Ffill,
       """WITH o AS (
         |  SELECT o_orderkey, o_custkey,
         |    CASE WHEN o_orderkey % 3 = 0 THEN round(o_totalprice, 2)
@@ -1612,19 +1555,19 @@ object Advanced {
         |  FROM o)
         |SELECT o_orderkey, o_custkey, obs, filled
         |FROM f WHERE o_orderkey <= 5000
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin),
     // Same rank-≤-n spelling (DuckDB's FETCH ... WITH TIES would only
     // tie on the FIRST 10 ROWS boundary, not the 10-rank boundary).
-    "l6_topk_ties" ->
+    Query("l6_topk_ties", l6TopkTies,
       """SELECT o_orderkey, o_orderdate, rk FROM (
         |  SELECT o_orderkey, o_orderdate,
         |    rank() OVER (ORDER BY o_orderdate DESC) AS rk
         |  FROM orders) r
         |WHERE rk <= 10
-        |ORDER BY o_orderdate DESC, o_orderkey""".stripMargin,
+        |ORDER BY o_orderdate DESC, o_orderkey""".stripMargin),
     // DuckDB's bool/bit aggregate family matches Spark's exactly; the
     // xor checksum is order-independent by construction.
-    "a22_bool_bit_aggs" ->
+    Query("a22_bool_bit_aggs", a22BoolBitAggs,
       """SELECT l_returnflag,
         |  bool_and(l_quantity > 0) AS all_positive,
         |  bool_or(l_discount > 0.09) AS any_deep_discount,
@@ -1633,40 +1576,40 @@ object Advanced {
         |  bit_xor(l_orderkey)::BIGINT AS checksum,
         |  count(*)::BIGINT AS n
         |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
+        |ORDER BY l_returnflag""".stripMargin),
     // Typed-NULL fill per absent column, matched by name.
-    "u5_union_missing" ->
+    Query("u5_union_missing", u5UnionMissing,
       """SELECT n_nationkey AS key, n_name AS name, 'a' AS side,
         |  NULL::BIGINT AS region
         |FROM nation
         |UNION ALL
         |SELECT n_nationkey, NULL::VARCHAR, 'b', n_regionkey
         |FROM nation
-        |ORDER BY side, key""".stripMargin,
+        |ORDER BY side, key""".stripMargin),
     // Self-check (✱): the sketch values are engine-specific; the rank
     // bounds are asserted in-plan, constant-true oracle.
-    "a21_approx_quantile" ->
+    Query("a21_approx_quantile", a21ApproxQuantile,
       """SELECT true AS q50_rank_ok, true AS q90_rank_ok,
-        |  true AS q99_rank_ok, true AS nonempty""".stripMargin,
-    "a16_median" ->
+        |  true AS q99_rank_ok, true AS nonempty""".stripMargin),
+    Query("a16_median", a16Median,
       """SELECT l_returnflag, round(median(l_quantity), 4) AS med_qty,
         |  round(median(l_extendedprice), 4) AS med_price,
         |  count(*)::BIGINT AS n_rows
         |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "a17_listagg" ->
+        |ORDER BY l_returnflag""".stripMargin),
+    Query("a17_listagg", a17Listagg,
       """SELECT r_name, count(*)::BIGINT AS n_nations,
         |  string_agg(n_name, ',' ORDER BY n_name) AS nations
         |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
+        |GROUP BY r_name ORDER BY r_name""".stripMargin),
     // Exact restatement is legitimate: capacity >= NDV makes the
     // space-saving sketch exact; the ORDER BY totalizes tie order.
-    "a19_approx_topk" ->
+    Query("a19_approx_topk", a19ApproxTopk,
       """SELECT l_returnflag || l_linestatus AS item,
         |  count(*)::BIGINT AS cnt
         |FROM lineitem GROUP BY item
-        |ORDER BY cnt DESC, item LIMIT 5""".stripMargin,
-    "a18_mode" ->
+        |ORDER BY cnt DESC, item LIMIT 5""".stripMargin),
+    Query("a18_mode", a18Mode,
       """WITH lc AS (
         |  SELECT l_returnflag, l_linenumber, count(*) AS n
         |  FROM lineitem GROUP BY l_returnflag, l_linenumber),
@@ -1689,81 +1632,81 @@ object Advanced {
         |FROM tot t
         |JOIN lr ON t.l_returnflag = lr.l_returnflag AND lr.rk = 1
         |JOIN sr ON t.l_returnflag = sr.l_returnflag AND sr.rk = 1
-        |ORDER BY t.l_returnflag""".stripMargin,
-    "w5_ntile" ->
+        |ORDER BY t.l_returnflag""".stripMargin),
+    Query("w5_ntile", w5Ntile,
       """SELECT o_orderkey, o_orderstatus,
         |  ntile(4) OVER (PARTITION BY o_orderstatus
         |                 ORDER BY o_totalprice, o_orderkey) AS quartile
         |FROM orders WHERE o_orderkey <= 2000
-        |ORDER BY o_orderkey""".stripMargin,
-    "a9_grouping_sets" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("a9_grouping_sets", a9GroupingSets,
       """SELECT coalesce(l_returnflag, '-') AS rf,
         |  coalesce(l_linestatus, '-') AS ls,
         |  grouping(l_returnflag) AS g_rf, grouping(l_linestatus) AS g_ls,
         |  count(*) AS n, round(sum(l_quantity), 2) AS qty
         |FROM lineitem
         |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        |ORDER BY rf, ls""".stripMargin,
-    "a10_pivot" ->
+        |ORDER BY rf, ls""".stripMargin),
+    Query("a10_pivot", a10Pivot,
       """PIVOT (SELECT o_orderpriority, o_orderstatus FROM orders)
         |ON o_orderstatus IN ('F','O','P') USING count(*)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "a10_unpivot" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Query("a10_unpivot", a10Unpivot,
       """SELECT o_orderpriority, o_orderstatus AS status, count(*) AS n
         |FROM orders GROUP BY o_orderpriority, o_orderstatus
-        |ORDER BY o_orderpriority, status""".stripMargin,
-    "l4_offset" ->
+        |ORDER BY o_orderpriority, status""".stripMargin),
+    Query("l4_offset", l4Offset,
       """SELECT o_orderkey, round(o_totalprice, 2) AS price FROM orders
-        |ORDER BY o_orderkey LIMIT 10 OFFSET 50""".stripMargin,
-    "l5_null_ordering" ->
+        |ORDER BY o_orderkey LIMIT 10 OFFSET 50""".stripMargin),
+    Query("l5_null_ordering", l5NullOrdering,
       """SELECT p_partkey,
         | CASE WHEN p_size < 10 THEN NULL ELSE p_size END AS size_opt
         |FROM part
         |ORDER BY size_opt ASC NULLS LAST, p_partkey DESC
-        |LIMIT 200""".stripMargin,
-    "f14_decimal" ->
+        |LIMIT 200""".stripMargin),
+    Query("f14_decimal", f14Decimal,
       """SELECT l_returnflag,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS gross,
         |  CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
         |    * (1 - CAST(l_discount AS DECIMAL(12,2))) AS DECIMAL(38,4))) AS VARCHAR) AS net,
         |  CAST(min(CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS min_price,
         |  CAST(max(CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS max_price
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "w4_distribution" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("w4_distribution", w4Distribution,
       """SELECT s_nationkey, s_suppkey,
         | round(percent_rank() OVER w, 6) AS pr,
         | round(cume_dist() OVER w, 6) AS cd
         |FROM supplier
         |WINDOW w AS (PARTITION BY s_nationkey ORDER BY s_acctbal, s_suppkey)
-        |ORDER BY s_nationkey, s_suppkey""".stripMargin,
-    "f9_nested_rt" ->
+        |ORDER BY s_nationkey, s_suppkey""".stripMargin),
+    Query("f9_nested_rt", f9NestedRt,
       """SELECT n_nationkey, n_name, n_regionkey FROM nation
-        |ORDER BY n_nationkey""".stripMargin,
-    "f10_map_rt" ->
-      "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey",
-    "k6_bucketed_join" ->
+        |ORDER BY n_nationkey""".stripMargin),
+    Query("f10_map_rt", f10MapRt,
+      "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey"),
+    Query("k6_bucketed_join", k6BucketedJoin,
       """SELECT o_orderstatus, count(*) AS n_items,
         | round(sum(l_quantity), 2) AS qty
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "j8_salted_skew" ->
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Query("j8_salted_skew", j8SaltedSkew,
       """SELECT s_nationkey, count(*) AS n,
         | round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS revenue
         |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin,
-    "j11_bloom_join" ->
+        |GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin),
+    Query("j11_bloom_join", j11BloomJoin,
       """SELECT o_orderstatus, count(*) AS n_items,
         | round(sum(l_quantity), 2) AS qty
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 200000
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "j12_dpp" ->
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Query("j12_dpp", j12Dpp,
       """SELECT strftime(o_orderdate, '%Y-%m') AS om,
         |  count(*)::BIGINT AS n_orders,
         |  round(sum(o_totalprice), 2) AS sum_price
         |FROM orders
         |WHERE strftime(o_orderdate, '%Y-%m')
         |      IN ('1995-04', '1995-05', '1995-06')
-        |GROUP BY om ORDER BY om""".stripMargin,
+        |GROUP BY om ORDER BY om""".stripMargin),
   )
 }

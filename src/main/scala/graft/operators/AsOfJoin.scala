@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Q, Tables}
+import graft.{Q, Query, Tables}
 
 /** As-of (temporal) join — J7, the canonical "operator Spark lacks".
   *
@@ -207,17 +207,10 @@ object AsOfJoin {
       .orderBy(col("event_id"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "j13_asof_tolerance" -> j13AsofTolerance,
-    "j7_asof" -> j7Asof,
-    "j9_range" -> j9Range,
-    "j10_interval_overlap" -> j10Overlap,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // Native ASOF LEFT JOIN picks the match; the SAME staleness CASE
     // then nulls payloads older than the tolerance.
-    "j13_asof_tolerance" ->
+    Query("j13_asof_tolerance", j13AsofTolerance,
       """WITH clicks AS (
         |  SELECT user_id, epoch_us(ts) AS cts,
         |    round(max(value), 2) AS click_value
@@ -230,8 +223,8 @@ object AsOfJoin {
         |       END AS click_value
         |FROM views v ASOF LEFT JOIN clicks c
         |  ON v.user_id = c.user_id AND v.vts >= c.cts
-        |ORDER BY v.event_id""".stripMargin,
-    "j10_interval_overlap" ->
+        |ORDER BY v.event_id""".stripMargin),
+    Query("j10_interval_overlap", j10Overlap,
       """WITH base AS (
         |  SELECT o_orderkey AS id, epoch_us(o_orderdate) AS s,
         |    epoch_us(o_orderdate)
@@ -245,8 +238,8 @@ object AsOfJoin {
         |SELECT date_trunc('month', make_timestamp(a_s)) AS month,
         |  count(*)::BIGINT AS n_pairs,
         |  sum(a_id + b_id)::BIGINT AS sum_pair_keys
-        |FROM j GROUP BY month ORDER BY month""".stripMargin,
-    "j9_range" ->
+        |FROM j GROUP BY month ORDER BY month""".stripMargin),
+    Query("j9_range", j9Range,
       """WITH w AS (
         |  SELECT event_id AS window_id, epoch_us(ts) AS s,
         |    epoch_us(ts) + 7200000000 AS e
@@ -261,8 +254,8 @@ object AsOfJoin {
         |  SELECT window_id, count(*)::BIGINT AS n_events,
         |    round(sum(value), 4) AS sum_value
         |  FROM j GROUP BY window_id) a USING (window_id)
-        |ORDER BY window_id""".stripMargin,
-    "j7_asof" ->
+        |ORDER BY window_id""".stripMargin),
+    Query("j7_asof", j7Asof,
       """WITH clicks AS (
         |  SELECT user_id, ts, round(max(value), 2) AS click_value
         |  FROM events WHERE event_type = 'click' GROUP BY user_id, ts),
@@ -272,6 +265,6 @@ object AsOfJoin {
         |SELECT v.event_id, c.click_value
         |FROM views v ASOF LEFT JOIN clicks c
         |  ON v.user_id = c.user_id AND v.ts >= c.ts
-        |ORDER BY v.event_id""".stripMargin,
+        |ORDER BY v.event_id""".stripMargin),
   )
 }

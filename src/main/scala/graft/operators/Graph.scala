@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Q, Tables}
+import graft.{Q, Query, Tables}
 import graft.Tables.{load => t}
 
 /** Iterative graph analytics expressed as relational passes — the
@@ -431,16 +431,6 @@ object Graph {
       .orderBy(col("node"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "g7_sssp" -> g7Sssp,
-    "g6_hits" -> g6Hits,
-    "g1_pagerank" -> g1PageRank,
-    "g2_triangles" -> g2Triangles,
-    "g3_bfs" -> g3Bfs,
-    "g4_labelprop" -> g4LabelProp,
-    "g5_kcore" -> g5KCore,
-  )
-
   // AS MATERIALIZED: DuckDB inlines plain CTEs, so 8 unrolled rounds
   // would re-open the lineitem parquet once per reference and trip the
   // fd limit; materializing evaluates each round exactly once.
@@ -520,8 +510,8 @@ object Graph {
        |  WHERE rk = 1)""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "g5_kcore" ->
+  val queries: Seq[Query] = Seq(
+    Query("g5_kcore", g5KCore,
       s"""WITH lp AS MATERIALIZED (
          |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
          |e0 AS MATERIALIZED (
@@ -533,8 +523,8 @@ object Graph {
          |    SELECT u AS n FROM e8 UNION ALL SELECT v AS n FROM e8)
          |  GROUP BY n)
          |SELECT n AS node, c::BIGINT AS deg, true AS converged
-         |FROM df ORDER BY node""".stripMargin,
-    "g4_labelprop" ->
+         |FROM df ORDER BY node""".stripMargin),
+    Query("g4_labelprop", g4LabelProp,
       s"""WITH rev AS (
          |  SELECT s_nationkey AS src, c_nationkey AS dst,
          |    round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS rv
@@ -556,8 +546,8 @@ object Graph {
          |    UNION ALL SELECT n_nationkey, n_nationkey FROM nation)),
          |l0 AS (SELECT n_nationkey AS node, n_nationkey AS lbl FROM nation),
          |${(1 to 4).map(lpIter).mkString(",\n")}
-         |SELECT node, lbl AS community FROM l4 ORDER BY node""".stripMargin,
-    "g3_bfs" ->
+         |SELECT node, lbl AS community FROM l4 ORDER BY node""".stripMargin),
+    Query("g3_bfs", g3Bfs,
       """WITH lp AS (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |e0 AS (
@@ -581,8 +571,8 @@ object Graph {
         |  UNION ALL
         |  SELECT adj.d AS node, d2.dist + 1 AS dist
         |  FROM d2 JOIN adj ON adj.s = d2.node) GROUP BY node)
-        |SELECT node, dist::BIGINT AS dist FROM d3 ORDER BY node""".stripMargin,
-    "g2_triangles" ->
+        |SELECT node, dist::BIGINT AS dist FROM d3 ORDER BY node""".stripMargin),
+    Query("g2_triangles", g2Triangles,
       """WITH lp AS (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |e AS (
@@ -598,8 +588,8 @@ object Graph {
         |  UNION ALL SELECT b FROM tri
         |  UNION ALL SELECT c FROM tri)
         |SELECT node, count(*)::BIGINT AS n_tri
-        |FROM corners GROUP BY node ORDER BY node""".stripMargin,
-    "g1_pagerank" ->
+        |FROM corners GROUP BY node ORDER BY node""".stripMargin),
+    Query("g1_pagerank", g1PageRank,
       s"""WITH rev AS (
          |  SELECT s_nationkey AS src, c_nationkey AS dst,
          |    round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS rv
@@ -619,8 +609,8 @@ object Graph {
          |  FROM nodes),
          |${(1 to 10).map(oracleIter).mkString(",\n")}
          |SELECT node, round(r, 8) AS rank FROM r10
-         |ORDER BY node""".stripMargin,
-    "g7_sssp" ->
+         |ORDER BY node""".stripMargin),
+    Query("g7_sssp", g7Sssp,
       s"""WITH edges AS MATERIALIZED (
          |  SELECT DISTINCT s_nationkey AS src_n, c_nationkey AS dst_n,
          |    (1 + (7 * s_nationkey + 13 * c_nationkey) % 5)::BIGINT
@@ -636,8 +626,8 @@ object Graph {
          |    CASE WHEN node = 1 THEN 0::BIGINT ELSE NULL END AS d
          |  FROM nodes),
          |${(1 to 6).map(ssspIter).mkString(",\n")}
-         |SELECT node, d AS dist FROM d6 ORDER BY node""".stripMargin,
-    "g6_hits" ->
+         |SELECT node, d AS dist FROM d6 ORDER BY node""".stripMargin),
+    Query("g6_hits", g6Hits,
       s"""WITH rev AS MATERIALIZED (
          |  SELECT s_nationkey AS src, c_nationkey AS dst,
          |    round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS rv
@@ -659,6 +649,6 @@ object Graph {
          |FROM nodes n
          |JOIN h5 ON n.node = h5.node
          |JOIN a5 ON n.node = a5.node
-         |ORDER BY n.node""".stripMargin,
+         |ORDER BY n.node""".stripMargin),
   )
 }

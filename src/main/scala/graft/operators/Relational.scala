@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Q, Tables}
+import graft.{Q, Query, Tables}
 import graft.Tables.{load => t}
 
 /** Relational operator suite — SURVEY.md §2.3-2.8 (projection/filter,
@@ -706,57 +706,15 @@ object Relational {
       .orderBy(col("region"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "a11_sketch_table" -> a11SketchTable,
-    "a12_rolling_uniques" -> a12RollingUniques,
-    "a23_sketch_setops" -> a23SketchSetops,
-    "a24_sketch_groups" -> a24SketchGroups,
-    "a13_argmax" -> a13ArgMax,
-    "a14_regr" -> a14Regr,
-    "x6_approx_rewrite" -> x6ApproxRewrite,
-    "p3_select_star" -> p3SelectStar,
-    "p5_filter" -> p5Filter,
-    "l1_limit" -> l1Limit,
-    "l2_orderby" -> l2OrderBy,
-    "l3_topk" -> l3TopK,
-    "j1_inner" -> j1Inner,
-    "j3_left_outer" -> j3LeftOuter,
-    "j3_full_outer" -> j3FullOuter,
-    "j4_semi" -> j4Semi,
-    "j4_anti" -> j4Anti,
-    "j5_cross" -> j5Cross,
-    "j5_theta" -> j5Theta,
-    "j6_broadcast" -> j6Broadcast,
-    "q1_agg" -> q1Agg,
-    "a2_global" -> a2Global,
-    "a3_count_distinct" -> a3CountDistinct,
-    "a4_approx" -> a4Approx,
-    "a5_rollup" -> a5Rollup,
-    "a5_cube" -> a5Cube,
-    "a6_having" -> a6Having,
-    "a7_percentile" -> a7Percentile,
-    "a8_collect" -> a8Collect,
-    "w1_rank" -> w1Rank,
-    "w2_lag" -> w2Lag,
-    "w3_frame" -> w3Frame,
-    "u1_union_all" -> u1UnionAll,
-    "u1_union" -> u1Union,
-    "u2_intersect" -> u2Intersect,
-    "u2_except" -> u2Except,
-    "u3_distinct" -> u3Distinct,
-    "u4_except_all" -> u4ExceptAll,
-    "u4_intersect_all" -> u4IntersectAll,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "a11_sketch_table" ->
+  val queries: Seq[Query] = Seq(
+    Query("a11_sketch_table", a11SketchTable,
       """SELECT true AS groups_within_bound, true AS all_groups_present,
-        |  true AS global_within_bound""".stripMargin,
-    "a12_rolling_uniques" ->
-      "SELECT true AS rolling_within_bound, true AS month_covered",
+        |  true AS global_within_bound""".stripMargin),
+    Query("a12_rolling_uniques", a12RollingUniques,
+      "SELECT true AS rolling_within_bound, true AS month_covered"),
     // Exact set algebra restated from orders; the sketch estimates are
     // engine-specific and self-check in-plan (the ✱ convention).
-    "a23_sketch_setops" ->
+    Query("a23_sketch_setops", a23SketchSetops,
       """WITH m AS (
         |  SELECT o_custkey,
         |    max(CASE WHEN year(o_orderdate) = 1995 THEN 1 ELSE 0 END) AS a,
@@ -770,10 +728,10 @@ object Relational {
         |  sum(a * (1 - b))::BIGINT AS exact_diff,
         |  true AS a_within, true AS b_within, true AS union_within,
         |  true AS inter_within, true AS diff_within
-        |FROM m""".stripMargin,
+        |FROM m""".stripMargin),
     // Per-region exact set algebra restated from the facts; estimates
     // self-check in-plan against the persisted sketch table (✱).
-    "a24_sketch_groups" ->
+    Query("a24_sketch_groups", a24SketchGroups,
       """WITH f AS (
         |  SELECT DISTINCT n.n_regionkey AS region,
         |    year(o.o_orderdate) AS y, o.o_custkey
@@ -790,10 +748,10 @@ object Relational {
         |  sum(a * b)::BIGINT AS exact_inter,
         |  sum(a * (1 - b))::BIGINT AS exact_diff,
         |  true AS union_within, true AS inter_within, true AS diff_within
-        |FROM m GROUP BY region ORDER BY region""".stripMargin,
-    "x6_approx_rewrite" ->
-      "SELECT true AS approx_within_bound, true AS all_groups",
-    "a13_argmax" ->
+        |FROM m GROUP BY region ORDER BY region""".stripMargin),
+    Query("x6_approx_rewrite", x6ApproxRewrite,
+      "SELECT true AS approx_within_bound, true AS all_groups"),
+    Query("a13_argmax", a13ArgMax,
       """SELECT c_nationkey,
         |  arg_max(c_name, round(c_acctbal * 100)::BIGINT * 10000000
         |    + c_custkey) AS richest,
@@ -802,8 +760,8 @@ object Relational {
         |    + c_custkey) AS poorest,
         |  round(min(c_acctbal), 2) AS bottom_bal,
         |  count(*)::BIGINT AS n
-        |FROM customer GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-    "a14_regr" ->
+        |FROM customer GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin),
+    Query("a14_regr", a14Regr,
       """SELECT l_returnflag,
         |  round(regr_slope(l_extendedprice, l_quantity), 6) AS slope,
         |  round(regr_intercept(l_extendedprice, l_quantity), 6)
@@ -811,10 +769,10 @@ object Relational {
         |  round(regr_r2(l_extendedprice, l_quantity), 6) AS r2,
         |  round(corr(l_extendedprice, l_quantity), 6) AS pearson,
         |  count(*)::BIGINT AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "p3_select_star" ->
-      "SELECT * FROM region ORDER BY r_regionkey",
-    "p5_filter" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("p3_select_star", p3SelectStar,
+      "SELECT * FROM region ORDER BY r_regionkey"),
+    Query("p5_filter", p5Filter,
       """SELECT l_orderkey, l_linenumber, round(l_quantity,2) AS qty,
         | round(l_extendedprice,2) AS price
         |FROM lineitem
@@ -823,54 +781,54 @@ object Relational {
         |  AND l_shipdate >= TIMESTAMP '1997-01-01'
         |  AND NOT (l_discount > 0.05)
         |  AND (l_linestatus = 'F' OR l_tax < 0.04)
-        |ORDER BY l_orderkey, l_linenumber, qty, price""".stripMargin,
-    "l1_limit" ->
+        |ORDER BY l_orderkey, l_linenumber, qty, price""".stripMargin),
+    Query("l1_limit", l1Limit,
       """SELECT o_orderkey, o_orderstatus, round(o_totalprice,2) AS price
-        |FROM orders ORDER BY o_orderkey LIMIT 10""".stripMargin,
-    "l2_orderby" ->
+        |FROM orders ORDER BY o_orderkey LIMIT 10""".stripMargin),
+    Query("l2_orderby", l2OrderBy,
       """SELECT s_suppkey, s_name, round(s_acctbal,2) AS bal
-        |FROM supplier ORDER BY bal DESC, s_suppkey""".stripMargin,
-    "l3_topk" ->
+        |FROM supplier ORDER BY bal DESC, s_suppkey""".stripMargin),
+    Query("l3_topk", l3TopK,
       """SELECT l_orderkey, l_linenumber, round(l_extendedprice,2) AS price
         |FROM lineitem
-        |ORDER BY price DESC, l_orderkey, l_linenumber LIMIT 15""".stripMargin,
-    "j1_inner" ->
+        |ORDER BY price DESC, l_orderkey, l_linenumber LIMIT 15""".stripMargin),
+    Query("j1_inner", j1Inner,
       """SELECT o_orderkey, c_name, round(o_totalprice,2) AS price
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-    "j3_left_outer" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("j3_left_outer", j3LeftOuter,
       """SELECT c_custkey, count(o_orderkey) AS n_orders,
         | round(coalesce(sum(o_totalprice),0.0),2) AS total
         |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin,
-    "j3_full_outer" ->
+        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin),
+    Query("j3_full_outer", j3FullOuter,
       """SELECT coalesce(n_nationkey,-1) AS nkey, coalesce(n_name,'?') AS nname,
         | coalesce(s_suppkey,-1) AS skey
         |FROM nation FULL OUTER JOIN supplier ON n_nationkey = s_nationkey
-        |ORDER BY nkey, skey""".stripMargin,
-    "j4_semi" ->
+        |ORDER BY nkey, skey""".stripMargin),
+    Query("j4_semi", j4Semi,
       """SELECT c_custkey, c_name FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders
         |  WHERE o_custkey = c_custkey AND o_totalprice > 150000)
-        |ORDER BY c_custkey""".stripMargin,
-    "j4_anti" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Query("j4_anti", j4Anti,
       """SELECT c_custkey, c_name FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "j5_cross" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Query("j5_cross", j5Cross,
       """SELECT r_name, n_name FROM region CROSS JOIN nation
-        |ORDER BY r_name, n_name""".stripMargin,
-    "j5_theta" ->
+        |ORDER BY r_name, n_name""".stripMargin),
+    Query("j5_theta", j5Theta,
       """SELECT s_suppkey, s_name, count(*) AS n_bigger
         |FROM supplier JOIN nation ON n_nationkey > s_nationkey
-        |GROUP BY s_suppkey, s_name ORDER BY s_suppkey""".stripMargin,
-    "j6_broadcast" ->
+        |GROUP BY s_suppkey, s_name ORDER BY s_suppkey""".stripMargin),
+    Query("j6_broadcast", j6Broadcast,
       """SELECT p_brand,
         | round(sum(l_extendedprice * (1.0 - l_discount)),4) AS revenue,
         | count(*) AS n_items
         |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    "q1_agg" ->
+        |GROUP BY p_brand ORDER BY p_brand""".stripMargin),
+    Query("q1_agg", q1Agg,
       """SELECT l_returnflag, l_linestatus,
         | round(sum(l_quantity),2) AS sum_qty,
         | round(sum(l_extendedprice),2) AS sum_base_price,
@@ -883,45 +841,45 @@ object Relational {
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '2001-09-02'
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "a2_global" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Query("a2_global", a2Global,
       """SELECT count(*) AS n_rows, round(sum(l_extendedprice),2) AS sum_price,
         | round(min(l_quantity),2) AS min_qty, round(max(l_quantity),2) AS max_qty,
         | round(avg(l_discount),6) AS avg_disc
-        |FROM lineitem""".stripMargin,
-    "a3_count_distinct" ->
+        |FROM lineitem""".stripMargin),
+    Query("a3_count_distinct", a3CountDistinct,
       """SELECT count(DISTINCT l_partkey) AS n_parts,
         | count(DISTINCT l_suppkey) AS n_supps,
         | count(DISTINCT l_orderkey) AS n_orders
-        |FROM lineitem""".stripMargin,
-    "a5_rollup" ->
+        |FROM lineitem""".stripMargin),
+    Query("a5_rollup", a5Rollup,
       """SELECT coalesce(l_returnflag,'ALL') AS rf,
         | coalesce(l_linestatus,'ALL') AS ls,
         | round(sum(l_quantity),2) AS sum_qty, count(*) AS n
         |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY rf, ls""".stripMargin,
-    "a5_cube" ->
+        |ORDER BY rf, ls""".stripMargin),
+    Query("a5_cube", a5Cube,
       """SELECT coalesce(o_orderstatus,'ALL') AS status,
         | coalesce(o_orderpriority,'ALL') AS priority,
         | count(*) AS n, round(sum(o_totalprice),2) AS total
         |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        |ORDER BY status, priority""".stripMargin,
-    "a6_having" ->
+        |ORDER BY status, priority""".stripMargin),
+    Query("a6_having", a6Having,
       """SELECT l_suppkey, round(sum(l_quantity),2) AS sum_qty, count(*) AS n
         |FROM lineitem GROUP BY l_suppkey
         |HAVING round(sum(l_quantity),2) > 100
-        |ORDER BY l_suppkey""".stripMargin,
-    "a7_percentile" ->
+        |ORDER BY l_suppkey""".stripMargin),
+    Query("a7_percentile", a7Percentile,
       """SELECT l_returnflag,
         | round(quantile_cont(l_extendedprice, 0.25),4) AS p25,
         | round(quantile_cont(l_extendedprice, 0.5),4) AS p50,
         | round(quantile_cont(l_extendedprice, 0.75),4) AS p75
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "a8_collect" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("a8_collect", a8Collect,
       """SELECT o_orderstatus,
         | string_agg(DISTINCT o_orderpriority, ',' ORDER BY o_orderpriority) AS priorities
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "w1_rank" ->
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Query("w1_rank", w1Rank,
       """SELECT o_orderpriority, rn, rnk, drnk, quartile, o_orderkey, price FROM (
         | SELECT o_orderpriority,
         |  row_number() OVER w AS rn, rank() OVER w AS rnk,
@@ -930,8 +888,8 @@ object Relational {
         | FROM orders
         | WINDOW w AS (PARTITION BY o_orderpriority
         |              ORDER BY o_totalprice DESC, o_orderkey)
-        |) WHERE rn <= 3 ORDER BY o_orderpriority, rn""".stripMargin,
-    "w2_lag" ->
+        |) WHERE rn <= 3 ORDER BY o_orderpriority, rn""".stripMargin),
+    Query("w2_lag", w2Lag,
       """SELECT * FROM (
         | SELECT o_custkey, o_orderkey,
         |  round(lag(o_totalprice,1) OVER w, 2) AS prev_price,
@@ -940,52 +898,52 @@ object Relational {
         | FROM orders
         | WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
         |) WHERE o_custkey <= 50
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "w3_frame" ->
+        |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    Query("w3_frame", w3Frame,
       """SELECT l_suppkey, l_orderkey, l_linenumber,
         | round(sum(l_quantity) OVER (PARTITION BY l_suppkey
         |   ORDER BY l_shipdate, l_orderkey, l_linenumber, l_quantity
         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),2) AS running_qty
         |FROM lineitem WHERE l_suppkey <= 3
-        |ORDER BY l_suppkey, l_orderkey, l_linenumber, running_qty""".stripMargin,
-    "a4_approx" ->
-      "SELECT true AS distinct_ok, true AS median_ok",
-    "u1_union_all" ->
+        |ORDER BY l_suppkey, l_orderkey, l_linenumber, running_qty""".stripMargin),
+    Query("a4_approx", a4Approx,
+      "SELECT true AS distinct_ok, true AS median_ok"),
+    Query("u1_union_all", u1UnionAll,
       """SELECT CAST(c_custkey AS BIGINT) AS id, 'customer' AS kind FROM customer
         |UNION ALL
         |SELECT CAST(s_suppkey AS BIGINT) AS id, 'supplier' AS kind FROM supplier
-        |ORDER BY kind, id""".stripMargin,
-    "u1_union" ->
+        |ORDER BY kind, id""".stripMargin),
+    Query("u1_union", u1Union,
       """SELECT c_nationkey AS nk FROM customer
         |UNION
         |SELECT s_nationkey AS nk FROM supplier
-        |ORDER BY nk""".stripMargin,
-    "u2_intersect" ->
+        |ORDER BY nk""".stripMargin),
+    Query("u2_intersect", u2Intersect,
       """SELECT c_nationkey AS nk FROM customer
         |INTERSECT
         |SELECT s_nationkey AS nk FROM supplier
-        |ORDER BY nk""".stripMargin,
-    "u2_except" ->
+        |ORDER BY nk""".stripMargin),
+    Query("u2_except", u2Except,
       """SELECT c_nationkey AS nk FROM customer
         |EXCEPT
         |SELECT s_nationkey AS nk FROM supplier
-        |ORDER BY nk""".stripMargin,
-    "u3_distinct" ->
+        |ORDER BY nk""".stripMargin),
+    Query("u3_distinct", u3Distinct,
       """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "u4_except_all" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Query("u4_except_all", u4ExceptAll,
       """WITH r AS (
         |  SELECT l_suppkey AS k FROM lineitem
         |  EXCEPT ALL
         |  SELECT s_suppkey FROM supplier)
         |SELECT k, count(*)::BIGINT AS n FROM r
-        |GROUP BY k ORDER BY k""".stripMargin,
-    "u4_intersect_all" ->
+        |GROUP BY k ORDER BY k""".stripMargin),
+    Query("u4_intersect_all", u4IntersectAll,
       """WITH r AS (
         |  SELECT l_suppkey AS k FROM lineitem WHERE l_quantity <= 25
         |  INTERSECT ALL
         |  SELECT l_suppkey FROM lineitem WHERE l_quantity > 25)
         |SELECT k, count(*)::BIGINT AS n FROM r
-        |GROUP BY k ORDER BY k""".stripMargin,
+        |GROUP BY k ORDER BY k""".stripMargin),
   )
 }

@@ -2,9 +2,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 package object graft {
 
-  /** A registered query: (session, testdata dir) → result. Every module's
-    * `queries` map and [[SparkEntry.queries]] are keyed to this type. */
+  /** A query program: (session, testdata dir) → result. */
   type Q = (SparkSession, String) => DataFrame
+
+  /** A registered query: its name, its program, and the DuckDB SQL that
+    * computes the same rows over the same parquet tables, with identical
+    * column aliases. Each module lists its own in `queries`;
+    * [[SparkEntry.registry]] joins them. `build` is defined inside its
+    * module's object, so a caller can tell the module from its class. */
+  final case class Query(name: String, build: Q, oracle: String)
 
   /** Run `body` with the session confs `kvs` set, then put every key
     * back as it was — its previous explicit value, or unset if it had

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Q
+import graft.{Q, Query}
 import graft.Tables.{load => t}
 
 /** Federated sources (SURVEY §2.1 S8/S9, §2.4 J2) — the reference's
@@ -249,40 +249,31 @@ object Federated {
       .orderBy(col("r_name"), col("n_name"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "s8_kv_join" -> s8KvJoin,
-    "s8b_kv_sink_rt" -> s8bKvSinkRt,
-    "s9_jdbc" -> s9Jdbc,
-    "s9b_jdbc_agg_push" -> s9bJdbcAggPush,
-    "s9c_jdbc_join_push" -> s9cJdbcJoinPush,
-    "j2_federated" -> j2Federated,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "s8_kv_join" ->
+  val queries: Seq[Query] = Seq(
+    Query("s8_kv_join", s8KvJoin,
       """SELECT s_suppkey, s_name, n_name AS nation_name
         |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |ORDER BY s_suppkey""".stripMargin,
-    "s8b_kv_sink_rt" ->
+        |ORDER BY s_suppkey""".stripMargin),
+    Query("s8b_kv_sink_rt", s8bKvSinkRt,
       """SELECT s_suppkey AS kv_key, s_name AS name,
         |  s_nationkey AS nationkey
-        |FROM supplier ORDER BY kv_key""".stripMargin,
-    "s9_jdbc" ->
-      "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey",
-    "s9b_jdbc_agg_push" ->
+        |FROM supplier ORDER BY kv_key""".stripMargin),
+    Query("s9_jdbc", s9Jdbc,
+      "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey"),
+    Query("s9b_jdbc_agg_push", s9bJdbcAggPush,
       """SELECT o_orderstatus, count(*)::BIGINT AS n,
         |  sum(o_custkey)::BIGINT AS sum_cust,
         |  max(o_totalprice) AS max_price
         |FROM orders GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin,
-    "s9c_jdbc_join_push" ->
+        |ORDER BY o_orderstatus""".stripMargin),
+    Query("s9c_jdbc_join_push", s9cJdbcJoinPush,
       """SELECT r_name, count(*)::BIGINT AS n_nations,
         |  sum(n_nationkey)::BIGINT AS sum_key
         |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
-    "j2_federated" ->
+        |GROUP BY r_name ORDER BY r_name""".stripMargin),
+    Query("j2_federated", j2Federated,
       """SELECT r_name, n_name, n_regionkey AS kv_regionkey
         |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |ORDER BY r_name, n_name""".stripMargin,
+        |ORDER BY r_name, n_name""".stripMargin),
   )
 }

@@ -3,8 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.StructType
-import graft.{Q, withConf}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import graft.{Q, Query, withConf}
 import graft.Tables.{load => t}
 
 /** Event-time windowing over the events table (SURVEY §2.10): the
@@ -207,6 +207,23 @@ object EventWindows {
       .orderBy(col("user_id"))
   }
 
+  /** The schema a parquet read of `df`, once written, gives back: every
+    * field, array element and map value nullable at every nesting
+    * level (what a file source reports). Taken from the frame itself,
+    * so a stream over a just-written landing dir starts without a
+    * read-back inference job. */
+  private[streaming] def writtenSchema(df: DataFrame): StructType = {
+    def nullable(t: DataType): DataType = t match {
+      case st: StructType => StructType(st.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+      case MapType(k, v, _) =>
+        MapType(nullable(k), nullable(v), valueContainsNull = true)
+      case other => other
+    }
+    nullable(df.schema).asInstanceOf[StructType]
+  }
+
   /** Collect-free replay staging (round-8 verdict item 4): partition
     * `df` into ONE parquet file per ascending value of its long batch
     * column `b` (dropped from the staged schema — it is harness
@@ -279,9 +296,8 @@ object EventWindows {
     val n = sides.head._1.size
     require(sides.forall(_._1.size == n),
       s"replay misaligned: ${sides.map(_._1.size).mkString(" vs ")} batches")
-    val streams = sides.map { case (files, landing) =>
-      s.readStream.schema(s.read.parquet(files.head.toString).schema)
-        .parquet(landing)
+    val streams = staged.zip(sides).map { case (df, (_, landing)) =>
+      s.readStream.schema(writtenSchema(df.drop("b"))).parquet(landing)
     }
     val q = withConf(s, statePin)(start(streams))
     try for (i <- 0 until n) {
@@ -324,13 +340,10 @@ object EventWindows {
     staged.write.mode("overwrite").parquet(landing)
     val corpus = docs.filter(col("doc_id") % 5 === 0)
       .select(sha2(col("text"), 256).as("digest")).distinct()
-    // the schema of the frame just written, as a file read gives it back
-    // (every field nullable), without a read-back inference job
-    val schema = StructType(staged.schema.map(_.copy(nullable = true)))
     val sink = "ev11_out_" +
       java.util.UUID.randomUUID.toString.replace("-", "")
     val q = StreamDemo.incrementalDedupStream(
-        s.readStream.schema(schema).parquet(landing), corpus)
+        s.readStream.schema(writtenSchema(staged)).parquet(landing), corpus)
       .select(col("digest"))
       .writeStream.format("memory").queryName(sink)
       .outputMode("append").start()
@@ -1071,7 +1084,7 @@ object EventWindows {
     docs.repartition(16).write.parquet(landing)
     var batches = 0
     val stream = s.readStream
-      .schema(s.read.parquet(landing).schema)
+      .schema(writtenSchema(docs))
       .option("maxFilesPerTrigger", "4")
       .parquet(landing)
       .groupBy(col("lang"))
@@ -1113,9 +1126,8 @@ object EventWindows {
       .select(col("doc_id"), col("lang"), col("n_chars"))
     docs.filter(col("doc_id") % 2 === 0)
       .repartition(4).write.mode("append").parquet(landing)
-    val schema = s.read.parquet(landing).schema
     def run(): Unit = {
-      val q = withConf(s, statePin)(s.readStream.schema(schema)
+      val q = withConf(s, statePin)(s.readStream.schema(writtenSchema(docs))
         .option("maxFilesPerTrigger", "2").parquet(landing)
         .writeStream.format("parquet")
         .option("path", sink).option("checkpointLocation", ckpt)
@@ -1325,59 +1337,22 @@ object EventWindows {
     }.reduce(_.unionByName(_)).orderBy(col("version"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "ev28_stream_txn_sink" -> ev28StreamTxnSink,
-    "ev24_stream_cdc" -> ev24StreamCdc,
-    "ev23_session_window" -> ev23SessionWindow,
-    "ev22_tws_sessions" -> ev22TwsSessions,
-    "ev21_rocksdb_sessions" -> ev21RocksdbSessions,
-    "ev17_stream_left_join" -> ev17StreamLeftJoin,
-    "ev25_stream_full_join" -> ev25StreamFullJoin,
-    "ev16_stream_route" -> ev16StreamRoute,
-    "ev18_stream_upsert" -> ev18StreamUpsert,
-    "ev19_stream_backfill" -> ev19StreamBackfill,
-    "ev20_stream_restart" -> ev20StreamRestart,
-    "ev15_stream_semdedup" -> ev15StreamSemdedup,
-    "ev14_stream_windows" -> ev14StreamWindows,
-    "ev13_stream_join" -> ev13StreamJoin,
-    "ev12_stream_sessions" -> ev12StreamSessions,
-    "ev11_stream_dedup" -> ev11StreamDedup,
-    "ev26_stream_dropdup" -> ev26StreamDropdup,
-    "ev29_stream_url_dedup" -> ev29StreamUrlDedup,
-    "ev30_stream_hll" -> ev30StreamHll,
-    "ev31_stream_ivf_ingest" -> ev31StreamIvfIngest,
-    "ev32_stream_lsh_ingest" -> ev32StreamLshIngest,
-    "ev33_stream_cluster_maintain" -> ev33StreamClusterMaintain,
-    "ev34_stream_priority_sample" -> ev34StreamPrioritySample,
-    "ev27_rocksdb_dropdup" -> ev27RocksdbDropdup,
-    "ev10_burstiness" -> ev10Burstiness,
-    "ev9_attribution" -> ev9Attribution,
-    "ev1_tumbling" -> ev1Tumbling,
-    "ev2_session" -> ev2Session,
-    "ev3_sliding" -> ev3Sliding,
-    "ev4_resample" -> ev4Resample,
-    "ev5_funnel" -> ev5Funnel,
-    "ev6_retention" -> ev6Retention,
-    "ev7_markov" -> ev7Markov,
-    "ev8_anomaly" -> ev8Anomaly,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // Self-check (✱): index equality / recall bounds asserted in-plan.
-    "ev31_stream_ivf_ingest" ->
+    Query("ev31_stream_ivf_ingest", ev31StreamIvfIngest,
       """SELECT true AS ingest_equals_memory, true AS recall_ok,
-        |  true AS multi_batch""".stripMargin,
+        |  true AS multi_batch""".stripMargin),
     // Self-check ✱: streamed LSH-table ingest equals the sequential
     // in-memory admission over the same monotone-id buckets.
-    "ev32_stream_lsh_ingest" ->
+    Query("ev32_stream_lsh_ingest", ev32StreamLshIngest,
       """SELECT true AS stream_equals_sequential, true AS multi_batch,
-        |  true AS mix_exercised""".stripMargin,
-    "ev33_stream_cluster_maintain" ->
+        |  true AS mix_exercised""".stripMargin),
+    Query("ev33_stream_cluster_maintain", ev33StreamClusterMaintain,
       """SELECT true AS stream_equals_full, true AS multi_batch,
-        |  true AS merged_across_clusters""".stripMargin,
+        |  true AS merged_across_clusters""".stripMargin),
     // The FULL batch priority-sample oracle verbatim: the streamed
     // bounded state must finish into the identical sample/τ/estimator.
-    "ev34_stream_priority_sample" ->
+    Query("ev34_stream_priority_sample", ev34StreamPrioritySample,
       """WITH w AS (
         |  SELECT lang, doc_id,
         |    least(n_chars, 1048576)::BIGINT AS w,
@@ -1397,11 +1372,11 @@ object EventWindows {
         |  greatest(r.w * 1000000, coalesce(t.tau_micro, 0))::BIGINT AS est_micro
         |FROM r LEFT JOIN tau t ON r.lang = t.lang
         |WHERE r.rn <= 32
-        |ORDER BY r.lang, r.rn""".stripMargin,
+        |ORDER BY r.lang, r.rn""".stripMargin),
     // Each committed version = one 5-day event bucket, in bucket
     // order: dense_rank over the SAME bucket expression restates the
     // version ↦ rows mapping from the raw table.
-    "ev28_stream_txn_sink" ->
+    Query("ev28_stream_txn_sink", ev28StreamTxnSink,
       """WITH e AS (
         |  SELECT event_id, value,
         |    epoch_ms(ts) // 432000000 AS b
@@ -1413,11 +1388,11 @@ object EventWindows {
         |SELECT version, count(*)::BIGINT AS n_events,
         |  sum(event_id)::BIGINT AS sum_ids,
         |  round(sum(value), 4) AS sum_value
-        |FROM v GROUP BY version ORDER BY version""".stripMargin,
+        |FROM v GROUP BY version ORDER BY version""".stripMargin),
     // Whole-table restatement of last-op-wins CDC: each user's
     // globally last event (ts, then event_id) decides — an upsert
     // keeps its row, a tombstone removes the key.
-    "ev24_stream_cdc" ->
+    Query("ev24_stream_cdc", ev24StreamCdc,
       """WITH e AS (
         |  SELECT user_id, ts, value, event_id,
         |    CASE WHEN (user_id + (ts::DATE - DATE '1970-01-01')) % 11 = 0
@@ -1431,11 +1406,11 @@ object EventWindows {
         |SELECT user_id, epoch_ms(ts)::BIGINT AS last_ms,
         |  round(value, 4) AS last_value
         |FROM r WHERE rn = 1 AND op = 'u'
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin),
     // Same gaps-and-islands restatement as ev12/ev21/ev22: the
     // declarative session_window operator must agree with every
     // custom-state implementation.
-    "ev23_session_window" ->
+    Query("ev23_session_window", ev23SessionWindow,
       """WITH e AS (SELECT user_id, epoch_ms(ts) AS ms FROM events),
         |d AS (
         |  SELECT user_id, ms,
@@ -1453,12 +1428,12 @@ object EventWindows {
         |SELECT user_id, count(*)::BIGINT AS n_events,
         |  min(ms)::BIGINT AS start_ms, max(ms)::BIGINT AS end_ms
         |FROM s GROUP BY user_id, sid
-        |ORDER BY user_id, start_ms""".stripMargin,
+        |ORDER BY user_id, start_ms""".stripMargin),
     // Same batch gaps-and-islands restatement as ev12: the state
     // backend must be semantics-invisible.
     // Same restatement as ev12/ev21: the transformWithState API must
     // be semantics-identical to flatMapGroupsWithState.
-    "ev22_tws_sessions" ->
+    Query("ev22_tws_sessions", ev22TwsSessions,
       """WITH e AS (SELECT user_id, epoch_ms(ts) AS ms FROM events),
         |d AS (
         |  SELECT user_id, ms,
@@ -1476,8 +1451,8 @@ object EventWindows {
         |SELECT user_id, count(*)::BIGINT AS n_events,
         |  min(ms)::BIGINT AS start_ms, max(ms)::BIGINT AS end_ms
         |FROM s GROUP BY user_id, sid
-        |ORDER BY user_id, start_ms""".stripMargin,
-    "ev21_rocksdb_sessions" ->
+        |ORDER BY user_id, start_ms""".stripMargin),
+    Query("ev21_rocksdb_sessions", ev21RocksdbSessions,
       """WITH e AS (SELECT user_id, epoch_ms(ts) AS ms FROM events),
         |d AS (
         |  SELECT user_id, ms,
@@ -1495,30 +1470,30 @@ object EventWindows {
         |SELECT user_id, count(*)::BIGINT AS n_events,
         |  min(ms)::BIGINT AS start_ms, max(ms)::BIGINT AS end_ms
         |FROM s GROUP BY user_id, sid
-        |ORDER BY user_id, start_ms""".stripMargin,
+        |ORDER BY user_id, start_ms""".stripMargin),
     // Whole-table restatement: exactly-once across the restart means
     // the sink holds every document exactly once.
-    "ev20_stream_restart" ->
+    Query("ev20_stream_restart", ev20StreamRestart,
       """SELECT lang, count(*)::BIGINT AS n_docs,
         |  sum(n_chars)::BIGINT AS sum_chars
         |FROM documents GROUP BY lang
-        |ORDER BY lang""".stripMargin,
+        |ORDER BY lang""".stripMargin),
     // Batch restatement of the drained backfill state table.
-    "ev19_stream_backfill" ->
+    Query("ev19_stream_backfill", ev19StreamBackfill,
       """SELECT lang, count(*)::BIGINT AS n_docs,
         |  sum(n_chars)::BIGINT AS sum_chars
         |FROM documents GROUP BY lang
-        |ORDER BY lang""".stripMargin,
+        |ORDER BY lang""".stripMargin),
     // Batch restatement of the streamed upsert state table: update-mode
     // emissions upserted per key must equal the full batch aggregate.
-    "ev18_stream_upsert" ->
+    Query("ev18_stream_upsert", ev18StreamUpsert,
       """SELECT event_type, ts::DATE AS day, count(*)::BIGINT AS n,
         |  round(sum(value), 4) AS sum_value
         |FROM events GROUP BY event_type, day
-        |ORDER BY event_type, day""".stripMargin,
+        |ORDER BY event_type, day""".stripMargin),
     // Batch restatement of the streamed routing fan-out: the argmax is
     // replicated from the SAME marker constant as the engine side.
-    "ev16_stream_route" ->
+    Query("ev16_stream_route", ev16StreamRoute,
       s"""WITH p AS (
          |  SELECT doc_id, ${graft.ext.TextStats.langidBestSql} AS best
          |  FROM documents),
@@ -1528,11 +1503,11 @@ object EventWindows {
          |  FROM p)
          |SELECT pred, count(*)::BIGINT AS n_docs,
          |  sum(doc_id)::BIGINT AS sum_ids
-         |FROM r GROUP BY pred ORDER BY pred""".stripMargin,
+         |FROM r GROUP BY pred ORDER BY pred""".stripMargin),
     // Exact batch anti-join restatement of the streamed semantic dedup
     // (raw-dot threshold, both engines sum left-to-right over the same
     // doubles — the e3_cosine_neardup parity convention).
-    "ev15_stream_semdedup" ->
+    Query("ev15_stream_semdedup", ev15StreamSemdedup,
       """WITH c AS (
         |  SELECT embedding::DOUBLE[] AS cv,
         |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
@@ -1547,17 +1522,17 @@ object EventWindows {
         |WHERE NOT EXISTS (
         |  SELECT 1 FROM c
         |  WHERE list_dot_product(f.v, c.cv) / (f.nrm * c.cnrm) >= 0.45)
-        |ORDER BY vec_id""".stripMargin,
+        |ORDER BY vec_id""".stripMargin),
     // Batch tumbling restatement of the append-mode streamed windows
     // (windowedCounts rounds sums to 4 decimals).
-    "ev14_stream_windows" ->
+    Query("ev14_stream_windows", ev14StreamWindows,
       """SELECT time_bucket(INTERVAL '1 day', ts) AS ws, event_type,
         |  count(*) AS n, round(sum(value), 4) AS sum_value
         |FROM events GROUP BY ws, event_type
-        |ORDER BY ws, event_type""".stripMargin,
+        |ORDER BY ws, event_type""".stripMargin),
     // Batch LEFT JOIN restatement of the streamed outer interval join;
     // NULLS FIRST pins DuckDB's ordering to Spark's ascending default.
-    "ev17_stream_left_join" ->
+    Query("ev17_stream_left_join", ev17StreamLeftJoin,
       """SELECT i.ad, epoch_us(i.ts) AS imp_us, epoch_us(c.ts) AS click_us
         |FROM (SELECT user_id % 50 AS ad, ts FROM events
         |      WHERE event_type = 'view') i
@@ -1565,10 +1540,10 @@ object EventWindows {
         |           WHERE event_type = 'click') c
         |  ON i.ad = c.ad AND c.ts >= i.ts
         | AND c.ts <= i.ts + INTERVAL 1 HOUR
-        |ORDER BY i.ad, imp_us, click_us NULLS FIRST""".stripMargin,
+        |ORDER BY i.ad, imp_us, click_us NULLS FIRST""".stripMargin),
     // Batch FULL JOIN restatement of the streamed full-outer interval
     // join; the coalesced ad keys rows that exist on only one side.
-    "ev25_stream_full_join" ->
+    Query("ev25_stream_full_join", ev25StreamFullJoin,
       """SELECT coalesce(i.ad, c.ad) AS ad,
         |  epoch_us(i.ts) AS imp_us, epoch_us(c.ts) AS click_us
         |FROM (SELECT user_id % 50 AS ad, ts FROM events
@@ -1577,10 +1552,10 @@ object EventWindows {
         |           WHERE event_type = 'click') c
         |  ON i.ad = c.ad AND c.ts >= i.ts
         | AND c.ts <= i.ts + INTERVAL 1 HOUR
-        |ORDER BY ad, imp_us NULLS FIRST, click_us NULLS FIRST""".stripMargin,
+        |ORDER BY ad, imp_us NULLS FIRST, click_us NULLS FIRST""".stripMargin),
     // Batch restatement of the streamed interval join: clicks within
     // one hour AFTER a same-ad impression (ad = user_id % 50).
-    "ev13_stream_join" ->
+    Query("ev13_stream_join", ev13StreamJoin,
       """SELECT i.ad, epoch_us(i.ts) AS imp_us, epoch_us(c.ts) AS click_us
         |FROM (SELECT user_id % 50 AS ad, ts FROM events
         |      WHERE event_type = 'view') i
@@ -1588,11 +1563,11 @@ object EventWindows {
         |      WHERE event_type = 'click') c
         |  ON i.ad = c.ad AND c.ts >= i.ts
         | AND c.ts <= i.ts + INTERVAL 1 HOUR
-        |ORDER BY i.ad, imp_us, click_us""".stripMargin,
+        |ORDER BY i.ad, imp_us, click_us""".stripMargin),
     // Batch gaps-and-islands restatement of the streamed sessionization
     // (1-day gap, epoch-ms domain on both engines: SessionOut carries
     // java.sql.Timestamp.getTime millis).
-    "ev12_stream_sessions" ->
+    Query("ev12_stream_sessions", ev12StreamSessions,
       """WITH e AS (SELECT user_id, epoch_ms(ts) AS ms FROM events),
         |d AS (
         |  SELECT user_id, ms,
@@ -1610,34 +1585,34 @@ object EventWindows {
         |SELECT user_id, count(*)::BIGINT AS n_events,
         |  min(ms)::BIGINT AS start_ms, max(ms)::BIGINT AS end_ms
         |FROM s GROUP BY user_id, sid
-        |ORDER BY user_id, start_ms""".stripMargin,
+        |ORDER BY user_id, start_ms""".stripMargin),
     // Batch restatement of the stream: a digest survives iff it is not
     // in the mod-5 corpus (the in-stream repeat suppression collapses
     // to DISTINCT once the stream is driven to completion).
-    "ev11_stream_dedup" ->
+    Query("ev11_stream_dedup", ev11StreamDedup,
       """SELECT DISTINCT sha256(text) AS digest
         |FROM documents
         |WHERE sha256(text) NOT IN (
         |  SELECT sha256(text) FROM documents WHERE doc_id % 5 = 0)
-        |ORDER BY digest""".stripMargin,
+        |ORDER BY digest""".stripMargin),
     // Batch restatement of the replayed stream: once every batch has
     // drained, first-arrival-wins dedup over base + replayed copies
     // collapses to DISTINCT over the corpus (replays carry identical
     // text, hence identical digests).
-    "ev26_stream_dropdup" ->
+    Query("ev26_stream_dropdup", ev26StreamDropdup,
       """SELECT DISTINCT sha256(text) AS digest
-        |FROM documents ORDER BY digest""".stripMargin,
+        |FROM documents ORDER BY digest""".stripMargin),
     // Distinct CANONICAL urls of the base plant — the +455 revisits
     // share every content modulus (455 = 7·13·5), so a correct
     // Exact distinct counts value-gated; the sketch estimate bound is
     // asserted in-plan (✱ — sketch registers are engine-specific).
-    "ev30_stream_hll" ->
+    Query("ev30_stream_hll", ev30StreamHll,
       """SELECT event_type, count(DISTINCT user_id)::BIGINT AS n_exact,
         |  true AS all_events_seen, true AS estimate_ok
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
     // canonical dedup adds no row for them; a leaked variant makes the
     // stream emit MORE rows and hash-fail.
-    "ev29_stream_url_dedup" ->
+    Query("ev29_stream_url_dedup", ev29StreamUrlDedup,
       s"""WITH planted AS (
          |  SELECT
          |    (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://WWW.EXAMPLE'
@@ -1661,12 +1636,12 @@ object EventWindows {
          |      '${graft.ext.Hygiene.UrlPortRe}', '/', 'g'),
          |      '${graft.ext.Hygiene.UrlDotSegRe}', '/', 'g') AS canon
          |  FROM planted)
-         |SELECT DISTINCT canon FROM c ORDER BY canon""".stripMargin,
+         |SELECT DISTINCT canon FROM c ORDER BY canon""".stripMargin),
     // Same oracle as ev26: the RocksDB run must be indistinguishable.
-    "ev27_rocksdb_dropdup" ->
+    Query("ev27_rocksdb_dropdup", ev27RocksdbDropdup,
       """SELECT DISTINCT sha256(text) AS digest
-        |FROM documents ORDER BY digest""".stripMargin,
-    "ev10_burstiness" ->
+        |FROM documents ORDER BY digest""".stripMargin),
+    Query("ev10_burstiness", ev10Burstiness,
       """WITH g AS (
         |  SELECT user_id,
         |    (epoch_us(ts) - epoch_us(lag(ts, 1) OVER (
@@ -1682,8 +1657,8 @@ object EventWindows {
         |SELECT user_id, n_gaps, mean_gap_s, sd_gap_s,
         |  round((sd_gap_s - mean_gap_s) / (sd_gap_s + mean_gap_s), 4)
         |    AS burstiness
-        |FROM st ORDER BY user_id""".stripMargin,
-    "ev9_attribution" ->
+        |FROM st ORDER BY user_id""".stripMargin),
+    Query("ev9_attribution", ev9Attribution,
       """WITH t AS (
         |  SELECT event_type, value,
         |    first_value(CASE WHEN event_type IN ('view','click','signup')
@@ -1701,8 +1676,8 @@ object EventWindows {
         |  round(sum(value), 4) AS revenue
         |FROM t WHERE event_type = 'purchase' AND last_touch IS NOT NULL
         |GROUP BY first_touch, last_touch
-        |ORDER BY first_touch, last_touch""".stripMargin,
-    "ev5_funnel" ->
+        |ORDER BY first_touch, last_touch""".stripMargin),
+    Query("ev5_funnel", ev5Funnel,
       """WITH s1 AS (
         |  SELECT user_id, min(ts) AS t_view FROM events
         |  WHERE event_type = 'view' GROUP BY user_id),
@@ -1723,8 +1698,8 @@ object EventWindows {
         |    sum(user_id)::BIGINT FROM s2
         |  UNION ALL SELECT '3_purchase', count(*)::BIGINT,
         |    sum(user_id)::BIGINT FROM s3)
-        |ORDER BY stage""".stripMargin,
-    "ev6_retention" ->
+        |ORDER BY stage""".stripMargin),
+    Query("ev6_retention", ev6Retention,
       """WITH cohort AS (
         |  SELECT user_id, date_trunc('day', min(ts)) AS cohort_day
         |  FROM events GROUP BY user_id),
@@ -1735,8 +1710,8 @@ object EventWindows {
         |  count(*)::BIGINT AS n_active
         |FROM cohort c JOIN active a USING (user_id)
         |WHERE date_diff('day', c.cohort_day, a.day) BETWEEN 0 AND 7
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "ev7_markov" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Query("ev7_markov", ev7Markov,
       """WITH seq AS (
         |  SELECT user_id, event_type AS next,
         |    lag(event_type) OVER (PARTITION BY user_id
@@ -1747,8 +1722,8 @@ object EventWindows {
         |  WHERE prev IS NOT NULL GROUP BY prev, next)
         |SELECT prev, next, n::BIGINT AS n,
         |  round(n::DOUBLE / sum(n) OVER (PARTITION BY prev), 6) AS p
-        |FROM pairs ORDER BY prev, next""".stripMargin,
-    "ev8_anomaly" ->
+        |FROM pairs ORDER BY prev, next""".stripMargin),
+    Query("ev8_anomaly", ev8Anomaly,
       """WITH daily AS (
         |  SELECT event_type, date_trunc('day', ts) AS day, count(*) AS n
         |  FROM events GROUP BY event_type, day),
@@ -1760,8 +1735,8 @@ object EventWindows {
         |SELECT event_type, day, n::BIGINT AS n,
         |  round(mu, 4) AS mu, round(sigma, 4) AS sigma
         |FROM st WHERE n > mu + 2.0 * sigma
-        |ORDER BY event_type, day""".stripMargin,
-    "ev4_resample" ->
+        |ORDER BY event_type, day""".stripMargin),
+    Query("ev4_resample", ev4Resample,
       """WITH grid AS (
         |  SELECT u.user_id, d.day
         |  FROM (SELECT DISTINCT user_id FROM events) u
@@ -1778,14 +1753,14 @@ object EventWindows {
         |  coalesce(a.n, 0)::BIGINT AS n,
         |  coalesce(a.sum_value, 0.0) AS sum_value
         |FROM grid g LEFT JOIN actual a USING (user_id, day)
-        |ORDER BY user_id, day""".stripMargin,
-    "ev1_tumbling" ->
+        |ORDER BY user_id, day""".stripMargin),
+    Query("ev1_tumbling", ev1Tumbling,
       """SELECT time_bucket(INTERVAL '1 day', ts) AS ws, event_type,
         | count(*) AS n, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY ws, event_type ORDER BY ws, event_type""".stripMargin,
+        |FROM events GROUP BY ws, event_type ORDER BY ws, event_type""".stripMargin),
     // Gaps-and-islands replica of session_window semantics: a new
     // session starts when the gap from the previous event is >= 6h.
-    "ev2_session" ->
+    Query("ev2_session", ev2Session,
       """WITH marked AS (
         |  SELECT user_id, ts, value,
         |    CASE WHEN lag(ts) OVER w IS NULL
@@ -1800,16 +1775,16 @@ object EventWindows {
         |SELECT user_id, epoch_us(min(ts)) AS session_start,
         |  count(*) AS n_events, round(sum(value), 2) AS sum_value
         |FROM sess GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
+        |ORDER BY user_id, session_start""".stripMargin),
     // Each event belongs to the window starting at its own day and the
     // one starting the day before (2-day width, 1-day slide).
-    "ev3_sliding" ->
+    Query("ev3_sliding", ev3Sliding,
       """SELECT ws, count(*) AS n, round(sum(value), 2) AS sum_value
         |FROM (
         |  SELECT unnest([date_trunc('day', ts),
         |                 date_trunc('day', ts) - INTERVAL 1 DAY]) AS ws,
         |         value
         |  FROM events)
-        |GROUP BY ws ORDER BY ws""".stripMargin,
+        |GROUP BY ws ORDER BY ws""".stripMargin),
   )
 }

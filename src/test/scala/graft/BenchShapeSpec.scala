@@ -182,4 +182,12 @@ class BenchShapeSpec extends SparkSpec {
     assert(confirmedOffenders(throttled, _ => 10.0).isEmpty,
       "isolated re-time far under the in-run time must exonerate")
   }
+
+  test("every name Bench lists (headline, scaling heads, harness-only, " +
+      "warm-up) is a registered query") {
+    val listed = Bench.headline ++ Bench.scalingHeads ++
+      Bench.harnessOnly ++ Bench.warmUp
+    val unknown = listed.filterNot(SparkEntry.queries.contains).distinct
+    assert(unknown.isEmpty, s"unregistered names in Bench's lists: $unknown")
+  }
 }

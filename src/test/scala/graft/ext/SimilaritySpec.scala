@@ -1,7 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.functions._
-import graft.{SparkSpec, Tables}
+import graft.{SparkEntry, SparkSpec, Tables}
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -88,7 +88,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = Tables.load(spark, sf, "embeddings")
     val viaAnn = Similarity.cosineNearDupViaAnn(emb, threshold = 0.45)
       .select("a", "b").as[(Long, Long)].collect().toSet
-    val exact = Similarity.queries("e3_cosine_neardup")(spark, sf)
+    val exact = SparkEntry.queries("e3_cosine_neardup")(spark, sf)
       .select("a", "b").as[(Long, Long)].collect().toSet
     assert(exact.nonEmpty, "corpus should contain cosine near-dups")
     val recall = (exact & viaAnn).size.toDouble / exact.size

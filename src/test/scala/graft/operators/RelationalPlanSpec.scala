@@ -19,6 +19,11 @@ class RelationalPlanSpec extends SparkSpec {
   test("every query has an oracle — no silent rows-only entries") {
     val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(missing.isEmpty, s"queries without oracle SQL: $missing")
+    val names = SparkEntry.registry.map(_.name)
+    val repeated = names.diff(names.distinct)
+    assert(repeated.isEmpty, s"names registered twice: $repeated")
+    val blank = SparkEntry.registry.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"queries with blank oracle SQL: $blank")
   }
 
   test("p5 filter pushes predicates into the parquet scan") {

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 class FederatedSpec extends SparkSpec {
   import spark.implicits._
@@ -100,7 +100,7 @@ class FederatedSpec extends SparkSpec {
   }
 
   test("s9c gated query: join AND aggregate execute remotely as one query") {
-    val df = Federated.queries("s9c_jdbc_join_push")(spark, sf)
+    val df = SparkEntry.queries("s9c_jdbc_join_push")(spark, sf)
     val plan = df.queryExecution.executedPlan.toString()
     assert(plan.contains("PushedJoins"),
       s"join not pushed to the remote engine:\n$plan")
@@ -113,7 +113,7 @@ class FederatedSpec extends SparkSpec {
   }
 
   test("s9b gated query: whole GROUP BY executes remotely, no Spark-side aggregate") {
-    val df = Federated.queries("s9b_jdbc_agg_push")(spark, sf)
+    val df = SparkEntry.queries("s9b_jdbc_agg_push")(spark, sf)
     val plan = df.queryExecution.executedPlan.toString()
     assert(plan.contains("PushedAggregates: [COUNT(*), SUM(") &&
       plan.contains("PushedGroupByExpressions: [o_orderstatus]"),

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -46,7 +46,7 @@ class StreamingSpec extends SparkSpec {
         "ev14_stream_windows", "ev18_stream_upsert",
         "ev24_stream_cdc")) {
       def run(): Seq[Seq[Any]] =
-        EventWindows.queries(q)(spark, sf)
+        SparkEntry.queries(q)(spark, sf)
           .collect().toSeq.map(_.toSeq)
       val daily = run()
       System.setProperty("graft.replay.coarsen", "40")
@@ -464,5 +464,27 @@ class StreamingSpec extends SparkSpec {
       assert(last == Map(1L -> 3L, 2L -> 1L),
         "state accumulated across batches")
     } finally q.stop()
+  }
+
+  test("writtenSchema is the schema a parquet read of the written frame " +
+      "gives back, nested nullability included") {
+    import org.apache.spark.sql.functions.{array, lit, map, struct}
+    val base = spark.range(3)
+    val nested = base.select(col("id"),
+      array(struct(col("id").as("x"), array(lit(1)).as("ys"))).as("arr"),
+      map(lit("k"), array(col("id"))).as("m"))
+    val flat = base.select(col("id"), (col("id") * 2).as("y"),
+      lit("a").as("s"))
+    // The nested frame has non-nullable fields, elements and values
+    // below the top level, which a top-level-only relaxation misses.
+    assert(!nested.schema("arr").dataType.asInstanceOf[
+      org.apache.spark.sql.types.ArrayType].containsNull)
+    for ((name, df) <- Seq("nested" -> nested, "flat" -> flat)) {
+      val dir = java.nio.file.Files
+        .createTempDirectory("written_schema_").toString + "/" + name
+      df.write.parquet(dir)
+      assert(EventWindows.writtenSchema(df) == spark.read.parquet(dir).schema,
+        s"$name: helper and read-back disagree")
+    }
   }
 }
