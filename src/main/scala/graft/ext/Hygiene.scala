@@ -297,12 +297,6 @@ object Hygiene {
       .orderBy(col(sourceCol))
   }
 
-  /** The curation half: documents that survive both lists. */
-  def blocklistFilter(docs: DataFrame, textCol: String, sourceCol: String,
-      blockedSources: Seq[String], bannedRe: String): DataFrame =
-    docs.filter(!col(sourceCol).isin(blockedSources: _*) &&
-      !col(textCol).rlike(bannedRe))
-
   // ---------------------------------- big-dictionary scan (Aho–Corasick)
 
   /** Dictionary terms that DO occur in the synthetic corpus — chosen so

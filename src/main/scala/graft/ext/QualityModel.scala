@@ -37,6 +37,25 @@ object QualityModel {
 
   private def sigmoid(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
 
+  /** Per-row log-loss of probability `p` against label `y`, clamped away
+    * from ln(0). */
+  private def logLoss(p: Column): Column = {
+    val eps = lit(1e-12)
+    -(col("y") * log(greatest(p, eps)) +
+      (lit(1.0) - col("y")) * log(greatest(lit(1.0) - p, eps)))
+  }
+
+  /** Backtracking line search: try `start`, `start/2`, `start/4`, … for
+    * at most `maxTrials` trials and return the first step whose trial
+    * loss does not exceed `cur`, with what that trial built. `trial`
+    * maps a step to (candidate, its loss) and runs once per step tried;
+    * None when no trial descends. */
+  private def lineSearch[C](start: Double, maxTrials: Int, cur: Double)(
+      trial: Double => (C, Double)): Option[(Double, C)] =
+    Iterator.iterate(start)(_ / 2).take(maxTrials)
+      .map(step => (step, trial(step)))
+      .collectFirst { case (step, (cand, loss)) if loss <= cur => (step, cand) }
+
   /** Batch-gradient logistic regression. `labeled` needs `x:
     * array<double>` and `y: double`; returns (weights, per-iteration
     * mean log-loss). One aggregation job per step; gradient and loss
@@ -48,11 +67,8 @@ object QualityModel {
       val p = sigmoid(dot(col("x"), w))
       val gradCols = (0 until dim).map(i =>
         avg((p - col("y")) * element_at(col("x"), i + 1)).as(s"g$i"))
-      val eps = 1e-12 // clamp log-loss away from ln(0)
-      val lossCol = avg(-(col("y") * log(greatest(p, lit(eps))) +
-        (lit(1.0) - col("y")) * log(greatest(lit(1.0) - p, lit(eps)))))
-        .as("loss")
-      val row = labeled.agg(gradCols.head, gradCols.tail :+ lossCol: _*)
+      val row = labeled.agg(gradCols.head,
+          gradCols.tail :+ avg(logLoss(p)).as("loss"): _*)
         .head()
       w = w.zipWithIndex.map { case (wi, i) => wi - lr * row.getDouble(i) }
       row.getDouble(dim)
@@ -82,14 +98,9 @@ object QualityModel {
   def trainLogisticNewton(labeled: DataFrame, dim: Int, iters: Int,
       ridge: Double = 1e-9): (Seq[Double], Seq[Double]) = {
     var w: Seq[Double] = Seq.fill(dim)(0.0)
-    val lossEps = 1e-12
-    def lossAt(wc: Seq[Double]): Double = {
-      val pc = sigmoid(dot(col("x"), wc))
-      labeled.agg(
-        avg(-(col("y") * log(greatest(pc, lit(lossEps))) +
-          (lit(1.0) - col("y")) * log(greatest(lit(1.0) - pc,
-            lit(lossEps))))).as("loss")).head().getDouble(0)
-    }
+    def lossAt(wc: Seq[Double]): Double =
+      labeled.agg(avg(logLoss(sigmoid(dot(col("x"), wc)))).as("loss"))
+        .head().getDouble(0)
     val losses = (0 until iters).map { _ =>
       val p = sigmoid(dot(col("x"), w))
       val gradCols = (0 until dim).map(i =>
@@ -97,11 +108,7 @@ object QualityModel {
       val hessCols = for { i <- 0 until dim; j <- i until dim } yield
         avg(p * (lit(1.0) - p) * element_at(col("x"), i + 1) *
           element_at(col("x"), j + 1)).as(s"h${i}_$j")
-      val eps = 1e-12
-      val lossCol = avg(-(col("y") * log(greatest(p, lit(eps))) +
-        (lit(1.0) - col("y")) * log(greatest(lit(1.0) - p, lit(eps)))))
-        .as("loss")
-      val cols = (gradCols ++ hessCols) :+ lossCol
+      val cols = (gradCols ++ hessCols) :+ avg(logLoss(p)).as("loss")
       val row = labeled.agg(cols.head, cols.tail: _*).head()
       val g = Array.tabulate(dim)(row.getDouble)
       val h = Array.ofDim[Double](dim, dim)
@@ -112,19 +119,13 @@ object QualityModel {
       for (i <- 0 until dim) h(i)(i) += ridge
       val delta = solveLinear(h, g)
       val cur = row.getDouble(k)
-      // Backtracking: accept the largest halved step that descends; if
-      // even a 2^-20-scaled delta does not (numerically converged),
-      // keep w unchanged rather than take an ascent step.
-      var step = 1.0
-      var accepted = false
-      var trials = 0
-      while (!accepted && trials < 20) {
-        val cand = w.zipWithIndex.map { case (wi, i) =>
-          wi - step * delta(i)
-        }
-        if (lossAt(cand) <= cur) { w = cand; accepted = true }
-        else { step /= 2; trials += 1 }
-      }
+      // Accept the largest halved step that descends; if even a
+      // 2^-19-scaled delta does not (numerically converged), keep w
+      // unchanged rather than take an ascent step.
+      lineSearch(1.0, 20, cur) { step =>
+        val cand = w.zipWithIndex.map { case (wi, i) => wi - step * delta(i) }
+        (cand, lossAt(cand))
+      }.foreach { case (_, cand) => w = cand }
       cur
     }
     (w, losses)
@@ -222,7 +223,6 @@ object QualityModel {
       iters: Int, lr: Double): (Array[Double], Seq[Double]) = {
     val w = new Array[Double](dim + 1)
     val n = labels.count().toDouble
-    val eps = 1e-12
     val pf = packFeatures(feats).join(labels, Seq("doc_id"))
       .localCheckpoint(eager = false)
     val losses = (0 until iters).map { _ =>
@@ -230,10 +230,7 @@ object QualityModel {
         graft.functions.SparseMargins.sparseMargins(col("fx"), Array(w)), 1)
       val base = pf.select(col("fx"), col("y"), z.as("z"))
         .select(col("fx"), (sigmoid(col("z")) - col("y")).as("e"),
-          (-(col("y") * log(greatest(sigmoid(col("z")), lit(eps))) +
-            (lit(1.0) - col("y")) *
-              log(greatest(lit(1.0) - sigmoid(col("z")), lit(eps)))))
-            .as("ll"))
+          logLoss(sigmoid(col("z"))).as("ll"))
       val rows = base
         .select(col("e"), explode(col("fx")).as("t"))
         .select(col("e"), col("t.idx").as("idx"), col("t.v").as("v"))
@@ -369,21 +366,17 @@ object QualityModel {
       // frame the next iteration reuses on acceptance); the common
       // case accepts within a couple of trials and every iterate is
       // monotone in loss.
-      var step = warmStep
-      var accepted = false
-      var trials = 0
-      while (!accepted && trials < 12) {
+      lineSearch(warmStep, 12, cur) { step =>
         val cand = w.map(_.clone())
         grad.foreach { case (idx, g) =>
           ks.foreach(k => cand(k)(idx) -= step * g(k))
         }
         val candErr = errFrameOf(cand)
-        val candLoss =
-          candErr.agg((sum(col("ll")) / n).as("loss")).head().getDouble(0)
-        if (candLoss <= cur) {
-          w = cand; errW = candErr; accepted = true
-          warmStep = math.min(lr, step * 2.0)
-        } else { step /= 2; trials += 1 }
+        ((cand, candErr),
+          candErr.agg((sum(col("ll")) / n).as("loss")).head().getDouble(0))
+      }.foreach { case (step, (cand, candErr)) =>
+        w = cand; errW = candErr
+        warmStep = math.min(lr, step * 2.0)
       }
       cur
     }

@@ -282,15 +282,16 @@ object Similarity {
     ivfAssign(corpus, cents)
       .write.mode("overwrite").partitionBy("cell").parquet(path)
 
-  /** Search the on-disk index. The probe list joins the index on its
-    * PARTITION column, and the broadcast join triggers dynamic
-    * partition pruning — unprobed cell directories are never read
-    * (`PartitionFilters: [... dynamicpruningexpression(cell IN ...)]`,
-    * plan-pinned in SimilaritySpec). Same ranking semantics as
-    * `ivfTopK`; the gate asserts result equality. */
+  /** Search the on-disk index through [[ivfReadIndex]] (tombstones
+    * applied, refused mid-compaction or mid-rebalance). The probe list
+    * joins the index on its PARTITION column, and the broadcast join
+    * triggers dynamic partition pruning — unprobed cell directories are
+    * never read (`PartitionFilters: [... dynamicpruningexpression(cell
+    * IN ...)]`, plan-pinned in SimilaritySpec). Same ranking semantics
+    * as `ivfTopK`; the gate asserts result equality. */
   def ivfSearchIndex(spark: SparkSession, path: String, queries: DataFrame,
       cents: Seq[(Int, Seq[Double])], k: Int, nprobe: Int): DataFrame = {
-    val idx = spark.read.parquet(path)
+    val idx = ivfReadIndex(spark, path)
       .select(col("vec_id").as("c_id"), col("cell"), col("uv").as("cv"))
     ivfRank(idx, queries, cents, k, nprobe)
   }
@@ -478,15 +479,6 @@ object Similarity {
     table
   }
 
-  /** [[ivfSearchIndex]] over the merge-on-read scan. */
-  def ivfSearchIndexMor(spark: SparkSession, path: String,
-      queries: DataFrame, cents: Seq[(Int, Seq[Double])], k: Int,
-      nprobe: Int): DataFrame = {
-    val idx = ivfReadIndex(spark, path)
-      .select(col("vec_id").as("c_id"), col("cell"), col("uv").as("cv"))
-    ivfRank(idx, queries, cents, k, nprobe)
-  }
-
   // ------------------------------------------------------------ PQ
 
   /** Sub-vector `s` of a concatenated PQ layout: dims [s·dSub, (s+1)·dSub). */
@@ -590,26 +582,8 @@ object Similarity {
     * smaller SFs. */
   def pqSearch(corpus: DataFrame, queries: DataFrame,
       books: IndexedSeq[IndexedSeq[Seq[Double]]], k: Int,
-      rerank: Int): DataFrame = {
-    val coded = pqEncode(corpus, books)
-      .select(col("vec_id").as("c_id"), col("codes"))
-    val q = queries.select(col("vec_id").as("q_id"),
-        unitNorm(asDouble(col("embedding"))).as("qv"))
-      .withColumn("lut",
-        graft.functions.Pq.pqLut(col("qv"), booksArray(books)))
-    val approx = graft.functions.Pq.pqAdc(col("lut"), col("codes"))
-    val wA = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx").desc, col("c_id"))
-    val cand = coded
-      .join(broadcast(q.select(col("q_id"), col("lut"))),
-        col("q_id") =!= col("c_id"))
-      .withColumn("approx", approx)
-      .select(col("q_id"), col("c_id"), col("approx"))
-      .withColumn("_ar", row_number().over(wA))
-      .filter(col("_ar") <= rerank)
-      .select(col("q_id"), col("c_id"))
-    exactRerank(cand, corpus, queries, k)
-  }
+      rerank: Int): DataFrame =
+    pqSearchCoded(pqEncode(corpus, books), corpus, queries, books, k, rerank)
 
   /** Persist the PQ index: (vec_id, codes) — m small ints per vector,
     * the memory-resident artifact a 100 TB deployment scans instead of
@@ -626,16 +600,21 @@ object Similarity {
     * the ≤ rerank·|queries| candidate ids). */
   def pqSearchIndex(spark: SparkSession, path: String, corpus: DataFrame,
       queries: DataFrame, books: IndexedSeq[IndexedSeq[Seq[Double]]],
+      k: Int, rerank: Int): DataFrame =
+    pqSearchCoded(spark.read.parquet(path), corpus, queries, books, k, rerank)
+
+  /** The ADC scan + bounded exact re-rank over a (vec_id, codes) coded
+    * corpus, encoded in memory or read back from the on-disk index. */
+  private def pqSearchCoded(coded: DataFrame, corpus: DataFrame,
+      queries: DataFrame, books: IndexedSeq[IndexedSeq[Seq[Double]]],
       k: Int, rerank: Int): DataFrame = {
-    val coded = spark.read.parquet(path)
-      .select(col("vec_id").as("c_id"), col("codes"))
     val q = queries.select(col("vec_id").as("q_id"),
         unitNorm(asDouble(col("embedding"))).as("qv"))
       .withColumn("lut",
         graft.functions.Pq.pqLut(col("qv"), booksArray(books)))
     val wA = Window.partitionBy(col("q_id"))
       .orderBy(col("approx").desc, col("c_id"))
-    val cand = coded
+    val cand = coded.select(col("vec_id").as("c_id"), col("codes"))
       .join(broadcast(q.select(col("q_id"), col("lut"))),
         col("q_id") =!= col("c_id"))
       .withColumn("approx",
@@ -754,25 +733,15 @@ object Similarity {
     ivfPqCode(corpus, cents, books)
       .write.mode("overwrite").partitionBy("cell").parquet(path)
 
-  /** Search the on-disk IVFADC index. The broadcast probe list joins
-    * the index on its PARTITION column, so dynamic partition pruning
-    * skips unprobed cell directories (the ivfSearchIndex shape); the
-    * ADC scan reads codes only, and `rawVecs` (the raw embedding
-    * table) is consulted just for the bounded exact re-rank. */
+  /** Search the on-disk IVFADC index through [[ivfReadIndex]]:
+    * tombstones apply to the coded table as a broadcast anti-join on
+    * c_id, so deleted ids never reach candidate generation. The
+    * broadcast probe list joins the index on its PARTITION column, so
+    * dynamic partition pruning skips unprobed cell directories (the
+    * ivfSearchIndex shape); the ADC scan reads codes only, and
+    * `rawVecs` (the raw embedding table) is consulted just for the
+    * bounded exact re-rank — so a deleted id cannot resurface. */
   def ivfPqSearchIndex(spark: SparkSession, path: String,
-      rawVecs: DataFrame, queries: DataFrame,
-      cents: Seq[(Int, Seq[Double])],
-      books: IndexedSeq[IndexedSeq[Seq[Double]]],
-      k: Int, nprobe: Int, rerank: Int): DataFrame =
-    ivfPqSearchCoded(
-      spark.read.parquet(path).select(col("c_id"), col("cell"), col("codes")),
-      rawVecs, queries, cents, books, k, nprobe, rerank)
-
-  /** [[ivfPqSearchIndex]] over the merge-on-read scan (tombstones
-    * applied to the coded table as a broadcast anti-join on c_id;
-    * deleted ids can then never reach candidate generation, so the
-    * bounded exact re-rank against `rawVecs` cannot resurface them). */
-  def ivfPqSearchIndexMor(spark: SparkSession, path: String,
       rawVecs: DataFrame, queries: DataFrame,
       cents: Seq[(Int, Seq[Double])],
       books: IndexedSeq[IndexedSeq[Seq[Double]]],
@@ -1376,7 +1345,7 @@ object Similarity {
     ivfPqWriteIndex(survivors, cents, books, freshPath)
     // pre-compaction answer pinned eagerly (≤ queries×k rows) —
     // compaction below mutates the files this plan reads
-    val mor = ivfPqSearchIndexMor(s, path, survivors, queries, cents,
+    val mor = ivfPqSearchIndex(s, path, survivors, queries, cents,
       books, k = 5, nprobe = 8, rerank = 100)
       .localCheckpoint(eager = true)
     val fresh = ivfPqSearchIndex(s, freshPath, survivors, queries, cents,
@@ -1442,7 +1411,7 @@ object Similarity {
     ivfWriteIndex(survivors, cents, freshPath)
     // Pre-compaction answers pinned eagerly (bounded: ≤ queries×k
     // rows) — compaction below mutates the files this plan reads.
-    val mor = ivfSearchIndexMor(s, path, queries, cents,
+    val mor = ivfSearchIndex(s, path, queries, cents,
       k = 5, nprobe = 8).localCheckpoint(eager = true)
     val fresh = ivfSearchIndex(s, freshPath, queries, cents,
       k = 5, nprobe = 8)

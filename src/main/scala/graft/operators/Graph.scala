@@ -22,38 +22,97 @@ import graft.Tables.{load => t}
   */
 object Graph {
 
+  /** `n` synchronous rounds of `step` from `init` — the one round
+    * driver behind every iterative operator here. Lineage is cut with a
+    * lazy `localCheckpoint` after every round except the last, so the
+    * caller's final operator reads the last round directly.
+    *
+    * Why cut at all: without it the logical plan nests one round
+    * deeper each round (kCore's round references the previous round
+    * three times, so its plan grows 3× per round) and Catalyst
+    * analysis — the driver, not the executors — goes superlinear in the
+    * round count. What a cut costs: under AQE a "lazy" checkpoint of a
+    * plan with exchanges runs that round's shuffle stages as soon as
+    * the cut frame is built, so the rounds execute during the build and
+    * the final action runs only the last round. Cuts never change
+    * values: every round rounds to its grid or is exact integer
+    * arithmetic.
+    *
+    * One caution for `step`: the cut keeps its plan's size estimate,
+    * so a step whose estimate grows faster than linearly in its input's
+    * compounds that growth round over round. An inner join of hits' hub
+    * and authority frames, both built from the round's input, doubled
+    * the estimate's bit length every round (16 215 bits by round 9),
+    * and at 30 rounds computing the estimate exhausted the driver's
+    * heap. The left joins onto one row per node that pageRank, sssp and
+    * hits use grow it linearly (about 17 bits a round for hits). */
+  private def rounds(init: DataFrame, n: Int)(
+      step: DataFrame => DataFrame): DataFrame =
+    (1 to n).foldLeft(init) { (state, i) =>
+      val next = step(state)
+      if (i < n) next.localCheckpoint(eager = false) else next
+    }
+
+  /** Revenue per (supplier nation → customer nation) pair: the q5-style
+    * 4-way star join behind every nation trade graph. Shared verbatim
+    * with the oracles. */
+  private val TradeRevenueSql =
+    """SELECT s_nationkey AS src, c_nationkey AS dst,
+      |  round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS rv
+      |FROM lineitem
+      |JOIN orders ON l_orderkey = o_orderkey
+      |JOIN customer ON o_custkey = c_custkey
+      |JOIN supplier ON l_suppkey = s_suppkey
+      |GROUP BY s_nationkey, c_nationkey""".stripMargin
+
+  /** (src, dst, rv) nation trade edges, see [[TradeRevenueSql]]. */
+  private def tradeRevenue(s: SparkSession, dir: String): DataFrame = {
+    Tables.register(s, dir)
+    s.sql(TradeRevenueSql)
+  }
+
+  /** (src, dst, w) nation trade edges weighted by each pair's share of
+    * the source nation's revenue, rounded to 12. */
+  private def tradeShares(s: SparkSession, dir: String): DataFrame =
+    tradeRevenue(s, dir).select(col("src"), col("dst"),
+      round(col("rv") / sum(col("rv")).over(Window.partitionBy(col("src"))),
+        12).as("w"))
+
+  /** The node universe of the nation graphs: one row per nation. */
+  private def nations(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "nation").select(col("n_nationkey").as("node")).distinct()
+
+  /** Part co-purchase graph: canonical undirected edges (u < v, distinct)
+    * between parts that appear in the same order. */
+  private def coPurchase(s: SparkSession, dir: String): DataFrame = {
+    val lp = t(s, dir, "lineitem")
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
+    lp.as("a").join(lp.as("b"),
+        col("a.o") === col("b.o") && col("a.p") < col("b.p"))
+      .select(col("a.p").as("u"), col("b.p").as("v")).distinct()
+  }
+
   /** Weighted PageRank over `edges` (src, dst, w) with `w` normalized
     * per src; `nodes` (node) fixes the universe so sinks and isolated
     * nodes keep receiving the teleport term. `n` is the node count
     * (bounded driver scalar, like the IVF centroid count). */
   def pageRank(nodes: DataFrame, edges: DataFrame, n: Long,
-      iters: Int, damping: Double = 0.85,
-      checkpointEvery: Int = 5): DataFrame = {
+      iters: Int, damping: Double = 0.85): DataFrame = {
     val teleport = (1.0 - damping) / n
     // The edge table (often an expensive upstream join) is consumed
-    // once per iteration AND the rank lineage is cut every
-    // checkpointEvery rounds into separately-executed segments — one
-    // lazy checkpoint keeps the edge build to a single computation.
+    // once per round — one lazy checkpoint keeps its build to a single
+    // computation.
     val e = edges.localCheckpoint(eager = false)
-    var ranks = nodes.select(col("node"),
-      round(lit(1.0 / n), 12).as("r"))
-    for (i <- 1 to iters) {
+    rounds(nodes.select(col("node"), round(lit(1.0 / n), 12).as("r")),
+        iters) { ranks =>
       val contrib = ranks.join(e, col("node") === col("src"))
         .select(col("dst"), (col("r") * col("w")).as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-      ranks = nodes.join(contrib, col("node") === col("dst"), "left")
+      nodes.join(contrib, col("node") === col("dst"), "left")
         .select(col("node"),
           round(lit(teleport) + lit(damping) * coalesce(col("inflow"), lit(0.0)),
             10).as("r"))
-      // LAZY lineage truncation (values unchanged): without it the
-      // logical plan nests one join+agg deeper per iteration and
-      // Catalyst analysis goes superlinear — 30+ iterations stall in
-      // the OPTIMIZER, not the executors. Lazy = zero extra jobs; the
-      // final action materializes each cut stage-by-stage.
-      if (i % checkpointEvery == 0 && i < iters)
-        ranks = ranks.localCheckpoint(eager = false)
     }
-    ranks
   }
 
   /** G1: PageRank over the nation-level trade graph — supplier nation →
@@ -61,20 +120,8 @@ object Graph {
     * nation's total (the "who funds whom" centrality). Edge build is
     * the q5-style star join; 10 iterations; output rounded to 8. */
   private val g1PageRank: Q = (s, dir) => {
-    Tables.register(s, dir)
-    val rev = s.sql(
-      """SELECT s_nationkey AS src, c_nationkey AS dst,
-        |  round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS rv
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_nationkey, c_nationkey""".stripMargin)
-    val edges = rev.select(col("src"), col("dst"),
-      round(col("rv") / sum(col("rv")).over(Window.partitionBy(col("src"))),
-        12).as("w"))
-    val nodes = t(s, dir, "nation")
-      .select(col("n_nationkey").as("node")).distinct()
+    val edges = tradeShares(s, dir)
+    val nodes = nations(s, dir)
     val n = nodes.count() // bounded: |nation| = 25
     pageRank(nodes, edges, n, iters = 10)
       .select(col("node"), round(col("r"), 8).as("rank"))
@@ -139,53 +186,35 @@ object Graph {
     * Pregel dataflow (same shape as [[pageRank]]); distances stay
     * (node, long) narrow. Hop count is a constant, so the plan is a
     * fixed k-deep tree — no driver-side convergence checks. */
-  def bfsDistances(edges: DataFrame, src: Long, maxHops: Int,
-      checkpointEvery: Int = 5): DataFrame = {
+  def bfsDistances(edges: DataFrame, src: Long, maxHops: Int): DataFrame = {
     // The adjacency doubles the (often expensive) edge subtree and is
     // then consumed once PER HOP — materialize it once, lazily (the
     // final action computes it a single time; see triangleCounts).
     val adj = edges.select(col("u").as("s"), col("v").as("d"))
       .union(edges.select(col("v").as("s"), col("u").as("d")))
       .localCheckpoint(eager = false)
-    var dist = edges.sparkSession.range(1)
-      .select(lit(src).as("node"), lit(0L).as("dist"))
-    for (i <- 1 to maxHops) {
+    rounds(edges.sparkSession.range(1)
+        .select(lit(src).as("node"), lit(0L).as("dist")), maxHops) { dist =>
       val next = dist.join(adj, col("node") === col("s"))
         .select(col("d").as("node"), (col("dist") + 1L).as("dist"))
-      dist = dist.union(next)
+      dist.union(next)
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-      if (i % checkpointEvery == 0 && i < maxHops)
-        dist = dist.localCheckpoint(eager = false) // see pageRank note
     }
-    dist
   }
 
   /** G3: 3-hop BFS distances from part 1 over the part co-purchase
     * graph. The oracle unrolls the same three relaxation rounds as
     * CTEs — a lost frontier edge or an off-by-one hop is a hash
     * fail. */
-  private val g3Bfs: Q = (s, dir) => {
-    val lp = t(s, dir, "lineitem")
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val edges = lp.as("a").join(lp.as("b"),
-        col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-      .select(col("a.p").as("u"), col("b.p").as("v")).distinct()
-    bfsDistances(edges, src = 1L, maxHops = 3)
+  private val g3Bfs: Q = (s, dir) =>
+    bfsDistances(coPurchase(s, dir), src = 1L, maxHops = 3)
       .orderBy(col("node"))
-  }
 
   /** G2: per-node triangle counts over the part co-purchase graph
     * (parts appearing in the same order are linked). The oracle is the
     * naive id-ordered 3-way join — same exact counts, so any triangle
     * the oriented plan loses or double-counts is a hash fail. */
-  private val g2Triangles: Q = (s, dir) => {
-    val lp = t(s, dir, "lineitem")
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val edges = lp.as("a").join(lp.as("b"),
-        col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-      .select(col("a.p").as("u"), col("b.p").as("v")).distinct()
-    triangleCounts(edges)
-  }
+  private val g2Triangles: Q = (s, dir) => triangleCounts(coPurchase(s, dir))
 
   /** Synchronous label propagation (community detection): every node
     * starts labeled with its own id; each round every node adopts the
@@ -198,21 +227,16 @@ object Graph {
     * all. `adj` is a directed neighbor list (both directions of each
     * undirected edge, plus self-loops). */
   def labelPropagation(nodes: DataFrame, adj: DataFrame,
-      iters: Int, checkpointEvery: Int = 5): DataFrame = {
-    val a = adj.localCheckpoint(eager = false) // see pageRank note
-    var labels = nodes.select(col("node"), col("node").as("lbl"))
-    for (i <- 1 to iters) {
-      val votes = a.join(labels, col("s") === col("node"))
+      iters: Int): DataFrame = {
+    val a = adj.localCheckpoint(eager = false)
+    val top = Window.partitionBy(col("d")).orderBy(col("c").desc, col("lbl"))
+    rounds(nodes.select(col("node"), col("node").as("lbl")), iters) { labels =>
+      a.join(labels, col("s") === col("node"))
         .groupBy(col("d"), col("lbl")).agg(count(lit(1)).as("c"))
-      val top = Window.partitionBy(col("d"))
-        .orderBy(col("c").desc, col("lbl"))
-      labels = votes.withColumn("rk", row_number().over(top))
+        .withColumn("rk", row_number().over(top))
         .filter(col("rk") === 1)
         .select(col("d").as("node"), col("lbl"))
-      if (i % checkpointEvery == 0 && i < iters)
-        labels = labels.localCheckpoint(eager = false) // see pageRank note
     }
-    labels
   }
 
   /** G4: label-propagation communities over the SPARSIFIED nation
@@ -223,21 +247,12 @@ object Graph {
     * oracle unrolls the same 4 synchronous rounds as CTEs, so a lost
     * vote or a wrong tie-break is a hash fail. */
   private val g4LabelProp: Q = (s, dir) => {
-    Tables.register(s, dir)
-    val rev = s.sql(
-      """SELECT s_nationkey AS src, c_nationkey AS dst,
-        |  round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS rv
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_nationkey, c_nationkey""".stripMargin)
+    val rev = tradeRevenue(s, dir)
     val byRev = Window.partitionBy(col("src"))
       .orderBy(col("rv").desc, col("dst"))
     val top3 = rev.withColumn("rk", row_number().over(byRev))
       .filter(col("rk") <= 3).select(col("src"), col("dst"))
-    val nodes = t(s, dir, "nation")
-      .select(col("n_nationkey").as("node")).distinct()
+    val nodes = nations(s, dir)
     val adj = top3.select(col("src").as("s"), col("dst").as("d"))
       .union(top3.select(col("dst").as("s"), col("src").as("d")))
       .union(nodes.select(col("node").as("s"), col("node").as("d")))
@@ -252,25 +267,16 @@ object Graph {
     * influence-backbone primitive. Each round is one degree
     * aggregation + two semi-joins, linear in |E|, and edges only
     * shrink; rounds is a CONSTANT so the plan is a fixed tree (the
-    * [[bfsDistances]] convention — no driver-side convergence loop),
-    * with a lazy checkpoint every `checkpointEvery` rounds to keep
-    * lineage flat. checkpointEvery defaults to 1 (r14 measurement:
-    * each un-checkpointed round references the previous round's tree
-    * THREE times — the degree agg plus two semi-joins — so trees grow
-    * 3^rounds between cuts and the DRIVER's analyze/plan time, not the
-    * executors, dominated g5_kcore at 8–19 s of a ~9 s query; per-round
-    * cuts hold planning flat, guide §7.3). Convergence is certified
-    * IN-PLAN: the emitted
-    * `converged` column is "no surviving node has degree < k", and the
-    * oracle pins it `true`, so an unconverged round budget hash-fails
-    * loudly instead of shipping a half-peeled core. */
-  def kCore(edges: DataFrame, k: Int, rounds: Int,
-      checkpointEvery: Int = 1): DataFrame = {
+    * [[bfsDistances]] convention — no driver-side convergence loop).
+    * Convergence is certified IN-PLAN: the emitted `converged` column
+    * is "no surviving node has degree < k", and the oracle pins it
+    * `true`, so an unconverged round budget hash-fails loudly instead
+    * of shipping a half-peeled core. */
+  def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     def degrees(e: DataFrame): DataFrame =
       e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("c"))
-    var e = edges.localCheckpoint(eager = false)
-    for (i <- 1 to rounds) {
+    val core = Graph.rounds(edges.localCheckpoint(eager = false), rounds) { e =>
       // r15 (guide §3.1/§2.4): filter by ANTI-joining the peeled
       // frontier (degree < k — SMALL, and empty once converged) instead
       // of semi-joining the survivor set (≈ all nodes). Every edge
@@ -282,12 +288,13 @@ object Graph {
       // exchanges canonicalize identically and ReuseExchange computes
       // the degree rollup once per round, not twice
       val bad = degrees(e).filter(col("c") < k).select(col("n"))
-      e = e
-        .join(bad, col("u") === col("n"), "left_anti")
+      e.join(bad, col("u") === col("n"), "left_anti")
         .join(bad, col("v") === col("n"), "left_anti")
-      if (i % checkpointEvery == 0) e = e.localCheckpoint(eager = false)
     }
-    val degF = degrees(e).localCheckpoint(eager = false)
+    // degrees reads its input twice (both endpoints): cut the last
+    // round first so it is computed once.
+    val degF = degrees(core.localCheckpoint(eager = false))
+      .localCheckpoint(eager = false)
     val conv = degF.agg(
       coalesce(min(col("c")), lit(k.toLong)).as("mn"))
     degF.crossJoin(broadcast(conv))
@@ -299,14 +306,8 @@ object Graph {
     * The 8-round budget converges at every gate SF (measured: fixpoint
     * by round 5); the full unrolled-round DuckDB restatement is the
     * oracle, so a node peeled one round early or late hash-fails. */
-  private val g5KCore: Q = (s, dir) => {
-    val lp = t(s, dir, "lineitem")
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val edges = lp.as("a").join(lp.as("b"),
-        col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-      .select(col("a.p").as("u"), col("b.p").as("v")).distinct()
-    kCore(edges, k = 75, rounds = 8).orderBy(col("node"))
-  }
+  private val g5KCore: Q = (s, dir) =>
+    kCore(coPurchase(s, dir), k = 75, rounds = 8).orderBy(col("node"))
 
   /** HITS hubs/authorities (Kleinberg JACM'99), weighted: a_k(v) =
     * Σ_{u→v} h_{k-1}(u)·w, h_k(u) = Σ_{u→v} a_k(v)·w, each vector
@@ -316,8 +317,7 @@ object Graph {
     * double drift can't compound across iterations). One iteration =
     * two rank×edge equi-joins + two keyed aggs — linear in |E|, the
     * Pregel dataflow; the normalization scalars are one-row
-    * crossJoins; lineage cut lazily per round (the pageRank rule —
-    * without it Catalyst analysis goes superlinear in rounds). */
+    * crossJoins. A round's state is one (node, h, a) frame. */
   def hits(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1,
       s"hits needs at least one iteration to define authorities, got $iters")
@@ -330,29 +330,26 @@ object Graph {
       when(m.isNotNull, m).otherwise(raise_error(lit(
         s"hits: no edges matched the node set ($which max is NULL)")))
     val e = edges.localCheckpoint(eager = false)
-    var h = nodes.select(col("node"), lit(1.0).as("h"))
-    var a = h.select(col("node"), col("h").as("a")) // set by iteration 1
-    for (_ <- 1 to iters) {
-      val araw = h.join(e, col("node") === col("src"))
+    // Round 1 reads only h; every round emits (node, h, a).
+    rounds(nodes.select(col("node"), lit(1.0).as("h")), iters) { st =>
+      val araw = st.join(e, col("node") === col("src"))
         .groupBy(col("dst")).agg(sum(col("h") * col("w")).as("ar"))
-      a = nodes.join(araw, col("node") === col("dst"), "left")
+      val a = nodes.join(araw, col("node") === col("dst"), "left")
         .crossJoin(araw.agg(max(col("ar")).as("am")))
         .select(col("node"),
           round(coalesce(col("ar"), lit(0.0)) /
             guarded(col("am"), "authority"), 12).as("a"))
-        .localCheckpoint(eager = false)
       val hraw = a.join(e, col("node") === col("dst"))
         .groupBy(col("src")).agg(sum(col("a") * col("w")).as("hr"))
-      h = nodes.join(hraw, col("node") === col("src"), "left")
+      // `a` holds one row per node, so it stands in for `nodes` here and
+      // carries the authorities along (see rounds on joining it to h).
+      a.join(hraw, col("node") === col("src"), "left")
         .crossJoin(hraw.agg(max(col("hr")).as("hm")))
         .select(col("node"),
           round(coalesce(col("hr"), lit(0.0)) /
-            guarded(col("hm"), "hub"), 12).as("h"))
-        .localCheckpoint(eager = false)
-    }
-    nodes.join(h, "node").join(a, "node")
-      .select(col("node"), round(col("h"), 8).as("hub"),
-        round(col("a"), 8).as("authority"))
+            guarded(col("hm"), "hub"), 12).as("h"), col("a"))
+    }.select(col("node"), round(col("h"), 8).as("hub"),
+      round(col("a"), 8).as("authority"))
   }
 
   /** G6: HITS over the same revenue-weighted nation trade graph as G1
@@ -361,21 +358,8 @@ object Graph {
     * (the two sides PageRank's single score conflates). 5 iterations,
     * full unrolled-CTE DuckDB restatement. */
   private val g6Hits: Q = (s, dir) => {
-    Tables.register(s, dir)
-    val rev = s.sql(
-      """SELECT s_nationkey AS src, c_nationkey AS dst,
-        |  round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS rv
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_nationkey, c_nationkey""".stripMargin)
-    val edges = rev.select(col("src"), col("dst"),
-      round(col("rv") / sum(col("rv")).over(Window.partitionBy(col("src"))),
-        12).as("w"))
-    val nodes = t(s, dir, "nation")
-      .select(col("n_nationkey").as("node")).distinct()
-    hits(nodes, edges, iters = 5).orderBy(col("node"))
+    val edges = tradeShares(s, dir)
+    hits(nations(s, dir), edges, iters = 5).orderBy(col("node"))
   }
 
   /** Single-source shortest paths by synchronous Bellman-Ford rounds:
@@ -390,22 +374,19 @@ object Graph {
   def sssp(nodes: DataFrame, edges: DataFrame, src: Long,
       rounds: Int): DataFrame = {
     val e = edges.localCheckpoint(eager = false)
-    var dist = nodes.select(col("node"),
-      when(col("node") === src, 0L).otherwise(lit(null).cast("long"))
-        .as("d"))
-    for (_ <- 1 to rounds) {
+    Graph.rounds(nodes.select(col("node"),
+        when(col("node") === src, 0L).otherwise(lit(null).cast("long"))
+          .as("d")), rounds) { dist =>
       val relaxed = dist.filter(col("d").isNotNull)
         .join(e, col("node") === col("src_n"))
         .groupBy(col("dst_n"))
         .agg(min(col("d") + col("cost")).as("cand"))
-      dist = dist.join(relaxed, col("node") === col("dst_n"), "left")
+      dist.join(relaxed, col("node") === col("dst_n"), "left")
         .select(col("node"),
           when(col("d").isNull, col("cand"))
             .when(col("cand").isNull, col("d"))
             .otherwise(least(col("d"), col("cand"))).as("d"))
-        .localCheckpoint(eager = false)
     }
-    dist
   }
 
   /** G7: weighted SSSP over the directed nation trade graph with
@@ -424,9 +405,7 @@ object Graph {
         |JOIN customer ON o_custkey = c_custkey
         |JOIN supplier ON l_suppkey = s_suppkey""".stripMargin)
       .select(col("src_n"), col("dst_n"), col("cost").cast("long"))
-    val nodes = t(s, dir, "nation")
-      .select(col("n_nationkey").as("node")).distinct()
-    sssp(nodes, edges, src = 1L, rounds = 6)
+    sssp(nations(s, dir), edges, src = 1L, rounds = 6)
       .select(col("node"), col("d").as("dist"))
       .orderBy(col("node"))
   }
@@ -526,13 +505,7 @@ object Graph {
          |FROM df ORDER BY node""".stripMargin),
     Query("g4_labelprop", g4LabelProp,
       s"""WITH rev AS (
-         |  SELECT s_nationkey AS src, c_nationkey AS dst,
-         |    round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS rv
-         |  FROM lineitem
-         |  JOIN orders ON l_orderkey = o_orderkey
-         |  JOIN customer ON o_custkey = c_custkey
-         |  JOIN supplier ON l_suppkey = s_suppkey
-         |  GROUP BY s_nationkey, c_nationkey),
+         |$TradeRevenueSql),
          |top3 AS (
          |  SELECT src, dst FROM (
          |    SELECT src, dst,
@@ -591,13 +564,7 @@ object Graph {
         |FROM corners GROUP BY node ORDER BY node""".stripMargin),
     Query("g1_pagerank", g1PageRank,
       s"""WITH rev AS (
-         |  SELECT s_nationkey AS src, c_nationkey AS dst,
-         |    round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS rv
-         |  FROM lineitem
-         |  JOIN orders ON l_orderkey = o_orderkey
-         |  JOIN customer ON o_custkey = c_custkey
-         |  JOIN supplier ON l_suppkey = s_suppkey
-         |  GROUP BY s_nationkey, c_nationkey),
+         |$TradeRevenueSql),
          |edges AS (
          |  SELECT src, dst,
          |    round(rv / sum(rv) OVER (PARTITION BY src), 12) AS w
@@ -629,13 +596,7 @@ object Graph {
          |SELECT node, d AS dist FROM d6 ORDER BY node""".stripMargin),
     Query("g6_hits", g6Hits,
       s"""WITH rev AS MATERIALIZED (
-         |  SELECT s_nationkey AS src, c_nationkey AS dst,
-         |    round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS rv
-         |  FROM lineitem
-         |  JOIN orders ON l_orderkey = o_orderkey
-         |  JOIN customer ON o_custkey = c_custkey
-         |  JOIN supplier ON l_suppkey = s_suppkey
-         |  GROUP BY s_nationkey, c_nationkey),
+         |$TradeRevenueSql),
          |edges AS MATERIALIZED (
          |  SELECT src, dst,
          |    round(rv / sum(rv) OVER (PARTITION BY src), 12) AS w

@@ -97,17 +97,6 @@ object Warc {
     out.toSeq
   }
 
-  /** Render one response record (the writer half of the round-trip). */
-  def renderRecord(recordId: String, targetUri: String,
-      htmlBody: String): String = {
-    val http = "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" +
-      htmlBody
-    val len = http.getBytes(Utf8).length
-    s"WARC/1.0\r\nWARC-Type: response\r\nWARC-Record-ID: $recordId\r\n" +
-      s"WARC-Target-URI: $targetUri\r\nContent-Length: $len\r\n\r\n" +
-      http + "\r\n\r\n"
-  }
-
   private def indexOf(hay: Array[Byte], from: Int, needle: String): Int = {
     val n = needle.getBytes(Ascii)
     var i = from

@@ -25,15 +25,6 @@ object StreamDemo {
       .select(col("w.start").as("ws"), col("eventType"), col("n"),
         col("sum_value"))
 
-  /** Streaming exact dedup — the training-data dedup shape on a live
-    * stream. dropDuplicatesWithinWatermark keeps per-key state only
-    * until the watermark passes, so state is bounded (a plain streaming
-    * dropDuplicates grows forever at 100 TB/day). */
-  def dedupStream(events: DataFrame, idCol: String): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark(idCol)
-
   /** Stream-static incremental dedup — the live-ingest counterpart of
     * `Dedup.incrementalDedup`'s exact stage: an arriving doc is dropped
     * if it repeats within the stream inside the watermark window

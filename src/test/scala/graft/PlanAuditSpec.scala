@@ -181,9 +181,6 @@ class PlanAuditSpec extends SparkSpec {
     "e3_knn_classify" -> Set("BroadcastNestedLoop"),
     // broadcast-anchor different-label scan — same map-side shape
     "e3_hard_negatives" -> Set("BroadcastNestedLoop"),
-    // the 1-row BFS seed frontier: its literal join key constant-folds
-    // away, leaving a broadcast of one row — the frontier IS one row
-    "g3_bfs" -> Set("BroadcastNestedLoop"),
     // one stats row read back from the catalog after ANALYZE TABLE —
     // a driver-local LocalTableScan has no codegen stage to span
     "s19_analyze_stats" -> Set("NoCodegen"),
@@ -197,6 +194,9 @@ class PlanAuditSpec extends SparkSpec {
     "e5_dct_phash" -> Set("BroadcastNestedLoop"),
     // one-row fixpoint certificate crossJoined onto the core rows
     "g5_kcore" -> Set("BroadcastNestedLoop"),
+    // HITS's one-row authority/hub max-normalization scalars,
+    // crossJoined in the last round (the rounds before it are cut)
+    "g6_hits" -> Set("BroadcastNestedLoop"),
     // one-row max-corpus-norm (and the self-check scalar rollup)
     // crossJoined in-plan — broadcast-constant shapes, not data joins
     "e3_mips_topk" -> Set("BroadcastNestedLoop"),

@@ -226,7 +226,7 @@ class SimilaritySpec extends SparkSpec {
     Similarity.ivfDelete(delIds, path)
     Similarity.ivfDelete(delIds, path) // full replay: still harmless
     val queries = emb.filter($"vec_id" < 5)
-    val mor = Similarity.ivfSearchIndexMor(spark, path, queries, cents,
+    val mor = Similarity.ivfSearchIndex(spark, path, queries, cents,
       k = 4, nprobe = 3)
     val morRows = mor.select("q_id", "rnk", "c_id").as[(Long, Int, Long)]
       .collect().toSeq
@@ -508,6 +508,9 @@ class SimilaritySpec extends SparkSpec {
       s"$cell:900,901")
     intercept[IllegalArgumentException](
       Similarity.ivfReadIndex(spark, path)) // serving must refuse
+    intercept[IllegalArgumentException]( // and so must a search
+      Similarity.ivfSearchIndex(spark, path, emb.filter($"vec_id" < 3),
+        cents, k = 3, nprobe = 2))
     val healed = Similarity.ivfRebalance(spark, path, cents,
       maxCellRows = Long.MaxValue) // no split work: pure recovery
     assert(healed == cents)

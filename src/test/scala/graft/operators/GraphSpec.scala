@@ -105,25 +105,47 @@ class GraphSpec extends SparkSpec {
   }
 
   test("deep pageRank (30 iters) stays fast via lineage truncation") {
-    // Without checkpointEvery the logical plan nests 30 join+agg
-    // levels and Catalyst analysis goes superlinear — this is a
-    // wall-clock pin on the OPTIMIZER, not the executors (the data is
-    // 3 nodes). Values must equal the untruncated loop's: lineage cuts
-    // are value-neutral (each iteration rounds to 10 anyway).
+    // Without per-round cuts the logical plan nests 30 join+agg levels
+    // and Catalyst analysis goes superlinear — this is a wall-clock pin
+    // on the OPTIMIZER, not the executors (the data is 3 nodes). Cuts
+    // are value-neutral: on the 3-cycle every node's inflow is its
+    // predecessor's rank, so 1/3 is the fixpoint from the first round.
     val nodes = Seq(1L, 2L, 3L).toDF("node")
     val edges = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (3L, 1L, 1.0))
       .toDF("src", "dst", "w")
     val t0 = System.nanoTime()
-    val deep = rankMap(
-      Graph.pageRank(nodes, edges, 3, iters = 30, checkpointEvery = 5)
-        .collect())
+    val deep = rankMap(Graph.pageRank(nodes, edges, 3, iters = 30).collect())
     val secs = (System.nanoTime() - t0) / 1e9
-    val ref = rankMap(
-      Graph.pageRank(nodes, edges, 3, iters = 30, checkpointEvery = 31)
-        .collect())
-    assert(deep == ref, s"truncation changed values: $deep vs $ref")
-    assert(math.abs(deep.values.sum - 1.0) < 1e-6)
+    assert(deep.keySet == Set(1L, 2L, 3L))
+    deep.values.foreach(v => assert(math.abs(v - 1.0 / 3) < 1e-9, s"$deep"))
     assert(secs < 60.0, s"30-iteration pageRank took $secs s")
+  }
+
+  test("every round operator's plan stays flat: 30 rounds plan like 2") {
+    // The round driver cuts lineage after every round but the last, so
+    // the analysed plan of round n reads round n-1 as one leaf and its
+    // size does not depend on n.
+    val nodes = Seq(1L, 2L, 3L).toDF("node")
+    val weighted = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (3L, 1L, 1.0))
+      .toDF("src", "dst", "w")
+    val canon = Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("u", "v")
+    val costed = Seq((1L, 2L, 1L), (2L, 3L, 1L), (3L, 1L, 1L))
+      .toDF("src_n", "dst_n", "cost")
+    val ops: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
+      "pageRank" -> (n => Graph.pageRank(nodes, weighted, 3, iters = n)),
+      "bfsDistances" -> (n => Graph.bfsDistances(canon, 1L, maxHops = n)),
+      "labelPropagation" -> (n => Graph.labelPropagation(nodes,
+        lpAdj(Seq((1L, 2L), (1L, 3L), (2L, 3L)), Seq(1L, 2L, 3L)), n)),
+      "kCore" -> (n => Graph.kCore(canon, k = 2, rounds = n)),
+      "sssp" -> (n => Graph.sssp(nodes, costed, 1L, rounds = n)),
+      "hits" -> (n => Graph.hits(nodes, weighted, iters = n)))
+    def planSize(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.collect { case p => p }.size
+    ops.foreach { case (name, op) =>
+      val (shallow, deep) = (planSize(op(2)), planSize(op(30)))
+      assert(deep == shallow,
+        s"$name: 30-round plan has $deep nodes, 2-round plan $shallow")
+    }
   }
 
   test("kCore peels a pendant chain layer by layer, keeps K4, certifies") {

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.sources.Warc.{WarcRecord, parseRecords, renderRecord}
+import graft.sources.Warc.{WarcRecord, parseRecords}
 
 /** Pins the WARC codec contract: length-declared record walking (not
   * magic scanning), response-only extraction, gzip-by-magic inflation
@@ -11,6 +11,16 @@ class WarcSpec extends SparkSpec {
 
   private def bytes(s: String) =
     s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  /** Render one response record (the writer half of the round-trip). */
+  private def renderRecord(recordId: String, targetUri: String,
+      htmlBody: String): String = {
+    val http = "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" +
+      htmlBody
+    s"WARC/1.0\r\nWARC-Type: response\r\nWARC-Record-ID: $recordId\r\n" +
+      s"WARC-Target-URI: $targetUri\r\nContent-Length: ${bytes(http).length}" +
+      "\r\n\r\n" + http + "\r\n\r\n"
+  }
 
   test("round-trip: render → parse returns every field") {
     val rec = renderRecord("<urn:uuid:doc-7>",

@@ -78,24 +78,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming dedup emits each event id once, state bounded by watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(java.sql.Timestamp, Long, Double)]
-    val q = StreamDemo.dedupStream(
-      stream.toDF().toDF("ts", "event_id", "value"), "event_id")
-      .writeStream.format("memory").queryName("dedup_out")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      stream.addData((ts(1, 1), 1L, 1.0), (ts(1, 1), 1L, 1.0), (ts(1, 2), 2L, 2.0))
-      q.processAllAvailable()
-      stream.addData((ts(1, 2), 1L, 9.0)) // duplicate id across batches
-      q.processAllAvailable()
-      val ids = spark.table("dedup_out")
-        .select("event_id").as[Long].collect().sorted
-      assert(ids.toSeq == Seq(1L, 2L), s"got ${ids.toSeq}")
-    } finally q.stop()
-  }
-
   test("stream-static incremental dedup drops corpus dups and in-stream repeats") {
     implicit val sqlCtx = spark.sqlContext
     val corpus = Seq("existing doc one", "existing doc two").toDF("text")
