@@ -1,6 +1,7 @@
 package graft.lake
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 
 /** Two-zone persistent catalog — the reference keeps raw and processed
   * as two PERSISTENT Glue databases that outlive any one session
@@ -26,13 +27,23 @@ object Catalog {
   def publish(spark: SparkSession, db: String, table: String,
       df: DataFrame): Unit = {
     ensureDatabase(spark, db)
-    // A surviving warehouse location from a dead session is invisible
-    // to a fresh in-memory catalog and fails the write — clear both.
-    spark.sql(s"DROP TABLE IF EXISTS `$db`.`$table`")
-    val whBase = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    Lake.deleteRecursively(
-      new java.io.File(new java.io.File(whBase, s"$db.db"), table))
+    dropManagedTable(spark, table, Some(db))
     df.write.mode(SaveMode.Overwrite).saveAsTable(s"`$db`.`$table`")
+  }
+
+  /** Drop the managed table `table` (in `db`, else the current
+    * database) and delete its location, the catalog's default path for
+    * that name. A fresh in-memory catalog does not know a table whose
+    * warehouse directory survived an earlier session, and a write to
+    * the name then fails on the existing directory — so both go. Never
+    * for an external table: its `LOCATION` is not the default path and
+    * is left as it is. */
+  def dropManagedTable(spark: SparkSession, table: String,
+      db: Option[String] = None): Unit = {
+    val id = TableIdentifier(table, db)
+    spark.sql(s"DROP TABLE IF EXISTS ${id.quotedString}")
+    Lake.deleteRecursively(new java.io.File(
+      spark.sessionState.catalog.defaultTablePath(id).getPath))
   }
 
   /** A Hive-metastore-backed session whose catalog persists at

@@ -383,17 +383,6 @@ object LakeQueries {
       .orderBy(col("o_orderkey"))
   }
 
-  /** S5: catalog-backed SQL — tables registered in the session catalog,
-    * query addresses them by name (`FROM "<db>"."<table>"` shape,
-    * demo_stack.py:288). */
-  private val s5CatalogSql: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT n_name, r_name FROM nation JOIN region
-        |ON n_regionkey = r_regionkey
-        |ORDER BY n_name, r_name""".stripMargin)
-  }
-
   /** S5b: two-database catalog — raw and processed zones as real
     * catalog databases (demo_stack.py:94-100), tables published with
     * saveAsTable and addressed as `db.table` in SQL (:272). Database
@@ -617,9 +606,7 @@ object LakeQueries {
   private val k8CtasInsert: Q = (s, dir) => {
     Tables.register(s, dir)
     val tbl = s"graft_ctas_${Lake.sessionSuffix(s, dir)}"
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    Lake.deleteRecursively(new java.io.File(
-      s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), tbl))
+    Catalog.dropManagedTable(s, tbl)
     s.sql(
       s"""CREATE TABLE $tbl USING parquet AS
          |SELECT n_nationkey AS id, n_name AS name, 'nation' AS src
@@ -642,9 +629,7 @@ object LakeQueries {
   private val k8bCtasPartitioned: Q = (s, dir) => {
     Tables.register(s, dir)
     val tbl = s"graft_ctasp_${Lake.sessionSuffix(s, dir)}"
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    Lake.deleteRecursively(new java.io.File(
-      s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), tbl))
+    Catalog.dropManagedTable(s, tbl)
     s.sql(
       s"""CREATE TABLE $tbl USING parquet PARTITIONED BY (nk) AS
          |SELECT c_custkey AS id, c_name AS name,
@@ -1229,9 +1214,7 @@ object LakeQueries {
     * positivity is asserted. */
   private val s19AnalyzeStats: Q = (s, dir) => {
     val tbl = s"graft_stats_nation_${Lake.sessionSuffix(s, dir)}"
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    Lake.deleteRecursively(new java.io.File(
-      s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), tbl))
+    Catalog.dropManagedTable(s, tbl)
     t(s, dir, "nation").write.mode("overwrite").saveAsTable(tbl)
     s.sql(s"ANALYZE TABLE $tbl COMPUTE STATISTICS " +
       "FOR COLUMNS n_nationkey, n_regionkey")
@@ -1260,6 +1243,12 @@ object LakeQueries {
         col("effective_from"), col("effective_to"), col("is_current"))
       .orderBy(col("custkey"), col("version"))
   }
+
+  /** A query whose one SQL text is both its Spark program, over the
+    * registered testdata views, and its DuckDB oracle. Defined here, not
+    * in `package graft`, so its build's class name names this module. */
+  private def sql(name: String, text: String): Query =
+    Query(name, (s, dir) => { Tables.register(s, dir); s.sql(text) }, text)
 
   val queries: Seq[Query] = Seq(
     Query("k17_scd2", k17Scd2,
@@ -1459,7 +1448,10 @@ object LakeQueries {
         |FROM orders GROUP BY status ORDER BY status""".stripMargin),
     Query("k4_bulk_load", k4BulkLoad,
       "SELECT * FROM nation ORDER BY n_nationkey"),
-    Query("s5_catalog_sql", s5CatalogSql,
+    /** S5: catalog-backed SQL — tables registered in the session
+      * catalog, query addresses them by name (`FROM "<db>"."<table>"`
+      * shape, demo_stack.py:288). */
+    sql("s5_catalog_sql",
       """SELECT n_name, r_name FROM nation JOIN region
         |ON n_regionkey = r_regionkey
         |ORDER BY n_name, r_name""".stripMargin),

@@ -18,95 +18,6 @@ object Advanced {
 
   // ------------------------------------------------------- SQL surface
 
-  /** P6: uncorrelated scalar subquery — deviation from the global mean.
-    * Catalyst plans the subquery once and broadcasts the scalar. */
-  private val p6ScalarSubquery: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT o_orderkey,
-        |  round(o_totalprice - (SELECT avg(o_totalprice) FROM orders), 4)
-        |    AS dev
-        |FROM orders WHERE o_orderkey <= 200
-        |ORDER BY o_orderkey""".stripMargin)
-  }
-
-  /** P10: correlated LATERAL subquery with ORDER BY + LIMIT — the
-    * SQL spelling of per-group top-k (Postgres/DuckDB LATERAL, Spark
-    * SPARK-34382): each nation row drives a dependent top-2-customers
-    * subquery. Catalyst decorrelates it into a join + per-key limit;
-    * DuckDB runs the IDENTICAL statement, so planner disagreement on
-    * the correlated limit semantics hash-fails. */
-  private val p10Lateral: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT n_name, c.c_name, round(c.c_acctbal, 2) AS acctbal
-        |FROM nation, LATERAL (
-        |  SELECT c_name, c_acctbal FROM customer
-        |  WHERE c_nationkey = n_nationkey
-        |  ORDER BY c_acctbal DESC, c_name LIMIT 2) c
-        |ORDER BY n_name, c_name""".stripMargin)
-  }
-
-  /** P11: RECURSIVE CTE executed BY SPARK (new in Spark 4: the engine
-    * iterates the recursive step natively) — a 40-day calendar is
-    * generated by recursion and left-joined to daily event rollups,
-    * the gap-filled-resample shape in pure SQL (ev4 builds the same
-    * grid with explode(sequence)). DuckDB restates the recursion; a
-    * lost recursion step, an off-by-one day bound, or a dropped empty
-    * day all hash-fail. */
-  private val p11RecursiveCte: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """WITH RECURSIVE n(i) AS (
-        |  SELECT 0 UNION ALL SELECT i + 1 FROM n WHERE i < 39)
-        |SELECT date_add(DATE '2024-01-01', i) AS day,
-        |  count(e.event_id) AS n_events,
-        |  round(coalesce(sum(e.value), 0), 4) AS sum_value
-        |FROM n LEFT JOIN events e
-        |  ON CAST(e.ts AS DATE) = date_add(DATE '2024-01-01', i)
-        |GROUP BY i ORDER BY day""".stripMargin)
-  }
-
-  /** P7: correlated IN subquery (planned as a semi-join). */
-  private val p7InSubquery: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE c_custkey IN
-        |  (SELECT o_custkey FROM orders WHERE o_totalprice > 250000)
-        |ORDER BY c_custkey""".stripMargin)
-  }
-
-  /** P8: CTE + null-safe equality. The nullable branch exercises
-    * `IS NOT DISTINCT FROM` (Spark `<=>`) on both engines. */
-  private val p8CteNullsafe: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """WITH flagged AS (
-        |  SELECT c_custkey, nullif(c_mktsegment, 'BUILDING') AS seg
-        |  FROM customer)
-        |SELECT a.c_custkey AS a_key, b.c_custkey AS b_key
-        |FROM flagged a JOIN flagged b
-        |  ON a.seg IS NOT DISTINCT FROM b.seg
-        | AND a.c_custkey < b.c_custkey
-        |WHERE a.c_custkey <= 20 AND b.c_custkey <= 20
-        |ORDER BY a_key, b_key""".stripMargin)
-  }
-
-  /** P9: correlated EXISTS / NOT EXISTS — planned as semi/anti joins
-    * (the remaining subquery shape after p6 scalar and p7 IN). */
-  private val p9Exists: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT s_suppkey, s_name,
-        |  EXISTS (SELECT 1 FROM lineitem
-        |          WHERE l_suppkey = s_suppkey AND l_quantity > 49) AS has_bulk
-        |FROM supplier
-        |WHERE NOT EXISTS (SELECT 1 FROM lineitem
-        |                  WHERE l_suppkey = s_suppkey AND l_discount > 0.09)
-        |ORDER BY s_suppkey""".stripMargin)
-  }
-
   /** W5: ntile — equi-depth bucketing within a partition (the remaining
     * ranking-family window after w1 rank/dense_rank/row_number). */
   private val w5Ntile: Q = (s, dir) => {
@@ -226,25 +137,6 @@ object Advanced {
       (col("n") > 0).as("nonempty"))
   }
 
-  /** A22: boolean and bitwise aggregates — `bool_and`/`bool_or` (the
-    * SQL-standard EVERY/ANY) and `bit_and`/`bit_or`/`bit_xor` over a
-    * bounded int column. All five are partial-aggregable single-value
-    * states (a bit/bool per group), the cheapest aggregation class at
-    * 100 TB; the xor doubles as an order-independent set checksum. */
-  private val a22BoolBitAggs: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT l_returnflag,
-        |  bool_and(l_quantity > 0) AS all_positive,
-        |  bool_or(l_discount > 0.09) AS any_deep_discount,
-        |  bit_and(l_linenumber) AS band,
-        |  bit_or(l_linenumber) AS bor,
-        |  bit_xor(l_orderkey) AS checksum,
-        |  count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin)
-  }
-
   /** U5: union-by-name with MISSING columns — the schema-drift append
     * (`unionByName(allowMissingColumns = true)`): each side's absent
     * columns fill with typed NULLs, matched by NAME, not position —
@@ -327,39 +219,6 @@ object Advanced {
         |        concat(l_returnflag, l_linestatus), 5, 100)) AS e
         |      FROM lineitem) t
         |ORDER BY cnt DESC, item""".stripMargin)
-  }
-
-  /** A9: explicit GROUPING SETS with grouping() markers (rollup/cube are
-    * the pre-canned shapes; this is the general one). */
-  private val a9GroupingSets: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT coalesce(l_returnflag, '-') AS rf,
-        |  coalesce(l_linestatus, '-') AS ls,
-        |  grouping(l_returnflag) AS g_rf, grouping(l_linestatus) AS g_ls,
-        |  count(*) AS n, round(sum(l_quantity), 2) AS qty
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        |ORDER BY rf, ls""".stripMargin)
-  }
-
-  /** F14: DecimalType money math — exact decimal arithmetic end to end
-    * (cast → subtract → multiply → sum/min/max), closing the Athena ANSI
-    * type surface (SURVEY §1.3). Inputs are cast to DECIMAL(12,2) and
-    * every intermediate stays decimal, so results are EXACT — no
-    * floating rounding grid needed; outputs serialize as canonical
-    * scale-preserving strings (both engines print identical plain
-    * decimal forms, sidestepping sum-type precision differences). */
-  private val f14Decimal: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT l_returnflag,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS STRING) AS gross,
-        |  CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-        |    * (1 - CAST(l_discount AS DECIMAL(12,2))) AS DECIMAL(38,4))) AS STRING) AS net,
-        |  CAST(min(CAST(l_extendedprice AS DECIMAL(12,2))) AS STRING) AS min_price,
-        |  CAST(max(CAST(l_extendedprice AS DECIMAL(12,2))) AS STRING) AS max_price
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
   }
 
   /** L4: LIMIT + OFFSET pagination (deterministic under total order). */
@@ -453,13 +312,8 @@ object Advanced {
         val sfx = graft.lake.Lake.sessionSuffix(s, dir)
         val (ordersTbl, lineitemTbl) =
           (s"graft_b_orders_$sfx", s"graft_b_lineitem_$sfx")
-        // A fresh in-memory catalog doesn't know tables whose warehouse
-        // location survived a previous session — drop both name and files.
-        Seq(ordersTbl, lineitemTbl).foreach { tbl =>
-          s.sql(s"DROP TABLE IF EXISTS $tbl")
-          graft.lake.Lake.deleteRecursively(new java.io.File(
-            s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), tbl))
-        }
+        Seq(ordersTbl, lineitemTbl)
+          .foreach(graft.lake.Catalog.dropManagedTable(s, _))
         t(s, dir, "orders").write.mode("overwrite")
           .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
           .saveAsTable(ordersTbl)
@@ -586,10 +440,6 @@ object Advanced {
       .orderBy(col("om"))
   }
 
-  /** Q3-shaped analytics: 3-way join + filter + agg + top-k — the full
-    * interactive-SQL workload shape, identical SQL text on both engines.
-    * Catalyst broadcasts the filtered customer dimension and plans
-    * TakeOrderedAndProject for the top-10. */
   /** A15: association-rule mining (support / confidence / lift) over
     * order baskets — the a-priori shape: the item-support filter prunes
     * the basket table BEFORE the pair self-join, so pair fanout is
@@ -634,392 +484,6 @@ object Advanced {
       .limit(k)
   }
 
-  private val q3Shipping: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT l_orderkey,
-        |  round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS revenue,
-        |  o_orderdate, o_orderpriority
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-03-15'
-        |  AND l_shipdate > TIMESTAMP '1995-03-15'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, o_orderdate, l_orderkey
-        |LIMIT 10""".stripMargin)
-  }
-
-  /** Q5-shaped analytics: 6-way star join with a same-nation predicate. */
-  private val q5LocalSupplier: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT n_name,
-        |  round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS revenue
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA' AND c_nationkey = s_nationkey
-        |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin)
-  }
-
-  /** Q7-shaped analytics: bidirectional cross-nation volume — the
-    * double-dimension-alias join (nation joined TWICE, as supplier
-    * nation and customer nation) with an OR of symmetric pairs that
-    * defeats naive single-sided pushdown, grouped by derived year.
-    * Catalyst broadcasts both nation sides and pushes the OR as a
-    * post-join filter; the fact tables still join on their keys. Year
-    * is CAST to BIGINT in the shared text so both engines agree on the
-    * column type. */
-  private val q7Volume: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
-        |  round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS revenue
-        |FROM supplier
-        |JOIN lineitem ON s_suppkey = l_suppkey
-        |JOIN orders ON o_orderkey = l_orderkey
-        |JOIN customer ON c_custkey = o_custkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-        |   OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
-        |GROUP BY supp_nation, cust_nation, l_year
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin)
-  }
-
-  /** Q18-shaped analytics: large-volume customers — the
-    * aggregate-then-join shape (a HAVING-filtered per-order rollup
-    * drives the customer join), where the rollup prunes the fact to a
-    * small key set BEFORE any dimension join touches it. */
-  private val q18LargeOrders: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT c_custkey, c_name, o_orderkey,
-        |  round(o_totalprice, 2) AS price,
-        |  round(t.sum_qty, 2) AS sum_qty
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN (SELECT l_orderkey, sum(l_quantity) AS sum_qty
-        |      FROM lineitem GROUP BY l_orderkey
-        |      HAVING sum(l_quantity) > 250) t
-        |  ON o_orderkey = t.l_orderkey
-        |ORDER BY price DESC, o_orderkey""".stripMargin)
-  }
-
-  /** Q4-shaped analytics: priority checking — a date-sliced aggregate
-    * gated by a correlated EXISTS whose predicate compares columns of
-    * BOTH relations (l_shipdate > o_orderdate), which Catalyst rewrites
-    * to a left-semi join with the comparison as a join condition. */
-  private val q4Priority: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey
-        |                AND l_shipdate > o_orderdate)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
-  }
-
-  /** Q12-shaped analytics: conditional counts inside one aggregation
-    * (`count(CASE …)` per priority class) over a date-sliced
-    * fact-dimension join — the pivot-free conditional rollup. */
-  private val q12PriorityLines: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT l_returnflag, count(*) AS n_items,
-        |  count(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |             THEN 1 END) AS high_line_count,
-        |  count(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-        |             THEN 1 END) AS low_line_count
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
-  }
-
-  /** Q14-shaped analytics: promo revenue share — a single-row ratio of
-    * two conditional sums over one month's part-lineitem join.
-    * Products round per ROW inside both sums (the rounding-parity
-    * convention) so the ratio is bit-stable across engines. */
-  private val q14Promo: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT round(100.0 * sum(CASE WHEN p_type = 'PROMO'
-        |    THEN round(l_extendedprice * (1.0 - l_discount), 4)
-        |    ELSE 0.0 END) /
-        |  sum(round(l_extendedprice * (1.0 - l_discount), 4)), 4)
-        |  AS promo_revenue
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'""".stripMargin)
-  }
-
-  /** Q13-shaped analytics: customer order-count distribution — the
-    * planner shape the other q-queries lack: a LEFT OUTER join under an
-    * aggregation under ANOTHER aggregation (orders per customer
-    * including the zero-order customers, then a histogram of those
-    * counts). The join-side filter stands in for q13's o_comment NOT
-    * LIKE (the synthetic orders carry no comment): it must stay IN the
-    * join condition — as a WHERE it would turn the outer join inner and
-    * silently drop the zero-order bucket. At scale: one fact shuffle on
-    * custkey, then a tiny distinct-count-keyed agg. */
-  private val q13Custdist: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT c_count, count(*) AS custdist
-        |FROM (SELECT c_custkey, count(o_orderkey) AS c_count
-        |      FROM customer LEFT OUTER JOIN orders
-        |        ON c_custkey = o_custkey
-        |        AND o_orderpriority <> '1-URGENT'
-        |      GROUP BY c_custkey) c_orders
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin)
-  }
-
-  /** Q22-shaped analytics: customers with above-average positive
-    * balance and NO orders (q22's global-sales-opportunity shape, with
-    * the nation dim standing in for the phone-prefix country code):
-    * an uncorrelated scalar subquery feeds the fact filter and a NOT
-    * EXISTS anti-joins the order set — Catalyst plans the subquery as
-    * a one-row broadcast and the NOT EXISTS as a left-anti hash join,
-    * both identical at 1000 executors. The anti-joined side is the
-    * URGENT-priority order subset (not all orders): in the synthetic
-    * data every customer has SOME order, so an all-orders NOT EXISTS
-    * returns zero rows at every gate SF and the anti-join would never
-    * be exercised on data — the filtered subset leaves a real
-    * "high-balance customers with no urgent orders" population at both
-    * sf0.01 and sf0.1. */
-  private val q22Opportunity: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT n_name, count(*) AS numcust,
-        |  round(sum(c_acctbal), 2) AS totacctbal
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer
-        |                   WHERE c_acctbal > 0.0)
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey
-        |                    AND o_orderpriority = '1-URGENT')
-        |GROUP BY n_name ORDER BY n_name""".stripMargin)
-  }
-
-  /** A20: ANSI FILTER clause — per-aggregate predicates without the
-    * CASE-expression contortion (q12's shape): each aggregate sees
-    * only its qualifying rows, all evaluated in ONE grouped pass (no
-    * extra scan per filtered aggregate — the plan is a single
-    * HashAggregate with conditional update expressions). */
-  private val a20FilterClause: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT l_returnflag,
-        |  count(*) AS n_all,
-        |  count(*) FILTER (WHERE l_quantity >= 25) AS n_bulk,
-        |  round(sum(l_extendedprice) FILTER (WHERE l_discount >= 0.05), 2)
-        |    AS discounted_price,
-        |  round(avg(l_quantity) FILTER (WHERE l_tax > 0.03), 4)
-        |    AS avg_taxed_qty
-        |FROM lineitem
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
-  }
-
-  /** W8: named WINDOW clause — one PARTITION/ORDER definition shared
-    * by several window functions (the ANSI dedup of repeated OVER
-    * specs); functions over the SAME named window share one
-    * sort+partition pass in the plan. */
-  private val w8WindowClause: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT o_orderkey, o_custkey,
-        |  rank() OVER w AS rk,
-        |  lead(o_orderkey, 1) OVER w AS next_key,
-        |  sum(cast(round(o_totalprice * 100, 0) AS BIGINT)) OVER w2
-        |    AS cust_sum_cents,
-        |  count(*) OVER w2 AS cust_n
-        |FROM orders
-        |WHERE o_orderkey % 50 = 0
-        |WINDOW w AS (PARTITION BY o_custkey
-        |             ORDER BY o_totalprice DESC, o_orderkey),
-        |       w2 AS (PARTITION BY o_custkey)
-        |ORDER BY o_orderkey""".stripMargin)
-  }
-
-  /** Q6-shaped analytics: the forecasting-revenue-change scan — ONE
-    * fact table, a date slice, two range predicates, one conditional
-    * sum. The whole query is a single parquet scan with every filter
-    * pushed (PushedFilters carries the date + discount + quantity
-    * bounds) feeding a partial-aggregated global sum: the canonical
-    * "scan speed IS the query" shape at 100 TB. */
-  private val q6Forecast: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT round(sum(round(l_extendedprice * l_discount, 4)), 2)
-        |    AS revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_discount BETWEEN 0.05 AND 0.07
-        |  AND l_quantity < 24""".stripMargin)
-  }
-
-  /** Q8-shaped analytics: NATIONAL MARKET SHARE — the widest TPC-H
-    * star this schema supports (8 relations: part × lineitem × orders
-    * × customer × supplier × nation×2 × region): one nation's share
-    * of a region's PROMO-part volume per order year, the numerator a
-    * conditional sum over the same join. Catalyst broadcasts all five
-    * dimension sides; the two fact joins shuffle on their keys; the
-    * self-joined nation dimension aliases cleanly. */
-  private val q8MktShare: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT o_year,
-        |  round(sum(CASE WHEN nation = 'NATION_3' THEN volume
-        |                 ELSE 0.0 END) / sum(volume), 4) AS mkt_share
-        |FROM (
-        |  SELECT year(o_orderdate) AS o_year,
-        |    round(l_extendedprice * (1 - l_discount), 4) AS volume,
-        |    n2.n_name AS nation
-        |  FROM part
-        |  JOIN lineitem ON p_partkey = l_partkey
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |  JOIN region ON n1.n_regionkey = r_regionkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        |  WHERE r_name = 'ASIA' AND p_type = 'PROMO') all_nations
-        |GROUP BY o_year
-        |ORDER BY o_year""".stripMargin)
-  }
-
-  /** Q15-shaped analytics: TOP SUPPLIER via a named subquery consumed
-    * TWICE — once as the join input, once under a scalar MAX — the
-    * view-over-aggregate shape (TPC-H defines it as CREATE VIEW;
-    * a CTE is the same plan). Ties on the rounded revenue would all
-    * surface (the spec's semantics); the ORDER BY keeps the gate
-    * total. */
-  private val q15TopSupplier: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """WITH revenue AS (
-        |  SELECT l_suppkey AS supplier_no,
-        |    round(sum(round(l_extendedprice * (1 - l_discount), 4)), 2)
-        |      AS total_revenue
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
-        |  GROUP BY l_suppkey)
-        |SELECT s_suppkey, s_name, total_revenue
-        |FROM supplier JOIN revenue ON s_suppkey = supplier_no
-        |WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
-        |ORDER BY s_suppkey""".stripMargin)
-  }
-
-  /** Q10-shaped analytics: top customers by REVENUE FROM RETURNED
-    * items in one quarter — the canonical "who costs us money" report:
-    * a 3-way fact join (customer × orders × lineitem) filtered to
-    * l_returnflag = 'R', dimension join to nation, grouped per
-    * customer, total-ordered top-20. Catalyst broadcasts nation and
-    * shuffles the fact joins on their keys; the top-k is a
-    * TakeOrderedAndProject — no full sort at 100 TB. */
-  private val q10Returned: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT c_custkey, c_name, n_name,
-        |  round(sum(round(l_extendedprice * (1 - l_discount), 4)), 2)
-        |    AS revenue,
-        |  round(max(c_acctbal), 2) AS acctbal
-        |FROM customer
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |WHERE o_orderdate >= TIMESTAMP '1995-10-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_returnflag = 'R'
-        |GROUP BY c_custkey, c_name, n_name
-        |ORDER BY revenue DESC, c_custkey
-        |LIMIT 20""".stripMargin)
-  }
-
-  /** Q17-shaped analytics: revenue lost to SMALL-QUANTITY orders of
-    * one brand — the correlated-scalar-subquery shape: each lineitem
-    * compares against 0.2 × the avg quantity OF ITS OWN PART. Catalyst
-    * de-correlates into an aggregate-then-join (one per-part avg
-    * table, broadcast-joined back) — the rewrite that makes the query
-    * linear instead of per-row re-aggregation. */
-  private val q17SmallQty: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE p_brand = 'Brand#23'
-        |  AND l_quantity < (SELECT 0.2 * avg(l_quantity)
-        |                    FROM lineitem l2
-        |                    WHERE l2.l_partkey = p_partkey)""".stripMargin)
-  }
-
-  /** Q19-shaped analytics: DISJUNCTIVE join predicate — three
-    * (brand, size-range, quantity-range) conjunct groups OR-ed
-    * together. The join key (p_partkey = l_partkey) stays an equi-hash
-    * join; the disjunction is a residual filter, and the common
-    * p_size ≥ 1 / quantity bounds are pushable — the shape that
-    * exposes engines which fall back to nested-loop on any OR. */
-  private val q19Disjunctive: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT
-        |  round(sum(round(l_extendedprice * (1 - l_discount), 4)), 2)
-        |    AS revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-        |       AND l_quantity BETWEEN 1 AND 20)
-        |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 20
-        |       AND l_quantity BETWEEN 10 AND 30)
-        |   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 25
-        |       AND l_quantity BETWEEN 20 AND 40)""".stripMargin)
-  }
-
-  /** Q21-shaped analytics: SUPPLIERS WHO KEPT ORDERS WAITING — the
-    * double-correlated EXISTS / NOT EXISTS shape (the hardest TPC-H
-    * subquery pattern): a supplier counts when its line shipped > 60
-    * days after the order date on a multi-supplier FINISHED order
-    * where NO OTHER supplier was late (l_receiptdate is not in the
-    * synthetic schema; shipdate-vs-orderdate lateness is the same
-    * dataflow). Catalyst plans both correlations as left-semi /
-    * left-anti hash joins on l_orderkey — no per-row subquery
-    * execution anywhere. */
-  private val q21Waiting: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT s_name, count(*) AS numwait
-        |FROM supplier
-        |JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-        |JOIN orders ON o_orderkey = l1.l_orderkey
-        |WHERE o_orderstatus = 'F'
-        |  AND l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey
-        |                AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey
-        |                    AND l3.l_suppkey <> l1.l_suppkey
-        |                    AND l3.l_shipdate >
-        |                        o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name
-        |LIMIT 25""".stripMargin)
-  }
-
   /** Q2-shaped analytics: MINIMUM-COST SUPPLIER — the correlated
     * min-cost-subquery shape over a 4-way dimension join, run twice
     * (outer + inside the correlation). The schema has no partsupp, so
@@ -1057,32 +521,6 @@ object Advanced {
         |LIMIT 100""".stripMargin)
   }
 
-  /** Q9-shaped analytics: PRODUCT-TYPE PROFIT per nation per year —
-    * the expression-keyed multi-join aggregation (5 relations; the
-    * group keys are n_name and year(o_orderdate), an expression, not a
-    * column; the measure subtracts a cost expression from a revenue
-    * expression). Supply cost is surrogated as 10% of retail price ×
-    * quantity (no partsupp in this schema). The LIKE filter prunes
-    * part FIRST, so the fact join fans out only matching parts;
-    * dims broadcast, facts shuffle on their keys. */
-  private val q9Profit: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT nation, o_year, round(sum(amount), 2) AS sum_profit
-        |FROM (
-        |  SELECT n_name AS nation, year(o_orderdate) AS o_year,
-        |    round(l_extendedprice * (1 - l_discount)
-        |          - p_retailprice * 0.1 * l_quantity, 4) AS amount
-        |  FROM part
-        |  JOIN lineitem ON p_partkey = l_partkey
-        |  JOIN supplier ON s_suppkey = l_suppkey
-        |  JOIN orders ON o_orderkey = l_orderkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  WHERE p_name LIKE '%bolt%') profit
-        |GROUP BY nation, o_year
-        |ORDER BY nation, o_year DESC""".stripMargin)
-  }
-
   /** Q11-shaped analytics: IMPORTANT STOCK — grouped per-part supply
     * value filtered by a SCALAR-SUBQUERY GLOBAL THRESHOLD computed
     * from the SAME grouped aggregate (TPC-H's sum×fraction restated as
@@ -1109,62 +547,40 @@ object Advanced {
         |ORDER BY value_cents DESC, partkey""".stripMargin)
   }
 
-  /** Q16-shaped analytics: PART/SUPPLIER RELATIONSHIP COUNT — the
-    * NOT-IN anti-join + COUNT(DISTINCT) shape: how many distinct
-    * suppliers ship each surviving (brand, type, size) combination,
-    * excluding a blocklisted supplier set resolved by subquery
-    * (name-pattern surrogate for the complaints filter — acctbal < 0
-    * is vacuous below sf0.1). Catalyst plans NOT IN as a null-aware
-    * anti join (broadcast — the blocklist is small) and the distinct
-    * count as the two-phase partial-distinct aggregate. */
-  private val q16PartSupplier: Q = (s, dir) => {
+  /** W8: named WINDOW clause — one PARTITION/ORDER definition shared
+    * by several window functions (the ANSI dedup of repeated OVER
+    * specs); functions over the SAME named window share one
+    * sort+partition pass in the plan. */
+  private val w8WindowClause: Q = (s, dir) => {
     Tables.register(s, dir)
     s.sql(
-      """SELECT p_brand, p_type, p_size,
-        |  count(DISTINCT l_suppkey) AS supplier_cnt
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE p_brand <> 'Brand#13' AND p_type NOT IN ('PROMO', 'ECONOMY')
-        |  AND p_size IN (1, 4, 7, 10, 14, 19, 23, 36, 45, 49)
-        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier
-        |                        WHERE s_name LIKE '%7')
-        |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin)
+      """SELECT o_orderkey, o_custkey,
+        |  rank() OVER w AS rk,
+        |  lead(o_orderkey, 1) OVER w AS next_key,
+        |  sum(cast(round(o_totalprice * 100, 0) AS BIGINT)) OVER w2
+        |    AS cust_sum_cents,
+        |  count(*) OVER w2 AS cust_n
+        |FROM orders
+        |WHERE o_orderkey % 50 = 0
+        |WINDOW w AS (PARTITION BY o_custkey
+        |             ORDER BY o_totalprice DESC, o_orderkey),
+        |       w2 AS (PARTITION BY o_custkey)
+        |ORDER BY o_orderkey""".stripMargin)
   }
 
-  /** Q20-shaped analytics: POTENTIAL PROMOTION SUPPLIERS — the
-    * double-nested quantity-subquery shape: a semi-join (IN) whose
-    * subject is itself built from a nested IN (name-filtered parts)
-    * plus a CORRELATED scalar comparing each (supplier, part) year
-    * volume against half that part's TOTAL year volume across all
-    * suppliers. Catalyst decorrelates the scalar into a per-part agg
-    * joined back on partkey and plans both INs as left-semi hash
-    * joins — nothing per-row, everything keyed. */
-  private val q20PotentialPromo: Q = (s, dir) => {
-    Tables.register(s, dir)
-    s.sql(
-      """SELECT s_suppkey, s_name, n_name
-        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |WHERE s_suppkey IN (
-        |  SELECT sq.l_suppkey FROM (
-        |    SELECT l_suppkey, l_partkey, sum(l_quantity) AS qty
-        |    FROM lineitem
-        |    WHERE l_partkey IN (SELECT p_partkey FROM part
-        |                        WHERE p_name LIKE 'blue%')
-        |      AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |      AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |    GROUP BY l_suppkey, l_partkey) sq
-        |  WHERE sq.qty > (SELECT 0.5 * sum(l2.l_quantity)
-        |                  FROM lineitem l2
-        |                  WHERE l2.l_partkey = sq.l_partkey
-        |                    AND l2.l_shipdate >=
-        |                        TIMESTAMP '1996-01-01 00:00:00'
-        |                    AND l2.l_shipdate <
-        |                        TIMESTAMP '1997-01-01 00:00:00'))
-        |ORDER BY s_suppkey""".stripMargin)
-  }
+  /** A query whose one SQL text is both its Spark program, over the
+    * registered testdata views, and its DuckDB oracle. Defined here, not
+    * in `package graft`, so its build's class name names this module. */
+  private def sql(name: String, text: String): Query =
+    Query(name, (s, dir) => { Tables.register(s, dir); s.sql(text) }, text)
 
   val queries: Seq[Query] = Seq(
-    Query("a20_filter_clause", a20FilterClause,
+    /** A20: ANSI FILTER clause — per-aggregate predicates without the
+      * CASE-expression contortion (q12's shape): each aggregate sees
+      * only its qualifying rows, all evaluated in ONE grouped pass (no
+      * extra scan per filtered aggregate — the plan is a single
+      * HashAggregate with conditional update expressions). */
+    sql("a20_filter_clause",
       """SELECT l_returnflag,
         |  count(*) AS n_all,
         |  count(*) FILTER (WHERE l_quantity >= 25) AS n_bulk,
@@ -1174,6 +590,9 @@ object Advanced {
         |    AS avg_taxed_qty
         |FROM lineitem
         |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    // DuckDB's windowed sum(BIGINT) is HUGEINT, so the oracle casts it
+    // back; the same `::BIGINT` in Spark's text would add a renaming
+    // projection above the window.
     Query("w8_window_clause", w8WindowClause,
       """SELECT o_orderkey, o_custkey,
         |  rank() OVER w AS rk,
@@ -1187,21 +606,34 @@ object Advanced {
         |             ORDER BY o_totalprice DESC, o_orderkey),
         |       w2 AS (PARTITION BY o_custkey)
         |ORDER BY o_orderkey""".stripMargin),
-    Query("q6_forecast", q6Forecast,
+    /** Q6-shaped analytics: the forecasting-revenue-change scan — ONE
+      * fact table, a date slice, two range predicates, one conditional
+      * sum. The whole query is a single parquet scan with every filter
+      * pushed (PushedFilters carries the date + discount + quantity
+      * bounds) feeding a partial-aggregated global sum: the canonical
+      * "scan speed IS the query" shape at 100 TB. */
+    sql("q6_forecast",
       """SELECT round(sum(round(l_extendedprice * l_discount, 4)), 2)
         |    AS revenue,
-        |  count(*)::BIGINT AS n_lines
+        |  count(*) AS n_lines
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
         |  AND l_discount BETWEEN 0.05 AND 0.07
         |  AND l_quantity < 24""".stripMargin),
-    Query("q8_mkt_share", q8MktShare,
+    /** Q8-shaped analytics: NATIONAL MARKET SHARE — the widest TPC-H
+      * star this schema supports (8 relations: part × lineitem × orders
+      * × customer × supplier × nation×2 × region): one nation's share
+      * of a region's PROMO-part volume per order year, the numerator a
+      * conditional sum over the same join. Catalyst broadcasts all five
+      * dimension sides; the two fact joins shuffle on their keys; the
+      * self-joined nation dimension aliases cleanly. */
+    sql("q8_mkt_share",
       """SELECT o_year,
         |  round(sum(CASE WHEN nation = 'NATION_3' THEN volume
         |                 ELSE 0.0 END) / sum(volume), 4) AS mkt_share
         |FROM (
-        |  SELECT date_part('year', o_orderdate) AS o_year,
+        |  SELECT year(o_orderdate) AS o_year,
         |    round(l_extendedprice * (1 - l_discount), 4) AS volume,
         |    n2.n_name AS nation
         |  FROM part
@@ -1215,7 +647,13 @@ object Advanced {
         |  WHERE r_name = 'ASIA' AND p_type = 'PROMO') all_nations
         |GROUP BY o_year
         |ORDER BY o_year""".stripMargin),
-    Query("q15_top_supplier", q15TopSupplier,
+    /** Q15-shaped analytics: TOP SUPPLIER via a named subquery consumed
+      * TWICE — once as the join input, once under a scalar MAX — the
+      * view-over-aggregate shape (TPC-H defines it as CREATE VIEW;
+      * a CTE is the same plan). Ties on the rounded revenue would all
+      * surface (the spec's semantics); the ORDER BY keeps the gate
+      * total. */
+    sql("q15_top_supplier",
       """WITH revenue AS (
         |  SELECT l_suppkey AS supplier_no,
         |    round(sum(round(l_extendedprice * (1 - l_discount), 4)), 2)
@@ -1228,7 +666,14 @@ object Advanced {
         |FROM supplier JOIN revenue ON s_suppkey = supplier_no
         |WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
         |ORDER BY s_suppkey""".stripMargin),
-    Query("q10_returned", q10Returned,
+    /** Q10-shaped analytics: top customers by REVENUE FROM RETURNED
+      * items in one quarter — the canonical "who costs us money" report:
+      * a 3-way fact join (customer × orders × lineitem) filtered to
+      * l_returnflag = 'R', dimension join to nation, grouped per
+      * customer, total-ordered top-20. Catalyst broadcasts nation and
+      * shuffles the fact joins on their keys; the top-k is a
+      * TakeOrderedAndProject — no full sort at 100 TB. */
+    sql("q10_returned",
       """SELECT c_custkey, c_name, n_name,
         |  round(sum(round(l_extendedprice * (1 - l_discount), 4)), 2)
         |    AS revenue,
@@ -1243,18 +688,30 @@ object Advanced {
         |GROUP BY c_custkey, c_name, n_name
         |ORDER BY revenue DESC, c_custkey
         |LIMIT 20""".stripMargin),
-    Query("q17_small_qty", q17SmallQty,
+    /** Q17-shaped analytics: revenue lost to SMALL-QUANTITY orders of
+      * one brand — the correlated-scalar-subquery shape: each lineitem
+      * compares against 0.2 × the avg quantity OF ITS OWN PART. Catalyst
+      * de-correlates into an aggregate-then-join (one per-part avg
+      * table, broadcast-joined back) — the rewrite that makes the query
+      * linear instead of per-row re-aggregation. */
+    sql("q17_small_qty",
       """SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
         |FROM lineitem JOIN part ON p_partkey = l_partkey
         |WHERE p_brand = 'Brand#23'
         |  AND l_quantity < (SELECT 0.2 * avg(l_quantity)
         |                    FROM lineitem l2
         |                    WHERE l2.l_partkey = p_partkey)""".stripMargin),
-    Query("q19_disjunctive", q19Disjunctive,
+    /** Q19-shaped analytics: DISJUNCTIVE join predicate — three
+      * (brand, size-range, quantity-range) conjunct groups OR-ed
+      * together. The join key (p_partkey = l_partkey) stays an equi-hash
+      * join; the disjunction is a residual filter, and the common
+      * p_size ≥ 1 / quantity bounds are pushable — the shape that
+      * exposes engines which fall back to nested-loop on any OR. */
+    sql("q19_disjunctive",
       """SELECT
         |  round(sum(round(l_extendedprice * (1 - l_discount), 4)), 2)
         |    AS revenue,
-        |  count(*)::BIGINT AS n_lines
+        |  count(*) AS n_lines
         |FROM lineitem JOIN part ON p_partkey = l_partkey
         |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
         |       AND l_quantity BETWEEN 1 AND 20)
@@ -1262,8 +719,17 @@ object Advanced {
         |       AND l_quantity BETWEEN 10 AND 30)
         |   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 25
         |       AND l_quantity BETWEEN 20 AND 40)""".stripMargin),
-    Query("q21_waiting", q21Waiting,
-      """SELECT s_name, count(*)::BIGINT AS numwait
+    /** Q21-shaped analytics: SUPPLIERS WHO KEPT ORDERS WAITING — the
+      * double-correlated EXISTS / NOT EXISTS shape (the hardest TPC-H
+      * subquery pattern): a supplier counts when its line shipped > 60
+      * days after the order date on a multi-supplier FINISHED order
+      * where NO OTHER supplier was late (l_receiptdate is not in the
+      * synthetic schema; shipdate-vs-orderdate lateness is the same
+      * dataflow). Catalyst plans both correlations as left-semi /
+      * left-anti hash joins on l_orderkey — no per-row subquery
+      * execution anywhere. */
+    sql("q21_waiting",
+      """SELECT s_name, count(*) AS numwait
         |FROM supplier
         |JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
         |JOIN orders ON o_orderkey = l1.l_orderkey
@@ -1306,11 +772,18 @@ object Advanced {
         |                AND r2.r_name = 'EUROPE')
         |ORDER BY acctbal DESC, n_name, s_name, p_partkey
         |LIMIT 100""".stripMargin),
-    Query("q9_profit", q9Profit,
+    /** Q9-shaped analytics: PRODUCT-TYPE PROFIT per nation per year —
+      * the expression-keyed multi-join aggregation (5 relations; the
+      * group keys are n_name and year(o_orderdate), an expression, not a
+      * column; the measure subtracts a cost expression from a revenue
+      * expression). Supply cost is surrogated as 10% of retail price ×
+      * quantity (no partsupp in this schema). The LIKE filter prunes
+      * part FIRST, so the fact join fans out only matching parts;
+      * dims broadcast, facts shuffle on their keys. */
+    sql("q9_profit",
       """SELECT nation, o_year, round(sum(amount), 2) AS sum_profit
         |FROM (
-        |  SELECT n_name AS nation,
-        |    date_part('year', o_orderdate) AS o_year,
+        |  SELECT n_name AS nation, year(o_orderdate) AS o_year,
         |    round(l_extendedprice * (1 - l_discount)
         |          - p_retailprice * 0.1 * l_quantity, 4) AS amount
         |  FROM part
@@ -1335,9 +808,17 @@ object Advanced {
         |WHERE value_cents > (SELECT 1.5 * avg(value_cents)
         |                     FROM supply_value)
         |ORDER BY value_cents DESC, partkey""".stripMargin),
-    Query("q16_part_supplier", q16PartSupplier,
+    /** Q16-shaped analytics: PART/SUPPLIER RELATIONSHIP COUNT — the
+      * NOT-IN anti-join + COUNT(DISTINCT) shape: how many distinct
+      * suppliers ship each surviving (brand, type, size) combination,
+      * excluding a blocklisted supplier set resolved by subquery
+      * (name-pattern surrogate for the complaints filter — acctbal < 0
+      * is vacuous below sf0.1). Catalyst plans NOT IN as a null-aware
+      * anti join (broadcast — the blocklist is small) and the distinct
+      * count as the two-phase partial-distinct aggregate. */
+    sql("q16_part_supplier",
       """SELECT p_brand, p_type, p_size,
-        |  count(DISTINCT l_suppkey)::BIGINT AS supplier_cnt
+        |  count(DISTINCT l_suppkey) AS supplier_cnt
         |FROM lineitem JOIN part ON p_partkey = l_partkey
         |WHERE p_brand <> 'Brand#13' AND p_type NOT IN ('PROMO', 'ECONOMY')
         |  AND p_size IN (1, 4, 7, 10, 14, 19, 23, 36, 45, 49)
@@ -1345,7 +826,15 @@ object Advanced {
         |                        WHERE s_name LIKE '%7')
         |GROUP BY p_brand, p_type, p_size
         |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin),
-    Query("q20_potential_promo", q20PotentialPromo,
+    /** Q20-shaped analytics: POTENTIAL PROMOTION SUPPLIERS — the
+      * double-nested quantity-subquery shape: a semi-join (IN) whose
+      * subject is itself built from a nested IN (name-filtered parts)
+      * plus a CORRELATED scalar comparing each (supplier, part) year
+      * volume against half that part's TOTAL year volume across all
+      * suppliers. Catalyst decorrelates the scalar into a per-part agg
+      * joined back on partkey and plans both INs as left-semi hash
+      * joins — nothing per-row, everything keyed. */
+    sql("q20_potential_promo",
       """SELECT s_suppkey, s_name, n_name
         |FROM supplier JOIN nation ON s_nationkey = n_nationkey
         |WHERE s_suppkey IN (
@@ -1386,7 +875,11 @@ object Advanced {
         |JOIN sup s1 ON pairs.b1 = s1.b
         |JOIN sup s2 ON pairs.b2 = s2.b
         |ORDER BY lift DESC, b1, b2 LIMIT 50""".stripMargin),
-    Query("q3_shipping", q3Shipping,
+    /** Q3-shaped analytics: 3-way join + filter + agg + top-k — the full
+      * interactive-SQL workload shape, identical SQL text on both engines.
+      * Catalyst broadcasts the filtered customer dimension and plans
+      * TakeOrderedAndProject for the top-10. */
+    sql("q3_shipping",
       """SELECT l_orderkey,
         |  round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS revenue,
         |  o_orderdate, o_orderpriority
@@ -1399,7 +892,11 @@ object Advanced {
         |GROUP BY l_orderkey, o_orderdate, o_orderpriority
         |ORDER BY revenue DESC, o_orderdate, l_orderkey
         |LIMIT 10""".stripMargin),
-    Query("q4_priority", q4Priority,
+    /** Q4-shaped analytics: priority checking — a date-sliced aggregate
+      * gated by a correlated EXISTS whose predicate compares columns of
+      * BOTH relations (l_shipdate > o_orderdate), which Catalyst rewrites
+      * to a left-semi join with the comparison as a join condition. */
+    sql("q4_priority",
       """SELECT o_orderpriority, count(*) AS order_count
         |FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -1408,7 +905,16 @@ object Advanced {
         |              WHERE l_orderkey = o_orderkey
         |                AND l_shipdate > o_orderdate)
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
-    Query("q13_custdist", q13Custdist,
+    /** Q13-shaped analytics: customer order-count distribution — the
+      * planner shape the other q-queries lack: a LEFT OUTER join under an
+      * aggregation under ANOTHER aggregation (orders per customer
+      * including the zero-order customers, then a histogram of those
+      * counts). The join-side filter stands in for q13's o_comment NOT
+      * LIKE (the synthetic orders carry no comment): it must stay IN the
+      * join condition — as a WHERE it would turn the outer join inner and
+      * silently drop the zero-order bucket. At scale: one fact shuffle on
+      * custkey, then a tiny distinct-count-keyed agg. */
+    sql("q13_custdist",
       """SELECT c_count, count(*) AS custdist
         |FROM (SELECT c_custkey, count(o_orderkey) AS c_count
         |      FROM customer LEFT OUTER JOIN orders
@@ -1416,7 +922,20 @@ object Advanced {
         |        AND o_orderpriority <> '1-URGENT'
         |      GROUP BY c_custkey) c_orders
         |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin),
-    Query("q22_opportunity", q22Opportunity,
+    /** Q22-shaped analytics: customers with above-average positive
+      * balance and NO orders (q22's global-sales-opportunity shape, with
+      * the nation dim standing in for the phone-prefix country code):
+      * an uncorrelated scalar subquery feeds the fact filter and a NOT
+      * EXISTS anti-joins the order set — Catalyst plans the subquery as
+      * a one-row broadcast and the NOT EXISTS as a left-anti hash join,
+      * both identical at 1000 executors. The anti-joined side is the
+      * URGENT-priority order subset (not all orders): in the synthetic
+      * data every customer has SOME order, so an all-orders NOT EXISTS
+      * returns zero rows at every gate SF and the anti-join would never
+      * be exercised on data — the filtered subset leaves a real
+      * "high-balance customers with no urgent orders" population at both
+      * sf0.01 and sf0.1. */
+    sql("q22_opportunity",
       """SELECT n_name, count(*) AS numcust,
         |  round(sum(c_acctbal), 2) AS totacctbal
         |FROM customer JOIN nation ON c_nationkey = n_nationkey
@@ -1426,7 +945,10 @@ object Advanced {
         |                  WHERE o_custkey = c_custkey
         |                    AND o_orderpriority = '1-URGENT')
         |GROUP BY n_name ORDER BY n_name""".stripMargin),
-    Query("q12_priority_lines", q12PriorityLines,
+    /** Q12-shaped analytics: conditional counts inside one aggregation
+      * (`count(CASE …)` per priority class) over a date-sliced
+      * fact-dimension join — the pivot-free conditional rollup. */
+    sql("q12_priority_lines",
       """SELECT l_returnflag, count(*) AS n_items,
         |  count(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
         |             THEN 1 END) AS high_line_count,
@@ -1436,7 +958,11 @@ object Advanced {
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
         |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
-    Query("q14_promo", q14Promo,
+    /** Q14-shaped analytics: promo revenue share — a single-row ratio of
+      * two conditional sums over one month's part-lineitem join.
+      * Products round per ROW inside both sums (the rounding-parity
+      * convention) so the ratio is bit-stable across engines. */
+    sql("q14_promo",
       """SELECT round(100.0 * sum(CASE WHEN p_type = 'PROMO'
         |    THEN round(l_extendedprice * (1.0 - l_discount), 4)
         |    ELSE 0.0 END) /
@@ -1445,7 +971,15 @@ object Advanced {
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
         |  AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'""".stripMargin),
-    Query("q7_volume", q7Volume,
+    /** Q7-shaped analytics: bidirectional cross-nation volume — the
+      * double-dimension-alias join (nation joined TWICE, as supplier
+      * nation and customer nation) with an OR of symmetric pairs that
+      * defeats naive single-sided pushdown, grouped by derived year.
+      * Catalyst broadcasts both nation sides and pushes the OR as a
+      * post-join filter; the fact tables still join on their keys. Year
+      * is CAST to BIGINT in the shared text so both engines agree on the
+      * column type. */
+    sql("q7_volume",
       """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
         |  round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS revenue
@@ -1459,7 +993,11 @@ object Advanced {
         |   OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
         |GROUP BY supp_nation, cust_nation, l_year
         |ORDER BY supp_nation, cust_nation, l_year""".stripMargin),
-    Query("q18_large_orders", q18LargeOrders,
+    /** Q18-shaped analytics: large-volume customers — the
+      * aggregate-then-join shape (a HAVING-filtered per-order rollup
+      * drives the customer join), where the rollup prunes the fact to a
+      * small key set BEFORE any dimension join touches it. */
+    sql("q18_large_orders",
       """SELECT c_custkey, c_name, o_orderkey,
         |  round(o_totalprice, 2) AS price,
         |  round(t.sum_qty, 2) AS sum_qty
@@ -1470,7 +1008,8 @@ object Advanced {
         |      HAVING sum(l_quantity) > 250) t
         |  ON o_orderkey = t.l_orderkey
         |ORDER BY price DESC, o_orderkey""".stripMargin),
-    Query("q5_local_supplier", q5LocalSupplier,
+    /** Q5-shaped analytics: 6-way star join with a same-nation predicate. */
+    sql("q5_local_supplier",
       """SELECT n_name,
         |  round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS revenue
         |FROM customer
@@ -1482,32 +1021,50 @@ object Advanced {
         |WHERE r_name = 'ASIA' AND c_nationkey = s_nationkey
         |GROUP BY n_name
         |ORDER BY revenue DESC, n_name""".stripMargin),
-    Query("p6_scalar_subquery", p6ScalarSubquery,
+    /** P6: uncorrelated scalar subquery — deviation from the global mean.
+      * Catalyst plans the subquery once and broadcasts the scalar. */
+    sql("p6_scalar_subquery",
       """SELECT o_orderkey,
         | round(o_totalprice - (SELECT avg(o_totalprice) FROM orders), 4) AS dev
         |FROM orders WHERE o_orderkey <= 200 ORDER BY o_orderkey""".stripMargin),
-    Query("p10_lateral", p10Lateral,
+    /** P10: correlated LATERAL subquery with ORDER BY + LIMIT — the
+      * SQL spelling of per-group top-k (Postgres/DuckDB LATERAL, Spark
+      * SPARK-34382): each nation row drives a dependent top-2-customers
+      * subquery. Catalyst decorrelates it into a join + per-key limit;
+      * DuckDB runs the IDENTICAL statement, so planner disagreement on
+      * the correlated limit semantics hash-fails. */
+    sql("p10_lateral",
       """SELECT n_name, c.c_name, round(c.c_acctbal, 2) AS acctbal
         |FROM nation, LATERAL (
         |  SELECT c_name, c_acctbal FROM customer
         |  WHERE c_nationkey = n_nationkey
         |  ORDER BY c_acctbal DESC, c_name LIMIT 2) c
         |ORDER BY n_name, c_name""".stripMargin),
-    Query("p11_recursive_cte", p11RecursiveCte,
+    /** P11: RECURSIVE CTE executed BY SPARK (new in Spark 4: the engine
+      * iterates the recursive step natively) — a 40-day calendar is
+      * generated by recursion and left-joined to daily event rollups,
+      * the gap-filled-resample shape in pure SQL (ev4 builds the same
+      * grid with explode(sequence)). DuckDB runs the same statement; a
+      * lost recursion step, an off-by-one day bound, or a dropped empty
+      * day all hash-fail. */
+    sql("p11_recursive_cte",
       """WITH RECURSIVE n(i) AS (
         |  SELECT 0 UNION ALL SELECT i + 1 FROM n WHERE i < 39)
-        |SELECT DATE '2024-01-01' + i AS day,
-        |  count(e.event_id)::BIGINT AS n_events,
+        |SELECT date_add(DATE '2024-01-01', i) AS day,
+        |  count(e.event_id) AS n_events,
         |  round(coalesce(sum(e.value), 0), 4) AS sum_value
         |FROM n LEFT JOIN events e
-        |  ON e.ts::DATE = DATE '2024-01-01' + i
+        |  ON CAST(e.ts AS DATE) = date_add(DATE '2024-01-01', i)
         |GROUP BY i ORDER BY day""".stripMargin),
-    Query("p7_in_subquery", p7InSubquery,
+    /** P7: correlated IN subquery (planned as a semi-join). */
+    sql("p7_in_subquery",
       """SELECT c_custkey, c_name FROM customer
         |WHERE c_custkey IN
         |  (SELECT o_custkey FROM orders WHERE o_totalprice > 250000)
         |ORDER BY c_custkey""".stripMargin),
-    Query("p8_cte_nullsafe", p8CteNullsafe,
+    /** P8: CTE + null-safe equality. The nullable branch exercises
+      * `IS NOT DISTINCT FROM` (Spark `<=>`) on both engines. */
+    sql("p8_cte_nullsafe",
       """WITH flagged AS (
         |  SELECT c_custkey, nullif(c_mktsegment, 'BUILDING') AS seg
         |  FROM customer)
@@ -1517,7 +1074,9 @@ object Advanced {
         | AND a.c_custkey < b.c_custkey
         |WHERE a.c_custkey <= 20 AND b.c_custkey <= 20
         |ORDER BY a_key, b_key""".stripMargin),
-    Query("p9_exists", p9Exists,
+    /** P9: correlated EXISTS / NOT EXISTS — planned as semi/anti joins
+      * (the remaining subquery shape after p6 scalar and p7 IN). */
+    sql("p9_exists",
       """SELECT s_suppkey, s_name,
         |  EXISTS (SELECT 1 FROM lineitem
         |          WHERE l_suppkey = s_suppkey AND l_quantity > 49) AS has_bulk
@@ -1565,16 +1124,20 @@ object Advanced {
         |  FROM orders) r
         |WHERE rk <= 10
         |ORDER BY o_orderdate DESC, o_orderkey""".stripMargin),
-    // DuckDB's bool/bit aggregate family matches Spark's exactly; the
-    // xor checksum is order-independent by construction.
-    Query("a22_bool_bit_aggs", a22BoolBitAggs,
+    /** A22: boolean and bitwise aggregates — `bool_and`/`bool_or` (the
+      * SQL-standard EVERY/ANY) and `bit_and`/`bit_or`/`bit_xor` over a
+      * bounded int column. All five are partial-aggregable single-value
+      * states (a bit/bool per group), the cheapest aggregation class at
+      * 100 TB; the xor doubles as an order-independent set checksum.
+      * DuckDB's bool/bit aggregate family matches Spark's exactly. */
+    sql("a22_bool_bit_aggs",
       """SELECT l_returnflag,
         |  bool_and(l_quantity > 0) AS all_positive,
         |  bool_or(l_discount > 0.09) AS any_deep_discount,
-        |  bit_and(l_linenumber)::INT AS band,
-        |  bit_or(l_linenumber)::INT AS bor,
-        |  bit_xor(l_orderkey)::BIGINT AS checksum,
-        |  count(*)::BIGINT AS n
+        |  bit_and(l_linenumber) AS band,
+        |  bit_or(l_linenumber) AS bor,
+        |  bit_xor(l_orderkey) AS checksum,
+        |  count(*) AS n
         |FROM lineitem GROUP BY l_returnflag
         |ORDER BY l_returnflag""".stripMargin),
     // Typed-NULL fill per absent column, matched by name.
@@ -1639,7 +1202,9 @@ object Advanced {
         |                 ORDER BY o_totalprice, o_orderkey) AS quartile
         |FROM orders WHERE o_orderkey <= 2000
         |ORDER BY o_orderkey""".stripMargin),
-    Query("a9_grouping_sets", a9GroupingSets,
+    /** A9: explicit GROUPING SETS with grouping() markers (rollup/cube are
+      * the pre-canned shapes; this is the general one). */
+    sql("a9_grouping_sets",
       """SELECT coalesce(l_returnflag, '-') AS rf,
         |  coalesce(l_linestatus, '-') AS ls,
         |  grouping(l_returnflag) AS g_rf, grouping(l_linestatus) AS g_ls,
@@ -1664,13 +1229,20 @@ object Advanced {
         |FROM part
         |ORDER BY size_opt ASC NULLS LAST, p_partkey DESC
         |LIMIT 200""".stripMargin),
-    Query("f14_decimal", f14Decimal,
+    /** F14: DecimalType money math — exact decimal arithmetic end to end
+      * (cast → subtract → multiply → sum/min/max), closing the Athena ANSI
+      * type surface (SURVEY §1.3). Inputs are cast to DECIMAL(12,2) and
+      * every intermediate stays decimal, so results are EXACT — no
+      * floating rounding grid needed; outputs serialize as canonical
+      * scale-preserving strings (both engines print identical plain
+      * decimal forms, sidestepping sum-type precision differences). */
+    sql("f14_decimal",
       """SELECT l_returnflag,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS gross,
+        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS STRING) AS gross,
         |  CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-        |    * (1 - CAST(l_discount AS DECIMAL(12,2))) AS DECIMAL(38,4))) AS VARCHAR) AS net,
-        |  CAST(min(CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS min_price,
-        |  CAST(max(CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS max_price
+        |    * (1 - CAST(l_discount AS DECIMAL(12,2))) AS DECIMAL(38,4))) AS STRING) AS net,
+        |  CAST(min(CAST(l_extendedprice AS DECIMAL(12,2))) AS STRING) AS min_price,
+        |  CAST(max(CAST(l_extendedprice AS DECIMAL(12,2))) AS STRING) AS max_price
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
     Query("w4_distribution", w4Distribution,
       """SELECT s_nationkey, s_suppkey,

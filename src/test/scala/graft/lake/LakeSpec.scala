@@ -81,6 +81,27 @@ class LakeSpec extends SparkSpec {
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
+  test("dropManagedTable clears the catalog entry and the default " +
+    "location, never an external LOCATION") {
+    val tbl = s"graft_dropm_spec_${System.nanoTime()}"
+    val home = new java.io.File(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), tbl)
+    // a location that outlived its catalog entry (an earlier session's)
+    home.mkdirs()
+    new java.io.File(home, "part-0.parquet").createNewFile()
+    Catalog.dropManagedTable(spark, tbl)
+    assert(!home.exists(), s"orphaned location survived: $home")
+    spark.range(3).write.saveAsTable(tbl)
+    Catalog.dropManagedTable(spark, tbl)
+    assert(!spark.catalog.tableExists(tbl) && !home.exists())
+    val ext = Lake.scratchDir("dropm_ext") + "/data"
+    spark.range(3).write.parquet(ext)
+    spark.sql(s"CREATE TABLE $tbl (id BIGINT) USING parquet LOCATION '$ext'")
+    Catalog.dropManagedTable(spark, tbl)
+    assert(!spark.catalog.tableExists(tbl))
+    assert(spark.read.parquet(ext).count() == 3, "external data deleted")
+  }
+
   test("mergeChanges: insert, update (incl. set-NULL), delete, passthrough") {
     val base = Seq((1L, "a", 10), (2L, "b", 20), (3L, "c", 30))
       .toDF("k", "name", "v")

@@ -24,6 +24,16 @@ class RelationalPlanSpec extends SparkSpec {
     assert(repeated.isEmpty, s"names registered twice: $repeated")
     val blank = SparkEntry.registry.filter(_.oracle.trim.isEmpty).map(_.name)
     assert(blank.isEmpty, s"queries with blank oracle SQL: $blank")
+    // perfbench attributes a query to a module by its build's class
+    // name, so every build is created inside its module's object
+    val modules = Seq("operators", "functions", "lake", "ext", "streaming",
+      "sources")
+    val unattributed = SparkEntry.registry.filterNot { q =>
+      val cls = q.build.getClass.getName
+      modules.exists(m => cls.startsWith(s"graft.$m."))
+    }.map(q => s"${q.name} (${q.build.getClass.getName})")
+    assert(unattributed.isEmpty,
+      s"builds created outside a module object: $unattributed")
   }
 
   test("p5 filter pushes predicates into the parquet scan") {
